@@ -160,9 +160,11 @@ def run_headline() -> None:
     from kraken_spark.corpus import docs_for_sf
 
     # trained-weight parity flag: the reference's own golden predictions
-    # (tests/test_rpred.py) reproduced through its real overfit.mlmodel
-    golden_rows = qs["x_rpred_golden"](spark, SF_DIR).collect()
-    golden_parity = bool(golden_rows) and all(r.match for r in golden_rows)
+    # (tests/test_rpred.py) reproduced through its real overfit.mlmodel;
+    # null ("unavailable") when the reference assets are absent
+    matches = [r.match for r in qs["x_rpred_golden"](spark, SF_DIR).collect()]
+    golden_parity = (None if not matches or None in matches
+                     else all(matches))
 
     # web-HTML leg (the graft's main-content extraction path: boilerplate
     # pages packed into .warc.gz -> explode_warc -> DOM strip through the

@@ -54,9 +54,10 @@ def trained_rec() -> None:
     from kraken_spark.kernels.rec_train import ASSET
     from kraken_spark.pipeline import plan_extraction
     from kraken_spark.pipeline_lines import plan_extraction_line_parallel
+    from kraken_spark.session import lineage_cut
 
     spark = _spark()
-    slice24 = corpus_for(spark, SF_DIR).limit(24).localCheckpoint(eager=True)
+    slice24 = lineage_cut(corpus_for(spark, SF_DIR).limit(24))
     out = {}
     spark.sparkContext.setJobDescription("trained_rec fused 24")
     out["trained_rec_docs_per_sec"] = round(24 / _best(lambda: _force(
@@ -77,12 +78,12 @@ def skew4() -> None:
     from kraken_spark.kernels.rec_train import ASSET
     from kraken_spark.pipeline import plan_extraction
     from kraken_spark.pipeline_lines import plan_extraction_line_parallel
+    from kraken_spark.session import lineage_cut
 
     spark = _spark()
-    skew = (corpus_for(spark, SF_DIR)
-            .withColumn("sz", F.octet_length("html"))
-            .orderBy(F.desc("sz")).limit(4).drop("sz")
-            .localCheckpoint(eager=True))
+    skew = lineage_cut(corpus_for(spark, SF_DIR)
+                       .withColumn("sz", F.octet_length("html"))
+                       .orderBy(F.desc("sz")).limit(4).drop("sz"))
     out = {}
     spark.sparkContext.setJobDescription("skew4 fused")
     out["skew4_fused_docs_per_sec"] = round(4 / _best(lambda: _force(

@@ -454,36 +454,22 @@ def encode_text(text: str) -> list[int]:
 
 def line_tensor(img: np.ndarray, baseline, boundary,
                 height: int = HEIGHT, pad: int = PAD) -> np.ndarray | None:
-    """The exact input-tensor prep of LoadedRecognizer.recognize_baseline
-    (kernels/rpred_parity.py:95-129, minus the forward): polygon extract ->
-    zero-border trim -> Lanczos fixed-height resize -> /255 -> pad 16 ->
-    invert. Returns (height, w_full) float32 or None for degenerate lines."""
-    from .rpred_parity import extract_polygon_new
-    from .torchvgsl import fixed_resize
+    """The input tensor LoadedRecognizer.recognize_baseline feeds the net,
+    through the same rpred_parity steps (minus the forward): baseline_crop
+    (guard + crop) -> prep_baseline_crop (new-style polygon extract, trim,
+    Lanczos resize) -> net_input (/255, pad, invert). Returns
+    (height, w_full) float32, or None for out-of-bounds, blank and
+    zero-width lines, which training skips."""
+    from .rpred_parity import baseline_crop, net_input, prep_baseline_crop
 
-    pl = np.asarray(boundary)
-    bl = np.asarray(baseline, dtype=np.float64)
-    h, w = img.shape
-    if (pl < 0).any() or pl[:, 0].max() >= w or pl[:, 1].max() >= h:
+    c = baseline_crop(img, baseline, boundary)
+    if c is None:
         return None
-    if (bl < 0).any() or bl[:, 0].max() >= w or bl[:, 1].max() >= h:
+    _, crop, (bl, poly) = c
+    p = prep_baseline_crop(crop, bl, poly, height, legacy=False)
+    if p is None or p[0].size == 0:
         return None
-    patch = extract_polygon_new(img, bl, pl)
-    if patch.size == 0:
-        return None
-    nzr = np.nonzero(patch.any(axis=1))[0]
-    nzc = np.nonzero(patch.any(axis=0))[0]
-    if len(nzr) == 0 or len(nzc) == 0:
-        return None
-    patch = patch[nzr[0] : nzr[-1] + 1, nzc[0] : nzc[-1] + 1]
-    resized = fixed_resize(patch, (height, 0))
-    ts = resized.astype(np.float32) / 255.0
-    if pad:
-        ts = np.pad(ts, ((0, 0), (pad, pad)), constant_values=1.0)
-    ts = ts.max() - ts
-    if ts.max() == ts.min():
-        return None
-    return ts.astype(np.float32)
+    return net_input(p[0], pad)
 
 
 def _match_gt_line(seg_line: dict, gt_lines: list[dict]) -> dict | None:

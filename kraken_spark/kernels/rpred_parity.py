@@ -7,9 +7,9 @@ predictions of tests/test_rpred.py:352-366:
 - bbox lines (``_recognize_box_line``): crop -> ImageInputTransforms with
   valid_norm=True, which for a (1, H>1, 0, 1) input spec means
   CenterNormalizer dewarp (lib/dataset/utils.py:98-104 + lib/lineest.py)
-  instead of plain resize. The dewarped image is FLOAT; torchvision's
-  ToDtype(scale=True) does not rescale float inputs, so the network sees
-  0..255-range values (a reference quirk replicated here).
+  instead of plain resize. The dewarped image is FLOAT; PIL's F->L mode
+  transform then truncates it to uint8 and ToDtype(scale=True) scales
+  that to 0..1.
 - baseline lines (``_recognize_baseline_line``): legacy or new polygon
   extraction chosen by the model's ``legacy_polygons`` flag
   (rpred.py:332-341; extractor lib/segmentation.py:1471-1549) ->
@@ -18,9 +18,34 @@ predictions of tests/test_rpred.py:352-366:
 - both: pad 16 white columns, invert (max - x), forward, softmax, greedy
   CTC decode (lib/ctc_decoder.py greedy_decoder), codec decode, and BiDi
   logical reordering via get_display (containers.py:547-605).
+
+Every caller runs the same chain of steps, each written once:
+
+1. guard + crop (``bbox_crop`` / ``baseline_crop``, dispatched per line by
+   ``LoadedRecognizer.line_crop``): the bounds check against the full page
+   and the rectangular crop — the only step that needs the page image;
+2. crop-local prep (``LoadedRecognizer._prep_crop``): dewarp, or polygon
+   extract + trim + Lanczos resize, down to the uint8 line image;
+3. ``net_input``: /255, pad, invert;
+4. ``LoadedRecognizer._forward``: width-sorted chunks through
+   TorchVGSL.forward_batch with one failure rule — a chunk that raises is
+   retried line by line, and a line that still raises fails alone;
+5. ``LoadedRecognizer._decode_probs`` (greedy CTC, ``scale_cuts``, BiDi),
+   or the viterbi alignment of ``align_baseline``.
+
+The per-line API (recognize_bbox/recognize_baseline) runs one-line chunks,
+and ``forward_batch`` of one tensor IS ``forward``, so it is the batched
+API's arithmetic exactly. The line-parallel plan (pipeline_lines.py) cuts
+the chain after step 1: its PREPARE stage ships the crop, its RECOGNIZE
+stage runs steps 2-5 through ``LoadedRecognizer.run_lines``. Cropping
+first is exact: extract_polygon_legacy/new slice exactly the polygon's
+bbox and every warp tap outside the patch reads cval, so the crop plus
+crop-translated geometry yields the page-level patch.
 """
 
 from __future__ import annotations
+
+import time
 
 import numpy as np
 
@@ -29,6 +54,83 @@ from .codec import Codec
 from .ctc import greedy_decoder
 from .modelio import KrakenModelBundle
 from .torchvgsl import TorchVGSL, dewarp_line, fixed_resize
+
+BBOX, BASELINE = 0, 1  # crop kinds: (kind, crop, geom) tuples
+
+
+def _empty() -> dict:
+    return {"prediction": "", "cuts": [], "confidences": []}
+
+
+def bbox_crop(img: np.ndarray, bbox):
+    """Guard + crop of a bbox line ([x0, y0, x1, y1], exclusive like PIL
+    crop): (BBOX, crop, None), or None when the box leaves the page or is
+    empty."""
+    x0, y0, x1, y1 = bbox
+    if x0 < 0 or y0 < 0 or x1 > img.shape[1] or y1 > img.shape[0] or x1 <= x0 or y1 <= y0:
+        return None
+    return BBOX, img[y0:y1, x0:x1], None
+
+
+def baseline_crop(img: np.ndarray, baseline, boundary):
+    """Guard + crop of a baseline line: the bounds check of both polygons
+    against the FULL page, then the boundary polygon's bbox crop.
+    Returns (BASELINE, crop, (bl_local, poly_local)) with the geometry
+    translated by the crop origin, or None for out-of-bounds lines."""
+    pl = np.asarray(boundary)
+    bl = np.asarray(baseline, dtype=np.float64)
+    h, w = img.shape
+    if (pl < 0).any() or pl[:, 0].max() >= w or pl[:, 1].max() >= h:
+        return None
+    if (bl < 0).any() or bl[:, 0].max() >= w or bl[:, 1].max() >= h:
+        return None
+    c_min, r_min = int(pl[:, 0].min()), int(pl[:, 1].min())
+    c_max, r_max = int(pl[:, 0].max()), int(pl[:, 1].max())
+    crop = img[r_min : r_max + 1, c_min : c_max + 1]
+    return BASELINE, crop, (bl - (c_min, r_min), pl - (c_min, r_min))
+
+
+def prep_baseline_crop(crop: np.ndarray, bl_local, poly_local, height: int,
+                       legacy: bool):
+    """Crop-local prep of a baseline line: polygon extraction, the
+    i.crop(i.getbbox()) zero-border trim, Lanczos fixed-height resize.
+    Returns (uint8 line image, trimmed width) or None for blank lines."""
+    extract = extract_polygon_legacy if legacy else extract_polygon_new
+    patch = extract(crop, bl_local, poly_local)
+    nzr = np.nonzero(patch.any(axis=1))[0]
+    nzc = np.nonzero(patch.any(axis=0))[0]
+    if len(nzr) == 0 or len(nzc) == 0:
+        return None
+    patch = patch[nzr[0] : nzr[-1] + 1, nzc[0] : nzc[-1] + 1]
+    return fixed_resize(patch, (height, 0)), patch.shape[1]
+
+
+def net_input(u8: np.ndarray, pad: int) -> np.ndarray | None:
+    """uint8 line image -> network input: ToDtype(scale=True), `pad` white
+    columns each side, tensor_invert. None for constant (blank) lines,
+    which emit empty records; a zero-area image is a prep failure and
+    raises."""
+    if u8.size == 0:
+        raise ValueError("zero-area line tensor")
+    ts = u8.astype(np.float32) / 255.0
+    if pad:
+        ts = np.pad(ts, ((0, 0), (pad, pad)), constant_values=1.0)
+    ts = ts.max() - ts
+    if ts.max() == ts.min():
+        return None
+    return ts
+
+
+def scale_cuts(cuts, ts_w: int, n_frames: int, pad: int, box_w: int) -> list:
+    """Network-frame cuts -> crop-pixel x-spans (rpred.py:293-311
+    net_scale/in_scale + _scale_val)."""
+    net_scale = ts_w / n_frames
+    in_scale = box_w / (ts_w - 2 * pad)
+
+    def scale_val(v):
+        return int(round(min(max((v * net_scale - pad) * in_scale, 0), box_w - 1)))
+
+    return [(scale_val(a), scale_val(b)) for a, b in cuts]
 
 
 class LoadedRecognizer:
@@ -46,22 +148,54 @@ class LoadedRecognizer:
         # is invariant — only confidences sharpen (T<1) or flatten (T>1)
         self.temperature = float(temperature)
 
-    # -- transforms ---------------------------------------------------------
-    def _prep_net_input(self, ts: np.ndarray, pad: int) -> np.ndarray | None:
-        """pad + invert a prepared line tensor into the network input; None
-        for constant (blank) lines, which emit empty records."""
-        if pad:
-            fill = 255.0 if ts.max() > 1.0 else 1.0
-            ts = np.pad(ts, ((0, 0), (pad, pad)), constant_values=fill)
-        ts = ts.max() - ts  # tensor_invert
-        if ts.max() == ts.min():
-            return None
-        return ts.astype(np.float32)
+    # -- chain steps ---------------------------------------------------------
+    def line_crop(self, img: np.ndarray, ln: dict):
+        """Guard + crop of one segmentation line dict: the bbox path (box
+        clamped to the page) when the model's seg_type is bbox or the line
+        has no baseline, like stages.extract_document; else the baseline
+        path."""
+        if self.bundle.seg_type == "bbox" or not ln.get("baseline"):
+            x0, y0, x1, y1 = ln["bbox"]
+            h, w = img.shape
+            return bbox_crop(img, [max(0, x0), max(0, y0), min(w, x1), min(h, y1)])
+        return baseline_crop(img, ln["baseline"], ln["boundary"])
+
+    def _prep_crop(self, c, legacy: bool | None = None):
+        """Crop-local prep of one (kind, crop, geom) crop -> (uint8 line
+        image, box_w) or None for blank lines."""
+        kind, crop, geom = c
+        if kind == BBOX:
+            return self._prep_bbox_u8_from_crop(crop)
+        return self._prep_baseline_u8_from_crop(crop, *geom, legacy=legacy)
+
+    def _prep_bbox_u8_from_crop(self, crop: np.ndarray):
+        """CenterNormalizer dewarp + the PIL F->L uint8 truncation
+        (utils.py:139-141)."""
+        return np.clip(dewarp_line(crop, self.height), 0, 255).astype(np.uint8), crop.shape[1]
+
+    def _prep_baseline_u8_from_crop(self, crop: np.ndarray, bl_local, poly_local,
+                                    legacy: bool | None = None):
+        """prep_baseline_crop at this model's height; legacy defaults to
+        the model's legacy_polygons flag (rpred.py:332-341)."""
+        if legacy is None:
+            legacy = self.bundle.legacy_polygons
+        return prep_baseline_crop(crop, bl_local, poly_local, self.height, legacy)
+
+    def _forward(self, tensors: list[np.ndarray]) -> list:
+        """forward_batch over one chunk. When it raises, each line is
+        retried alone; a line that still raises comes back as its
+        exception instead of its probs."""
+        try:
+            return self.net.forward_batch(tensors)
+        except Exception as e:
+            if len(tensors) == 1:
+                return [e]
+            return [self._forward([t])[0] for t in tensors]
 
     def _decode_probs(self, probs: np.ndarray, ts_w: int, pad: int,
                       bidi_reordering=True, box_w: int | None = None) -> dict:
         """softmax-probs -> record: temperature, greedy CTC, codec decode,
-        cut scaling (rpred.py:293-311), BiDi reorder."""
+        cut scaling, BiDi reorder."""
         if self.temperature != 1.0:
             probs = probs ** (1.0 / self.temperature)
             probs = probs / probs.sum(axis=1, keepdims=True)
@@ -71,13 +205,7 @@ class LoadedRecognizer:
         cuts = [(c[1], c[2]) for c in chars]
         confs = [c[3] for c in chars]
         if box_w is not None and cuts:
-            net_scale = ts_w / probs.shape[0]
-            in_scale = box_w / (ts_w - 2 * pad)
-
-            def scale_val(v):
-                return int(round(min(max((v * net_scale - pad) * in_scale, 0), box_w - 1)))
-
-            cuts = [(scale_val(a), scale_val(b)) for a, b in cuts]
+            cuts = scale_cuts(cuts, ts_w, probs.shape[0], pad, box_w)
         if bidi_reordering:
             base = bidi_reordering if bidi_reordering in ("L", "R") else None
             pred, order = get_display(pred, base)
@@ -85,60 +213,73 @@ class LoadedRecognizer:
             confs = [confs[i] for i in order]
         return {"prediction": pred, "cuts": cuts, "confidences": confs}
 
-    def _finish(self, ts: np.ndarray, pad: int, bidi_reordering=True, box_w: int | None = None) -> dict:
-        """pad/invert/forward/decode shared tail. ts: (H, W) float32 in its
-        path's native scale (0..255 for the dewarp path, 0..1 for uint8).
-        With box_w set, cuts are scaled from network frames back to crop
-        pixel x-spans (rpred.py:293-311 net_scale/in_scale + _scale_val)."""
-        if pad:
-            fill = 255.0 if ts.max() > 1.0 else 1.0
-            ts = np.pad(ts, ((0, 0), (pad, pad)), constant_values=fill)
-        ts = ts.max() - ts  # tensor_invert
-        if ts.max() == ts.min():
-            return {"prediction": "", "cuts": [], "confidences": []}
-        probs = self.net.forward(ts.astype(np.float32))  # (W', classes)
-        if self.temperature != 1.0:
-            probs = probs ** (1.0 / self.temperature)
-            probs = probs / probs.sum(axis=1, keepdims=True)
-        decoded = greedy_decoder(probs)
-        chars = self.codec.decode(decoded)
-        pred = "".join(c[0] for c in chars)
-        cuts = [(c[1], c[2]) for c in chars]
-        confs = [c[3] for c in chars]
-        if box_w is not None and cuts:
-            net_scale = ts.shape[1] / probs.shape[0]
-            in_scale = box_w / (ts.shape[1] - 2 * pad)
+    # -- the chain -----------------------------------------------------------
+    def run_lines(self, items: list, prep, pad: int = 16, bidi_reordering=True,
+                  scale_cuts: bool = False, batch_size: int = 32):
+        """prep -> net_input -> chunked forward -> decode over `items`
+        (None items are invalid lines); prep maps an item to (uint8 line
+        image, box_w) or None. Lines run width-sorted so each forward_batch
+        chunk pads to a near-uniform length. Returns (records, rec_ms):
+        records[i] is item i's record — the empty record for invalid and
+        blank lines, or the exception the line raised — and rec_ms[i] its
+        width-proportional share of its chunk's forward wall."""
+        records: list = [_empty() for _ in items]
+        rec_ms = [0.0] * len(items)
+        inputs = []  # (i, net input, box_w)
+        for i, item in enumerate(items):
+            if item is None:
+                continue
+            try:
+                p = prep(item)
+                x = None if p is None else net_input(p[0], pad)
+            except Exception as e:
+                records[i] = e
+                continue
+            if x is not None:
+                inputs.append((i, x, p[1]))
+        inputs.sort(key=lambda t: t[1].shape[1])
+        for s in range(0, len(inputs), batch_size):
+            chunk = inputs[s : s + batch_size]
+            c0 = time.perf_counter()
+            probs_list = self._forward([x for _, x, _ in chunk])
+            chunk_ms = (time.perf_counter() - c0) * 1000.0
+            wsum = sum(x.shape[1] for _, x, _ in chunk)
+            for (i, x, box_w), probs in zip(chunk, probs_list):
+                rec_ms[i] = chunk_ms * x.shape[1] / wsum
+                if isinstance(probs, Exception):
+                    records[i] = probs
+                    continue
+                try:
+                    records[i] = self._decode_probs(
+                        probs, x.shape[1], pad, bidi_reordering,
+                        box_w=box_w if scale_cuts else None)
+                except Exception as e:
+                    records[i] = e
+        return records, rec_ms
 
-            def scale_val(v):
-                return int(round(min(max((v * net_scale - pad) * in_scale, 0), box_w - 1)))
+    def _recognize_crops(self, crops: list, pad: int = 16, bidi_reordering=True,
+                         scale_cuts: bool = False, legacy: bool | None = None,
+                         batch_size: int = 32) -> list[dict]:
+        """run_lines over guarded crops; a line that raised re-raises here
+        (the fused plan trips the line's page)."""
+        records, _ = self.run_lines(
+            crops, lambda c: self._prep_crop(c, legacy), pad, bidi_reordering,
+            scale_cuts, batch_size)
+        for r in records:
+            if isinstance(r, Exception):
+                raise r
+        return records
 
-            cuts = [(scale_val(a), scale_val(b)) for a, b in cuts]
-        if bidi_reordering:
-            base = bidi_reordering if bidi_reordering in ("L", "R") else None
-            pred, order = get_display(pred, base)
-            cuts = [cuts[i] for i in order]
-            confs = [confs[i] for i in order]
-        return {"prediction": pred, "cuts": cuts, "confidences": confs}
-
-    # -- bbox path ----------------------------------------------------------
+    # -- public API ----------------------------------------------------------
     def recognize_bbox(
         self, img: np.ndarray, bbox, pad: int = 16, bidi_reordering=True, scale_cuts: bool = False
     ) -> dict:
         """img: full-page grayscale uint8 (H, W); bbox: [x0, y0, x1, y1]
         exclusive like PIL crop. valid_norm=True path. scale_cuts maps
         character cuts from network frames to crop-pixel x-spans."""
-        x0, y0, x1, y1 = bbox
-        if x0 < 0 or y0 < 0 or x1 > img.shape[1] or y1 > img.shape[0] or x1 <= x0 or y1 <= y0:
-            return {"prediction": "", "cuts": [], "confidences": []}
-        crop = img[y0:y1, x0:x1]
-        ts = dewarp_line(crop, self.height)  # float32 0..255
-        # ImageInputTransforms re-applies the mode transform after the
-        # dewarp (utils.py:139-141): PIL F->L truncates to uint8; the
-        # subsequent ToDtype(scale=True) then scales the uint8 to 0..1.
-        ts = np.clip(ts, 0, 255).astype(np.uint8).astype(np.float32) / 255.0
-        return self._finish(ts, pad, bidi_reordering, box_w=(x1 - x0) if scale_cuts else None)
+        return self._recognize_crops([bbox_crop(img, bbox)], pad, bidi_reordering,
+                                     scale_cuts)[0]
 
-    # -- baseline path ------------------------------------------------------
     def recognize_baseline(
         self,
         img: np.ndarray,
@@ -151,130 +292,8 @@ class LoadedRecognizer:
     ) -> dict:
         """img: full-page grayscale uint8; baseline [[x,y],...]; boundary
         polygon [[x,y],...]. valid_norm=False path (Lanczos resize)."""
-        if legacy is None:
-            legacy = self.bundle.legacy_polygons
-        pl = np.asarray(boundary)
-        bl = np.asarray(baseline, dtype=np.float64)
-        h, w = img.shape
-        if (pl < 0).any() or pl[:, 0].max() >= w or pl[:, 1].max() >= h:
-            return {"prediction": "", "cuts": [], "confidences": []}
-        if (bl < 0).any() or bl[:, 0].max() >= w or bl[:, 1].max() >= h:
-            return {"prediction": "", "cuts": [], "confidences": []}
-        patch = extract_polygon_legacy(img, bl, pl) if legacy else extract_polygon_new(img, bl, pl)
-        if patch.size == 0:
-            return {"prediction": "", "cuts": [], "confidences": []}
-        # extract_polygons yields i.crop(i.getbbox()) — trim all-zero borders
-        nzr = np.nonzero(patch.any(axis=1))[0]
-        nzc = np.nonzero(patch.any(axis=0))[0]
-        if len(nzr) == 0 or len(nzc) == 0:
-            return {"prediction": "", "cuts": [], "confidences": []}
-        patch = patch[nzr[0] : nzr[-1] + 1, nzc[0] : nzc[-1] + 1]
-        resized = fixed_resize(patch, (self.height, 0))  # uint8
-        ts = resized.astype(np.float32) / 255.0  # ToDtype(scale=True) on uint8
-        return self._finish(
-            ts, pad, bidi_reordering, box_w=patch.shape[1] if scale_cuts else None
-        )
-
-    # -- batched path -------------------------------------------------------
-    #
-    # The prep of each path is split at its CROP point: the page-local half
-    # (bounds guard + rectangular crop — needs the full page image) and the
-    # crop-local half (dewarp / polygon mask / Lanczos resize — touches only
-    # pixels inside the crop: extract_polygon_legacy/new slice exactly the
-    # polygon's bbox and every warp tap outside the patch reads cval, so
-    # translating baseline/boundary into crop coordinates is EXACT). The
-    # line-parallel plan (pipeline_lines.py) ships the raw crop + local
-    # geometry and runs the crop-local half in the line-salted stage, so a
-    # many-line page's per-line prep cost parallelizes with its forwards.
-    def _prep_bbox_u8_from_crop(self, crop: np.ndarray, box_w: int):
-        """Crop-local half of _prep_bbox_u8: dewarp + the PIL F->L uint8
-        truncation (utils.py:139-141). crop is the already-guarded bbox
-        slice; box_w its original width."""
-        ts = dewarp_line(crop, self.height)
-        return np.clip(ts, 0, 255).astype(np.uint8), box_w
-
-    def _prep_bbox_u8(self, img: np.ndarray, bbox):
-        """recognize_bbox's line prep up to its EXACT uint8 quantization
-    point (the PIL F->L truncation after the dewarp, utils.py:139-141);
-    returns (u8 line image, box_w) or None. The uint8 stage is the
-    transport form for the line-parallel plan (pipeline_lines.py): u8
-    -> float32/255 reproduces _prep_bbox bit-for-bit by construction."""
-        x0, y0, x1, y1 = bbox
-        if x0 < 0 or y0 < 0 or x1 > img.shape[1] or y1 > img.shape[0] or x1 <= x0 or y1 <= y0:
-            return None
-        crop = img[y0:y1, x0:x1]
-        return self._prep_bbox_u8_from_crop(crop, x1 - x0)
-
-    def _prep_bbox(self, img: np.ndarray, bbox):
-        """Line-tensor prep of recognize_bbox without the forward; returns
-        (ts, box_w) or None for out-of-bounds boxes."""
-        r = self._prep_bbox_u8(img, bbox)
-        if r is None:
-            return None
-        return r[0].astype(np.float32) / 255.0, r[1]
-
-    def _baseline_crop(self, img: np.ndarray, baseline, boundary):
-        """Page-local half of _prep_baseline_u8: the bounds guard (against
-        the FULL page dims, like recognize_baseline) + the polygon-bbox
-        crop. Returns (crop, bl_local, poly_local) or None for
-        out-of-bounds lines. bl_local/poly_local are the inputs translated
-        by the crop origin — extract_polygon_legacy/new over
-        (crop, locals) computes the identical patch (it slices exactly the
-        polygon bbox and offsets the polygon by the same origin)."""
-        pl = np.asarray(boundary)
-        bl = np.asarray(baseline, dtype=np.float64)
-        h, w = img.shape
-        if (pl < 0).any() or pl[:, 0].max() >= w or pl[:, 1].max() >= h:
-            return None
-        if (bl < 0).any() or bl[:, 0].max() >= w or bl[:, 1].max() >= h:
-            return None
-        c_min, r_min = int(pl[:, 0].min()), int(pl[:, 1].min())
-        c_max, r_max = int(pl[:, 0].max()), int(pl[:, 1].max())
-        crop = img[r_min : r_max + 1, c_min : c_max + 1]
-        return crop, bl - (c_min, r_min), pl - (c_min, r_min)
-
-    def _prep_baseline_u8_from_crop(self, crop: np.ndarray, bl_local,
-                                    poly_local, legacy: bool | None = None):
-        """Crop-local half of _prep_baseline_u8: polygon extraction over
-        the crop + border trim + Lanczos fixed-height resize. Returns
-        (u8, box_w) or None for blank lines."""
-        if legacy is None:
-            legacy = self.bundle.legacy_polygons
-        patch = (
-            extract_polygon_legacy(crop, bl_local, poly_local)
-            if legacy
-            else extract_polygon_new(crop, bl_local, poly_local)
-        )
-        if patch.size == 0:
-            return None
-        nzr = np.nonzero(patch.any(axis=1))[0]
-        nzc = np.nonzero(patch.any(axis=0))[0]
-        if len(nzr) == 0 or len(nzc) == 0:
-            return None
-        patch = patch[nzr[0] : nzr[-1] + 1, nzc[0] : nzc[-1] + 1]
-        resized = fixed_resize(patch, (self.height, 0))
-        return resized, patch.shape[1]
-
-    def _prep_baseline_u8(self, img: np.ndarray, baseline, boundary,
-                          legacy: bool | None = None):
-        """recognize_baseline's line prep up to its uint8 stage (the
-        Lanczos fixed_resize output IS uint8); returns (u8, box_w) or
-        None. Same transport contract as _prep_bbox_u8. Composed of the
-        page-local crop + the crop-local extraction halves above (the
-        line-parallel plan runs the halves in different stages)."""
-        r = self._baseline_crop(img, baseline, boundary)
-        if r is None:
-            return None
-        return self._prep_baseline_u8_from_crop(*r, legacy=legacy)
-
-    def _prep_baseline(self, img: np.ndarray, baseline, boundary,
-                       legacy: bool | None = None):
-        """Line-tensor prep of recognize_baseline without the forward;
-        returns (ts, box_w) or None for invalid/blank lines."""
-        r = self._prep_baseline_u8(img, baseline, boundary, legacy)
-        if r is None:
-            return None
-        return r[0].astype(np.float32) / 255.0, r[1]
+        return self._recognize_crops([baseline_crop(img, baseline, boundary)], pad,
+                                     bidi_reordering, scale_cuts, legacy)[0]
 
     def recognize_lines(
         self,
@@ -288,51 +307,13 @@ class LoadedRecognizer:
     ) -> list[dict]:
         """Cross-line batched recognition over one page — the analog of the
         reference's queue batching (lib/vgsl/rpred.py:100-124). Each line
-        dict carries either 'bbox' or 'baseline'+'boundary' (bbox is used
-        when the model's seg_type is bbox or no baseline is present, like
-        stages.extract_document). Per-line tensor prep and decode are the
-        exact recognize_bbox/recognize_baseline code paths; the network
-        forward runs width-bucketed through TorchVGSL.forward_batch, which
-        turns the per-timestep batch-1 GEMVs of the recurrence into GEMMs.
-        Results are returned in input order and match the per-line API."""
-        empty = {"prediction": "", "cuts": [], "confidences": []}
-        preps: list[tuple | None] = []
-        for ln in lines:
-            if self.bundle.seg_type == "bbox" or not ln.get("baseline"):
-                bx = [
-                    max(0, ln["bbox"][0]),
-                    max(0, ln["bbox"][1]),
-                    min(img.shape[1], ln["bbox"][2]),
-                    min(img.shape[0], ln["bbox"][3]),
-                ]
-                preps.append(self._prep_bbox(img, bx))
-            else:
-                preps.append(
-                    self._prep_baseline(img, ln["baseline"], ln["boundary"], legacy)
-                )
-        # pad+invert per line; constant (blank) tensors emit empty records
-        inputs: list[tuple[int, np.ndarray, int, int]] = []
-        for i, p in enumerate(preps):
-            if p is None:
-                continue
-            ts, box_w = p
-            net_in = self._prep_net_input(ts, pad)
-            if net_in is None:
-                continue
-            inputs.append((i, net_in, net_in.shape[1], box_w))
-        results: dict[int, dict] = {}
-        # width buckets: sort by padded width so each forward_batch chunk
-        # pads to a near-uniform length (wasted frames bounded per chunk)
-        inputs.sort(key=lambda t: t[2])
-        for s in range(0, len(inputs), batch_size):
-            chunk = inputs[s : s + batch_size]
-            probs_list = self.net.forward_batch([c[1] for c in chunk])
-            for (i, net_in, ts_w, box_w), probs in zip(chunk, probs_list):
-                results[i] = self._decode_probs(
-                    probs, ts_w, pad, bidi_reordering,
-                    box_w=box_w if scale_cuts else None,
-                )
-        return [results.get(i, dict(empty)) for i in range(len(lines))]
+        dict carries either 'bbox' or 'baseline'+'boundary' (line_crop
+        picks the path). The network forward runs width-bucketed through
+        TorchVGSL.forward_batch, which turns the per-timestep batch-1 GEMVs
+        of the recurrence into GEMMs. Results are returned in input order
+        and match the per-line API."""
+        return self._recognize_crops([self.line_crop(img, ln) for ln in lines], pad,
+                                     bidi_reordering, scale_cuts, legacy, batch_size)
 
 
 def _polygon_mask_pil(poly: np.ndarray, h: int, w: int) -> np.ndarray:
@@ -686,75 +667,44 @@ class MultiModelDispatcher:
             yield dict(r, id=ln.get("id"), tag=tag, model=net)
 
 
-def _aligned_record(recognizer, ts, text, pad, box_w, base_dir=None):
-    """Shared tail of forced alignment: viterbi-align the display-order
-    text against the prepared line tensor's activations and build a
-    display-order record dict (reference align.py:85-130)."""
+def align_baseline(recognizer, img, baseline, boundary, text, pad: int = 16,
+                   base_dir=None, legacy: bool | None = None) -> dict:
+    """Forced alignment of ground-truth text to a baseline line through a
+    LOADED trained model (reference align.py forced_align, :85-130): the
+    recognition chain's guard, crop, prep and forward, but the decode step
+    is a CTC viterbi alignment of the encoded display-order text. Raises
+    ValueError for unencodable text; emits an empty record when the
+    activation sequence is too short to carry the labels."""
     from .align import ctc_viterbi_align
-    from .bidi import get_display
 
+    empty = dict(_empty(), display_order=True)
+    c = baseline_crop(img, baseline, boundary)
+    p = None if c is None else recognizer._prep_crop(c, legacy)
+    if p is None:
+        return empty
+    u8, box_w = p
     do_text, _ = get_display(text, base_dir if base_dir in ("L", "R") else None)
     labels = recognizer.codec.encode(do_text)
     if not labels:
         raise ValueError(f"text {text!r} encodes to an empty label sequence")
-    if pad:
-        fill = 255.0 if ts.max() > 1.0 else 1.0
-        ts = np.pad(ts, ((0, 0), (pad, pad)), constant_values=fill)
-    ts = ts.max() - ts
-    if ts.max() == ts.min():
-        return {"prediction": "", "cuts": [], "confidences": [],
-                "display_order": True}
-    probs = recognizer.net.forward(ts.astype(np.float32))
+    x = net_input(u8, pad)
+    if x is None:
+        return empty
+    probs = recognizer._forward([x])[0]
+    if isinstance(probs, Exception):
+        raise probs
     if probs.shape[0] < 2 * len(labels):
         # reference: log a warning, emit an empty record (align.py:111-115)
-        return {"prediction": "", "cuts": [], "confidences": [],
-                "display_order": True}
+        return empty
     ali = ctc_viterbi_align(probs, list(labels))
     if ali is None:
         raise ValueError(f"could not align {text!r}")
-    net_scale = ts.shape[1] / probs.shape[0]
-    in_scale = box_w / (ts.shape[1] - 2 * pad)
-
-    def scale_val(v):
-        return int(round(min(max((v * net_scale - pad) * in_scale, 0),
-                             box_w - 1)))
-
-    cuts = [(scale_val(f0), scale_val(f1)) for _, f0, f1, _ in ali]
+    cuts = scale_cuts([(f0, f1) for _, f0, f1, _ in ali], x.shape[1],
+                      probs.shape[0], pad, box_w)
     confs = [float(p) for _, _, _, p in ali]
     n = min(len(do_text), len(cuts))
     return {"prediction": do_text[:n], "cuts": cuts[:n],
             "confidences": confs[:n], "display_order": True}
-
-
-def align_baseline(recognizer, img, baseline, boundary, text, pad: int = 16,
-                   base_dir=None, legacy: bool | None = None) -> dict:
-    """Forced alignment of ground-truth text to a baseline line through a
-    LOADED trained model (reference align.py forced_align): same line
-    preparation as recognition, but the decode step is a CTC viterbi
-    alignment of the encoded display-order text. Raises ValueError for
-    unencodable text; emits an empty record when the activation sequence
-    is too short to carry the labels."""
-    if legacy is None:
-        legacy = recognizer.bundle.legacy_polygons
-    pl = np.asarray(boundary)
-    bl = np.asarray(baseline, dtype=np.float64)
-    h, w = img.shape
-    if (pl < 0).any() or pl[:, 0].max() >= w or pl[:, 1].max() >= h or \
-            (bl < 0).any() or bl[:, 0].max() >= w or bl[:, 1].max() >= h:
-        return {"prediction": "", "cuts": [], "confidences": [],
-                "display_order": True}
-    patch = extract_polygon_legacy(img, bl, pl) if legacy \
-        else extract_polygon_new(img, bl, pl)
-    nzr = np.nonzero(patch.any(axis=1))[0] if patch.size else []
-    nzc = np.nonzero(patch.any(axis=0))[0] if patch.size else []
-    if len(nzr) == 0 or len(nzc) == 0:
-        return {"prediction": "", "cuts": [], "confidences": [],
-                "display_order": True}
-    patch = patch[nzr[0]: nzr[-1] + 1, nzc[0]: nzc[-1] + 1]
-    resized = fixed_resize(patch, (recognizer.height, 0))
-    ts = resized.astype(np.float32) / 255.0
-    return _aligned_record(recognizer, ts, text, pad, patch.shape[1],
-                           base_dir)
 
 
 def forced_align_segmentation(recognizer, img, seg: dict, pad: int = 16,

@@ -8,51 +8,44 @@ at local[32] on a 24-doc slice that one page IS the job tail
 numpy BiLSTM forward of a loaded reference model makes this the one place
 where page-level skew survives weight salting.
 
-This plan splits the chain at the reference's own line boundary
-(rpred's per-line records, /root/reference/kraken/lib/vgsl/rpred.py:100-124):
+This plan runs the fused plan's recognition chain (rpred_parity's module
+docstring: guard + crop -> crop-local prep -> pad/invert -> chunked
+forward -> decode) and only chooses where to cut it — after the crop,
+the reference's own line boundary (rpred's per-line records,
+kraken/lib/vgsl/rpred.py:100-124 in the reference):
 
   scan -> weight-salted repartition
-       -> PREPARE  (mapInArrow: decode -> nlbin -> segment -> per-line
-                    polygon-bbox CROP; one row per LINE + one page row)
+       -> PREPARE  (mapInArrow: decode -> nlbin -> segment ->
+                    LoadedRecognizer.line_crop per line; one row per
+                    valid line crop + one page row)
        -> line-salted repartition (murmur3-preimage buckets, so line k
           lands exactly in partition k%m — pipeline._partition_preimages)
-       -> RECOGNIZE (mapInArrow: crop-local tensor prep
-                     (_prep_*_u8_from_crop: polygon mask / dewarp +
-                     Lanczos resize), then width-sorted chunks through
-                     TorchVGSL.forward_batch + the exact _decode_probs)
+       -> RECOGNIZE (mapInArrow: LoadedRecognizer.run_lines over the
+                     batch's crops — every step after the crop)
        -> groupBy(url).applyInArrow ASSEMBLE (stages._assemble_extraction)
 
 The prepare task does only the genuinely page-indivisible work (decode,
-nlbin, the segmentation heatmap+vectorization); everything per-line —
-polygon extraction, resize, net-input prep, forward, decode — runs in
-the line-salted stage, so a 121-line page's prep tail parallelizes too
-(round-5 verdict's remaining straggler). The transport is the RAW crop:
-extract_polygon_legacy/new slice exactly the polygon's bbox and tap
-nothing outside it, so the crop plus crop-translated geometry reproduces
-the page-level prep bit-for-bit (rpred_parity._baseline_crop).
+nlbin, the segmentation heatmap+vectorization); everything per-line runs
+in the line-salted stage, so a 121-line page's prep tail parallelizes
+too. Both plans build their page rows with stages._page_header /
+_guard_trip.
 
-Parity: prepare runs stages._decode_and_segment and the page-local crop
-half of rpred_parity's _prep_*_u8; recognition runs the crop-local half
-(the same uint8 quantization point both per-line paths pass through)
-plus the same _prep_net_input/forward_batch/_decode_probs as
-LoadedRecognizer.recognize_lines, and assembly is the shared
-stages._assemble_extraction — predictions/cuts are EXACT vs the fused
-plan and confidences agree to float tolerance (the
-tests/test_batched_rpred.py contract; chunk composition differs across
-plans, which only moves GEMM rounding at the ulp level). Pinned in
-tests/test_line_parallel.py. Failure parity: a line whose
-prep/forward/decode raises marks its row `failed`, and assembly answers
-with the fused plan's guard-tripped empty page row — the two plans stay
-row-identical under failure too (round-5 advice item).
+Parity: predictions/cuts are EXACT vs the fused plan and confidences agree
+to float tolerance (chunk composition differs across plans, which only
+moves GEMM rounding at the ulp level). Pinned in tests/test_line_parallel.py.
+Failure rule (the same in both plans, in run_lines): a chunk whose
+forward_batch raises is retried line by line; a line that raises in prep,
+forward or decode fails alone, and its page — only its page — becomes the
+guard-tripped empty row.
 
 Cost model (when to use which): the fused plan touches each page once and
 shuffles only the documents — the right default. This plan pays two extra
-shuffles (uint8 line tensors ~H*W bytes/line, then tiny prediction rows)
-to make the largest indivisible work unit a LINE instead of a page. Use
-it when page skew dominates: corpora with many-line outliers under an
-expensive loaded model, or docs >> cores no longer holding (small batches,
-huge pages). At 100 TB both plans keep every stage partition-parallel;
-this one's straggler bound is max-line-cost, not max-page-cost.
+shuffles (uint8 line crops, then tiny prediction rows) to make the largest
+indivisible work unit a LINE instead of a page. Use it when page skew
+dominates: corpora with many-line outliers under an expensive loaded
+model, or docs >> cores no longer holding (small batches, huge pages). At
+100 TB both plans keep every stage partition-parallel; this one's
+straggler bound is max-line-cost, not max-page-cost.
 """
 
 from __future__ import annotations
@@ -69,15 +62,14 @@ from pyspark.sql import DataFrame
 from .pipeline import _partition_preimages, weight_salt
 from .schema import EXTRACTION_ARROW, EXTRACTION_DDL
 
-# Per-line transport: the RAW polygon-bbox crop + crop-local geometry, not
-# the prepped tensor — so the crop-local prep half (polygon mask + Lanczos
-# resize / dewarp, rpred_parity._prep_*_u8_from_crop) runs in the
-# line-salted stage instead of the per-page prepare task. kind: 0 = bbox
-# path, 1 = baseline path, -1 = invalid line (prep guard returned None —
-# becomes an empty record, the fused path's semantics).
+# Per-line transport: a (kind, crop, geom) line crop of
+# rpred_parity.LoadedRecognizer.line_crop — the raw uint8 crop plus the
+# crop-local baseline geometry (JSON; NULL on the bbox path). Page rows
+# (line_idx -1) carry page_meta instead; complete=true marks a page row
+# that is already the final extraction row.
 _PREP_DDL = (
     "url string, line_idx int, complete boolean, page_meta string, "
-    "kind int, crop binary, crop_h int, crop_w int, geom string, box_w int"
+    "kind int, crop binary, crop_h int, crop_w int, geom string"
 )
 _PREP_ARROW = pa.schema([
     pa.field("url", pa.string()),
@@ -89,13 +81,10 @@ _PREP_ARROW = pa.schema([
     pa.field("crop_h", pa.int32()),
     pa.field("crop_w", pa.int32()),
     pa.field("geom", pa.string()),
-    pa.field("box_w", pa.int32()),
 ])
 
-# `failed` marks a line whose prep/forward/decode RAISED (not a merely
-# invalid/blank line): assembly turns any failed line into the fused
-# plan's guard-tripped empty page row, so the two plans stay row-identical
-# under failure instead of silently emitting partially-empty text.
+# `failed` marks a line that RAISED (not a merely blank line): assembly
+# turns its page into the guard-tripped empty row.
 _REC_DDL = (
     "url string, line_idx int, complete boolean, page_meta string, "
     "prediction string, cuts string, confidences array<float>, "
@@ -126,116 +115,66 @@ def _json_default(o):
     raise TypeError(f"not JSON-serializable: {type(o)}")
 
 
+def _page_row(url, complete, meta) -> dict:
+    return {"url": url, "line_idx": -1, "complete": complete,
+            "page_meta": json.dumps(meta, default=_json_default)}
+
+
 def _prepare_one(html, url, lang, gt_text, segmenter, text_direction,
                  kraken_model_path, no_segmentation, temperature,
                  nlbin_params) -> list[dict]:
     """One document -> prep rows. Non-image payloads (XML/JSON/web-HTML)
     and failed pages produce ONE complete row (the fused extract_document
     row, which never involves recognition for those payloads); image
-    pages produce a page-meta row plus one row per segmented line."""
+    pages produce a page-meta row plus one row per valid line crop."""
     from . import stages
-    from .stages import _decode_and_segment, _payload_route, extract_document
 
     try:
-        route = _payload_route(html)
+        route = stages._payload_route(html)
     except Exception:
         # null/unsliceable html: defer to extract_document, whose guard
         # path owns malformed payloads (emits the flagged empty row)
         route = "defer"
     if route is not None:
-        row = extract_document(
+        return [_page_row(url, True, stages.extract_document(
             html, url, lang, gt_text, segmenter, text_direction,
             kraken_model_path, no_segmentation=no_segmentation,
-            temperature=temperature, nlbin_params=nlbin_params)
-        return [{"url": url, "line_idx": -1, "complete": True,
-                 "page_meta": json.dumps(row, default=_json_default),
-                 "kind": -1, "crop": None, "crop_h": 0, "crop_w": 0,
-                 "geom": None, "box_w": 0}]
+            temperature=temperature, nlbin_params=nlbin_params))]
 
     t0 = time.perf_counter()
-    base_dir = "R" if lang == "ar" else "L"
-    if text_direction == "vertical":
-        text_direction = "vertical-rl" if base_dir == "R" else "vertical-lr"
-    elif text_direction is None:
-        text_direction = "horizontal-rl" if base_dir == "R" else "horizontal-lr"
-    vertical = text_direction.startswith("vertical")
-    out = {
-        "url": url, "lang": lang, "base_dir": base_dir, "text": "",
-        "n_lines": 0, "n_regions": 0, "guard_tripped": False,
-        "lines": [], "regions": [], "cer": None, "n_px": 0,
-        "width": 0, "height": 0, "line_orders": [],
-    }
+    out, text_direction, vertical = stages._page_header(url, lang, text_direction)
     try:
-        img, mask, seg = _decode_and_segment(
+        img, mask, seg = stages._decode_and_segment(
             html, url, out, segmenter, text_direction,
             no_segmentation, nlbin_params, t0)
         rec = stages._get_kraken_recognizer(kraken_model_path,
                                             temperature=temperature)
         rows = []
-        inval = {"url": url, "complete": False, "page_meta": None,
-                 "kind": -1, "crop": None, "crop_h": 0, "crop_w": 0,
-                 "geom": None, "box_w": 0}
         for i, ln in enumerate(seg["lines"]):
-            # seg-type dispatch and bbox clamping exactly as
-            # LoadedRecognizer.recognize_lines (rpred_parity.py:236-248);
-            # only the page-local prep half (guard + crop) runs here — the
-            # polygon mask / resize half runs in the line-salted stage
-            if rec.bundle.seg_type == "bbox" or not ln.get("baseline"):
-                x0 = max(0, ln["bbox"][0])
-                y0 = max(0, ln["bbox"][1])
-                x1 = min(img.shape[1], ln["bbox"][2])
-                y1 = min(img.shape[0], ln["bbox"][3])
-                if x1 <= x0 or y1 <= y0:
-                    rows.append(dict(inval, line_idx=i))
-                    continue
-                crop = img[y0:y1, x0:x1]
-                rows.append({
-                    "url": url, "line_idx": i, "complete": False,
-                    "page_meta": None, "kind": 0,
-                    "crop": np.ascontiguousarray(crop).tobytes(),
-                    "crop_h": int(crop.shape[0]),
-                    "crop_w": int(crop.shape[1]),
-                    "geom": None, "box_w": int(x1 - x0),
-                })
-            else:
-                r = rec._baseline_crop(img, ln["baseline"], ln["boundary"])
-                if r is None:
-                    rows.append(dict(inval, line_idx=i))
-                    continue
-                crop, bl_local, poly_local = r
-                rows.append({
-                    "url": url, "line_idx": i, "complete": False,
-                    "page_meta": None, "kind": 1,
-                    "crop": np.ascontiguousarray(crop).tobytes(),
-                    "crop_h": int(crop.shape[0]),
-                    "crop_w": int(crop.shape[1]),
-                    "geom": json.dumps(
-                        {"bl": bl_local.tolist(),
-                         "poly": np.asarray(poly_local).tolist()}),
-                    "box_w": 0,
-                })
-        meta = {
+            c = rec.line_crop(img, ln)
+            if c is None:
+                continue  # invalid line: assembly emits its empty record
+            kind, crop, geom = c
+            rows.append({
+                "url": url, "line_idx": i, "complete": False,
+                "kind": kind, "crop": np.ascontiguousarray(crop).tobytes(),
+                "crop_h": int(crop.shape[0]), "crop_w": int(crop.shape[1]),
+                "geom": None if geom is None else json.dumps(
+                    {"bl": geom[0].tolist(), "poly": geom[1].tolist()}),
+            })
+        rows.append(_page_row(url, False, {
             "out": out,
             "seg_lines": seg["lines"],
             "seg_regions": seg["regions"],
             "vertical": vertical,
             "gt_text": gt_text,
             "prep_ms": (time.perf_counter() - t0) * 1000.0,
-        }
-        rows.append({"url": url, "line_idx": -1, "complete": False,
-                     "page_meta": json.dumps(meta, default=_json_default),
-                     "kind": -1, "crop": None, "crop_h": 0, "crop_w": 0,
-                     "geom": None, "box_w": 0})
+        }))
         return rows
     except Exception:
-        # guard-tripped empty row, exactly the fused plan's failure path
-        out["guard_tripped"] = True
-        out["cer"] = 1.0 if gt_text else None
+        stages._guard_trip(out, gt_text)
         out["wall_ms"] = (time.perf_counter() - t0) * 1000.0
-        return [{"url": url, "line_idx": -1, "complete": True,
-                 "page_meta": json.dumps(out, default=_json_default),
-                 "kind": -1, "crop": None, "crop_h": 0, "crop_w": 0,
-                 "geom": None, "box_w": 0}]
+        return [_page_row(url, True, out)]
 
 
 def make_prepare_map(segmenter, text_direction, kraken_model_path,
@@ -262,6 +201,16 @@ def make_prepare_map(segmenter, text_direction, kraken_model_path,
     return prepare
 
 
+def _line_crop(r: dict):
+    """A transported prep row back to its (kind, crop, geom) line crop."""
+    crop = np.frombuffer(r["crop"], dtype=np.uint8).reshape(r["crop_h"], r["crop_w"])
+    if r["geom"] is None:
+        return r["kind"], crop, None
+    g = json.loads(r["geom"])
+    return r["kind"], crop, (np.asarray(g["bl"], dtype=np.float64),
+                             np.asarray(g["poly"]))
+
+
 def make_recognize_map(kraken_model_path, temperature, batch_size: int = 32):
     def recognize(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from . import stages
@@ -270,103 +219,26 @@ def make_recognize_map(kraken_model_path, temperature, batch_size: int = 32):
                                             temperature=temperature)
         for batch in batches:
             rows = batch.to_pylist()
-            out_rows = []
-            pending = []  # (row_pos, net_in, ts_w_padded, box_w)
-            for r in rows:
-                if r["line_idx"] < 0 or r["kind"] < 0 or r["crop"] is None:
-                    # page-meta / complete / invalid-line rows pass through
-                    out_rows.append({
-                        "url": r["url"], "line_idx": r["line_idx"],
-                        "complete": r["complete"],
-                        "page_meta": r["page_meta"],
-                        "prediction": "" if r["line_idx"] >= 0 else None,
-                        "cuts": "[]" if r["line_idx"] >= 0 else None,
-                        "confidences": [] if r["line_idx"] >= 0 else None,
-                        "rec_ms": 0.0 if r["line_idx"] >= 0 else None,
-                        "failed": False,
-                    })
-                    continue
-                pos = len(out_rows)
+            lines = [r for r in rows if r["line_idx"] >= 0]
+            records, rec_ms = rec.run_lines(
+                [_line_crop(r) for r in lines], rec._prep_crop, PAD,
+                scale_cuts=True, batch_size=batch_size)
+            out_rows = [{"url": r["url"], "line_idx": -1,
+                         "complete": r["complete"], "page_meta": r["page_meta"],
+                         "failed": False}
+                        for r in rows if r["line_idx"] < 0]
+            for r, d, ms in zip(lines, records, rec_ms):
+                failed = isinstance(d, Exception)
                 out_rows.append({
                     "url": r["url"], "line_idx": r["line_idx"],
                     "complete": False, "page_meta": None,
-                    "prediction": "", "cuts": "[]", "confidences": [],
-                    "rec_ms": 0.0, "failed": False,
+                    "prediction": "" if failed else d["prediction"],
+                    "cuts": "[]" if failed else json.dumps(
+                        [[int(a), int(b)] for a, b in d["cuts"]]),
+                    "confidences": [] if failed else [
+                        float(c) for c in d["confidences"]],
+                    "rec_ms": ms, "failed": failed,
                 })
-                try:
-                    crop = np.frombuffer(r["crop"], dtype=np.uint8).reshape(
-                        r["crop_h"], r["crop_w"])
-                    # crop-local prep half (the work the split moves off
-                    # the per-page prepare task): dewarp / polygon mask +
-                    # Lanczos resize, exactly _prep_*_u8's tail
-                    if r["kind"] == 0:
-                        p = rec._prep_bbox_u8_from_crop(crop, r["box_w"])
-                    else:
-                        g = json.loads(r["geom"])
-                        p = rec._prep_baseline_u8_from_crop(
-                            crop,
-                            np.asarray(g["bl"], dtype=np.float64),
-                            np.asarray(g["poly"]))
-                    if p is not None and p[0].size == 0:
-                        # the fused path's _prep_net_input raises on a
-                        # zero-area tensor inside recognize_lines, guard-
-                        # tripping the page — reproduce via the failed flag
-                        raise ValueError("zero-area line tensor")
-                    if p is None:
-                        continue  # blank/degenerate line -> empty record
-                    u8, box_w = p
-                    ts = u8.astype(np.float32) / 255.0
-                    net_in = rec._prep_net_input(ts, PAD)
-                except Exception:
-                    # a RAISING line is a failure the fused plan answers
-                    # with a guard-tripped page row; mark it so assembly
-                    # reproduces that row instead of silently emitting
-                    # partial text
-                    out_rows[pos]["failed"] = True
-                    continue
-                if net_in is not None:
-                    pending.append((pos, net_in, net_in.shape[1], box_w))
-            # width-sorted chunks through the batched forward, then the
-            # exact per-line decode — recognize_lines' loop verbatim
-            pending.sort(key=lambda t: t[2])
-            for s in range(0, len(pending), batch_size):
-                chunk = pending[s:s + batch_size]
-                c0 = time.perf_counter()
-                try:
-                    probs_list = rec.net.forward_batch([c[1] for c in chunk])
-                except Exception:
-                    # isolate the genuinely-failing line(s): per-line
-                    # forward (prediction-exact vs the batched path) so
-                    # only the failing line's page guard-trips, like the
-                    # fused plan where chunks never span pages
-                    probs_list = []
-                    for c in chunk:
-                        try:
-                            probs_list.append(rec.net.forward(c[1]))
-                        except Exception:
-                            out_rows[c[0]]["failed"] = True
-                            probs_list.append(None)
-                chunk_ms = (time.perf_counter() - c0) * 1000.0
-                wsum = sum(c[2] for c in chunk) or 1
-                for (pos, net_in, ts_w, box_w), probs in zip(chunk, probs_list):
-                    if probs is None:
-                        continue
-                    try:
-                        d = rec._decode_probs(probs, ts_w, PAD,
-                                              bidi_reordering=True,
-                                              box_w=box_w)
-                    except Exception:
-                        out_rows[pos]["failed"] = True
-                        continue
-                    out_rows[pos]["prediction"] = d["prediction"]
-                    out_rows[pos]["cuts"] = json.dumps(
-                        [[int(a), int(b)] for a, b in d["cuts"]])
-                    out_rows[pos]["confidences"] = [
-                        float(c) for c in d["confidences"]]
-                    # recurrence cost is ~linear in timesteps: attribute
-                    # the chunk's wall width-proportionally so assembly
-                    # can report a realistic per-document wall_ms
-                    out_rows[pos]["rec_ms"] = chunk_ms * ts_w / wsum
             yield pa.RecordBatch.from_pylist(out_rows, schema=_REC_ARROW)
 
     return recognize
@@ -374,7 +246,7 @@ def make_recognize_map(kraken_model_path, temperature, batch_size: int = 32):
 
 def make_assemble():
     def assemble(table: pa.Table) -> pa.Table:
-        from .stages import _assemble_extraction
+        from .stages import _assemble_extraction, _guard_trip
 
         try:
             from pyspark import TaskContext
@@ -395,19 +267,8 @@ def make_assemble():
                 row = meta
             else:
                 o = meta["out"]
-                rec_ms = sum((r.get("rec_ms") or 0.0)
-                             for r in rows if r["line_idx"] >= 0)
-                if any(r.get("failed") for r in rows if r["line_idx"] >= 0):
-                    # a line's prep/forward/decode RAISED in the line
-                    # stage: the fused plan answers any in-recognition
-                    # exception with the guard-tripped empty page row
-                    # (stages.extract_document's catch-all) — emit exactly
-                    # that row so the plans stay row-identical under
-                    # failure (no silent partially-empty text)
-                    o["guard_tripped"] = True
-                    o["cer"] = 1.0 if meta["gt_text"] else None
-                    o["wall_ms"] = meta["prep_ms"] + rec_ms
-                    row = o
+                if any(r["failed"] for r in lines.values()):
+                    row = _guard_trip(o, meta["gt_text"])
                 else:
                     records = []
                     for i in range(len(meta["seg_lines"])):
@@ -422,11 +283,12 @@ def make_assemble():
                         o, meta["seg_lines"], records, meta["seg_regions"],
                         meta["vertical"], o["lang"], o["base_dir"],
                         meta["gt_text"])
-                    # per-doc wall = prepare wall + this page's share of
-                    # the batched recognition wall (width-proportional
-                    # chunk attribution in stage B) — so metrics rollups
-                    # see the real cost, not just the prepare half
-                    row["wall_ms"] = meta["prep_ms"] + rec_ms
+                # per-doc wall = prepare wall + this page's share of the
+                # batched recognition wall (width-proportional chunk
+                # attribution in run_lines) — so metrics rollups see the
+                # real cost, not just the prepare half
+                row["wall_ms"] = meta["prep_ms"] + sum(
+                    r["rec_ms"] for r in lines.values())
             row["partition_id"] = pid
             out.append(row)
         return pa.Table.from_pylist(out, schema=EXTRACTION_ARROW)

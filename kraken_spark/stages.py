@@ -139,28 +139,8 @@ def extract_document(
 
     model, codec = _get_model()
     t0 = time.perf_counter()
-    base_dir = "R" if lang == "ar" else "L"
-    if text_direction == "vertical":
-        text_direction = "vertical-rl" if base_dir == "R" else "vertical-lr"
-    elif text_direction is None:
-        text_direction = "horizontal-rl" if base_dir == "R" else "horizontal-lr"
-    vertical = text_direction.startswith("vertical")
-    out = {
-        "url": url,
-        "lang": lang,
-        "base_dir": base_dir,
-        "text": "",
-        "n_lines": 0,
-        "n_regions": 0,
-        "guard_tripped": False,
-        "lines": [],
-        "regions": [],
-        "cer": None,
-        "n_px": 0,
-        "width": 0,
-        "height": 0,
-        "line_orders": [],
-    }
+    out, text_direction, vertical = _page_header(url, lang, text_direction)
+    base_dir = out["base_dir"]
     try:
         route = _payload_route(html)
         if route == "markup":
@@ -234,11 +214,45 @@ def extract_document(
         _assemble_extraction(out, seg["lines"], records, seg["regions"],
                              vertical, lang, base_dir, gt_text)
     except Exception:
-        # failed page -> empty extraction, flagged; mirrors the reference's
-        # empty-record-on-failure semantics (rpred.py:202-223)
-        out["guard_tripped"] = True
-        out["cer"] = 1.0 if gt_text else None
+        _guard_trip(out, gt_text)
     out["wall_ms"] = (time.perf_counter() - t0) * 1000.0
+    return out
+
+
+def _page_header(url: str, lang: str, text_direction: str | None):
+    """The page row every plan starts from: the text direction resolved
+    from lang (None -> horizontal-{lr,rl}, 'vertical' -> vertical-{lr,rl},
+    a full direction as-is) and the empty extraction row. Returns
+    (out, text_direction, vertical)."""
+    base_dir = "R" if lang == "ar" else "L"
+    if text_direction == "vertical":
+        text_direction = "vertical-rl" if base_dir == "R" else "vertical-lr"
+    elif text_direction is None:
+        text_direction = "horizontal-rl" if base_dir == "R" else "horizontal-lr"
+    out = {
+        "url": url,
+        "lang": lang,
+        "base_dir": base_dir,
+        "text": "",
+        "n_lines": 0,
+        "n_regions": 0,
+        "guard_tripped": False,
+        "lines": [],
+        "regions": [],
+        "cer": None,
+        "n_px": 0,
+        "width": 0,
+        "height": 0,
+        "line_orders": [],
+    }
+    return out, text_direction, text_direction.startswith("vertical")
+
+
+def _guard_trip(out: dict, gt_text: str | None) -> dict:
+    """A failed page's row: empty extraction, flagged; mirrors the
+    reference's empty-record-on-failure semantics (rpred.py:202-223)."""
+    out["guard_tripped"] = True
+    out["cer"] = 1.0 if gt_text else None
     return out
 
 

@@ -441,9 +441,12 @@ def test_recognizer_on_dataset(spark, dataset_path: str, model_path: str,
                     if len(nzr) == 0 or len(nzc) == 0:
                         continue
                     img = img[nzr[0]: nzr[-1] + 1, nzc[0]: nzc[-1] + 1]
-                    ts = fixed_resize(img, (rec.height, 0)).astype(
-                        np.float32) / 255.0
-                    pred = rec._finish(ts, pad)["prediction"]
+                    (r,), _ = rec.run_lines(
+                        [fixed_resize(img, (rec.height, 0))],
+                        lambda u8: (u8, u8.shape[1]), pad)
+                    if isinstance(r, Exception):
+                        raise r
+                    pred = r["prediction"]
                     rows.append({
                         "language": (ln["language"] or ["und"])[0],
                         "n_chars": len(gt),

@@ -17,8 +17,12 @@ import pytest
 from kraken_spark.kernels import png
 from kraken_spark.kernels.modelio import load_kraken_model, read_safetensors
 from kraken_spark.kernels.rpred_parity import LoadedRecognizer
+from kraken_spark.refassets import resources_dir
 
-RES = "/root/reference/tests/resources"
+from conftest import requires_reference
+
+RES = resources_dir()
+OVERFIT = requires_reference("overfit.mlmodel", "000236.png")
 
 GOLDEN_BBOX = "ܡ ܘܡ ܗ ܡܕܐ ܐ ܐܐ ܡ ܗܗܐܐܐܕ"
 GOLDEN_BL = ".ܗ ܣܗܐ  ܕ ܣ   ܗ ܕܗܗ ܟܕܗܣ    ܠ  ܐ .ܣܕܐܣ. ܗ "
@@ -34,12 +38,14 @@ def line_img():
     return png.decode_png(open(f"{RES}/000236.png", "rb").read())
 
 
+@OVERFIT
 def test_simple_bbox_rpred_golden(overfit, line_img):
     """reference tests/test_rpred.py:352-358 (test_simple_bbox_rpred)."""
     r = overfit.recognize_bbox(line_img, [0, 0, 2544, 156], pad=1)
     assert r["prediction"] == GOLDEN_BBOX
 
 
+@OVERFIT
 def test_simple_bl_rpred_golden(overfit, line_img):
     """reference tests/test_rpred.py:360-366 (test_simple_bl_rpred) —
     exercises the LEGACY polygon extractor (the model predates the
@@ -55,6 +61,7 @@ def test_simple_bl_rpred_golden(overfit, line_img):
     assert r["prediction"] == GOLDEN_BL
 
 
+@OVERFIT
 def test_rpred_outbounds_empty(overfit, line_img):
     """Invalid bbox/baseline coordinates emit empty records
     (test_rpred_bbox_outbounds / test_rpred_bl_outbounds)."""
@@ -69,6 +76,7 @@ def test_rpred_outbounds_empty(overfit, line_img):
     assert r["prediction"] == ""
 
 
+@OVERFIT
 def test_legacy_flag_dispatch(overfit, line_img):
     """legacy vs new polygon extraction are both selectable and — for a
     non-rectangular boundary, where pixels outside the polygon exist in the
@@ -87,6 +95,7 @@ def test_legacy_flag_dispatch(overfit, line_img):
     assert overfit.bundle.legacy_polygons is True
 
 
+@requires_reference("overfit_bl.safetensors", "000236.png")
 def test_safetensors_model_prediction_stable(line_img):
     """Pinned outputs for the safetensors-loaded models (our own stability
     goldens — the reference pins only the mlmodel strings): a silent change
@@ -101,19 +110,22 @@ def test_safetensors_model_prediction_stable(line_img):
     )
 
 
+MODEL_ASSETS = {
+    "overfit.mlmodel": (15, 10, True),
+    "overfit_newpoly.mlmodel": (44, 10, False),
+    "overfit_bl.safetensors": (35, 12, True),
+    "overfit_bl_newpoly.safetensors": (35, 12, False),
+    "model_small.safetensors": (3, 4, False),
+    "model_small_fp16.safetensors": (3, 4, False),
+    "model_small_mixed.safetensors": (3, 4, False),
+}
+
+
+@requires_reference(*MODEL_ASSETS)
 def test_all_reference_model_assets_load():
     """Every non-LFS-stub model file in the reference parses: correct
     VGSL/codec/weight shapes through both container formats."""
-    expect = {
-        "overfit.mlmodel": (15, 10, True),
-        "overfit_newpoly.mlmodel": (44, 10, False),
-        "overfit_bl.safetensors": (35, 12, True),
-        "overfit_bl_newpoly.safetensors": (35, 12, False),
-        "model_small.safetensors": (3, 4, False),
-        "model_small_fp16.safetensors": (3, 4, False),
-        "model_small_mixed.safetensors": (3, 4, False),
-    }
-    for name, (n_codec, n_weights, legacy) in expect.items():
+    for name, (n_codec, n_weights, legacy) in MODEL_ASSETS.items():
         m = load_kraken_model(f"{RES}/{name}")[0]
         assert len(m.codec) == n_codec, name
         assert len(m.weights) == n_weights, name
@@ -121,6 +133,7 @@ def test_all_reference_model_assets_load():
         assert m.vgsl.startswith("[1,")
 
 
+@requires_reference("model_small.safetensors", "model_small_fp16.safetensors")
 def test_safetensors_fp16_close_to_fp32():
     t32, _ = read_safetensors(f"{RES}/model_small.safetensors")
     t16, _ = read_safetensors(f"{RES}/model_small_fp16.safetensors")
@@ -131,6 +144,7 @@ def test_safetensors_fp16_close_to_fp32():
         assert np.allclose(k32[k], k16[k], atol=1e-2), k
 
 
+@requires_reference("overfit_bl.safetensors", "000236.png")
 def test_loaded_safetensors_model_forward():
     """The baseline-trained safetensors model runs through the torch-exact
     interpreter and emits per-frame distributions of its codec size."""
@@ -142,6 +156,7 @@ def test_loaded_safetensors_model_forward():
     assert isinstance(r["prediction"], str)
 
 
+@OVERFIT
 def test_pipeline_with_loaded_kraken_model():
     """plan_extraction(kraken_model_path=...) runs the distributed pipeline
     with a REAL reference model: segmentation from the engine, recognition
@@ -253,6 +268,7 @@ def test_torchvgsl_lstm_cross_check():
     assert np.allclose(t_out[0], v_out, atol=1e-5), np.abs(t_out[0] - v_out).max()
 
 
+@requires_reference("model_small.safetensors")
 def test_model_small_forward_shape():
     m = load_kraken_model(f"{RES}/model_small.safetensors")[0]
     from kraken_spark.kernels.torchvgsl import TorchVGSL
@@ -299,6 +315,7 @@ def _simple_seg(kind: str) -> dict:
             "lines": [dict(line, id="foo", tags=None)]}
 
 
+@OVERFIT
 def test_mm_rpred_missing_tags_raises(overfit, line_img):
     """reference test_mm_rpred_{bbox,bl}_missing_tags: a plain mapping
     keyed by something other than the present tags fails fast."""
@@ -310,6 +327,7 @@ def test_mm_rpred_missing_tags_raises(overfit, line_img):
                                  _simple_seg(kind), pad=1)
 
 
+@OVERFIT
 def test_mm_rpred_ignore_tags_golden(overfit, line_img):
     """reference test_mm_rpred_{bbox,bl}_ignore_tags: the foobar line is
     skipped with an empty record, the default line hits the trained model
@@ -324,6 +342,7 @@ def test_mm_rpred_ignore_tags_golden(overfit, line_img):
         assert recs[0]["model"] is None and recs[1]["model"] is not None
 
 
+@OVERFIT
 def test_mm_rpred_default_tags_golden(overfit, line_img):
     """reference test_mm_rpred_{bbox,bl}_default_tags: a defaultdict
     registry routes BOTH lines (incl. the unknown foobar tag) to the
@@ -338,6 +357,7 @@ def test_mm_rpred_default_tags_golden(overfit, line_img):
         assert [r["prediction"] for r in recs] == [golden, golden]
 
 
+@OVERFIT
 def test_mm_rpred_nobidi_golden(overfit, line_img):
     """reference test_mm_rpred_{bl,bbox}_nobidi: bidi_reordering=False
     emits the raw display-order string (default pad=16 — these goldens use
@@ -360,6 +380,7 @@ BL_LINE = {"id": "foo", "baseline": [[0, 10], [2543, 10]],
            "boundary": [[0, 0], [2543, 0], [2543, 155], [0, 155]]}
 
 
+@OVERFIT
 def test_forced_align_trained_simple(overfit, line_img):
     """Aligning encodable text against the real line yields per-character
     positions/confidences in display order (test_forced_align_simple /
@@ -374,6 +395,7 @@ def test_forced_align_trained_simple(overfit, line_img):
     assert all(0 <= a <= b for a, b in rec["cuts"])
 
 
+@OVERFIT
 def test_forced_align_trained_record_count(overfit, line_img):
     """One aligned record per input line; empty segmentation -> empty
     (test_forced_align_record_count / _empty_segmentation)."""
@@ -388,6 +410,7 @@ def test_forced_align_trained_record_count(overfit, line_img):
                                      {"type": "baselines", "lines": []}) == []
 
 
+@OVERFIT
 def test_forced_align_trained_unencodable_raises(overfit, line_img):
     """Text the model codec cannot encode at all raises ValueError
     (test_forced_align_unencodable_text / _xml_document)."""
@@ -400,6 +423,7 @@ def test_forced_align_trained_unencodable_raises(overfit, line_img):
 
 # -- safetensors write/read round-trip (test_loaders.py:276-320) -------------
 
+@requires_reference("overfit_bl.safetensors", "000236.png")
 def test_safetensors_write_read_roundtrip(tmp_path, line_img):
     """Saving a loaded model and reloading reproduces weights byte-for-byte
     and the same prediction; an F16 save reloads as the f16-quantized
@@ -452,6 +476,7 @@ def test_safetensors_writer_rejects_bad_meta(tmp_path):
         load_safetensors(p)
 
 
+@OVERFIT
 def test_mm_rpred_no_legacy_polygons_forcing(overfit, line_img):
     """no_legacy_polygons forces the NEW extractor on an old model
     (test_newpolygons.py rpred trio): on a non-rectangular boundary the
@@ -483,6 +508,7 @@ def test_mm_rpred_no_legacy_polygons_forcing(overfit, line_img):
 
 # -- CoreML container write/read round-trip ----------------------------------
 
+@OVERFIT
 def test_coreml_write_read_roundtrip(tmp_path, line_img):
     """save_coreml emits a .mlmodel the loader reads back: conv/gn/linear
     weights and metadata byte-compatible on the real overfit bundle, with
@@ -548,6 +574,7 @@ def test_coreml_lstm_roundtrip():
     assert np.allclose(before, after, atol=1e-5)
 
 
+@OVERFIT
 def test_temperature_is_prediction_invariant(overfit, line_img):
     """The ocr -t/--temperature knob: softmax(z/T) == p^(1/T) renormalized,
     so predictions/cuts never change — only confidences sharpen (T<1) or

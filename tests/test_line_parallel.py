@@ -218,21 +218,51 @@ def test_recognition_failure_guards_page_not_silent_empty(monkeypatch):
         assert row[k] == fused[k], k
 
 
-def test_u8_prep_roundtrip_is_bit_exact():
-    """The uint8 transport form reproduces the float prep bit-for-bit
-    (the quantization points in rpred_parity._prep_bbox/_prep_baseline
-    are uint8 by construction)."""
-    from kraken_spark.kernels import png
-    from kraken_spark.kernels.modelio import load_kraken_model
-    from kraken_spark.kernels.rpred_parity import LoadedRecognizer
+def test_batch_failure_recovers_identically_in_both_plans(monkeypatch):
+    """One failure rule for both plans: a chunk whose forward_batch raises
+    is retried line by line. With forward_batch failing on every chunk of
+    more than one line (and the per-line forward healthy), the fused and
+    line-parallel rows stay equal and both pages recover their text."""
+    import pyarrow as pa
 
-    res = "/root/reference/tests/resources"
-    if not os.path.exists(f"{res}/000236.png"):
-        pytest.skip("reference resources missing")
-    img = png.decode_png(open(f"{res}/000236.png", "rb").read())
-    rec = LoadedRecognizer(load_kraken_model(f"{res}/overfit.mlmodel")[0])
-    bbox = [0, 0, 1200, 156]
-    ts, bw = rec._prep_bbox(img, bbox)
-    u8, bw2 = rec._prep_bbox_u8(img, bbox)
-    assert bw == bw2
-    assert (u8.astype(np.float32) / 255.0 == ts).all()
+    from kraken_spark.kernels import png, render
+    from kraken_spark.kernels.torchvgsl import TorchVGSL
+    from kraken_spark.pipeline_lines import (_PREP_ARROW, _REC_ARROW,
+                                             _prepare_one, make_assemble,
+                                             make_recognize_map)
+    from kraken_spark.stages import extract_document
+
+    docs = []
+    for i in (0, 1):
+        d = render.render_document(1234, i)
+        docs.append((f"http://z/p{i}", png.encode_png(d["img"]), d["text"]))
+    healthy = {u: extract_document(h, u, "en", t, "pageseg", None, REC_ASSET)
+               for u, h, t in docs}
+    real = TorchVGSL.forward_batch
+
+    def flaky(self, tensors):
+        if len(tensors) > 1:
+            raise RuntimeError("batched forward failed")
+        return real(self, tensors)
+
+    monkeypatch.setattr(TorchVGSL, "forward_batch", flaky)
+    fused = {u: extract_document(h, u, "en", t, "pageseg", None, REC_ASSET)
+             for u, h, t in docs}
+    rows = [r for u, h, t in docs
+            for r in _prepare_one(h, u, "en", t, "pageseg", None, REC_ASSET,
+                                  False, 1.0, None)]
+    batch = pa.RecordBatch.from_pylist(rows, schema=_PREP_ARROW)
+    rec = pa.Table.from_batches(
+        list(make_recognize_map(REC_ASSET, 1.0)(iter([batch])))).to_pylist()
+    lp = {}
+    for u, _, _ in docs:
+        page = pa.Table.from_pylist([r for r in rec if r["url"] == u],
+                                    schema=_REC_ARROW)
+        (lp[u],) = make_assemble()(page).to_pylist()
+    for u, _, _ in docs:
+        assert not fused[u]["guard_tripped"] and fused[u]["n_lines"] > 0
+        assert fused[u]["text"] == healthy[u]["text"]
+        for k in ("url", "text", "n_lines", "n_regions", "cer",
+                  "guard_tripped", "lines"):
+            assert lp[u][k] == fused[u][k], k
+

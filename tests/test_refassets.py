@@ -49,3 +49,17 @@ def test_rpred_golden_via_env_override(tmp_path, monkeypatch, spark):
     rows = x_rpred_golden(spark, SF).collect()
     assert len(rows) == 4
     assert all(r.match for r in rows)
+
+
+def test_rpred_golden_degrades_without_reference(tmp_path, monkeypatch, spark):
+    """Without the reference assets x_rpred_golden still emits its four
+    case rows and schema, with prediction and match NULL."""
+    monkeypatch.setenv("KRAKEN_SPARK_REFERENCE_ROOT", str(tmp_path))
+    from kraken_spark.operators.extraction import x_rpred_golden
+
+    df = x_rpred_golden(spark, SF)
+    assert df.columns == ["case", "prediction", "golden", "match"]
+    rows = df.collect()
+    assert [r.case for r in rows] == sorted(
+        ["bbox_golden", "bl_golden", "bbox_outbounds", "bl_outbounds"])
+    assert all(r.prediction is None and r.match is None for r in rows)
