@@ -18,14 +18,9 @@ import numpy as np
 
 from .codec import Codec
 from .glyphs import CELL_W, GLYPH_W
+from .layers import log_softmax
 from .recognizer import FRAME_STRIDE, input_transform
 from .vgsl import VGSLModel
-
-
-def _log_softmax(x: np.ndarray) -> np.ndarray:
-    m = x.max(axis=-1, keepdims=True)
-    e = x - m
-    return e - np.log(np.exp(e).sum(axis=-1, keepdims=True))
 
 
 def ctc_viterbi_align(logits: np.ndarray, labels: list[int], blank: int = 0):
@@ -39,7 +34,7 @@ def ctc_viterbi_align(logits: np.ndarray, labels: list[int], blank: int = 0):
     L = len(labels)
     if L == 0 or T < L:
         return None
-    logp = _log_softmax(logits.astype(np.float64))
+    logp = log_softmax(logits.astype(np.float64))
     S = 2 * L + 1
     lab = np.empty(S, dtype=np.int64)
     lab[0::2] = blank

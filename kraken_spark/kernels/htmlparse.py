@@ -35,6 +35,7 @@ from __future__ import annotations
 import hashlib
 import html as _htmlmod
 import re
+from types import MappingProxyType
 
 # --------------------------------------------------------------------------
 # tag vocabularies
@@ -442,21 +443,22 @@ def classify_blocks(blks: list[dict], lang: str | None = None) -> list[dict]:
 # one row — the second call reuses the first's parse+classification (a
 # ~2x saving on the web leg) instead of re-walking the DOM. Pure-function
 # memo of in-flight work within a worker, keyed on the exact (bytes, lang)
-# input — never persisted, never keyed on corpus identity. Callers treat
-# the returned blocks as read-only (all current ones do).
+# input — never persisted, never keyed on corpus identity. Every caller
+# gets the same blocks, so they are returned read-only.
 _MEMO: tuple | None = None
 
 
-def extract_main_text(data: bytes, lang: str | None = None) -> tuple[str, list[dict]]:
+def extract_main_text(data: bytes, lang: str | None = None
+                      ) -> tuple[str, tuple[MappingProxyType, ...]]:
     """HTML bytes -> (main-content text, classified blocks). The text is
     the good blocks joined with newlines — the per-url byte-identity
-    target when the source is write_boilerplate_page. The returned block
-    list is shared with the memo above — do not mutate."""
+    target when the source is write_boilerplate_page. The blocks are
+    shared with the memo above, so they are read-only views."""
     global _MEMO
     m = _MEMO
     if m is not None and m[1] == lang and m[0] == data:
         return m[2]
-    blks = classify_blocks(blocks(parse_html(data)), lang)
+    blks = tuple(MappingProxyType(b) for b in classify_blocks(blocks(parse_html(data)), lang))
     res = ("\n".join(b["text"] for b in blks if b["cls"] == "good"), blks)
     _MEMO = (data, lang, res)
     return res

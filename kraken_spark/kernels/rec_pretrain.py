@@ -19,9 +19,10 @@ num_negatives=100, logit_temp=0.1).
 This module reimplements that task from scratch over the rec_train
 topology (kernels/rec_train.py SPEC: conv/pool feature stack -> S-collapse
 -> BiLSTM context encoder), with hand-written backward through the masking
-layer, the projection head, the cosine/CE loss, and the shared feature +
-encoder stacks (reusing rec_train's layer primitives so the feature
-forward is bit-identical to the supervised trainer's).
+layer, the projection head and the cosine/CE loss. The feature and
+encoder stacks, forward and backward, are rec_train's own
+(features_fwd/_bwd, encoder_fwd/_bwd) — the ones the supervised trainer
+composes — so the two trainers share them by construction.
 
 Divergences from the reference, documented: span sampling is a seeded
 PCG64 greedy non-overlap sampler PER SAMPLE (the reference's
@@ -132,107 +133,6 @@ def mask_from_spans(spans: np.ndarray, t: int,
     return m
 
 
-# --------------------------------------------------------------- features
-def _features_fwd(x: np.ndarray, widths: np.ndarray,
-                  W: dict[str, np.ndarray]):
-    """Conv/pool/S-collapse feature stack — the exact op sequence of
-    rec_train.forward up to the BiLSTM input (bit-identical by
-    construction: same helpers, same order)."""
-    widths = np.asarray(widths, dtype=np.int64)
-    a0 = rt._conv3x3_fwd(x, W["c0.co.weight"], W["c0.co.bias"])
-    r0 = np.maximum(a0, 0.0)
-    r0 = rt._mask_cols(r0, widths)
-    p0, am0 = rt._pool2x2_fwd(r0)
-    w1 = widths // 2
-    p0 = rt._mask_cols(p0, w1)
-    a1 = rt._conv3x3_fwd(p0, W["c1.co.weight"], W["c1.co.bias"])
-    r1 = np.maximum(a1, 0.0)
-    r1 = rt._mask_cols(r1, w1)
-    p1, am1 = rt._pool2x2_fwd(r1)
-    w2 = w1 // 2
-    p1 = rt._mask_cols(p1, w2)
-    bsz, c2, hh, t = p1.shape
-    feat = np.ascontiguousarray(np.transpose(p1, (0, 3, 2, 1))).reshape(
-        bsz, t, hh * c2
-    )
-    fcache = (x, widths, a0, r0, am0, p0, a1, r1, am1, p1, w1, w2)
-    return feat, w2, fcache
-
-
-def _features_bwd(dfeat: np.ndarray, fcache, W: dict[str, np.ndarray]
-                  ) -> dict[str, np.ndarray]:
-    """Conv-stack gradients given d(loss)/d(feat) — rec_train.backward's
-    lower half."""
-    x, widths, a0, r0, am0, p0, a1, r1, am1, p1, w1, w2 = fcache
-    grads: dict[str, np.ndarray] = {}
-    bsz, c2, hh, tt = p1.shape
-    dp1 = np.ascontiguousarray(
-        np.transpose(dfeat.reshape(bsz, tt, hh, c2), (0, 3, 2, 1))
-    )
-    dp1 = rt._mask_cols(dp1, w2)
-    dr1 = rt._pool2x2_bwd(r1.shape, am1, dp1)
-    dr1 = rt._mask_cols(dr1, w1)
-    da1 = dr1 * (a1 > 0)
-    dp0, dw1c, db1c = rt._conv3x3_bwd(p0, W["c1.co.weight"], da1)
-    grads["c1.co.weight"] = dw1c
-    grads["c1.co.bias"] = db1c
-    dp0 = rt._mask_cols(dp0, w1)
-    dr0 = rt._pool2x2_bwd(r0.shape, am0, dp0)
-    dr0 = rt._mask_cols(dr0, widths)
-    da0 = dr0 * (a0 > 0)
-    _dx, dw0c, db0c = rt._conv3x3_bwd(x, W["c0.co.weight"], da0)
-    grads["c0.co.weight"] = dw0c
-    grads["c0.co.bias"] = db0c
-    return grads
-
-
-def _encoder_fwd(feat: np.ndarray, w2: np.ndarray, W: dict[str, np.ndarray]):
-    """BiLSTM context encoder over a (possibly masked) feature sequence —
-    rec_train.forward's recurrent section without the output head."""
-    hf, cache_f = rt._lstm_fwd(
-        feat,
-        W["rnn.layer.weight_ih_l0"], W["rnn.layer.weight_hh_l0"],
-        W["rnn.layer.bias_ih_l0"], W["rnn.layer.bias_hh_l0"],
-    )
-    feat_r = rt._reverse_seqs(feat, w2)
-    hb_rev, cache_b = rt._lstm_fwd(
-        feat_r,
-        W["rnn.layer.weight_ih_l0_reverse"], W["rnn.layer.weight_hh_l0_reverse"],
-        W["rnn.layer.bias_ih_l0_reverse"], W["rnn.layer.bias_hh_l0_reverse"],
-    )
-    hb = rt._reverse_seqs(hb_rev, w2)
-    hcat = np.concatenate([hf, hb], axis=2)  # (B, T, 2H)
-    return hcat, (cache_f, cache_b, w2)
-
-
-def _encoder_bwd(dhcat: np.ndarray, ecache, W: dict[str, np.ndarray]):
-    """(dfeat, rnn-grads) given d(loss)/d(hcat)."""
-    cache_f, cache_b, w2 = ecache
-    hid = W["rnn.layer.weight_hh_l0"].shape[1]
-    grads: dict[str, np.ndarray] = {}
-    dhf = dhcat[:, :, :hid]
-    dhb = dhcat[:, :, hid:]
-    dseq_f, dwih_f, dwhh_f, dbih_f, dbhh_f = rt._lstm_bwd(
-        cache_f, W["rnn.layer.weight_ih_l0"], W["rnn.layer.weight_hh_l0"], dhf
-    )
-    dhb_rev = rt._reverse_seqs(dhb, w2)
-    dseq_br, dwih_b, dwhh_b, dbih_b, dbhh_b = rt._lstm_bwd(
-        cache_b,
-        W["rnn.layer.weight_ih_l0_reverse"], W["rnn.layer.weight_hh_l0_reverse"],
-        dhb_rev,
-    )
-    dfeat = dseq_f + rt._reverse_seqs(dseq_br, w2)
-    grads["rnn.layer.weight_ih_l0"] = dwih_f
-    grads["rnn.layer.weight_hh_l0"] = dwhh_f
-    grads["rnn.layer.bias_ih_l0"] = dbih_f
-    grads["rnn.layer.bias_hh_l0"] = dbhh_f
-    grads["rnn.layer.weight_ih_l0_reverse"] = dwih_b
-    grads["rnn.layer.weight_hh_l0_reverse"] = dwhh_b
-    grads["rnn.layer.bias_ih_l0_reverse"] = dbih_b
-    grads["rnn.layer.bias_hh_l0_reverse"] = dbhh_b
-    return dfeat, grads
-
-
 # --------------------------------------------------------------- loss
 def _cosine_rows(x: np.ndarray, cands: np.ndarray, eps: float = 1e-8):
     """cos(x_j, cands_jk) for x (M, D), cands (M, K, D) -> (M, K), plus the
@@ -268,7 +168,7 @@ def pretrain_loss_grads(samples: list[tuple[int, np.ndarray]],
     for i, ts in enumerate(xs):
         x[i, 0, :, : ts.shape[1]] = ts
 
-    feat, w2, fcache = _features_fwd(x, widths, W)
+    feat, w2, fcache = rt.features_fwd(x, widths, W)
     bsz, t, fdim = feat.shape
     memb = W["pre.mask_emb"]
     qw, qb = W["pre.q.weight"], W["pre.q.bias"]
@@ -285,7 +185,7 @@ def pretrain_loss_grads(samples: list[tuple[int, np.ndarray]],
 
     feat_masked = feat.copy()
     feat_masked[mask2d] = memb  # layers.py:77 inputs[mask] = mask_emb
-    hcat, ecache = _encoder_fwd(feat_masked, w2, W)
+    hcat, ecache = rt.encoder_fwd(feat_masked, w2, W)
 
     loss_sum = 0.0
     n_pos = 0
@@ -337,11 +237,11 @@ def pretrain_loss_grads(samples: list[tuple[int, np.ndarray]],
         dqb += dy.sum(axis=0)
         dfeat_orig[i, idx] += dy @ qw
 
-    dfeat_enc, grads = _encoder_bwd(dhcat, ecache, W)
+    dfeat_enc, grads = rt.encoder_bwd(dhcat, ecache, W)
     # masked positions fed the mask embedding, not the features
     dmemb += dfeat_enc[mask2d].sum(axis=0)
     dfeat_enc[mask2d] = 0.0
-    grads.update(_features_bwd(dfeat_enc + dfeat_orig, fcache, W))
+    grads.update(rt.features_bwd(dfeat_enc + dfeat_orig, fcache, W))
     grads["pre.mask_emb"] = dmemb
     grads["pre.q.weight"] = dqw
     grads["pre.q.bias"] = dqb

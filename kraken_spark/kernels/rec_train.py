@@ -19,7 +19,14 @@ Faithfulness contract (what makes the trained model production-real):
   ``[1,16,0,1 Cr{c0}3,3,16 Mp2,2 Cr{c1}3,3,32 Mp2,2 S1(1x0)1,3
   Lbx{rnn}64 O{out}1c132]`` — and the layer semantics here are the
   torch-exact ones of kernels/torchvgsl.py (same padding, same gate order
-  i,f,g,o, same S-reshape dim mapping), pinned by a forward-parity test;
+  i,f,g,o, same S-reshape dim mapping), pinned by a forward-parity test.
+  The sigmoid, log-softmax and valid-length reversal are the shared
+  primitives of kernels/layers.py; the conv and the training LSTM stay
+  here because their arithmetic is pinned to differ (see that module);
+* the feature stack (conv/pool/S-collapse) and the BiLSTM encoder are
+  written once (features_fwd/_bwd, encoder_fwd/_bwd): the supervised
+  forward/backward and the contrastive pretrainer (rec_pretrain) compose
+  them;
 * training examples are produced by the PRODUCTION inference chain
   (render -> nlbin -> blla segmentation -> extract_polygon_new -> trim ->
   Lanczos fixed_resize -> /255 -> pad 16 -> invert), i.e. exactly the
@@ -45,6 +52,7 @@ import os
 import numpy as np
 
 from .glyphs import ALPHABET, GLYPH_H
+from .layers import log_softmax, reverse_within, sigmoid
 
 # --------------------------------------------------------------- topology
 HEIGHT = 16  # network input height (VGSL fixed-height line images)
@@ -110,7 +118,8 @@ def init_weights(rng: np.random.Generator, c1: int = C1, c2: int = C2,
 def _conv3x3_fwd(x: np.ndarray, w: np.ndarray, b: np.ndarray) -> np.ndarray:
     """x: (B,Cin,H,W) -> (B,Cout,H,W); 3x3, stride 1, zero pad 1 — the
     torch Conv2d semantics of torchvgsl._conv2d_torch, batched as nine
-    shifted GEMMs (no im2col materialization)."""
+    shifted GEMMs (no im2col materialization; a different summation order
+    from _conv2d_torch's tensordot)."""
     bsz, cin, h, wd = x.shape
     cout = w.shape[0]
     xp = np.pad(x, ((0, 0), (0, 0), (1, 1), (1, 1)))
@@ -182,20 +191,12 @@ def _mask_cols(x: np.ndarray, widths: np.ndarray) -> np.ndarray:
     return x * mask[:, None, None, :]
 
 
-def _sigmoid(x: np.ndarray) -> np.ndarray:
-    out = np.empty_like(x)
-    pos = x >= 0
-    out[pos] = 1.0 / (1.0 + np.exp(-x[pos]))
-    e = np.exp(x[~pos])
-    out[~pos] = e / (1.0 + e)
-    return out
-
-
 def _lstm_fwd(seq: np.ndarray, wih, whh, bih, bhh):
     """Batched single-direction LSTM over left-aligned sequences.
 
-    seq: (B, T, F) -> hs (B, T, H); torch gate order i,f,g,o (the exact
-    recurrence of torchvgsl._lstm_torch). Returns (hs, cache) for BPTT.
+    seq: (B, T, F) -> hs (B, T, H); torch gate order i,f,g,o (the
+    recurrence of the inference kernel layers.lstm, with the split sigmoid
+    and padded steps). Returns (hs, cache) for BPTT.
     Padded steps run too — they sit AFTER every valid step in this
     direction, so they never influence a valid output."""
     bsz, t, _ = seq.shape
@@ -213,10 +214,10 @@ def _lstm_fwd(seq: np.ndarray, wih, whh, bih, bhh):
     c = np.zeros((bsz, hid), dtype=dt)
     for k in range(t):
         pre = pre_in[:, k] + h @ whh.T
-        i = _sigmoid(pre[:, :hid])
-        f = _sigmoid(pre[:, hid : 2 * hid])
+        i = sigmoid(pre[:, :hid])
+        f = sigmoid(pre[:, hid : 2 * hid])
         g = np.tanh(pre[:, 2 * hid : 3 * hid])
-        o = _sigmoid(pre[:, 3 * hid :])
+        o = sigmoid(pre[:, 3 * hid :])
         c = f * c + i * g
         h = o * np.tanh(c)
         ii[:, k], ff[:, k], gg[:, k], oo[:, k], cc[:, k] = i, f, g, o, c
@@ -265,29 +266,10 @@ def _lstm_bwd(cache, wih, whh, dhs: np.ndarray):
     return dseq, dwih, dwhh, db, db.copy()
 
 
-def _reverse_seqs(seq: np.ndarray, lengths: np.ndarray) -> np.ndarray:
-    """Per-sample time reversal within each valid length (left-aligned in,
-    left-aligned out). The reverse-direction LSTM runs FORWARD over these,
-    which is exactly per-line torch reverse=True on the unpadded line."""
-    bsz, t, _ = seq.shape
-    idx = np.arange(t)[None, :]  # (1, T)
-    src = lengths[:, None] - 1 - idx  # (B, T)
-    valid = src >= 0
-    src = np.where(valid, src, 0)
-    out = np.take_along_axis(seq, src[:, :, None], axis=1)
-    return out * valid[:, :, None].astype(seq.dtype)
-
-
-# --------------------------------------------------------------- forward
-def forward(x: np.ndarray, widths: np.ndarray, W: dict[str, np.ndarray],
-            want_cache: bool = False):
-    """Batched training forward.
-
-    x: (B, 1, HEIGHT, Wmax) line tensors (already /255'd, padded, inverted —
-    see line_tensor); widths: (B,) valid pixel widths. Returns
-    (logits (B, T, K), t_lengths (B,)) and, with want_cache, the backward
-    cache. Valid-frame logits are bit-consistent with the per-line
-    torchvgsl forward (pinned in tests)."""
+# --------------------------------------------------------------- stacks
+def features_fwd(x: np.ndarray, widths: np.ndarray, W: dict[str, np.ndarray]):
+    """Conv/pool/S-collapse feature stack: x (B, 1, HEIGHT, Wmax) ->
+    (feat (B, T, F), valid frame counts (B,), cache)."""
     widths = np.asarray(widths, dtype=np.int64)
     a0 = _conv3x3_fwd(x, W["c0.co.weight"], W["c0.co.bias"])
     r0 = np.maximum(a0, 0.0)
@@ -305,62 +287,17 @@ def forward(x: np.ndarray, widths: np.ndarray, W: dict[str, np.ndarray],
     feat = np.ascontiguousarray(np.transpose(p1, (0, 3, 2, 1))).reshape(
         bsz, t, hh * c2
     )  # f = h*C + c — the S1(1x0)1,3 layout (torchvgsl._reshape_torch)
-    hf, cache_f = _lstm_fwd(
-        feat,
-        W["rnn.layer.weight_ih_l0"], W["rnn.layer.weight_hh_l0"],
-        W["rnn.layer.bias_ih_l0"], W["rnn.layer.bias_hh_l0"],
-    )
-    feat_r = _reverse_seqs(feat, w2)
-    hb_rev, cache_b = _lstm_fwd(
-        feat_r,
-        W["rnn.layer.weight_ih_l0_reverse"], W["rnn.layer.weight_hh_l0_reverse"],
-        W["rnn.layer.bias_ih_l0_reverse"], W["rnn.layer.bias_hh_l0_reverse"],
-    )
-    hb = _reverse_seqs(hb_rev, w2)
-    hcat = np.concatenate([hf, hb], axis=2)  # (B, T, 2H)
-    logits = hcat @ W["out.lin.weight"].T + W["out.lin.bias"]
-    if not want_cache:
-        return logits, w2
-    cache = (x, widths, a0, r0, am0, p0, a1, r1, am1, p1, feat, w1, w2,
-             cache_f, cache_b, hb_rev, hcat)
-    return logits, w2, cache
+    return feat, w2, (x, widths, a0, r0, am0, p0, a1, r1, am1, p1, w1, w2)
 
 
-def backward(dlogits: np.ndarray, cache, W: dict[str, np.ndarray]):
-    """Gradients for every weight given d(loss)/d(logits) (already zero at
-    invalid frames)."""
-    (x, widths, a0, r0, am0, p0, a1, r1, am1, p1, feat, w1, w2,
-     cache_f, cache_b, hb_rev, hcat) = cache
-    hid = W["rnn.layer.weight_hh_l0"].shape[1]
+def features_bwd(dfeat: np.ndarray, fcache, W: dict[str, np.ndarray]
+                 ) -> dict[str, np.ndarray]:
+    """Conv-stack gradients given d(loss)/d(feat)."""
+    x, widths, a0, r0, am0, p0, a1, r1, am1, p1, w1, w2 = fcache
     grads: dict[str, np.ndarray] = {}
-    bsz, t, _k = dlogits.shape
-    grads["out.lin.weight"] = np.tensordot(dlogits, hcat, axes=([0, 1], [0, 1]))
-    grads["out.lin.bias"] = dlogits.sum(axis=(0, 1))
-    dhcat = dlogits @ W["out.lin.weight"]
-    dhf = dhcat[:, :, :hid]
-    dhb = dhcat[:, :, hid:]
-    dseq_f, dwih_f, dwhh_f, dbih_f, dbhh_f = _lstm_bwd(
-        cache_f, W["rnn.layer.weight_ih_l0"], W["rnn.layer.weight_hh_l0"], dhf
-    )
-    # un-reverse the upstream grad into the reverse LSTM's own time order
-    dhb_rev = _reverse_seqs(dhb, w2)
-    dseq_br, dwih_b, dwhh_b, dbih_b, dbhh_b = _lstm_bwd(
-        cache_b,
-        W["rnn.layer.weight_ih_l0_reverse"], W["rnn.layer.weight_hh_l0_reverse"],
-        dhb_rev,
-    )
-    dseq = dseq_f + _reverse_seqs(dseq_br, w2)
-    grads["rnn.layer.weight_ih_l0"] = dwih_f
-    grads["rnn.layer.weight_hh_l0"] = dwhh_f
-    grads["rnn.layer.bias_ih_l0"] = dbih_f
-    grads["rnn.layer.bias_hh_l0"] = dbhh_f
-    grads["rnn.layer.weight_ih_l0_reverse"] = dwih_b
-    grads["rnn.layer.weight_hh_l0_reverse"] = dwhh_b
-    grads["rnn.layer.bias_ih_l0_reverse"] = dbih_b
-    grads["rnn.layer.bias_hh_l0_reverse"] = dbhh_b
     bsz, c2, hh, tt = p1.shape
     dp1 = np.ascontiguousarray(
-        np.transpose(dseq.reshape(bsz, tt, hh, c2), (0, 3, 2, 1))
+        np.transpose(dfeat.reshape(bsz, tt, hh, c2), (0, 3, 2, 1))
     )
     dp1 = _mask_cols(dp1, w2)
     dr1 = _pool2x2_bwd(r1.shape, am1, dp1)
@@ -379,13 +316,88 @@ def backward(dlogits: np.ndarray, cache, W: dict[str, np.ndarray]):
     return grads
 
 
+def encoder_fwd(feat: np.ndarray, w2: np.ndarray, W: dict[str, np.ndarray]):
+    """BiLSTM context encoder: feat (B, T, F) -> (hcat (B, T, 2H), cache).
+    The reverse direction runs forward over each sequence reversed within
+    its valid length."""
+    hf, cache_f = _lstm_fwd(
+        feat,
+        W["rnn.layer.weight_ih_l0"], W["rnn.layer.weight_hh_l0"],
+        W["rnn.layer.bias_ih_l0"], W["rnn.layer.bias_hh_l0"],
+    )
+    feat_r = reverse_within(feat, w2)
+    hb_rev, cache_b = _lstm_fwd(
+        feat_r,
+        W["rnn.layer.weight_ih_l0_reverse"], W["rnn.layer.weight_hh_l0_reverse"],
+        W["rnn.layer.bias_ih_l0_reverse"], W["rnn.layer.bias_hh_l0_reverse"],
+    )
+    hb = reverse_within(hb_rev, w2)
+    hcat = np.concatenate([hf, hb], axis=2)  # (B, T, 2H)
+    return hcat, (cache_f, cache_b, w2)
+
+
+def encoder_bwd(dhcat: np.ndarray, ecache, W: dict[str, np.ndarray]):
+    """(dfeat, rnn grads) given d(loss)/d(hcat)."""
+    cache_f, cache_b, w2 = ecache
+    hid = W["rnn.layer.weight_hh_l0"].shape[1]
+    grads: dict[str, np.ndarray] = {}
+    dhf = dhcat[:, :, :hid]
+    dhb = dhcat[:, :, hid:]
+    dseq_f, dwih_f, dwhh_f, dbih_f, dbhh_f = _lstm_bwd(
+        cache_f, W["rnn.layer.weight_ih_l0"], W["rnn.layer.weight_hh_l0"], dhf
+    )
+    # un-reverse the upstream grad into the reverse LSTM's own time order
+    dhb_rev = reverse_within(dhb, w2)
+    dseq_br, dwih_b, dwhh_b, dbih_b, dbhh_b = _lstm_bwd(
+        cache_b,
+        W["rnn.layer.weight_ih_l0_reverse"], W["rnn.layer.weight_hh_l0_reverse"],
+        dhb_rev,
+    )
+    dfeat = dseq_f + reverse_within(dseq_br, w2)
+    grads["rnn.layer.weight_ih_l0"] = dwih_f
+    grads["rnn.layer.weight_hh_l0"] = dwhh_f
+    grads["rnn.layer.bias_ih_l0"] = dbih_f
+    grads["rnn.layer.bias_hh_l0"] = dbhh_f
+    grads["rnn.layer.weight_ih_l0_reverse"] = dwih_b
+    grads["rnn.layer.weight_hh_l0_reverse"] = dwhh_b
+    grads["rnn.layer.bias_ih_l0_reverse"] = dbih_b
+    grads["rnn.layer.bias_hh_l0_reverse"] = dbhh_b
+    return dfeat, grads
+
+
+# --------------------------------------------------------------- forward
+def forward(x: np.ndarray, widths: np.ndarray, W: dict[str, np.ndarray],
+            want_cache: bool = False):
+    """Batched training forward: feature stack, BiLSTM encoder, linear
+    head.
+
+    x: (B, 1, HEIGHT, Wmax) line tensors (already /255'd, padded, inverted —
+    see line_tensor); widths: (B,) valid pixel widths. Returns
+    (logits (B, T, K), t_lengths (B,)) and, with want_cache, the backward
+    cache. Valid-frame logits are bit-consistent with the per-line
+    torchvgsl forward (pinned in tests)."""
+    feat, w2, fcache = features_fwd(x, widths, W)
+    hcat, ecache = encoder_fwd(feat, w2, W)
+    logits = hcat @ W["out.lin.weight"].T + W["out.lin.bias"]
+    if not want_cache:
+        return logits, w2
+    return logits, w2, (fcache, ecache, hcat)
+
+
+def backward(dlogits: np.ndarray, cache, W: dict[str, np.ndarray]):
+    """Gradients for every weight given d(loss)/d(logits) (already zero at
+    invalid frames)."""
+    fcache, ecache, hcat = cache
+    grads: dict[str, np.ndarray] = {}
+    grads["out.lin.weight"] = np.tensordot(dlogits, hcat, axes=([0, 1], [0, 1]))
+    grads["out.lin.bias"] = dlogits.sum(axis=(0, 1))
+    dfeat, rnn_grads = encoder_bwd(dlogits @ W["out.lin.weight"], ecache, W)
+    grads.update(rnn_grads)
+    grads.update(features_bwd(dfeat, fcache, W))
+    return grads
+
+
 # --------------------------------------------------------------- CTC loss
-def _log_softmax(logits: np.ndarray) -> np.ndarray:
-    m = logits.max(axis=-1, keepdims=True)
-    s = logits - m
-    return s - np.log(np.exp(s).sum(axis=-1, keepdims=True))
-
-
 def ctc_loss_grad(logits: np.ndarray, labels: np.ndarray):
     """CTC negative log-likelihood + gradient w.r.t. the (pre-softmax)
     logits for ONE sample. logits: (T, K) float64, labels: (L,) in 1..K-1.
@@ -400,7 +412,7 @@ def ctc_loss_grad(logits: np.ndarray, labels: np.ndarray):
     if t_len < l_len or t_len == 0:
         # unalignable: infinite loss; gradient pushes everything to blank
         return np.inf, np.zeros_like(logits)
-    logp = _log_softmax(logits.astype(np.float64))
+    logp = log_softmax(logits.astype(np.float64))
     lp_ext = logp[:, ext]  # (T, S)
     # allowed skip transitions: s-2 -> s when ext[s] != blank and != ext[s-2]
     skip = np.zeros(s, dtype=bool)
@@ -689,7 +701,7 @@ def framewise_loss_grads(x: np.ndarray, widths: np.ndarray,
     for i, tgt in enumerate(frame_targets):
         tl = int(t_lens[i])
         tgt = np.asarray(tgt[:tl], dtype=np.int64)
-        lp = _log_softmax(logits[i, :tl].astype(np.float64))
+        lp = log_softmax(logits[i, :tl].astype(np.float64))
         loss += -lp[np.arange(tl), tgt].sum()
         d = np.exp(lp)
         d[np.arange(tl), tgt] -= 1.0

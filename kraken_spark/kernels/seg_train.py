@@ -34,6 +34,8 @@ import os
 import numpy as np
 from numpy.lib.stride_tricks import sliding_window_view
 
+from .layers import sigmoid
+
 K0 = 7    # conv0 kernel (square)
 KV = 5    # conv1 vertical taps
 KH = 49   # conv1 horizontal taps
@@ -48,15 +50,6 @@ ASSET = os.path.join(
 
 
 # ---------------------------------------------------------------- primitives
-
-
-def _sigmoid(x: np.ndarray) -> np.ndarray:
-    out = np.empty_like(x)
-    pos = x >= 0
-    out[pos] = 1.0 / (1.0 + np.exp(-x[pos]))
-    e = np.exp(x[~pos])
-    out[~pos] = e / (1.0 + e)
-    return out
 
 
 def _corr1d(a: np.ndarray, k: np.ndarray, axis: int) -> np.ndarray:
@@ -88,7 +81,7 @@ def forward(x: np.ndarray, W: dict, want_grad_cache: bool = False):
     H, Wd = x.shape
     Xc = _conv0_cols(x)
     z0 = (Xc @ W["w0"].reshape(C0, -1).T + W["b0"]).reshape(H, Wd, C0)
-    a = _sigmoid(z0)  # (H, W, C0)
+    a = sigmoid(z0)  # (H, W, C0)
     z1 = np.empty((C1, H, Wd), dtype=np.float64)
     t_cache = {}
     for o in range(C1):
@@ -99,7 +92,7 @@ def forward(x: np.ndarray, W: dict, want_grad_cache: bool = False):
                 t_cache[(o, i)] = t
             acc += _corr1d(t, W["v"][o, i], axis=1)
         z1[o] = acc
-    y = _sigmoid(z1)
+    y = sigmoid(z1)
     if want_grad_cache:
         return y, {"Xc": Xc, "a": a, "t": t_cache, "z1": z1}
     return y
@@ -148,7 +141,7 @@ def forward_infer(x: np.ndarray, W: dict) -> np.ndarray:
                 if wv != 0.0:
                     acc += wv * xp[dy : dy + H, dx : dx + Wd]
         a[c] = acc
-    a = _sigmoid(a)
+    a = sigmoid(a)
     z1 = np.empty((C1, H, Wd), dtype=np.float32)
     for o in range(C1):
         acc = np.full((H, Wd), np.float32(W["b1"][o]), dtype=np.float32)
@@ -156,7 +149,7 @@ def forward_infer(x: np.ndarray, W: dict) -> np.ndarray:
             t = _corr1d(a[i], W["u"][o, i].astype(np.float32), axis=0)
             acc += _corr1d(t, W["v"][o, i].astype(np.float32), axis=1)
         z1[o] = acc
-    return _sigmoid(z1)
+    return sigmoid(z1)
 
 
 # ------------------------------------------------------------- ground truth

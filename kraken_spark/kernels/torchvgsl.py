@@ -2,7 +2,10 @@
 
 The engine's own constructed-weight recognizer (kernels/vgsl.py) keeps its
 simplified semantics; THIS module replicates the reference's torch modules
-bit-faithfully enough to reproduce trained-model predictions:
+bit-faithfully enough to reproduce trained-model predictions. The LSTM
+recurrence, softmax and max-pool are the shared primitives of
+kernels/layers.py (also run by vgsl.py and the trainers); this module maps
+the torch layers onto them and holds the rest:
 
 - conv: torch Conv2d with kraken's always-on (k-1)//2 padding
   (/root/reference/kraken/lib/vgsl/layers.py:785-841 ActConv2D)
@@ -38,6 +41,8 @@ from __future__ import annotations
 import re
 
 import numpy as np
+
+from .layers import lstm, maxpool, softmax
 
 # ------------------------------------------------------------ scipy compat
 
@@ -370,96 +375,6 @@ def _reshape_torch(x: np.ndarray, src_dim: int, part_a: int, part_b: int, high: 
     return x.reshape(shp[:dest] + (shp[dest] * shp[dest + 1],) + shp[dest + 2 :])
 
 
-def _reverse_within(seq: np.ndarray, lengths: np.ndarray) -> np.ndarray:
-    """Per-sample time reversal within each valid length over (N, T, F)
-    left-aligned zero-padded sequences (same trick as
-    rec_train._reverse_seqs): running the FORWARD recurrence over the
-    reversed copy equals per-line reverse=True on the unpadded line."""
-    n, t, _ = seq.shape
-    idx = np.arange(t)[None, :]
-    src = lengths[:, None] - 1 - idx
-    valid = src >= 0
-    src = np.where(valid, src, 0)
-    out = np.take_along_axis(seq, src[:, :, None], axis=1)
-    return out * valid[:, :, None].astype(seq.dtype)
-
-
-def _lstm_torch_batch(seqs: np.ndarray, lengths: np.ndarray, wih, whh, bih,
-                      bhh, reverse: bool = False) -> np.ndarray:
-    """Batched counterpart of _lstm_torch over (N, T, F) left-aligned
-    zero-padded sequences. Valid steps (t < length) run the identical
-    recurrence with the per-timestep GEMV turned into a (N, hid) GEMM —
-    the width-bucketed cross-line batching the reference gets from torch's
-    queue batching (lib/vgsl/rpred.py:100-124). Padded forward steps sit
-    AFTER every valid step so they never influence a valid output; the
-    reverse direction reverses each sequence within its own length first."""
-    if reverse:
-        rev = _reverse_within(seqs, lengths)
-        out = _lstm_torch_batch(rev, lengths, wih, whh, bih, bhh, False)
-        return _reverse_within(out, lengths)
-    n, t, _ = seqs.shape
-    hid = whh.shape[1]
-    lengths = np.asarray(lengths, dtype=np.int64)
-    # packed-sequence scheme (torch pack_padded_sequence): rows sorted by
-    # length DESC so the active set at step k is the prefix with
-    # length > k — no padded-step work, one loop over the global max
-    order = np.argsort(-lengths, kind="stable")
-    inv = np.empty_like(order)
-    inv[order] = np.arange(n)
-    sl = lengths[order]
-    bias = (bih if bih is not None else 0) + (bhh if bhh is not None else 0)
-    # time-major so the per-step slice is contiguous
-    pre_all = np.ascontiguousarray(
-        np.swapaxes(seqs[order] @ wih.T.astype(np.float32) + bias, 0, 1))
-    tmax = int(sl[0]) if n else 0
-    # active-row count per step: sl is descending
-    counts = n - np.searchsorted(sl[::-1], np.arange(tmax), side="right")
-    hs = np.zeros((t, n, hid), dtype=np.float32)
-    h = np.zeros((n, hid), dtype=np.float32)
-    cst = np.zeros((n, hid), dtype=np.float32)
-    whh_t = whh.T.astype(np.float32)
-    for k in range(tmax):
-        nk = int(counts[k])
-        pre = pre_all[k, :nk]
-        pre += h[:nk] @ whh_t
-        # one fused sigmoid over all four gate lanes; the g lane is
-        # discarded and recomputed as tanh — identical elementwise values
-        # for the lanes actually used, fewer python-level vector ops
-        sig = 1.0 / (1.0 + np.exp(-pre))
-        i = sig[:, :hid]
-        f = sig[:, hid : 2 * hid]
-        g = np.tanh(pre[:, 2 * hid : 3 * hid])
-        o = sig[:, 3 * hid :]
-        cnew = f * cst[:nk] + i * g
-        cst[:nk] = cnew
-        hnew = o * np.tanh(cnew)
-        h[:nk] = hnew
-        hs[k, :nk] = hnew
-    return np.ascontiguousarray(np.swapaxes(hs, 0, 1))[inv]
-
-
-def _lstm_torch(seq: np.ndarray, wih, whh, bih, bhh, reverse: bool = False) -> np.ndarray:
-    """torch nn.LSTM single direction over (T, F); gates i,f,g,o."""
-    t = seq.shape[0]
-    hid = whh.shape[1]
-    hs = np.zeros((t, hid), dtype=np.float32)
-    h = np.zeros(hid, dtype=np.float32)
-    cst = np.zeros(hid, dtype=np.float32)
-    bias = (bih if bih is not None else 0) + (bhh if bhh is not None else 0)
-    pre_all = seq @ wih.T + bias
-    order = range(t - 1, -1, -1) if reverse else range(t)
-    for k in order:
-        pre = pre_all[k] + h @ whh.T
-        i = 1.0 / (1.0 + np.exp(-pre[:hid]))
-        f = 1.0 / (1.0 + np.exp(-pre[hid : 2 * hid]))
-        g = np.tanh(pre[2 * hid : 3 * hid])
-        o = 1.0 / (1.0 + np.exp(-pre[3 * hid :]))
-        cst = f * cst + i * g
-        h = o * np.tanh(cst)
-        hs[k] = h
-    return hs
-
-
 # --------------------------------------------------------------- model
 _DIM_MAP = {0: 0, 1: 2, 2: 3, 3: 1}  # VGSL (b,y,x,c) -> NCHW
 
@@ -547,23 +462,9 @@ class TorchVGSL:
     def forward(self, x: np.ndarray) -> np.ndarray:
         """x: (C,H,W) float32 network input -> (W', classes) softmax probs
         (TorchSeqRecognizer.forward applies softmax over the class dim,
-        lib/models.py:112-116)."""
-        x = np.asarray(x, dtype=np.float32)
-        if x.ndim == 2:
-            x = x[None]
-        x = x[None]  # NCHW, N=1
-        for layer in self.layers:
-            x = self._forward_layer(x, layer)
-        # (N, classes, H=1, W)
-        if x.shape[2] != 1:
-            raise ValueError(f"expected height-1 output, got {x.shape}")
-        logits = x[0, :, 0, :]  # (classes, W)
-        m = logits.max(axis=0, keepdims=True)
-        e = np.exp(logits - m)
-        probs = e / e.sum(axis=0, keepdims=True)
-        return probs.T  # (W, classes)
+        lib/models.py:112-116): ``forward_batch`` on one line."""
+        return self.forward_batch([x])[0]
 
-    # ------------------------------------------------------- batched path
     def _tail_split(self) -> int | None:
         """Index of the first LSTM layer if everything from there on is
         batchable cross-line (non-transposed LSTMs, output heads,
@@ -587,20 +488,16 @@ class TorchVGSL:
 
     def forward_batch(self, tensors: list[np.ndarray]) -> list[np.ndarray]:
         """Width-bucketed batched forward over prepared line tensors (each
-        (H, W) or (C, H, W) float32, same scale as ``forward``). Returns
-        per-line (W', classes) softmax probs.
+        (H, W) or (C, H, W) float32). Returns per-line (W', classes)
+        softmax probs.
 
-        The head (conv/pool/reshape) runs per line — identical arithmetic
-        to ``forward``; the LSTM stack + linear head run batched over
-        left-aligned zero-padded sequences with per-sample valid lengths
-        (rec_train's masking scheme, pinned batched==per-line there).
-        Falls back to the per-line forward for net shapes without a
-        batchable tail."""
-        if not tensors:
-            return []
+        The head (every layer before the first LSTM) runs per line; the
+        LSTM stack + linear head run batched over left-aligned zero-padded
+        sequences with per-sample valid lengths (rec_train's masking
+        scheme). Nets without a batchable tail run every layer per line."""
         split = self._tail_split()
-        if split is None or len(tensors) == 1:
-            return [self.forward(t) for t in tensors]
+        if split is None:
+            split = len(self.layers)
         heads = []
         for t in tensors:
             x = np.asarray(t, dtype=np.float32)
@@ -610,54 +507,57 @@ class TorchVGSL:
             for layer in self.layers[:split]:
                 x = self._forward_layer(x, layer)
             heads.append(x[0])  # (C', H', W'_i)
+        if heads and split < len(self.layers):
+            heads = self._forward_tail(heads, self.layers[split:])
+        out = []
+        for hd in heads:
+            if hd.shape[1] != 1:
+                raise ValueError(f"expected height-1 output, got {hd.shape}")
+            out.append(softmax(hd[:, 0, :], axis=0).T)
+        return out
+
+    def _forward_tail(self, heads: list[np.ndarray], layers: list[dict]) -> list[np.ndarray]:
+        """Run the batchable tail over per-line head outputs zero-padded to
+        one width; returns each line's (C, H, W_i) valid slice."""
         c, h = heads[0].shape[0], heads[0].shape[1]
         widths = np.array([hd.shape[2] for hd in heads], dtype=np.int64)
         wmax = int(max(widths.max(), 1))
         batch = np.zeros((len(heads), c, h, wmax), dtype=np.float32)
         for i, hd in enumerate(heads):
             batch[i, :, :, : hd.shape[2]] = hd
-        for layer in self.layers[split:]:
+        for layer in layers:
             if layer["kind"] == "lstm":
                 batch, widths = self._forward_lstm_batch(batch, widths, layer)
             elif layer["kind"] == "out":
                 batch = self._forward_layer(batch, layer)
-        out = []
-        for i in range(batch.shape[0]):
-            if batch.shape[2] != 1:
-                raise ValueError(f"expected height-1 output, got {batch.shape}")
-            logits = batch[i, :, 0, : widths[i]]
-            m = logits.max(axis=0, keepdims=True)
-            e = np.exp(logits - m)
-            out.append((e / e.sum(axis=0, keepdims=True)).T)
-        return out
+        return [batch[i, :, :, : widths[i]] for i in range(batch.shape[0])]
+
+    def _bilstm(self, seqs: np.ndarray, lengths: np.ndarray, layer: dict) -> np.ndarray:
+        """(N, T, F) -> (N, T, hidden * directions): the layer's forward
+        direction, then its reverse direction for bidi layers."""
+        n = layer["name"]
+        outs = []
+        for sfx in ("", "_reverse") if layer["bidi"] else ("",):
+            outs.append(lstm(
+                seqs, lengths,
+                self.weights[f"{n}.layer.weight_ih_l0{sfx}"],
+                self.weights[f"{n}.layer.weight_hh_l0{sfx}"],
+                self.weights.get(f"{n}.layer.bias_ih_l0{sfx}"),
+                self.weights.get(f"{n}.layer.bias_hh_l0{sfx}"),
+                reverse=bool(sfx),
+            ))
+        return np.concatenate(outs, axis=2)
 
     def _forward_lstm_batch(self, x: np.ndarray, widths: np.ndarray,
                             layer: dict):
         """TransposedSummarizingRNN over a width-padded batch (transpose=n
         only). x: (N, C, H, W); widths: per-sample valid W."""
-        n_ = layer["name"]
         nb, cc, hh, ww = x.shape
         # NCHW -> (H*N, W, C): row h*N + i carries sample i's h-th scanline
         t = np.transpose(x, (2, 0, 3, 1)).reshape(hh * nb, ww, cc)
         t = np.ascontiguousarray(t, dtype=np.float32)
-        lens = np.tile(widths, hh)
-        wih = self.weights[f"{n_}.layer.weight_ih_l0"]
-        whh = self.weights[f"{n_}.layer.weight_hh_l0"]
-        bih = self.weights.get(f"{n_}.layer.bias_ih_l0")
-        bhh = self.weights.get(f"{n_}.layer.bias_hh_l0")
-        fwd = _lstm_torch_batch(t, lens, wih, whh, bih, bhh, reverse=False)
-        if layer["bidi"]:
-            bwd = _lstm_torch_batch(
-                t, lens,
-                self.weights[f"{n_}.layer.weight_ih_l0_reverse"],
-                self.weights[f"{n_}.layer.weight_hh_l0_reverse"],
-                self.weights.get(f"{n_}.layer.bias_ih_l0_reverse"),
-                self.weights.get(f"{n_}.layer.bias_hh_l0_reverse"),
-                reverse=True,
-            )
-            fwd = np.concatenate([fwd, bwd], axis=2)
-        osz = fwd.shape[2]
-        o = fwd.reshape(hh, nb, ww, osz)
+        o = self._bilstm(t, np.tile(widths, hh), layer)
+        o = o.reshape(hh, nb, ww, o.shape[2])
         if layer["summarize"]:
             # per-line summarize takes the LAST frame == index width-1
             idx = np.maximum(widths - 1, 0)
@@ -677,36 +577,14 @@ class TorchVGSL:
             elif nl == "t":
                 np.tanh(o, out=o)
             elif nl == "m":
-                mx = o.max(axis=1, keepdims=True)
-                e = np.exp(o - mx)
-                o = e / e.sum(axis=1, keepdims=True)
+                o = softmax(o, axis=1)
             # 's' (sigmoid) stays logits at inference (ActConv2D.forward)
             return o.astype(np.float32, copy=False)
         if kind == "gn":
             n = layer["name"]
             return _groupnorm_torch(x[0], layer["groups"], self.weights[f"{n}.layer.weight"], self.weights[f"{n}.layer.bias"])[None]
         if kind == "pool":
-            ky, kx = layer["k"]
-            sy, sx = layer["stride"]
-            n, c, h, w = x.shape
-            oh = (h - ky) // sy + 1
-            ow = (w - kx) // sx + 1
-            if oh <= 0 or ow <= 0:
-                return x[:, :, :0, :0]
-            if (ky, kx) == (sy, sx):
-                # non-overlapping windows (the usual Mp2,2): elementwise max
-                # of the ky*kx strided phases — same values, no slow
-                # strided-view reduction
-                crop = x[:, :, : oh * sy, : ow * sx]
-                out = crop[:, :, ::sy, ::sx]
-                for dy in range(ky):
-                    for dx in range(kx):
-                        if dy == 0 and dx == 0:
-                            continue
-                        out = np.maximum(out, crop[:, :, dy::sy, dx::sx])
-                return np.ascontiguousarray(out)
-            win = np.lib.stride_tricks.sliding_window_view(x[0], (ky, kx), axis=(1, 2))[:, ::sy, ::sx]
-            return win[:, :oh, :ow].max(axis=(3, 4))[None]
+            return maxpool(x, layer["k"], layer["stride"])
         if kind == "reshape":
             return _reshape_torch(x, layer["src_dim"], layer["part_a"], layer["part_b"], layer["high"], layer["low"])
         if kind == "out":
@@ -724,34 +602,18 @@ class TorchVGSL:
         return x  # identity / dropout
 
     def _forward_lstm(self, x: np.ndarray, layer: dict) -> np.ndarray:
-        """TransposedSummarizingRNN.forward (layers.py:513-547)."""
-        n = layer["name"]
+        """TransposedSummarizingRNN.forward (layers.py:513-547), one kernel
+        call per scanline."""
         # NCHW -> HNWC
         t = np.transpose(x, (2, 0, 3, 1))
         if layer["transpose"]:
             t = np.swapaxes(t, 0, 2)
         hh, nn_, ww, cc = t.shape
         seqs = t.reshape(-1, ww, cc).astype(np.float32)
-        wih = self.weights[f"{n}.layer.weight_ih_l0"]
-        whh = self.weights[f"{n}.layer.weight_hh_l0"]
-        bih = self.weights.get(f"{n}.layer.bias_ih_l0")
-        bhh = self.weights.get(f"{n}.layer.bias_hh_l0")
-        outs = []
-        for bi in range(seqs.shape[0]):
-            fwd = _lstm_torch(seqs[bi], wih, whh, bih, bhh, reverse=False)
-            if layer["bidi"]:
-                bwd = _lstm_torch(
-                    seqs[bi],
-                    self.weights[f"{n}.layer.weight_ih_l0_reverse"],
-                    self.weights[f"{n}.layer.weight_hh_l0_reverse"],
-                    self.weights.get(f"{n}.layer.bias_ih_l0_reverse"),
-                    self.weights.get(f"{n}.layer.bias_hh_l0_reverse"),
-                    reverse=True,
-                )
-                fwd = np.concatenate([fwd, bwd], axis=1)
-            outs.append(fwd)
-        osz = outs[0].shape[1]
-        o = np.stack(outs).reshape(hh, nn_, ww, osz)
+        lens = np.array([ww])
+        o = np.concatenate([self._bilstm(seqs[bi : bi + 1], lens, layer)
+                            for bi in range(seqs.shape[0])])
+        o = o.reshape(hh, nn_, ww, o.shape[2])
         if layer["summarize"]:
             o = o[:, :, -1:, :]
         if layer["transpose"]:

@@ -38,19 +38,15 @@ import re
 
 import numpy as np
 
+from .layers import lstm, maxpool, softmax
+
 _ACT = {
     "r": lambda x: np.maximum(x, 0.0),
     "l": lambda x: x,
     "s": lambda x: 1.0 / (1.0 + np.exp(-np.clip(x, -60.0, 60.0))),
     "t": np.tanh,
-    "m": lambda x: _softmax(x, axis=0),
+    "m": lambda x: softmax(x, axis=0),
 }
-
-
-def _softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
-    m = x.max(axis=axis, keepdims=True)
-    e = np.exp(x - m)
-    return e / e.sum(axis=axis, keepdims=True)
 
 
 def _rect_decompose(k2d: np.ndarray) -> list[tuple[float, int, int, int, int]]:
@@ -161,34 +157,6 @@ def _conv2d(x: np.ndarray, w: np.ndarray, b: np.ndarray, stride: tuple[int, int]
     win = win[:, ::sh, ::sw]  # (C, H', W', kh, kw)
     out = np.tensordot(w, win, axes=([1, 2, 3], [0, 3, 4]))  # (O, H', W')
     return (out + b[:, None, None]).astype(np.float32)
-
-
-def _maxpool(x: np.ndarray, ky: int, kx: int) -> np.ndarray:
-    c, h, w = x.shape
-    h2, w2 = h // ky, w // kx
-    if h2 == 0 or w2 == 0:
-        return x[:, :0, :0]
-    return x[:, : h2 * ky, : w2 * kx].reshape(c, h2, ky, w2, kx).max(axis=(2, 4))
-
-
-def _lstm_dir(seq: np.ndarray, wih: np.ndarray, whh: np.ndarray, bias: np.ndarray) -> np.ndarray:
-    """seq: (T, F); gates packed [i,f,g,o]; returns (T, H)."""
-    t, _ = seq.shape
-    hid = whh.shape[1]
-    hs = np.zeros((t, hid), dtype=np.float32)
-    h = np.zeros(hid, dtype=np.float32)
-    cst = np.zeros(hid, dtype=np.float32)
-    pre_all = seq @ wih.T + bias  # (T, 4H)
-    for k in range(t):
-        pre = pre_all[k] + h @ whh.T
-        i = 1.0 / (1.0 + np.exp(-pre[:hid]))
-        f = 1.0 / (1.0 + np.exp(-pre[hid : 2 * hid]))
-        g = np.tanh(pre[2 * hid : 3 * hid])
-        og = 1.0 / (1.0 + np.exp(-pre[3 * hid :]))
-        cst = f * cst + i * g
-        h = og * np.tanh(cst)
-        hs[k] = h
-    return hs
 
 
 def _gru_dir(seq: np.ndarray, wih: np.ndarray, whh: np.ndarray, bih: np.ndarray, bhh: np.ndarray) -> np.ndarray:
@@ -478,7 +446,7 @@ class VGSLModel:
             )
             return _ACT[layer["act"]](x)
         if kind == "pool":
-            return _maxpool(x, *layer["k"])
+            return maxpool(x, layer["k"], layer["k"])
         if kind == "squeeze":
             c, h, w = x.shape
             return x.reshape(c * h, 1, w)
@@ -496,7 +464,7 @@ class VGSLModel:
             c, h, w = x.shape
             seq = x.reshape(c * h, w).T  # (T, F)
             logits = seq @ self.weights[layer["name"] + ".w"].T + self.weights[layer["name"] + ".b"]
-            return ("out", _softmax(logits, axis=1) if layer["softmax"] else logits)
+            return ("out", softmax(logits, axis=1) if layer["softmax"] else logits)
         return x  # identity
 
     def _run_rnn(self, x: np.ndarray, layer: dict) -> np.ndarray:
@@ -519,6 +487,9 @@ class VGSLModel:
                 seq = seqs[bi]
                 rev = d == "bwd" or (d == "fwd" and layer.get("dir") == "r")
                 if rev:
+                    # a reversed view, not lstm(reverse=True): the kernel
+                    # projects the strided view as given, which keeps
+                    # this net's bits (reverse=True moves them ~1e-6)
                     seq = seq[::-1]
                 if cell == "gru":
                     hs = _gru_dir(
@@ -529,12 +500,13 @@ class VGSLModel:
                         self.weights[f"{n}.{d}.bhh"],
                     )
                 else:
-                    hs = _lstm_dir(
-                        seq,
+                    hs = lstm(
+                        seq[None], [t],
                         self.weights[f"{n}.{d}.wih"],
                         self.weights[f"{n}.{d}.whh"],
                         self.weights[f"{n}.{d}.b"],
-                    )
+                        None,
+                    )[0]
                 if layer.get("summarize"):
                     hs = hs[-1:]
                 elif rev:

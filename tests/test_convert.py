@@ -6,7 +6,6 @@ safetensors containers, and the reference's refusal behaviors."""
 from __future__ import annotations
 
 import json
-import os
 
 import numpy as np
 import pytest
@@ -15,11 +14,12 @@ from kraken_spark.kernels.modelio import (KrakenModelBundle, convert_models,
                                           load_kraken_model,
                                           save_kraken_model,
                                           save_kraken_models)
+from kraken_spark.refassets import resources_dir
 
-RES = "/root/reference/tests/resources"
-overfit_required = pytest.mark.skipif(
-    not os.path.exists(f"{RES}/overfit.mlmodel"),
-    reason="reference fixture checkout absent")
+from conftest import requires_reference
+
+RES = resources_dir()
+overfit_required = requires_reference("overfit.mlmodel")
 
 
 def _bundle(seed: int, tag: str) -> KrakenModelBundle:

@@ -225,11 +225,13 @@ def test_curved_mesh_warp_straightens():
 
 
 def test_torchvgsl_lstm_cross_check():
-    """No reference asset exercises the LSTM layer (the recurrent models
-    are LFS stubs), so cross-check torchvgsl's TransposedSummarizingRNN
-    mapping against the engine's independently-written VGSLModel LSTM on
-    identical weights: both implement torch nn.LSTM gate math (i,f,g,o),
-    so a width-direction bidi layer must produce identical sequences."""
+    """Both interpreters run the one LSTM kernel (kernels/layers.lstm,
+    checked against a textbook oracle below), so this pins their LAYOUT
+    mapping: torchvgsl's TransposedSummarizingRNN (NCHW scanlines,
+    ``weight_*_l0[_reverse]`` names, two biases) and VGSLModel's (C,H,W)
+    rows with ``fwd``/``bwd`` weights and one bias must put the same
+    sequence values at the same positions for a width-direction bidi
+    layer."""
     import numpy as np
 
     from kraken_spark.kernels.torchvgsl import TorchVGSL
@@ -266,6 +268,58 @@ def test_torchvgsl_lstm_cross_check():
 
     assert t_out.shape == (1, 2 * HID, H, W)
     assert np.allclose(t_out[0], v_out, atol=1e-5), np.abs(t_out[0] - v_out).max()
+
+
+def _lstm_oracle(seq, wih, whh, bih, bhh, reverse=False):
+    """Textbook torch nn.LSTM, one direction, in float64, one timestep at
+    a time: gates = W_ih x_t + b_ih + W_hh h_{t-1} + b_hh, split i,f,g,o."""
+    import numpy as np
+
+    def sig(v):
+        return 1.0 / (1.0 + np.exp(-v))
+
+    wih, whh, bih, bhh = (np.asarray(a, np.float64) for a in (wih, whh, bih, bhh))
+    hid = whh.shape[1]
+    h, c = np.zeros(hid), np.zeros(hid)
+    out = np.zeros((len(seq), hid))
+    steps = range(len(seq) - 1, -1, -1) if reverse else range(len(seq))
+    for t in steps:
+        i, f, g, o = np.split(wih @ np.asarray(seq[t], np.float64) + bih
+                              + whh @ h + bhh, 4)
+        c = sig(f) * c + sig(i) * np.tanh(g)
+        h = sig(o) * np.tanh(c)
+        out[t] = h
+    return out
+
+
+@pytest.mark.parametrize("reverse", [False, True])
+def test_lstm_kernel_matches_textbook_oracle(reverse):
+    """layers.lstm against the float64 oracle: one sequence per call and
+    packed mixed lengths (incl. 1 and 0) in one call; padded steps stay
+    zero."""
+    import numpy as np
+
+    from kraken_spark.kernels.layers import lstm
+
+    rng = np.random.default_rng(11)
+    F, HID = 6, 5
+
+    def mk(*shape):
+        return (rng.standard_normal(shape) * 0.5).astype(np.float32)
+
+    wih, whh, bih, bhh = mk(4 * HID, F), mk(4 * HID, HID), mk(4 * HID), mk(4 * HID)
+    lengths = np.array([7, 1, 0, 12, 5, 12])
+    seqs = np.zeros((len(lengths), 12, F), np.float32)
+    for n, ln in enumerate(lengths):
+        seqs[n, :ln] = mk(ln, F)
+    packed = lstm(seqs, lengths, wih, whh, bih, bhh, reverse=reverse)
+    assert packed.shape == (len(lengths), 12, HID) and packed.dtype == np.float32
+    for n, ln in enumerate(lengths):
+        want = _lstm_oracle(seqs[n, :ln], wih, whh, bih, bhh, reverse=reverse)
+        assert np.allclose(packed[n, :ln], want, atol=1e-5, rtol=0)
+        assert not packed[n, ln:].any()
+        single = lstm(seqs[n : n + 1, :ln], [ln], wih, whh, bih, bhh, reverse=reverse)
+        assert np.allclose(single[0], want, atol=1e-5, rtol=0)
 
 
 @requires_reference("model_small.safetensors")

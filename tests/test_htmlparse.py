@@ -126,6 +126,23 @@ def test_roundtrip_byte_identical(idx):
     assert sum(1 for b in blks if b["cls"] == "bad") >= 8
 
 
+def test_memoized_blocks_are_read_only():
+    """The parse memo hands every caller the same blocks: they cannot be
+    mutated, so a second call returns the same text and classes."""
+    d, url, page = _page_for(1)
+    main, blks = H.extract_main_text(page, d["lang"])
+    classes = [b["cls"] for b in blks]
+    with pytest.raises(TypeError):
+        blks[0]["cls"] = "good" if classes[0] == "bad" else "bad"
+    with pytest.raises(TypeError):
+        blks[0]["extra"] = 1
+    with pytest.raises(TypeError):
+        blks[0] = {}
+    main2, blks2 = H.extract_main_text(page, d["lang"])
+    assert main2 == main == d["text"]
+    assert [b["cls"] for b in blks2] == classes
+
+
 @pytest.mark.parametrize("seed", [7, 1234])
 def test_roundtrip_across_seeds(seed):
     for idx in (0, 3):

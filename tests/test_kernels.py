@@ -15,6 +15,8 @@ from kraken_spark.kernels.order import is_in_region, reading_order, topsort
 from kraken_spark.kernels.recognizer import build_recognizer, recognize_line, recognize_page
 from kraken_spark.kernels.vgsl import VGSLModel
 
+from conftest import requires_reference
+
 
 # ---------------------------------------------------------------- png
 def test_png_roundtrip_gray():
@@ -453,6 +455,7 @@ def test_seam_extraction_byte_identical():
         assert "\n".join(r["prediction"] for r in recs) == d["text"], (i, d["lang"])
 
 
+@requires_reference("bw.png")
 def test_segment_real_scan_bw_png():
     """The reference's real scanned test page (bw.png, ~30 lines) must
     pass the admission guard and segment to the reference's expected line
@@ -460,12 +463,10 @@ def test_segment_real_scan_bw_png():
     the page."""
     from pathlib import Path
 
-    res = Path("/root/reference/tests/resources/bw.png")
-    if not res.exists():
-        import pytest as _pytest
-
-        _pytest.skip("reference fixtures unavailable")
     from kraken_spark.kernels import binarize, png
+    from kraken_spark.refassets import resource
+
+    res = Path(resource("bw.png"))
 
     img = png.decode_png(res.read_bytes())
     mask = binarize.nlbin(img)

@@ -8,6 +8,7 @@ serialize->parse round-trip) on the deterministic synthetic corpus.
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -25,7 +26,13 @@ from kraken_spark.pipeline import (  # noqa: E402
     remaining_documents,
     run_extraction,
 )
+from kraken_spark.refassets import resource  # noqa: E402
 from kraken_spark.session import get_spark  # noqa: E402
+
+from conftest import requires_reference  # noqa: E402
+
+_HAVE_OVERFIT = all(os.path.exists(resource(f))
+                    for f in ("overfit.mlmodel", "000236.png"))
 
 
 @pytest.fixture(scope="module")
@@ -262,7 +269,18 @@ def test_multimodel_dispatch_by_line_tags(spark):
         assert by_tag["marginalia"].model_used == "ignored"
         assert by_tag["marginalia"].text_exact is None
     assert all(r.text_exact for r in rows if r.tag in ("heading", "default"))
-    # trained-weights dispatch goldens ride along as their own rows
+    if not _HAVE_OVERFIT:
+        # without the reference fixture the trained rows degrade to none
+        assert not any(r.url.startswith("trained://overfit/") for r in rows)
+
+
+@requires_reference("overfit.mlmodel", "000236.png")
+def test_multimodel_dispatch_trained_goldens(spark):
+    """The trained-weights dispatch goldens ride along as their own rows,
+    one per scenario, each byte-exact through overfit.mlmodel."""
+    from kraken_spark.operators.advanced import x_multimodel_dispatch
+
+    rows = x_multimodel_dispatch(spark, "sf0.001").collect()
     trained = [r for r in rows if r.url.startswith("trained://overfit/")]
     assert {r.tag for r in trained} == {
         "bbox_ignore", "bl_ignore", "bbox_default", "bl_default",

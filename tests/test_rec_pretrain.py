@@ -105,8 +105,8 @@ def test_gradient_batching_invariance():
 
 
 def test_masked_encoder_matches_supervised_forward_when_unmasked():
-    """With no masking the context-encoder path is rec_train.forward's
-    hcat: the feature + encoder stacks are shared bit-for-bit."""
+    """With no masking the pretrainer's feature + encoder path, plus the
+    linear head, is rec_train.forward bit for bit."""
     rng = np.random.Generator(np.random.PCG64(884401))
     W = rp.init_pretrain_weights(rng)
     samples = _samples(3)
@@ -116,8 +116,8 @@ def test_masked_encoder_matches_supervised_forward_when_unmasked():
     x = np.zeros((len(xs), 1, rt.HEIGHT, wmax), dtype=np.float32)
     for i, ts in enumerate(xs):
         x[i, 0, :, : ts.shape[1]] = ts
-    feat, w2, _ = rp._features_fwd(x, widths, W)
-    hcat, _ = rp._encoder_fwd(feat, w2, W)
+    feat, w2, _ = rt.features_fwd(x, widths, W)
+    hcat, _ = rt.encoder_fwd(feat, w2, W)
     logits = hcat @ W["out.lin.weight"].T + W["out.lin.bias"]
     ref_logits, ref_t = rt.forward(x, widths, W)
     assert np.array_equal(w2, ref_t)

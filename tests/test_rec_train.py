@@ -17,6 +17,7 @@ import numpy as np
 import pytest
 
 from kraken_spark.kernels import rec_train as rt
+from kraken_spark.kernels.layers import log_softmax
 
 EVAL_SEED = 4242  # disjoint from rt.TRAIN_SEED / rt.VAL_SEED (883xxx)
 
@@ -53,7 +54,7 @@ def test_ctc_loss_matches_brute_force():
         labels = rng.integers(1, k, size=int(rng.integers(1, 4))).tolist()
         logits = rng.normal(0, 1, (t_len, k))
         loss, dl = rt.ctc_loss_grad(logits, labels)
-        logp = rt._log_softmax(logits)
+        logp = log_softmax(logits)
         tot = -np.inf
         for path in itertools.product(range(k), repeat=t_len):
             col, prev = [], None

@@ -19,12 +19,15 @@ from kraken_spark.kernels.records import load_reference_pickle
 from kraken_spark.kernels.serialize import (line_dict_from_record, serialize,
                                             to_hocr)
 from kraken_spark.kernels.xsdcheck import validate_xml
+from kraken_spark.refassets import resources_dir
 
-RES = Path("/root/reference/tests/resources")
+from conftest import requires_reference
+
+RES = Path(resources_dir())
 NS = {"a": "http://www.loc.gov/standards/alto/ns-v4#"}
 
-pytestmark = pytest.mark.skipif(not RES.exists(),
-                                reason="reference fixtures unavailable")
+pytestmark = requires_reference("bl_rec.pkl", "arabic_bbox_records.pkl",
+                                "alto-4-3.xsd")
 
 
 def _row_from_records(recs):

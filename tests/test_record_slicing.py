@@ -15,11 +15,14 @@ import pytest
 from kraken_spark.kernels.records import (BaselineOCRRecord,
                                           load_reference_pickle,
                                           precompute_sections)
+from kraken_spark.refassets import resources_dir
 
-RES = Path("/root/reference/tests/resources")
+from conftest import requires_reference
 
-pytestmark = pytest.mark.skipif(not RES.exists(),
-                                reason="reference fixtures unavailable")
+RES = Path(resources_dir())
+
+pytestmark = requires_reference("arabic_bbox_records.pkl", "box_rec.pkl",
+                                "arabic_bl_records.pkl", "bl_rec.pkl")
 
 
 @pytest.fixture(scope="module")

@@ -15,6 +15,8 @@ pyspark = pytest.importorskip("pyspark")
 
 from kraken_spark.session import get_spark  # noqa: E402
 
+from conftest import requires_reference  # noqa: E402
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -37,6 +39,7 @@ def test_resources_dir_default_and_override(monkeypatch):
     )
 
 
+@requires_reference("overfit.mlmodel", "000236.png")
 def test_rpred_golden_via_env_override(tmp_path, monkeypatch, spark):
     """Same 4/4 golden-match rows when the reference checkout is reached
     through a different root (a symlink stands in for a cluster-side

@@ -13,13 +13,16 @@ import pytest
 
 from kraken_spark.kernels.xmlparse import (detect_dialect, parse_alto,
                                            parse_pagexml, parse_segmentation)
+from kraken_spark.refassets import resources_dir
 
-RES = Path("/root/reference/tests/resources")
+from conftest import requires_reference
+
+RES = Path(resources_dir())
 ALTO = RES / "alto"
 PAGE = RES / "page"
 
-pytestmark = pytest.mark.skipif(not RES.exists(),
-                                reason="reference fixtures unavailable")
+pytestmark = requires_reference("alto/bsb00084914_00007.xml",
+                                "page/cPAS-2000.xml")
 
 
 def _read(p):

@@ -11,11 +11,15 @@ import pytest
 from kraken_spark.kernels import png, render
 from kraken_spark.kernels.serialize import serialize
 from kraken_spark.kernels.xsdcheck import validate_xml
+from kraken_spark.refassets import resource
 from kraken_spark.stages import extract_document
 
-RES = "/root/reference/tests/resources"
-ALTO_XSD = f"{RES}/alto-4-3.xsd"
-PAGE_XSD = f"{RES}/pagecontent.xsd"
+from conftest import requires_reference
+
+ALTO_XSD = resource("alto-4-3.xsd")
+PAGE_XSD = resource("pagecontent.xsd")
+# every test that reads a schema skips, naming it, without the checkout
+SCHEMAS = requires_reference("alto-4-3.xsd", "pagecontent.xsd")
 
 
 @pytest.fixture(scope="module")
@@ -39,14 +43,17 @@ def page(row):
 # ---------------------------------------------------------------- positive
 
 
+@SCHEMAS
 def test_alto_output_validates(alto):
     assert validate_xml(alto, ALTO_XSD) == []
 
 
+@SCHEMAS
 def test_pagexml_output_validates(page):
     assert validate_xml(page, PAGE_XSD) == []
 
 
+@SCHEMAS
 def test_multiple_pages_validate():
     """Seed/page-diverse sample incl. an RTL page (language metadata in
     the custom string, not the enum-typed primaryLanguage attribute)."""
@@ -69,18 +76,21 @@ def _expect_invalid(doc, xsd, needle=""):
         assert any(needle in e for e in errs), errs
 
 
+@SCHEMAS
 def test_alto_missing_required_attribute_rejected(alto):
     # String CONTENT is use="required" in alto-4-3.xsd
     assert "CONTENT=" in alto
     _expect_invalid(alto.replace("CONTENT=", "XCONTENT=", 1), ALTO_XSD)
 
 
+@SCHEMAS
 def test_alto_undeclared_attribute_rejected(alto):
     _expect_invalid(
         alto.replace("<TextLine ", '<TextLine BOGUS="1" ', 1), ALTO_XSD, "undeclared"
     )
 
 
+@SCHEMAS
 def test_alto_bad_enum_rejected(alto):
     assert "<MeasurementUnit>pixel</MeasurementUnit>" in alto
     _expect_invalid(
@@ -92,6 +102,7 @@ def test_alto_bad_enum_rejected(alto):
     )
 
 
+@SCHEMAS
 def test_alto_confidence_range_rejected(alto):
     # WC is xsd:float restricted to [0, 1]
     assert 'WC="0.' in alto or 'WC="1.0' in alto
@@ -101,6 +112,7 @@ def test_alto_confidence_range_rejected(alto):
     _expect_invalid(mutated, ALTO_XSD)
 
 
+@SCHEMAS
 def test_alto_misplaced_element_rejected(alto):
     # Description must precede Layout inside <alto> — a trailing copy of
     # MeasurementUnit inside Layout violates Layout's content model
@@ -111,6 +123,7 @@ def test_alto_misplaced_element_rejected(alto):
     )
 
 
+@SCHEMAS
 def test_alto_duplicate_ids_rejected(alto):
     import re
 
@@ -119,6 +132,7 @@ def test_alto_duplicate_ids_rejected(alto):
     _expect_invalid(alto.replace(f'ID="{ids[1]}"', f'ID="{ids[0]}"'), ALTO_XSD, "duplicate ID")
 
 
+@SCHEMAS
 def test_pagexml_iso_primary_language_rejected(page):
     """The exact bug validation caught on first run: primaryLanguage is an
     enumeration of full language names ('English'), not ISO codes."""
@@ -129,11 +143,13 @@ def test_pagexml_iso_primary_language_rejected(page):
     )
 
 
+@SCHEMAS
 def test_pagexml_full_name_primary_language_accepted(page):
     ok = page.replace("<TextLine ", '<TextLine primaryLanguage="English" ', 1)
     assert validate_xml(ok, PAGE_XSD) == []
 
 
+@SCHEMAS
 def test_pagexml_missing_coords_rejected(page):
     import re
 
@@ -141,6 +157,7 @@ def test_pagexml_missing_coords_rejected(page):
     _expect_invalid(mutated, PAGE_XSD, "content model")
 
 
+@SCHEMAS
 def test_pagexml_bad_points_rejected(page):
     import re
 
@@ -152,6 +169,7 @@ def test_pagexml_bad_points_rejected(page):
 # -------------------------------------------------------- driver surface
 
 
+@SCHEMAS
 def test_x_serialize_all_reports_xsd_valid():
     """The driver query's xsd_valid column: true for every ALTO/PageXML
     row, null for hOCR/ABBYY (no schema)."""
@@ -181,6 +199,7 @@ def test_x_serialize_all_reports_xsd_valid():
 # ------------------------------------------------------- subline toggle
 
 
+@SCHEMAS
 def test_pagexml_word_glyph_nesting_validates(row):
     """subline=True on record-derived lines emits the reference
     template's Word/Glyph nesting (templates/pagexml:26-42) and stays
@@ -198,6 +217,7 @@ def test_pagexml_word_glyph_nesting_validates(row):
     assert words and all("<TextEquiv conf=" in w for w in words)
 
 
+@SCHEMAS
 def test_no_subline_segmentation_all_formats(row):
     """subline=False (the reference --no-subline-segmentation flag): line
     text only — no word/char geometry in any of the four markups; ALTO
