@@ -20,6 +20,12 @@ Design points (see SURVEY.md §4.3, §7):
     wall clocks; cf. SURVEY.md §7.5).
 """
 
+from . import _zipcache
+
+# every Spark Python worker imports this package when it unpickles a stage
+# function; from then on its tasks stop re-reading pyspark.zip (_zipcache)
+_zipcache.install()
+
 __version__ = "0.1.0"
 
 __all__ = [

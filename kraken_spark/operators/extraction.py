@@ -17,6 +17,7 @@ from pyspark.sql import SparkSession
 
 from ..corpus import corpus_for, docs_for_sf
 from ..pipeline import extracted_text, metrics_table, plan_extraction
+from ..session import lineage_cut
 
 
 def _n_docs(sf_dir: str) -> int:
@@ -62,8 +63,12 @@ def x_extract_geometry(spark, sf):
     full multi-membership list is emitted as region_ids_json so no
     assignment is lost — region n_lines counts use all memberships).
     kind='region' rows: one per region with its line count (left join —
-    empty regions keep a null n_lines)."""
-    ext = _extraction(spark, sf)
+    empty regions keep a null n_lines).
+
+    The extraction is cut once (lineage_cut) before it is exploded: the
+    line rows, the region rows and both joins each read it, and an uncut
+    plan ran the page pipeline once per branch (four MapInArrow)."""
+    ext = lineage_cut(_extraction(spark, sf))
     lines = ext.select("url", F.explode("lines").alias("l"))
     regions = ext.select("url", F.explode("regions").alias("r")).select(
         "url",

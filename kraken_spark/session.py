@@ -5,6 +5,17 @@ run the same configuration. Numpy BLAS threads are pinned to 1 per Python
 worker (the reference caps BLAS pools per stage, /root/reference/kraken/
 kraken.py:304,421) so Spark task parallelism is the only parallelism —
 required for a clean N vs 4N scaling measurement.
+
+Fixed cost per Python task: Python workers are reused (see
+spark.python.worker.reuse below), but PySpark's worker still calls
+importlib.invalidate_caches() at the start of every task, and before
+Python 3.13 each of a worker's 16 zipimporters on pyspark.zip then
+re-reads its 1,328-entry directory: 0.17-0.23 CPU-s per task, even for an
+empty partition. Importing kraken_spark (every stage function does)
+installs kraken_spark._zipcache, which skips the re-read while the
+archive's stat is unchanged: a reused worker's CPU per one-row task
+measured 0.28-0.30 -> 0.029 s at local[1] on a 4-vCPU box
+(tests/test_worker_overhead.py pins it).
 """
 
 from __future__ import annotations
@@ -107,7 +118,8 @@ def get_spark(
         # numpy/pyarrow import + model bootstrap, and the concurrent
         # fork/exec/mmap storm drives the machine to ~70% system CPU.
         # Keep it off; workers must be long-lived for per-executor model
-        # caching to mean anything.
+        # caching to mean anything. A reused worker's remaining fixed cost
+        # per task is cut by kraken_spark._zipcache (module docstring).
         .config("spark.python.worker.reuse", "true")
     )
     pyfiles = os.environ.get("SPARK_GRAFT_PYFILES")

@@ -202,6 +202,59 @@ def test_forced_align_segmentation_record_count_and_unencodable(recs, pages):
                        "☃" * 12)
 
 
+# -- model-file write/read round trips on the in-repo asset -----------------
+
+def _roundtrip_predictions(bundle, pages):
+    rec = LoadedRecognizer(bundle)
+    return [_per_line(rec, img, ln)["prediction"]
+            for img, lines in pages for ln in lines]
+
+
+def test_safetensors_write_read_roundtrip(tmp_path, pages, per_line):
+    """Saving the asset and reloading it reproduces every weight
+    byte-for-byte and every prediction over the 61 pin lines."""
+    from kraken_spark.kernels.modelio import load_safetensors, save_kraken_model
+
+    src = _bundles()["new"]
+    p = str(tmp_path / "rt.safetensors")
+    save_kraken_model(p, src)
+    rt = load_safetensors(p)[0]
+    assert rt.vgsl == src.vgsl and rt.codec == src.codec
+    assert set(rt.weights) == set(src.weights)
+    for k, w in src.weights.items():
+        assert np.asarray(rt.weights[k]).tobytes() == np.asarray(w).tobytes(), k
+    assert _roundtrip_predictions(rt, pages) == \
+        [r["prediction"] for r in per_line["new"]]
+
+
+def test_coreml_write_read_roundtrip(tmp_path, pages, per_line):
+    """The asset written as a CoreML .mlmodel reads back with the same
+    spec and codec, close weights and the same predictions over the 61 pin
+    lines. CoreML stores one LSTM bias per gate, so the writer merges
+    bias_ih into bias_hh (test_golden_rpred::test_coreml_lstm_roundtrip):
+    per direction only the sum bias_ih + bias_hh is compared."""
+    from kraken_spark.kernels.modelio import load_coreml, save_coreml
+
+    src = _bundles()["new"]
+    p = str(tmp_path / "rt.mlmodel")
+    save_coreml(p, src)
+    rt = load_coreml(p)[0]
+    assert rt.vgsl == src.vgsl and rt.codec == src.codec
+    assert (rt.seg_type, rt.legacy_polygons) == \
+        (src.seg_type, src.legacy_polygons)
+    assert set(rt.weights) == set(src.weights)
+    biases = {k for k in src.weights if ".bias_ih_" in k or ".bias_hh_" in k}
+    assert biases
+    for k in set(src.weights) - biases:
+        assert np.allclose(rt.weights[k], src.weights[k]), k
+    for k in (b for b in biases if ".bias_ih_" in b):
+        hh = k.replace(".bias_ih_", ".bias_hh_")
+        assert np.allclose(rt.weights[k] + rt.weights[hh],
+                           src.weights[k] + src.weights[hh]), k
+    assert _roundtrip_predictions(rt, pages) == \
+        [r["prediction"] for r in per_line["new"]]
+
+
 def test_forward_batch_falls_back_without_batchable_tail():
     """A net whose tail isn't batchable (transposed LSTM) routes through
     the per-line forward — same results, no exception."""

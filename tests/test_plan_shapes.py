@@ -122,6 +122,39 @@ def test_extraction_single_arrow_stage_no_extra_shuffle(spark):
     assert "Sort" not in plan.split("MapInArrow")[0]
 
 
+def _executed_extract_maps(spark, run) -> int:
+    """extract_map MapInArrow nodes in the final (post-AQE) plans of every
+    SQL execution run() starts, read from the SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def ids():
+        ex = store.executionsList()
+        return {ex.apply(i).executionId() for i in range(ex.size())}
+
+    before = ids()
+    run()
+    # the store is fed by the listener bus; let it catch up with run()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    n = 0
+    for eid in ids() - before:
+        nodes = store.planGraph(eid).allNodes()
+        n += sum(nodes.apply(i).name() == "MapInArrow"
+                 and "extract_map" in nodes.apply(i).desc()
+                 for i in range(nodes.size()))
+    return n
+
+
+def test_extract_geometry_extracts_once(spark):
+    """x_extract_geometry explodes lines and regions and joins them back:
+    uncut, each branch re-ran the page pipeline (four extract_map nodes,
+    three over a ReusedExchange). The extraction is lineage-cut once."""
+    from kraken_spark.operators.extraction import x_extract_geometry
+
+    n = _executed_extract_maps(
+        spark, lambda: x_extract_geometry(spark, SF).collect())
+    assert n == 1
+
+
 def test_extract_html_warc_shape(spark):
     """The web-HTML query runs THROUGH the WARC container: page-wrap+pack
     MapInArrow (one .warc.gz per partition) -> explode_warc MapInArrow ->

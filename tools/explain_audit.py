@@ -6,6 +6,10 @@ schemas, broadcast joins, single-shuffle extraction. This writes the
 audited plans to a reviewable artifact (regenerate after plan-affecting
 changes); the load-bearing properties are additionally pinned as
 assertions in tests/test_plan_shapes.py.
+
+    python tools/explain_audit.py              # every audited query
+    python tools/explain_audit.py NAME [...]   # re-explain only NAME(s),
+                                               # keep the other entries
 """
 
 from __future__ import annotations
@@ -20,6 +24,7 @@ SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 AUDITED = [
     ("x_extract_text", "fused extraction: scan -> weight-salted repartition -> one mapInArrow; no sort above the Arrow stage"),
+    ("x_extract_geometry", "extraction computed once (lineage cut), then exploded"),
     ("q5_local_supplier_volume", "fact joins shuffled by AQE, dimension joins broadcast"),
     ("range_theta_join", "equi+range predicate stays a broadcast join, never cartesian"),
     ("window_topk_per_group", "global top-k via TakeOrderedAndProject + broadcast join, no partition-less window"),
@@ -34,10 +39,16 @@ AUDITED = [
 ]
 
 
-def main() -> None:
+def main(names: list[str]) -> None:
     import __spark_entry__ as E
     from kraken_spark.session import get_spark
 
+    path = os.path.join(REPO, "PLANS.md")
+    kept = {}
+    if names:
+        with open(path) as f:
+            for sec in f.read().split("\n## ")[1:]:
+                kept[sec.split("\n", 1)[0]] = "\n## " + sec
     spark = get_spark(app="explain-audit", cores=4, shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
     qs = E.queries()
@@ -45,14 +56,19 @@ def main() -> None:
         "# PLANS — audited physical plans (auto-generated by tools/explain_audit.py)\n",
         f"\nScale factor: `{SF}`. Regenerate with `python tools/explain_audit.py`.\n",
     ]
+    n = 0
     for name, why in AUDITED:
+        if name in kept and name not in names:
+            out.append(kept[name])
+            continue
         df = qs[name](spark, SF)
         plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
         out.append(f"\n## {name}\n\n_{why}_\n\n```\n{plan}\n```\n")
-    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
+        n += 1
+    with open(path, "w") as f:
         f.write("".join(out))
-    print(f"wrote PLANS.md ({len(AUDITED)} plans)")
+    print(f"wrote PLANS.md ({n} of {len(AUDITED)} plans explained)")
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])
