@@ -122,12 +122,6 @@ def bidi_class(cp: int) -> str:
     return "L"
 
 
-def char_class(ch: str) -> str:
-    """Back-compat single-char class (collapses to the classes the engine's
-    earlier subset exposed)."""
-    return bidi_class(ord(ch))
-
-
 def _dir_of(level: int) -> str:
     return "R" if level % 2 else "L"
 
@@ -534,39 +528,6 @@ def get_display(text: str, base_dir: str | None = None) -> tuple[str, list[int]]
         display.append(chr(cp))
         order.append(i)
     return "".join(display), order
-
-
-def resolve_levels(text: str, base_dir: str = "L") -> list[int]:
-    """Back-compat: embedding level per character (para level for removed
-    formatting characters)."""
-    cps = [ord(c) for c in text]
-    types = [bidi_class(cp) for cp in cps]
-    para_level = 0 if base_dir == "L" else 1
-    levels, _ = resolve_paragraph(types, cps, para_level)
-    return [lv if lv is not None else para_level for lv in levels]
-
-
-def display_map(levels: list[int]) -> list[int]:
-    """Back-compat: L2 permutation from explicit levels."""
-    n = len(levels)
-    perm = list(range(n))
-    if n == 0:
-        return perm
-    odd = [lv for lv in levels if lv % 2]
-    if not odd:
-        return perm
-    for level in range(max(levels), min(odd) - 1, -1):
-        i = 0
-        while i < n:
-            if levels[i] >= level:
-                j = i
-                while j < n and levels[j] >= level:
-                    j += 1
-                perm[i:j] = perm[i:j][::-1]
-                i = j
-            else:
-                i += 1
-    return perm
 
 
 def display_to_logical(visual: str, base_dir: str = "L") -> tuple[str, list[int]]:

@@ -80,14 +80,6 @@ def moving_max_1d(a: np.ndarray, k: int, axis: int) -> np.ndarray:
     return np.moveaxis(out, -1, axis)
 
 
-def moving_min_1d(a: np.ndarray, k: int, axis: int) -> np.ndarray:
-    # negation on unsigned dtypes wraps (uint8 -1 == 255), which would turn
-    # the min into a max — promote to a signed type first
-    if a.dtype == np.bool_ or a.dtype.kind == "u":
-        a = a.astype(np.int16 if a.dtype.itemsize <= 1 else np.int64)
-    return -moving_max_1d(-a, k, axis)
-
-
 def _window_count_1d(m: np.ndarray, k: int, axis: int) -> np.ndarray:
     """Edge-replicated windowed SUM of width k along axis via one cumsum —
     the binary-morphology fast path: for a 0/1 mask, moving max == count>0

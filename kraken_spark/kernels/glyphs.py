@@ -81,7 +81,3 @@ def templates() -> np.ndarray:
     for i, cp in enumerate(ALPHABET):
         bank[i + 1] = glyph_ink(cp).astype(np.float32) * 2.0 - 1.0
     return bank
-
-
-def label_for(cp: int) -> int:
-    return ALPHABET.index(cp) + 1

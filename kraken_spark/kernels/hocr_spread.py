@@ -208,18 +208,6 @@ def fix_word_span_area(root: ET.Element, strict_quirks: bool = True) -> int:
     return fixed
 
 
-def push_edge_spans_to_borders_of_line(root: ET.Element) -> None:
-    """First/last word of each line snaps to the line's edge ± 1 px
-    (print_word_spreader.py:160-176; the reference defines but does not
-    call this — provided for parity, not applied by spread_hocr)."""
-    for line in _spans(root, "ocr_line"):
-        words = [c for c in line if c.get("class") == "ocrx_word"]
-        if not words:
-            continue
-        set_bbox_value(words[0], 0, get_bbox_val(line, 0) + 1)
-        set_bbox_value(words[-1], 2, get_bbox_val(line, 2) - 1)
-
-
 def clean_ocr_page_title(root: ET.Element, file_name: str) -> None:
     """title -> 'image <stem>.png; <bbox part>' on the first ocr_page
     (print_word_spreader.py:201-211)."""

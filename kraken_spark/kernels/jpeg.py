@@ -86,14 +86,6 @@ _DCT_A = np.cos((2 * _k[None, :] + 1) * _k[:, None] * np.pi / 16.0) * np.sqrt(0.
 _DCT_A[0, :] *= 1.0 / np.sqrt(2.0)
 
 
-def _idct2(block: np.ndarray) -> np.ndarray:
-    return _DCT_A.T @ block @ _DCT_A
-
-
-def _fdct2(block: np.ndarray) -> np.ndarray:
-    return _DCT_A @ block @ _DCT_A.T
-
-
 # --------------------------------------------------------------------------
 # Huffman
 # --------------------------------------------------------------------------

@@ -28,6 +28,17 @@ pinned to differ stay where they are:
   differ and each is pinned by CER-0, golden or asset tests;
 - vgsl._gru_dir (the only GRU), the two groupnorm formulas, and the two
   spec parsers (different grammar and weight names).
+
+The optimizer is not a layer but is written once the same way:
+rec_train.Adam steps every in-repo trainer (rec, pretrain, seg, RO and
+their Spark faces in training.py) and keeps each weight's dtype, so the
+float64 seg/RO loops retrain their assets bit for bit on it. The two
+cosine learning-rate forms stay apart: the seg/RO loops compute
+``np.pi * (step - 1) / steps``, while the rec/pretrain loops scale
+``np.pi * frac``. A shared helper would have to round one of them
+differently. For example, ``np.pi * ((step - 1) / steps)`` differs in
+the last bit on 196 of 700 seg steps and 1,349 of 4,000 RO steps, which
+would change the committed assets.
 """
 
 from __future__ import annotations

@@ -69,10 +69,6 @@ def label(mask: np.ndarray, connectivity: int = 1) -> tuple[np.ndarray, int]:
     return labels, len(uniq)
 
 
-def component_count(mask: np.ndarray) -> int:
-    return label(mask)[1]
-
-
 def find_objects(labels: np.ndarray, n: int) -> list[tuple[int, int, int, int]]:
     """Bounding boxes (y0, x0, y1, x1) exclusive, for labels 1..n."""
     if n == 0:
@@ -88,20 +84,6 @@ def find_objects(labels: np.ndarray, n: int) -> list[tuple[int, int, int, int]]:
     np.maximum.at(y1, ls, ys)
     np.maximum.at(x1, ls, xs)
     return [(int(y0[i]), int(x0[i]), int(y1[i] + 1), int(x1[i] + 1)) for i in range(n)]
-
-
-def component_stats(mask: np.ndarray) -> dict:
-    """Summary stats used by scale estimation / page guards
-    (cf. estimate_scale /root/reference/kraken/pageseg.py:69-81 and the
-    CC-count admission guard /root/reference/kraken/pageseg.py:382-391)."""
-    labels, n = label(mask)
-    if n == 0:
-        return {"n_components": 0, "median_sqrt_area": 0.0}
-    areas = np.bincount(labels.ravel())[1:]
-    return {
-        "n_components": int(n),
-        "median_sqrt_area": float(np.median(np.sqrt(areas))),
-    }
 
 
 def propagate_labels(mask: np.ndarray, seeds: np.ndarray, conflict: int = 0) -> np.ndarray:

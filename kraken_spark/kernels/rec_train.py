@@ -729,6 +729,12 @@ def clip_grads(grads: dict[str, np.ndarray], max_norm: float = 5.0) -> dict[str,
 
 
 class Adam:
+    """Adam (bias-corrected, eps outside the root) — the one optimizer of
+    every in-repo trainer: rec_train, rec_pretrain, seg_train, ro_train and
+    their Spark faces (training.py). Each weight keeps its dtype: float32
+    for the recognizer nets, float64 for the segmenter and reading-order
+    nets, whose former inline loops this reproduces bit for bit."""
+
     def __init__(self, W: dict[str, np.ndarray], lr: float = 2e-3,
                  b1: float = 0.9, b2: float = 0.999, eps: float = 1e-8):
         self.lr, self.b1, self.b2, self.eps = lr, b1, b2, eps
@@ -748,7 +754,7 @@ class Adam:
             W[k] = (
                 W[k]
                 - lr * (self.m[k] / bc1) / (np.sqrt(self.v[k] / bc2) + self.eps)
-            ).astype(np.float32)
+            ).astype(W[k].dtype)
 
 
 # --------------------------------------------------------------- decode/eval

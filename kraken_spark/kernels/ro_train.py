@@ -157,6 +157,8 @@ def train_ro(
     log_every: int = 0,
 ) -> OrderMLP:
     """Adam + BCE from random init; returns the trained OrderMLP."""
+    from .rec_train import Adam
+
     rng = np.random.Generator(np.random.PCG64(seed))
     X, Y = data if data is not None else training_set()
     d2 = X.shape[1]
@@ -166,9 +168,7 @@ def train_ro(
         "w2": rng.standard_normal(HIDDEN) * (2.0 / HIDDEN) ** 0.5,
         "b2": np.zeros(1),
     }
-    m = {k: np.zeros_like(v) for k, v in W.items()}
-    v2 = {k: np.zeros_like(v) for k, v in W.items()}
-    b1t, b2t = 0.9, 0.999
+    opt = Adam(W)
     lr0 = lr
     for step in range(1, steps + 1):
         lr = lr0 * (0.02 + 0.98 * 0.5 * (1 + np.cos(np.pi * (step - 1) / steps)))
@@ -186,12 +186,7 @@ def train_ro(
         dh = np.outer(dlogit, W["w2"]) * (pre > 0)
         g["w1"] = dh.T @ x
         g["b1"] = dh.sum(axis=0)
-        for k in W:
-            m[k] = b1t * m[k] + (1 - b1t) * g[k]
-            v2[k] = b2t * v2[k] + (1 - b2t) * g[k] * g[k]
-            mh = m[k] / (1 - b1t**step)
-            vh = v2[k] / (1 - b2t**step)
-            W[k] = W[k] - lr * mh / (np.sqrt(vh) + 1e-8)
+        opt.step(W, g, lr=lr)
         if log_every and step % log_every == 0:
             eps = 1e-9
             loss = -float(

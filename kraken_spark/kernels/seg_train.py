@@ -263,12 +263,12 @@ def train(
     log_every: int = 0,
 ) -> dict:
     """Adam + weighted BCE from random init; returns the weight dict."""
+    from .rec_train import Adam
+
     rng = np.random.Generator(np.random.PCG64(seed))
     pages = pages or training_pages()
     W = init_weights(rng)
-    m = {k: np.zeros_like(v) for k, v in W.items()}
-    v2 = {k: np.zeros_like(v) for k, v in W.items()}
-    b1t, b2t = 0.9, 0.999
+    opt = Adam(W)
     lr0 = lr
     for step in range(1, steps + 1):
         # cosine decay: early steps explore, late steps sharpen the maps so
@@ -286,13 +286,7 @@ def train(
             loss += closs
             for k in g_acc:
                 g_acc[k] += g[k]
-        for k in W:
-            gk = g_acc[k] / batch
-            m[k] = b1t * m[k] + (1 - b1t) * gk
-            v2[k] = b2t * v2[k] + (1 - b2t) * gk * gk
-            mh = m[k] / (1 - b1t**step)
-            vh = v2[k] / (1 - b2t**step)
-            W[k] = W[k] - lr * mh / (np.sqrt(vh) + 1e-8)
+        opt.step(W, {k: g / batch for k, g in g_acc.items()}, lr=lr)
         if log_every and step % log_every == 0:
             print(f"step {step:4d}  loss {loss / batch:.5f}")
     return W

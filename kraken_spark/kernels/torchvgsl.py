@@ -231,20 +231,12 @@ def dewarp_line(line: np.ndarray, target_height: int) -> np.ndarray:
 _PRECISION_BITS = 32 - 8 - 2  # PIL Resample.c precision for 8-bit images
 
 
-def _lanczos_coeffs(in_size: int, out_size: int):
-    """PIL precompute_coeffs geometry: support 3, filterscale =
-    max(in/out, 1), window centered at (i+0.5)*scale, per-window
-    normalization (Resample.c). Vectorized over output pixels with the
-    identical per-element arithmetic (trunc-toward-zero window bounds,
-    same sinc products, column-order normalization sum, symmetric
-    fixed-point rounding); returns the per-row (xmin, int-coeff) pairs."""
-    xmin, ki = _lanczos_coeff_table(in_size, out_size)
-    return [(int(x0), k) for x0, k in zip(xmin, ki)]
-
-
 def _lanczos_coeff_table(in_size: int, out_size: int):
-    """Cached (xmin (O,), coeffs (O, L) int64) fixed-point Lanczos table.
-    Line tensors repeat (height, ratio) pairs heavily across a corpus, so
+    """Cached (xmin (O,), coeffs (O, L) int64) fixed-point Lanczos table,
+    PIL precompute_coeffs geometry: support 3, filterscale = max(in/out,
+    1), window centered at (i+0.5)*scale, per-window normalization
+    (Resample.c), vectorized over output pixels with the identical
+    per-element arithmetic. Line tensors repeat (height, ratio) pairs heavily across a corpus, so
     the table is memoized per python worker."""
     key = (in_size, out_size)
     hit = _LANCZOS_CACHE.get(key)

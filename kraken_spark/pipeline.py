@@ -81,8 +81,11 @@ def weight_salt(n: int):
     tail straggler after them (classic longest-processing-time
     scheduling). The heavy space is as wide as the normal one — heavy
     tasks are the longest, so hash collisions there cost the most wall
-    (two 16x pages sharing a bucket doubles the job tail), while unused
-    heavy buckets are empty partitions that cost nothing to schedule.
+    (two 16x pages sharing a bucket doubles the job tail). Unused heavy
+    buckets are NOT free: each is an empty partition that still costs a
+    task launch plus ~0.03 CPU-s of worker Python, and on the bulk_pageseg
+    benchmark workload 15 of 32 extract tasks run empty. Sizing the bucket
+    spaces from the data is ROADMAP item 1.
 
     The emitted salt is the murmur3 PREIMAGE of the bucket id
     (_partition_preimages), so bucket k maps 1:1 onto shuffle partition

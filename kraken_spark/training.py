@@ -27,6 +27,14 @@ training lines live in a 10^12-row table instead of a driver list:
   single-partition run reproduces kernels/rec_train.dataset_gradient
   BIT-FOR-BIT, a multi-partition run agrees to ~1e-9 relative (both
   pinned in tests/test_rec_train.py).
+* one reducer (_spark_reduce) serves all four trainers — recognizer CTC,
+  contrastive pretrain, segmenter and reading order: weight broadcast ->
+  one partial row per task -> optional executor-side tree fold ->
+  collect -> unflatten. Each public spark_*_gradient supplies only its
+  per-partition body (sample decoding, local gradient, its own summation
+  order), and every single-partition run bit-equals its local sum
+  (pinned in test_rec_train, test_rec_pretrain, test_seg_train and
+  test_ro_train). The driver loops all step rec_train.Adam.
 """
 
 from __future__ import annotations
@@ -669,11 +677,83 @@ def _weights_of(blob: bytes) -> dict[str, np.ndarray]:
         return {k: z[k] for k in z.files}
 
 
-def _grad_layout(W: dict[str, np.ndarray]) -> list[tuple[str, tuple, int]]:
-    out = []
-    for k in sorted(W):
-        out.append((k, W[k].shape, int(np.prod(W[k].shape))))
-    return out
+_PARTIAL_SCHEMA = "n long, loss double, grad binary"
+
+
+def _partial_batch(n: int, loss: float, flat: np.ndarray):
+    """One ``_PARTIAL_SCHEMA`` row: a gradient-sum partial (float64 flat)."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [pa.array([n], pa.int64()), pa.array([loss], pa.float64()),
+         pa.array([flat.tobytes()], pa.binary())],
+        names=["n", "loss", "grad"])
+
+
+def _fold_arrow(batches):
+    """Executor-side partial-row fold: one tree_fold level."""
+    n = 0
+    loss = 0.0
+    acc = None
+    for b in batches:
+        for i in range(b.num_rows):
+            n += b.column("n")[i].as_py()
+            loss += b.column("loss")[i].as_py()
+            flat = np.frombuffer(b.column("grad")[i].as_py(), dtype=np.float64)
+            acc = flat.copy() if acc is None else acc + flat
+    if acc is not None:
+        yield _partial_batch(n, loss, acc)
+
+
+def _spark_reduce(df, W: dict[str, np.ndarray], partial,
+                  tree_fold: int | None = None):
+    """The one synchronous data-parallel gradient reduction behind all four
+    trainers. The driver broadcasts W as float32 (_weights_blob); each task
+    calls ``partial(batches, Wl)`` on its partition, which returns that
+    partition's (loss_sum, grad_sums, n) in its own summation order, or
+    None when the partition holds nothing, and ships ONE partial row (the
+    sums flattened in sorted-key order as float64). With P tasks the driver
+    would receive P partial rows; tree_fold=k inserts one executor-side
+    fold level (repartition the partials to k and sum within each, Spark's
+    treeAggregate depth-2 shape), auto-enabled at P > 64. The driver adds
+    the collected rows onto float64 zeros in collect order and returns
+    (loss_sum, grad_sums, n)."""
+    spark = df.sparkSession
+    shapes = {k: W[k].shape for k in sorted(W)}
+    bvar = spark.sparkContext.broadcast(_weights_blob(W))
+
+    def part(batches):
+        got = partial(batches, _weights_of(bvar.value))
+        if got is None:
+            return
+        loss_sum, g, n = got
+        flat = np.concatenate([g[k].reshape(-1) for k in shapes])
+        yield _partial_batch(n, float(loss_sum), flat.astype(np.float64))
+
+    try:
+        partials = df.mapInArrow(part, _PARTIAL_SCHEMA)
+        n_parts = df.rdd.getNumPartitions()
+        if tree_fold is None and n_parts > 64:
+            tree_fold = max(8, int(np.sqrt(n_parts)))
+        if tree_fold:
+            partials = partials.repartition(tree_fold).mapInArrow(
+                _fold_arrow, _PARTIAL_SCHEMA)
+        gsum = {k: np.zeros(shape, dtype=np.float64)
+                for k, shape in shapes.items()}
+        loss_sum = 0.0
+        n = 0
+        for row in partials.collect():
+            n += row.n
+            loss_sum += row.loss
+            flat = np.frombuffer(row.grad, dtype=np.float64)
+            off = 0
+            for k, shape in shapes.items():
+                size = int(np.prod(shape))
+                gsum[k] += flat[off: off + size].reshape(shape)
+                off += size
+        return loss_sum, gsum, n
+    finally:
+        bvar.unpersist()
 
 
 def spark_gradient(lines_df, W: dict[str, np.ndarray], batch: int = 16,
@@ -695,73 +775,15 @@ def spark_gradient(lines_df, W: dict[str, np.ndarray], batch: int = 16,
     ONE executor-side fold level (repartition the partial rows to k and
     sum within each), so the driver sees k rows regardless of P (Spark's
     treeAggregate depth-2 shape). None auto-enables at P > 64."""
-    import pyarrow as pa
 
-    spark = lines_df.sparkSession
-    layout = _grad_layout(W)
-    bvar = spark.sparkContext.broadcast(_weights_blob(W))
-
-    def part(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from kraken_spark.kernels import rec_train as rt
-
-        Wl = _weights_of(bvar.value)
+    def partial(batches, Wl):
         samples: list = []
         for b in batches:
             samples.extend(_rows_to_samples(b, augment_step=augment_step))
-        if not samples:
-            return
-        loss_sum, gsum, n = rt.dataset_gradient(samples, Wl, batch=batch)
-        flat = np.concatenate([gsum[k].reshape(-1) for k, _s, _n in layout])
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([n], pa.int64()),
-                pa.array([float(loss_sum)], pa.float64()),
-                pa.array([flat.astype(np.float64).tobytes()], pa.binary()),
-            ],
-            names=["n", "loss", "grad"],
-        )
+        if samples:
+            return rec_train.dataset_gradient(samples, Wl, batch=batch)
 
-    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        n = 0
-        loss = 0.0
-        acc = None
-        for b in batches:
-            for i in range(b.num_rows):
-                n += b.column("n")[i].as_py()
-                loss += b.column("loss")[i].as_py()
-                flat = np.frombuffer(b.column("grad")[i].as_py(), dtype=np.float64)
-                acc = flat.copy() if acc is None else acc + flat
-        if acc is None:
-            return
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([n], pa.int64()), pa.array([loss], pa.float64()),
-             pa.array([acc.tobytes()], pa.binary())],
-            names=["n", "loss", "grad"],
-        )
-
-    schema = "n long, loss double, grad binary"
-    partials = lines_df.mapInArrow(part, schema)
-    n_parts = lines_df.rdd.getNumPartitions()
-    if tree_fold is None and n_parts > 64:
-        tree_fold = max(8, int(np.sqrt(n_parts)))
-    if tree_fold:
-        partials = partials.repartition(tree_fold).mapInArrow(fold, schema)
-    parts = partials.collect()
-    try:
-        gsum = {k: np.zeros(shape, dtype=np.float64) for k, shape, _n in layout}
-        loss_sum = 0.0
-        n = 0
-        for row in parts:
-            n += row.n
-            loss_sum += row.loss
-            flat = np.frombuffer(row.grad, dtype=np.float64)
-            off = 0
-            for k, shape, size in layout:
-                gsum[k] += flat[off : off + size].reshape(shape)
-                off += size
-        return loss_sum, gsum, n
-    finally:
-        bvar.unpersist()
+    return _spark_reduce(lines_df, W, partial, tree_fold)
 
 
 # --------------------------------------------------------------- training
@@ -842,82 +864,21 @@ def spark_pretrain_gradient(lines_df, W: dict[str, np.ndarray], step: int = 0,
     (PRETRAIN_SEED, step, crc32(url#line_idx)) — the gradient SUM is
     independent of partitioning, and a single-partition run bit-equals the
     local dataset_pretrain_gradient on the same keyed samples."""
-    import pyarrow as pa
-
     from .kernels import rec_pretrain as rp
 
     kneg = num_negatives if num_negatives is not None else rp.NUM_NEGATIVES
-    spark = lines_df.sparkSession
-    layout = _grad_layout(W)
-    bvar = spark.sparkContext.broadcast(_weights_blob(W))
 
-    def part(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def partial(batches, Wl):
         from kraken_spark.kernels import rec_pretrain as rpl
 
-        Wl = _weights_of(bvar.value)
         samples: list = []
         for b in batches:
             samples.extend(_rows_to_pretrain_samples(b))
-        if not samples:
-            return
-        loss_sum, gsum, n = rpl.dataset_pretrain_gradient(
-            samples, Wl, step=step, batch=batch, num_negatives=kneg)
-        flat = np.concatenate([gsum[k].reshape(-1) for k, _s, _n in layout])
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([n], pa.int64()),
-                pa.array([float(loss_sum)], pa.float64()),
-                pa.array([flat.astype(np.float64).tobytes()], pa.binary()),
-            ],
-            names=["n", "loss", "grad"],
-        )
+        if samples:
+            return rpl.dataset_pretrain_gradient(
+                samples, Wl, step=step, batch=batch, num_negatives=kneg)
 
-    schema = "n long, loss double, grad binary"
-    partials = lines_df.mapInArrow(part, schema)
-    n_parts = lines_df.rdd.getNumPartitions()
-    if tree_fold is None and n_parts > 64:
-        tree_fold = max(8, int(np.sqrt(n_parts)))
-    if tree_fold:
-        partials = partials.repartition(tree_fold).mapInArrow(_fold_arrow, schema)
-    parts = partials.collect()
-    try:
-        gsum = {k: np.zeros(shape, dtype=np.float64) for k, shape, _n in layout}
-        loss_sum = 0.0
-        n = 0
-        for row in parts:
-            n += row.n
-            loss_sum += row.loss
-            flat = np.frombuffer(row.grad, dtype=np.float64)
-            off = 0
-            for k, shape, size in layout:
-                gsum[k] += flat[off : off + size].reshape(shape)
-                off += size
-        return loss_sum, gsum, n
-    finally:
-        bvar.unpersist()
-
-
-def _fold_arrow(batches):
-    """Executor-side partial-row fold (shared by the CTC and pretrain
-    gradients' tree_fold levels)."""
-    import pyarrow as pa
-
-    n = 0
-    loss = 0.0
-    acc = None
-    for b in batches:
-        for i in range(b.num_rows):
-            n += b.column("n")[i].as_py()
-            loss += b.column("loss")[i].as_py()
-            flat = np.frombuffer(b.column("grad")[i].as_py(), dtype=np.float64)
-            acc = flat.copy() if acc is None else acc + flat
-    if acc is None:
-        return
-    yield pa.RecordBatch.from_arrays(
-        [pa.array([n], pa.int64()), pa.array([loss], pa.float64()),
-         pa.array([acc.tobytes()], pa.binary())],
-        names=["n", "loss", "grad"],
-    )
+    return _spark_reduce(lines_df, W, partial, tree_fold)
 
 
 def pretrain_spark(lines_df, steps: int = 30, batch: int = 16, lr: float = 2e-3,
@@ -1034,17 +995,13 @@ def spark_seg_gradient(pages_df, W: dict[str, np.ndarray], step: int = 0,
     through the SegmentationAugmenter analog (kernels/augment.augment_seg
     — input and target maps under one shared homography), keyed on
     (AUG_SEED, step, page identity). Returns (loss_sum, grad_sums,
-    n_crops)."""
-    import pyarrow as pa
+    n_crops). Above 64 partitions the partial rows take spark_gradient's
+    automatic executor-side fold level."""
 
-    spark = pages_df.sparkSession
-    layout = _grad_layout(W)
-    bvar = spark.sparkContext.broadcast(_weights_blob(W))
-
-    def part(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def partial(batches, Wl):
         from kraken_spark.kernels import seg_train as st
 
-        Wl = {k: v.astype(np.float64) for k, v in _weights_of(bvar.value).items()}
+        Wl = {k: v.astype(np.float64) for k, v in Wl.items()}
         loss_sum = 0.0
         acc = None
         n = 0
@@ -1072,33 +1029,12 @@ def spark_seg_gradient(pages_df, W: dict[str, np.ndarray], step: int = 0,
                     cx = int(rng.integers(0, max(x.shape[1] - crop, 1)))
                     loss, g = st.crop_gradient(x, tb, tr, Wl, cy, cx, crop)
                     loss_sum += loss
-                    flat = np.concatenate([g[k].reshape(-1)
-                                           for k, _s, _n in layout])
-                    acc = flat if acc is None else acc + flat
+                    acc = g if acc is None else {k: acc[k] + g[k] for k in acc}
                     n += 1
-        if acc is None:
-            return
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([n], pa.int64()), pa.array([loss_sum], pa.float64()),
-             pa.array([acc.astype(np.float64).tobytes()], pa.binary())],
-            names=["n", "loss", "grad"])
+        if acc is not None:
+            return loss_sum, acc, n
 
-    parts = pages_df.mapInArrow(part, "n long, loss double, grad binary").collect()
-    try:
-        gsum = {k: np.zeros(shape, dtype=np.float64) for k, shape, _n in layout}
-        loss_sum = 0.0
-        n = 0
-        for row in parts:
-            n += row.n
-            loss_sum += row.loss
-            flat = np.frombuffer(row.grad, dtype=np.float64)
-            off = 0
-            for k, shape, size in layout:
-                gsum[k] += flat[off: off + size].reshape(shape)
-                off += size
-        return loss_sum, gsum, n
-    finally:
-        bvar.unpersist()
+    return _spark_reduce(pages_df, W, partial)
 
 
 def train_segmenter_from_pairs(spark, pairs, out_path: str,
@@ -1117,9 +1053,7 @@ def train_segmenter_from_pairs(spark, pairs, out_path: str,
 
     pages = seg_pages_from_pairs(pairs).cache()
     W = st.init_weights(np.random.Generator(np.random.PCG64(20240817)))
-    m = {k: np.zeros_like(v) for k, v in W.items()}
-    v2 = {k: np.zeros_like(v) for k, v in W.items()}
-    b1t, b2t = 0.9, 0.999
+    opt = rec_train.Adam(W)
     l0 = n0 = None
     for step in range(1, steps + 1):
         cur_lr = lr * (0.02 + 0.98 * 0.5 * (1 + np.cos(np.pi * (step - 1) / steps)))
@@ -1130,13 +1064,7 @@ def train_segmenter_from_pairs(spark, pairs, out_path: str,
             raise ValueError("no usable ground-truth pages in the input")
         if l0 is None:
             l0, n0 = loss_sum, n
-        for k in W:
-            gk = gsum[k] / n
-            m[k] = b1t * m[k] + (1 - b1t) * gk
-            v2[k] = b2t * v2[k] + (1 - b2t) * gk * gk
-            mh = m[k] / (1 - b1t ** step)
-            vh = v2[k] / (1 - b2t ** step)
-            W[k] = W[k] - cur_lr * mh / (np.sqrt(vh) + 1e-8)
+        opt.step(W, {k: g / n for k, g in gsum.items()}, lr=cur_lr)
     l1, _, n1 = spark_seg_gradient(pages, W, step=0, crop=crop,
                                    crops_per_page=crops_per_page)
     st.save_weights(W, out_path)
@@ -1188,18 +1116,14 @@ def spark_ro_gradient(pairs_df, W: dict[str, np.ndarray]):
     """ONE synchronous data-parallel reading-order gradient: every page's
     pair block contributes its BCE loss/gradient SUM
     (ro_train.pair_gradient_sum); one tiny partial row per task. The sum
-    over pages is partitioning-independent up to float reassociation."""
-    import pyarrow as pa
+    over pages is partitioning-independent up to float reassociation.
+    Above 64 partitions the partial rows take spark_gradient's automatic
+    executor-side fold level."""
 
-    spark = pairs_df.sparkSession
-    layout = _grad_layout(W)
-    bvar = spark.sparkContext.broadcast(_weights_blob(W))
-
-    def part(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def partial(batches, Wl):
         from kraken_spark.kernels.ro_train import pair_gradient_sum
 
-        Wl = {k: v.astype(np.float64)
-              for k, v in _weights_of(bvar.value).items()}
+        Wl = {k: v.astype(np.float64) for k, v in Wl.items()}
         loss_sum = 0.0
         acc = None
         n = 0
@@ -1209,33 +1133,12 @@ def spark_ro_gradient(pairs_df, W: dict[str, np.ndarray]):
                 y = np.frombuffer(r["y"], dtype=np.float64)
                 loss, g = pair_gradient_sum(X, y, Wl)
                 loss_sum += loss
-                flat = np.concatenate([g[k].reshape(-1)
-                                       for k, _s, _n in layout])
-                acc = flat if acc is None else acc + flat
+                acc = g if acc is None else {k: acc[k] + g[k] for k in acc}
                 n += X.shape[0]
-        if acc is None:
-            return
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([n], pa.int64()), pa.array([loss_sum], pa.float64()),
-             pa.array([acc.tobytes()], pa.binary())],
-            names=["n", "loss", "grad"])
+        if acc is not None:
+            return loss_sum, acc, n
 
-    parts = pairs_df.mapInArrow(part, "n long, loss double, grad binary").collect()
-    try:
-        gsum = {k: np.zeros(shape, dtype=np.float64) for k, shape, _n in layout}
-        loss_sum = 0.0
-        n = 0
-        for row in parts:
-            n += row.n
-            loss_sum += row.loss
-            flat = np.frombuffer(row.grad, dtype=np.float64)
-            off = 0
-            for k, shape, size in layout:
-                gsum[k] += flat[off: off + size].reshape(shape)
-                off += size
-        return loss_sum, gsum, n
-    finally:
-        bvar.unpersist()
+    return _spark_reduce(pairs_df, W, partial)
 
 
 def train_ro_from_pairs(spark, pairs, out_path: str, steps: int = 300,
@@ -1262,22 +1165,14 @@ def train_ro_from_pairs(spark, pairs, out_path: str, steps: int = 300,
         "w2": rng.standard_normal(HIDDEN) * (2.0 / HIDDEN) ** 0.5,
         "b2": np.zeros(1),
     }
-    m = {k: np.zeros_like(v) for k, v in W.items()}
-    v2 = {k: np.zeros_like(v) for k, v in W.items()}
-    b1t, b2t = 0.9, 0.999
+    opt = rec_train.Adam(W)
     l0 = n0 = None
     for step in range(1, steps + 1):
         cur_lr = lr * (0.02 + 0.98 * 0.5 * (1 + np.cos(np.pi * (step - 1) / steps)))
         loss_sum, gsum, n = spark_ro_gradient(feats, W)
         if l0 is None:
             l0, n0 = loss_sum, n
-        for k in W:
-            gk = gsum[k] / n
-            m[k] = b1t * m[k] + (1 - b1t) * gk
-            v2[k] = b2t * v2[k] + (1 - b2t) * gk * gk
-            mh = m[k] / (1 - b1t ** step)
-            vh = v2[k] / (1 - b2t ** step)
-            W[k] = W[k] - cur_lr * mh / (np.sqrt(vh) + 1e-8)
+        opt.step(W, {k: g / n for k, g in gsum.items()}, lr=cur_lr)
     l1, _, n1 = spark_ro_gradient(feats, W)
     mlp = OrderMLP(W["w1"].astype(np.float32), W["b1"].astype(np.float32),
                    W["w2"].astype(np.float32), float(W["b2"][0]))

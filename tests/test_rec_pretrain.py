@@ -214,8 +214,8 @@ def test_spark_pretrain_gradient_single_partition_bit_equal(spark, tmp_path):
     dataset_pretrain_gradient on the same keyed samples, bit-for-bit
     (same subprocess BLAS-pinning protocol as the CTC twin test)."""
     import os
-    import subprocess
-    import sys
+
+    from conftest import run_pinned_blas
 
     from kraken_spark import training
 
@@ -240,8 +240,7 @@ def test_spark_pretrain_gradient_single_partition_bit_equal(spark, tmp_path):
         count=np.int64(len(samples)),
     )
     code = (
-        "import numpy as np, sys\n"
-        "sys.path.insert(0, %r)\n"
+        "import numpy as np\n"
         "from kraken_spark.kernels import rec_pretrain as rp\n"
         "z = np.load(%r)\n"
         "n = int(z['count'])\n"
@@ -252,15 +251,11 @@ def test_spark_pretrain_gradient_single_partition_bit_equal(spark, tmp_path):
         "samples, W, step=2, batch=8, num_negatives=10)\n"
         "np.savez(%r, loss=np.float64(loss), n=np.int64(used), **gsum)\n"
     ) % (
-        os.path.dirname(os.path.dirname(os.path.abspath(rp.__file__))),
         os.path.join(sdir, "samples.npz"),
         os.path.join(sdir, "w.npz"),
         os.path.join(sdir, "grad.npz"),
     )
-    env = dict(os.environ)
-    env.update({"OMP_NUM_THREADS": "1", "OPENBLAS_NUM_THREADS": "1",
-                "MKL_NUM_THREADS": "1"})
-    subprocess.run([sys.executable, "-c", code], check=True, env=env)
+    run_pinned_blas(code)
     z = np.load(os.path.join(sdir, "grad.npz"))
     assert int(z["n"]) == n_sp
     assert float(z["loss"]) == l_sp

@@ -315,8 +315,8 @@ def test_spark_gradient_single_partition_bit_equal(spark, tmp_path):
     reduction order depends on thread count, so bit-equality is only
     defined at matched thread counts."""
     import os
-    import subprocess
-    import sys
+
+    from conftest import run_pinned_blas
 
     from kraken_spark import training
 
@@ -340,8 +340,7 @@ def test_spark_gradient_single_partition_bit_equal(spark, tmp_path):
         count=np.int64(len(samples)),
     )
     code = (
-        "import numpy as np, sys\n"
-        "sys.path.insert(0, %r)\n"
+        "import numpy as np\n"
         "from kraken_spark.kernels import rec_train as rt\n"
         "z = np.load(%r)\n"
         "n = int(z['count'])\n"
@@ -350,15 +349,11 @@ def test_spark_gradient_single_partition_bit_equal(spark, tmp_path):
         "loss, gsum, used = rt.dataset_gradient(samples, W, batch=8)\n"
         "np.savez(%r, loss=np.float64(loss), n=np.int64(used), **gsum)\n"
     ) % (
-        os.path.dirname(os.path.dirname(os.path.abspath(training.__file__))),
         os.path.join(sdir, "samples.npz"),
         os.path.join(sdir, "w.npz"),
         os.path.join(sdir, "grad.npz"),
     )
-    env = dict(os.environ)
-    env.update({"OMP_NUM_THREADS": "1", "OPENBLAS_NUM_THREADS": "1",
-                "MKL_NUM_THREADS": "1"})
-    subprocess.run([sys.executable, "-c", code], check=True, env=env)
+    run_pinned_blas(code)
     z = np.load(os.path.join(sdir, "grad.npz"))
     assert int(z["n"]) == n_sp
     assert float(z["loss"]) == l_sp

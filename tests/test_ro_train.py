@@ -178,6 +178,65 @@ def test_spark_rotrain_analog(tmp_path):
     assert 0 <= lib["order_exact_pages"] <= 6
 
 
+def test_spark_ro_gradient_single_partition_bit_equal(tmp_path):
+    """One-partition distributed reading-order gradient == the local
+    per-page sum, bit-for-bit. The local twin walks the task's own order:
+    pages in row order, pair_gradient_sum at the BROADCAST weights
+    (float32-rounded, cast back to float64), page sums added in row order
+    and onto zeros at the driver. It runs with the executors'
+    single-thread BLAS."""
+    import os
+
+    from conftest import run_pinned_blas
+
+    from kraken_spark import training
+    from kraken_spark.session import get_spark
+
+    spark = get_spark(app="tests-rotrain-pin", cores=2, shuffle_partitions=2)
+    spark.sparkContext.setLogLevel("ERROR")
+    blocks = [ro_train.page_pairs(render.render_document(seed, i))
+              for i, seed in enumerate((882700, 882701, 882702, 882703))]
+    rows = [(f"pin-{i}", X.shape[0], X.shape[1], bytearray(X.tobytes()),
+             bytearray(y.tobytes())) for i, (X, y) in enumerate(blocks)]
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+                               training.RO_PAIRS_SCHEMA)
+    assert df.rdd.getNumPartitions() == 1
+    d = blocks[0][0].shape[1]
+    rng = np.random.Generator(np.random.PCG64(13))
+    W = {"w1": rng.standard_normal((ro.HIDDEN, d)), "b1": np.zeros(ro.HIDDEN),
+         "w2": rng.standard_normal(ro.HIDDEN), "b2": np.zeros(1)}
+    l_sp, g_sp, n_sp = training.spark_ro_gradient(df, W)
+
+    sdir = str(tmp_path)
+    np.savez(os.path.join(sdir, "w.npz"), **W)
+    np.savez(os.path.join(sdir, "pairs.npz"),
+             **{f"{c}{i}": m for i, blk in enumerate(blocks)
+                for c, m in zip("xy", blk)})
+    run_pinned_blas((
+        "import numpy as np\n"
+        "from kraken_spark.kernels.ro_train import pair_gradient_sum\n"
+        "z = np.load(%r)\n"
+        "W = {k: v.astype(np.float32).astype(np.float64)\n"
+        "     for k, v in np.load(%r).items()}\n"
+        "loss_sum, acc, n = 0.0, None, 0\n"
+        "for i in range(%d):\n"
+        "    X, y = z['x' + str(i)], z['y' + str(i)]\n"
+        "    loss, g = pair_gradient_sum(X, y, W)\n"
+        "    loss_sum += loss\n"
+        "    acc = g if acc is None else {k: acc[k] + g[k] for k in acc}\n"
+        "    n += X.shape[0]\n"
+        "gsum = {k: np.zeros(W[k].shape) + acc[k] for k in W}\n"
+        "np.savez(%r, loss=np.float64(loss_sum), n=np.int64(n), **gsum)\n"
+    ) % (os.path.join(sdir, "pairs.npz"), os.path.join(sdir, "w.npz"),
+         len(blocks), os.path.join(sdir, "grad.npz")))
+    z = np.load(os.path.join(sdir, "grad.npz"))
+    assert int(z["n"]) == n_sp == sum(X.shape[0] for X, _y in blocks)
+    assert float(z["loss"]) == l_sp
+    assert sorted(g_sp) == sorted(W)
+    for k in g_sp:
+        assert z[k].tobytes() == g_sp[k].tobytes(), k
+
+
 def test_markup_region_level_pairs():
     """rotrain --level regions: region bboxes in document order are the
     golden sequence; one-region pages are unusable; bad level raises."""

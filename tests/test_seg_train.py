@@ -308,6 +308,76 @@ def test_spark_segtrain_analog(tmp_path):
     assert rep["loss_after"] < rep["loss_before"], rep
 
 
+def test_spark_seg_gradient_single_partition_bit_equal(tmp_path):
+    """One-partition distributed segmenter gradient == the local keyed
+    crop sum, bit-for-bit. The local twin walks the task's own order:
+    pages in row order, crops drawn from (seed, step, crc32(url)), each
+    crop_gradient taken at the BROADCAST weights (float32-rounded, cast
+    back to float64), crop gradients summed in draw order and added onto
+    zeros at the driver. It runs with the executors' single-thread BLAS."""
+    import os
+
+    from conftest import run_pinned_blas
+
+    from kraken_spark import training
+    from kraken_spark.kernels import render
+    from kraken_spark.session import get_spark
+
+    spark = get_spark(app="tests-segtrain-pin", cores=2,
+                      shuffle_partitions=2)
+    spark.sparkContext.setLogLevel("ERROR")
+    pages = {}
+    for i, seed in enumerate((881700, 881701, 881702)):
+        x, tb, tr = seg_train.gt_maps(render.render_document(seed, i))
+        pages[f"pin-{seed}"] = [m.astype(np.uint8) for m in (x, tb, tr)]
+    rows = [(u, x.shape[0], x.shape[1], bytearray(x.tobytes()),
+             bytearray(tb.tobytes()), bytearray(tr.tobytes()))
+            for u, (x, tb, tr) in pages.items()]
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+                               training.SEG_PAGES_SCHEMA)
+    assert df.rdd.getNumPartitions() == 1
+    W = seg_train.init_weights(np.random.Generator(np.random.PCG64(11)))
+    step, crop, cpp = 3, 96, 2
+    l_sp, g_sp, n_sp = training.spark_seg_gradient(
+        df, W, step=step, crop=crop, crops_per_page=cpp)
+
+    sdir = str(tmp_path)
+    np.savez(os.path.join(sdir, "w.npz"), **W)
+    np.savez(os.path.join(sdir, "pages.npz"),
+             **{f"{c}{i}": m for i, ms in enumerate(pages.values())
+                for c, m in zip("xbr", ms)})
+    run_pinned_blas((
+        "import numpy as np\n"
+        "from kraken_spark import training\n"
+        "from kraken_spark.kernels import seg_train as st\n"
+        "z = np.load(%r)\n"
+        "W = {k: v.astype(np.float32).astype(np.float64)\n"
+        "     for k, v in np.load(%r).items()}\n"
+        "loss_sum, acc, n = 0.0, None, 0\n"
+        "for i, url in enumerate(%r):\n"
+        "    x, tb, tr = (z[c + str(i)].astype(np.float64) for c in 'xbr')\n"
+        "    rng = np.random.Generator(np.random.PCG64(\n"
+        "        [training.SEG_SPARK_SEED, %d, training.line_key(url, 0)]))\n"
+        "    for _ in range(%d):\n"
+        "        cy = int(rng.integers(0, max(x.shape[0] - %d, 1)))\n"
+        "        cx = int(rng.integers(0, max(x.shape[1] - %d, 1)))\n"
+        "        loss, g = st.crop_gradient(x, tb, tr, W, cy, cx, %d)\n"
+        "        loss_sum += loss\n"
+        "        acc = g if acc is None else {k: acc[k] + g[k] for k in acc}\n"
+        "        n += 1\n"
+        "gsum = {k: np.zeros(W[k].shape) + acc[k] for k in W}\n"
+        "np.savez(%r, loss=np.float64(loss_sum), n=np.int64(n), **gsum)\n"
+    ) % (os.path.join(sdir, "pages.npz"), os.path.join(sdir, "w.npz"),
+         list(pages), step, cpp, crop, crop, crop,
+         os.path.join(sdir, "grad.npz")))
+    z = np.load(os.path.join(sdir, "grad.npz"))
+    assert int(z["n"]) == n_sp == len(pages) * cpp
+    assert float(z["loss"]) == l_sp
+    assert sorted(g_sp) == sorted(W)
+    for k in g_sp:
+        assert z[k].tobytes() == g_sp[k].tobytes(), k
+
+
 def test_segtrain_degenerate_pages_skipped(tmp_path):
     """Compile-path totality for segtrain: a 2-pixel-high page image and
     a garbage image row are skipped by the GT-map builder, never crashing

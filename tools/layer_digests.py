@@ -15,7 +15,11 @@ bit-identical on
   direction/summarize variant and the GRU,
 - ``rec_train.batch_grad_sums`` and ``rec_pretrain.pretrain_loss_grads``
   losses and gradients (key order included: clipping sums in that order),
-- ``seg_train.crop_gradient`` and ``seg_train.forward_infer``.
+- ``seg_train.crop_gradient`` and ``seg_train.forward_infer``,
+- the optimizer: short seeded runs of ``seg_train.train`` and
+  ``ro_train.train_ro`` (float64 weights, Adam under each trainer's own
+  cosine schedule) and an ``rec_train.Adam`` step sequence on float32
+  weights (weights and both moments).
 
 GEMM reduction order depends on the BLAS thread count, so it is pinned to
 one thread before numpy loads (an explicit OPENBLAS_NUM_THREADS wins).
@@ -37,7 +41,7 @@ import numpy as np  # noqa: E402
 
 from kraken_spark.kernels import rec_pretrain as rp  # noqa: E402
 from kraken_spark.kernels import rec_train as rt  # noqa: E402
-from kraken_spark.kernels import render, seg_train  # noqa: E402
+from kraken_spark.kernels import render, ro_train, seg_train  # noqa: E402
 from kraken_spark.kernels.recognizer import build_recognizer, input_transform  # noqa: E402
 from kraken_spark.kernels.torchvgsl import TorchVGSL  # noqa: E402
 from kraken_spark.kernels.vgsl import VGSLModel  # noqa: E402
@@ -115,6 +119,25 @@ def main() -> None:
     loss, g = seg_train.crop_gradient(xs, tb, tr, Ws, 40, 56, 96)
     out["seg_train_crop_gradient"] = _grads_digest(loss, g)
     out["seg_train_forward_infer"] = _digest([seg_train.forward_infer(xs, seg_train.load_weights())])
+
+    docs = [render.render_document(881000, i) for i in range(2)]
+    Wt = seg_train.train(steps=4, crop=96, batch=2,
+                         pages=[seg_train.gt_maps(d) for d in docs])
+    out["seg_train_train"] = _digest(x for k in sorted(Wt) for x in (k, Wt[k]))
+    pairs = [ro_train.page_pairs(d) for d in docs]
+    mlp = ro_train.train_ro(steps=6, batch=128, data=(
+        np.concatenate([X for X, _y in pairs]),
+        np.concatenate([y for _X, y in pairs])))
+    out["ro_train_train_ro"] = _digest([mlp.w1, mlp.b1, mlp.w2, np.float64(mlp.b2)])
+
+    rng = np.random.Generator(np.random.PCG64(20261019))
+    Wa = {"a": rng.standard_normal((3, 5)).astype(np.float32),
+          "b": rng.standard_normal(7).astype(np.float32)}
+    opt = rt.Adam(Wa, lr=1e-2)
+    for t in range(8):
+        g = {k: rng.standard_normal(v.shape).astype(np.float32) for k, v in Wa.items()}
+        opt.step(Wa, g, lr=1e-2 * (0.1 + 0.9 * 0.5 * (1.0 + np.cos(np.pi * t / 7))))
+    out["adam_float32"] = _digest(x for k in sorted(Wa) for x in (k, Wa[k], opt.m[k], opt.v[k]))
     print(json.dumps(out, sort_keys=True))
 
 
