@@ -4,7 +4,7 @@ Re-expresses the capabilities of the reference OCR stack (mittagessen/kraken,
 surveyed in /root/repo/SURVEY.md) as a Spark DataFrame / Arrow-UDF dataflow
 over a Common-Crawl-style ``documents(url, warc_ts, html, text, lang)`` table:
 
-    scan -> (weight-aware salted repartition) -> mapInArrow(fused
+    scan -> (repartition by url) -> mapInArrow(fused
     binarize -> segment -> reading-order -> recognize -> serialize)
     -> extractions + metrics tables
 

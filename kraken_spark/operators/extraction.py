@@ -26,11 +26,9 @@ def _n_docs(sf_dir: str) -> int:
 
 def _extraction(spark: SparkSession, sf_dir: str):
     docs = corpus_for(spark, sf_dir)
-    # 1x-core partitioning: with the bijective bucket->partition salt the
-    # buckets are exactly balanced, so finer-than-core buckets only add
+    # 1x-core partitioning: finer-than-core partitions only add
     # scheduling overhead (measured at the 240-doc bench size: 1x 1.37 s
-    # vs 3x 1.91 s; the 3x setting earlier papered over hash-collision
-    # lumpiness that no longer exists)
+    # vs 3x 1.91 s)
     return plan_extraction(
         docs, num_partitions=spark.sparkContext.defaultParallelism
     )

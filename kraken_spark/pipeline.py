@@ -1,11 +1,12 @@
-"""DataFrame graph: scan -> weight-aware salted repartition -> fused
-extraction -> outputs (+ metrics, + checkpoint/resume) — SURVEY.md §4.3.
+"""DataFrame graph: scan -> repartition by url -> fused extraction ->
+outputs (+ metrics, + checkpoint/resume) — SURVEY.md §4.3.
 
 The job is map-only per url: zero shuffles between stages except the single
-explicit repartition that balances page weight across tasks (the make-or-
-break for the >=0.8 N->4N scaling target; SURVEY.md §7.5). Relational
-post-processing (text aggregation, metrics rollup) stays in native Spark
-expressions so Catalyst keeps it in whole-stage codegen.
+explicit repartition that spreads pages across tasks (the make-or-break for
+the >=0.8 N->4N scaling target; SURVEY.md §7.5). It hashes the page key
+itself, so the data, not a plan-time layout, decides where each page lands.
+Relational post-processing (text aggregation, metrics rollup) stays in
+native Spark expressions so Catalyst keeps it in whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -16,93 +17,23 @@ from pyspark.sql import DataFrame
 from .schema import EXTRACTION_DDL
 from .stages import make_extract_map
 
-# pages larger than this many PNG bytes are treated as heavy: ~3x the
-# median synthetic page (~333 KB); the 4x-area oversized pages (~1.6 MB)
-# land firmly above it. Page compute is ~linear in pixels ~ linear in
-# compressed bytes for fixed content statistics, so payload size is the
-# weight proxy (SURVEY.md §7.5 skew risk).
-HEAVY_BYTES = 1 << 20
-
-
-def _murmur3_long(value: int, seed: int = 42) -> int:
-    """Spark's Murmur3Hash of a LongType value (Murmur3_x86_32.hashLong:
-    two 32-bit words, low first) — what hashpartitioning applies to the
-    salt column. Needed to pick salt PREIMAGES below."""
-    c1, c2 = 0xCC9E2D51, 0x1B873593
-    m = 0xFFFFFFFF
-
-    def rotl(x, r):
-        return ((x << r) | (x >> (32 - r))) & m
-
-    h1 = seed & m
-    for word in (value & m, (value >> 32) & m):
-        k1 = (word * c1) & m
-        k1 = rotl(k1, 15)
-        k1 = (k1 * c2) & m
-        h1 ^= k1
-        h1 = rotl(h1, 13)
-        h1 = (h1 * 5 + 0xE6546B64) & m
-    h1 ^= 8  # length in bytes
-    h1 ^= h1 >> 16
-    h1 = (h1 * 0x85EBCA6B) & m
-    h1 ^= h1 >> 13
-    h1 = (h1 * 0xC2B2AE35) & m
-    h1 ^= h1 >> 16
-    # Spark treats the result as a SIGNED int before Pmod
-    return h1 - (1 << 32) if h1 >= (1 << 31) else h1
-
-
-def _partition_preimages(total: int) -> list[int]:
-    """preimages[k] = the smallest non-negative long whose Spark
-    hashpartitioning id (pmod(murmur3(v), total)) equals k. Emitting
-    preimages[bucket] as the salt makes bucket k land EXACTLY in
-    partition k — without this, `repartition(total, salt)` re-hashes the
-    salt and ~1/e of the partitions stay empty while others stack 2-3
-    buckets (measured: 3 normal buckets in one partition = a 3x-sized
-    straggler task costing ~25% of 8-core throughput)."""
-    pre: dict[int, int] = {}
-    v = 0
-    while len(pre) < total:
-        p = _murmur3_long(v) % total
-        if p not in pre:
-            pre[p] = v
-        v += 1
-    return [pre[k] for k in range(total)]
-
 
 def weight_salt(n: int):
-    """Weight-aware salt column: heavy pages hash over a dedicated n-wide
-    bucket space at the LOWEST partition ids, normal pages over the n
-    buckets above them, so one 16x-area page never queues behind a full
-    normal bucket (AQE handles join skew, not UDF compute skew — this is
-    the custom part, SURVEY.md §4.2). Heavy-first ordering matters because
-    Spark launches tasks in partition-id order: the longest tasks start in
-    the first wave and overlap the normal buckets instead of becoming a
-    tail straggler after them (classic longest-processing-time
-    scheduling). The heavy space is as wide as the normal one — heavy
-    tasks are the longest, so hash collisions there cost the most wall
-    (two 16x pages sharing a bucket doubles the job tail). Unused heavy
-    buckets are NOT free: each is an empty partition that still costs a
-    task launch plus ~0.03 CPU-s of worker Python, and on the bulk_pageseg
-    benchmark workload 15 of 32 extract tasks run empty. Sizing the bucket
-    spaces from the data is ROADMAP item 1.
+    """The page Exchange's key and partition count, ``(url, n)``: both
+    extraction plans build ``repartition(n, url)`` from it. The name is
+    historical; it stays because perfbench's traced Exchange probe
+    imports it to rebuild the same Exchange.
 
-    The emitted salt is the murmur3 PREIMAGE of the bucket id
-    (_partition_preimages), so bucket k maps 1:1 onto shuffle partition
-    k — no bucket-collision stragglers, and the heavy-first partition
-    order is exact rather than probabilistic.
-    Returns (salt_col, total_buckets)."""
-    n_heavy = max(n, 1)
-    total = n + n_heavy
-    weight = F.octet_length(F.col("html"))
-    bucket = F.when(
-        weight > F.lit(HEAVY_BYTES),
-        F.pmod(F.xxhash64("url"), F.lit(n_heavy)),
-    ).otherwise(F.lit(n_heavy) + F.pmod(F.xxhash64("url"), F.lit(n)))
-    pre = _partition_preimages(total)
-    lookup = F.array(*[F.lit(int(v)).cast("bigint") for v in pre])
-    salt = F.element_at(lookup, bucket.cast("int") + 1)
-    return salt, total
+    url has as many distinct values as there are pages, so its hash
+    spreads them over all n partitions, and the extract map runs each
+    batch largest-first (stages.make_extract_map) so an oversized page
+    starts early. Never key the Exchange on a bucket-id column with ~n
+    distinct values instead: re-hashed into n partitions it leaves ~1/e
+    of them empty, and each empty task still costs a task launch and
+    ~0.03 CPU-s of worker Python.
+
+    Returns (key_col, n)."""
+    return F.col("url"), n
 
 
 def plan_extraction(
@@ -129,10 +60,8 @@ def plan_extraction(
     spark = documents.sparkSession
     n = num_partitions or spark.sparkContext.defaultParallelism * 4
     cols = [c for c in ("url", "warc_ts", "html", "text", "lang") if c in documents.columns]
-    df = documents.select(*cols)
-    salt, total = weight_salt(n)
-    df = df.repartition(total, salt.alias("salt"))
-    return df.mapInArrow(
+    key, n = weight_salt(n)
+    return documents.select(*cols).repartition(n, key).mapInArrow(
         make_extract_map(segmenter, text_direction, kraken_model_path, markdown,
                          no_segmentation=no_segmentation,
                          temperature=temperature,
@@ -272,11 +201,23 @@ def remaining_documents(
     (idempotent per-url writes; SURVEY.md §7.4). Returns docs still to do.
     Under 'ice' the committed set is the last committed SNAPSHOT — a
     writer that died after writing data files but before its metadata
-    commit contributes nothing, so its documents are (correctly) redone."""
+    commit contributes nothing, so its documents are (correctly) redone.
+
+    Only an output that does not exist yet (no path, an empty directory,
+    an uncreated ice table) means "nothing done"; an unreadable output
+    raises, since redoing every document would append duplicate rows."""
+    from pyspark.errors import AnalysisException
+
+    from .sources.icetable import NoSuchSnapshot
+
     spark = documents.sparkSession
     try:
         done = read_output(spark, out_path, table_format).select("url")
-    except Exception:
+    except NoSuchSnapshot:
+        return documents
+    except AnalysisException as exc:
+        if exc.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
         return documents
     return documents.join(done, "url", "left_anti")
 
@@ -362,8 +303,8 @@ def streaming_extraction(
     Source offsets are pages-table snapshot ids (``readStream.format
     ("ice")`` — Iceberg's incremental append scan as a streaming source;
     compaction in the range is skipped, so table maintenance never breaks
-    the stream). The whole extraction plan is stateless (weight-salted
-    repartition + one fused Arrow stage), so it runs unchanged on the
+    the stream). The whole extraction plan is stateless (a repartition
+    by url + one fused Arrow stage), so it runs unchanged on the
     streaming DataFrame. The sink commits each micro-batch as ONE atomic
     snapshot keyed by batch id (a retried batch commits nothing), and the
     offset log lives in the checkpoint — a crashed query resumes at the

@@ -2,11 +2,11 @@
 page-skew bounded at LINE granularity.
 
 The fused plan (pipeline.plan_extraction) is one map-only pass: a page is
-one unit of work, so a 121-line page is a single task no salt can split —
-at local[32] on a 24-doc slice that one page IS the job tail
+one unit of work, so a 121-line page is a single task no page Exchange can
+split — at local[32] on a 24-doc slice that one page IS the job tail
 (BENCH trained_rec_docs_per_sec, BASELINE.md round-5 notes). The expensive
 numpy BiLSTM forward of a loaded reference model makes this the one place
-where page-level skew survives weight salting.
+where page-level skew survives spreading pages across tasks.
 
 This plan runs the fused plan's recognition chain (rpred_parity's module
 docstring: guard + crop -> crop-local prep -> pad/invert -> chunked
@@ -14,19 +14,18 @@ forward -> decode) and only chooses where to cut it — after the crop,
 the reference's own line boundary (rpred's per-line records,
 kraken/lib/vgsl/rpred.py:100-124 in the reference):
 
-  scan -> weight-salted repartition
+  scan -> repartition(n, url)
        -> PREPARE  (mapInArrow: decode -> nlbin -> segment ->
                     LoadedRecognizer.line_crop per line; one row per
                     valid line crop + one page row)
-       -> line-salted repartition (murmur3-preimage buckets, so line k
-          lands exactly in partition k%m — pipeline._partition_preimages)
+       -> repartition(m, url, line_idx)
        -> RECOGNIZE (mapInArrow: LoadedRecognizer.run_lines over the
                      batch's crops — every step after the crop)
        -> groupBy(url).applyInArrow ASSEMBLE (stages._assemble_extraction)
 
 The prepare task does only the genuinely page-indivisible work (decode,
 nlbin, the segmentation heatmap+vectorization); everything per-line runs
-in the line-salted stage, so a 121-line page's prep tail parallelizes
+in the line-partitioned stage, so a 121-line page's prep tail parallelizes
 too. Both plans build their page rows with stages._page_header /
 _guard_trip.
 
@@ -56,10 +55,9 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from .pipeline import _partition_preimages, weight_salt
+from .pipeline import weight_salt
 from .schema import EXTRACTION_ARROW, EXTRACTION_DDL
 
 # Per-line transport: a (kind, crop, geom) line crop of
@@ -310,8 +308,8 @@ def plan_extraction_line_parallel(
     """The line-parallel extraction DataFrame (module docstring for the
     plan shape and the cost model vs the fused plan). kraken_model_path
     is required: the matched-filter default is ~130x cheaper per line and
-    never needs line-level balancing (its skew is handled by the fused
-    plan's weight salt).
+    never needs line-level balancing (the fused plan's page Exchange
+    spreads its pages).
 
     `url` must be unique in `documents` (it is the documents-table key
     everywhere in this engine — resume anti-joins, icetable merge keys,
@@ -326,27 +324,20 @@ def plan_extraction_line_parallel(
     n = num_partitions or spark.sparkContext.defaultParallelism * 4
     cols = [c for c in ("url", "warc_ts", "html", "text", "lang")
             if c in documents.columns]
-    df = documents.select(*cols)
-    salt, total = weight_salt(n)
-    df = df.repartition(total, salt.alias("salt"))
-    prep = df.mapInArrow(
+    key, n = weight_salt(n)
+    prep = documents.select(*cols).repartition(n, key).mapInArrow(
         make_prepare_map(segmenter, text_direction, kraken_model_path,
                          no_segmentation, temperature, nlbin_params),
         schema=_PREP_DDL,
     )
-    # line balancing: lines are near-uniform work units, so a plain hash
-    # over (url, line_idx) spreads any page across all m partitions; the
-    # murmur3-preimage lookup keeps bucket k exactly in partition k
-    # (no ~1/e empty-partition collisions — BASELINE.md round-5 landmine)
+    # line balancing: lines are near-uniform work units, so hashing the
+    # line key (url, line_idx) spreads any page across all m partitions;
     # one line partition per core: more would dilute forward_batch's GEMM
     # batching at small corpus sizes (measured: m=2*cores reads ~10% worse
     # on the 24-doc slice); at corpus scale lines/partition is huge either
     # way and the choice stops mattering
     m = line_partitions or spark.sparkContext.defaultParallelism
-    pre = _partition_preimages(m)
-    lookup = F.array(*[F.lit(int(v)).cast("bigint") for v in pre])
-    bucket = F.pmod(F.xxhash64("url", "line_idx"), F.lit(m)).cast("int")
-    prep = prep.repartition(m, F.element_at(lookup, bucket + 1))
+    prep = prep.repartition(m, "url", "line_idx")
     rec = prep.mapInArrow(
         make_recognize_map(kraken_model_path, temperature), schema=_REC_DDL)
     return rec.groupBy("url").applyInArrow(

@@ -15,7 +15,8 @@ analog of the reference's prepare_for_inference
 
 Within a batch, pages are processed largest-first so a straggler page starts
 early (size-bucketed batching, north-rule skew requirement); across
-partitions, skew is handled by the pipeline's weight-aware salting.
+partitions, the pipeline's Exchange hashes the page key (url) so pages
+spread over every task.
 """
 
 from __future__ import annotations

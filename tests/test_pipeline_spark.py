@@ -106,6 +106,28 @@ def test_checkpoint_resume_anti_join(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_resume_raises_on_unreadable_output(spark):
+    """Only an output that does not exist yet means "nothing done". An
+    unreadable one must raise: returning every document would make a
+    resumed job re-extract all of them and append duplicate rows."""
+    from py4j.protocol import Py4JJavaError
+
+    tmp = tempfile.mkdtemp(prefix="ks_resume_bad_")
+    try:
+        docs = generate_corpus_df(spark, 2)
+        assert remaining_documents(docs, f"{tmp}/none").count() == 2
+        assert remaining_documents(docs, f"{tmp}/ice", "ice").count() == 2
+        os.makedirs(f"{tmp}/empty")
+        assert remaining_documents(docs, f"{tmp}/empty").count() == 2
+        os.makedirs(f"{tmp}/bad")
+        with open(f"{tmp}/bad/part-0.parquet", "wb") as f:
+            f.write(b"not a parquet file")
+        with pytest.raises(Py4JJavaError, match="is not a Parquet file"):
+            remaining_documents(docs, f"{tmp}/bad")
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def test_ice_metrics_table_per_run_delta(spark):
     """Under table_format='ice' the metrics sink is itself an ice table:
     one committed snapshot per run, computed over exactly that run's
@@ -426,40 +448,6 @@ def test_cross_seed_hard_cases_exact():
             gt_text=d["text"], segmenter=seg,
         )
         assert out["cer"] == 0.0, (seed, i, seg, out["cer"])
-
-
-def test_weight_salt_separates_heavy_pages(spark):
-    """Heavy pages (> HEAVY_BYTES payload) must land in the dedicated
-    FIRST partition range [0, n) — lowest partition ids launch first, so
-    the longest tasks never become a tail straggler; normal pages in
-    [n, 2n). The salt is the murmur3 PREIMAGE of the bucket id, so the
-    bucket -> shuffle-partition mapping is exactly 1:1 (a hash collision
-    stacking two buckets into one task was measured at ~25% of 8-core
-    throughput)."""
-    from kraken_spark.pipeline import (HEAVY_BYTES, _murmur3_long,
-                                       _partition_preimages, weight_salt)
-
-    docs = spark.createDataFrame(
-        [("u_heavy", bytearray(b"x" * (HEAVY_BYTES + 1))), ("u_small", bytearray(b"y" * 100))],
-        "url string, html binary",
-    )
-    salt, total = weight_salt(8)
-    assert total == 16
-    placed = {
-        r.url: r.p
-        for r in docs.repartition(total, salt.alias("salt"))
-        .select("url", F.spark_partition_id().alias("p")).collect()
-    }
-    assert 0 <= placed["u_heavy"] < 8
-    assert 8 <= placed["u_small"] < 16
-    # the preimage table is a true bijection onto [0, total)
-    pre = _partition_preimages(total)
-    assert sorted(_murmur3_long(v) % total for v in pre) == list(range(total))
-    # the synthetic oversized pages actually cross the threshold
-    from kraken_spark.kernels import png, render
-
-    d = render.render_document(42, 77)  # known oversized doc
-    assert d["oversized"] and len(png.encode_png(d["img"])) > HEAVY_BYTES
 
 
 def test_xml_payload_extraction_path(spark):

@@ -110,7 +110,7 @@ def test_dedup_embedding_banded_no_join(spark):
 
 def test_extraction_single_arrow_stage_no_extra_shuffle(spark):
     """The fused extraction is one mapInArrow after the explicit
-    weight-salted repartition — exactly one shuffle below the Arrow eval,
+    repartition by url — exactly one shuffle below the Arrow eval,
     and no global Sort above it (the orderBy-resampling trap)."""
     from kraken_spark.corpus import corpus_for
     from kraken_spark.pipeline import plan_extraction
@@ -120,6 +120,36 @@ def test_extraction_single_arrow_stage_no_extra_shuffle(spark):
     assert plan.count("ArrowEvalPython") + plan.count("MapInArrow") >= 1
     assert plan.count("Exchange") == 1
     assert "Sort" not in plan.split("MapInArrow")[0]
+
+
+def test_extraction_exchanges_hash_their_key(spark):
+    """Each extraction Exchange hashes its own key into the partition
+    count the plan asks for: the page Exchange `url` into n, the line
+    Exchange `(url, line_idx)` into m. No bucket-id column (a key with
+    ~n distinct values re-hashes into ~1/e empty partitions), no
+    doubled partition count."""
+    import os
+    import re
+
+    from kraken_spark.corpus import corpus_for
+    from kraken_spark.kernels.rec_train import ASSET
+    from kraken_spark.pipeline import plan_extraction
+    from kraken_spark.pipeline_lines import plan_extraction_line_parallel
+
+    docs = corpus_for(spark, SF)
+    ext = plan_extraction(docs, num_partitions=3)
+    assert ext.rdd.getNumPartitions() == 3
+    plan = _plan(ext)
+    assert re.search(r"Exchange hashpartitioning\(url#\d+, 3\)", plan), plan
+    assert "element_at" not in plan
+    if not os.path.exists(ASSET):
+        pytest.skip("trained recognizer asset missing")
+    plan = _plan(plan_extraction_line_parallel(
+        docs, num_partitions=3, kraken_model_path=ASSET, line_partitions=2))
+    assert re.search(r"Exchange hashpartitioning\(url#\d+, 3\)", plan), plan
+    assert re.search(
+        r"Exchange hashpartitioning\(url#\d+, line_idx#\d+, 2\)", plan), plan
+    assert "element_at" not in plan
 
 
 def _executed_extract_maps(spark, run) -> int:
@@ -159,7 +189,7 @@ def test_extract_html_warc_shape(spark):
     """The web-HTML query runs THROUGH the WARC container: page-wrap+pack
     MapInArrow (one .warc.gz per partition) -> explode_warc MapInArrow ->
     fused extraction MapInArrow. Exactly three shuffles — the per-file
-    url partitioning, the weight-salted extraction exchange, and the
+    url partitioning, the extraction exchange by url, and the
     tiny-result SinglePartition sort (_ordered); the ground-truth join is
     a BroadcastHashJoin (never a sort-merge shuffle), and its scan prunes
     to the two joined columns. No global Sort above the Arrow stages."""
@@ -234,7 +264,7 @@ def test_no_query_resorts_an_arrow_stage_globally(spark):
 
 def test_line_parallel_plan_shape(spark):
     """The line-parallel loaded-model plan is exactly three hash
-    exchanges — weight salt below prepare, line salt below recognize,
+    exchanges — url below prepare, (url, line_idx) below recognize,
     url hash below the grouped assembly — with no RangePartitioning
     (sort sampling would re-execute an Arrow stage) and no global Sort
     anywhere."""

@@ -23,7 +23,7 @@ sys.path.insert(0, REPO)
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 AUDITED = [
-    ("x_extract_text", "fused extraction: scan -> weight-salted repartition -> one mapInArrow; no sort above the Arrow stage"),
+    ("x_extract_text", "fused extraction: scan -> repartition by url -> one mapInArrow; no sort above the Arrow stage"),
     ("x_extract_geometry", "extraction computed once (lineage cut), then exploded"),
     ("q5_local_supplier_volume", "fact joins shuffled by AQE, dimension joins broadcast"),
     ("range_theta_join", "equi+range predicate stays a broadcast join, never cartesian"),
@@ -34,7 +34,7 @@ AUDITED = [
     ("events_sessionize", "single user_id-partitioned window chain + hash aggregate"),
     ("dedup_embedding_cosine", "sign-bit band buckets + in-bucket pair expansion; NO join operator (was a label-block quadratic self-join)"),
     ("x_page_knn", "LSH signatures over the corpus's natural partitioning; the only SinglePartition exchange is the final ordered output"),
-    ("x_extract_html", "web-HTML leg: map-only wrap -> ONE weight-salted exchange -> fused extraction mapInArrow (boilerplate strip inside the Arrow stage); tiny-result SinglePartition sort only"),
+    ("x_extract_html", "web-HTML leg: map-only wrap -> ONE exchange by url -> fused extraction mapInArrow (boilerplate strip inside the Arrow stage); tiny-result SinglePartition sort only"),
     ("web_quality_pipeline", "published-filter chain: Gopher rules + repetition fold fully map-side (zero pre-join shuffles from those legs), C4 + paragraph-strip each one shuffle, classifier AND char-trigram LM scorer map-only (folded array-literal lookups); six co-keyed doc_id joins"),
 ]
 
