@@ -14,7 +14,7 @@ from typing import Iterator
 
 import pyarrow as pa
 
-from .schema import DOCUMENTS_ARROW
+from .schema import DOCUMENTS_ARROW, DOCUMENTS_DDL
 
 BASE_TS = datetime(2026, 1, 1, tzinfo=timezone.utc)  # pinned clock (FIXTURES.md)
 DEFAULT_SEED = 42
@@ -65,7 +65,7 @@ def generate_corpus_df(spark, n_docs: int, seed: int = DEFAULT_SEED, partitions:
     return (
         spark.range(n_docs)
         .repartition(partitions)
-        .mapInArrow(gen, schema="url string, warc_ts timestamp, html binary, text string, lang string")
+        .mapInArrow(gen, schema=DOCUMENTS_DDL)
     )
 
 

@@ -456,10 +456,7 @@ def x_extract_html(spark, sf):
     )
     pages = explode_warc(warc_files)
     gt = docs.select("url", F.col("text").alias("gt_text"))
-    # broadcast the (url, gt) side: the default plan sort-merge-joined,
-    # shuffling the WARC-exploded page bytes by url for a fixture-only
-    # ground-truth attach (guide §3.1 — the big side stays in place)
-    joined = pages.join(F.broadcast(gt), "url").select(
+    joined = pages.join(gt, "url").select(
         "url", "html", F.col("gt_text").alias("text"), "lang"
     )
     # the structure-preserving markdown render through the same WARC-read

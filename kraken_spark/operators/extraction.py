@@ -89,7 +89,7 @@ def x_extract_geometry(spark, sf):
             F.col("l.region_ids")[0].alias("region_id"),
             F.to_json(F.col("l.region_ids")).alias("region_ids_json"),
         )
-        .join(F.broadcast(regions.select("url", "region_id", "region_type")),
+        .join(regions.select("url", "region_id", "region_type"),
               ["url", "region_id"], "left")
         .select(
             "url",
@@ -236,9 +236,7 @@ def report_over(ext, gt, per_file: bool = False, side_table_sf=None):
     lines, /root/reference/kraken/contrib/test_per_file.py:135-182)."""
     import pyarrow as pa
 
-    # broadcast the tiny (url, gt) table so the extraction output is not
-    # shuffled by url just to attach ground truth (guide §3.1)
-    joined = ext.join(F.broadcast(gt), "url")
+    joined = ext.join(gt, "url")
     with_cer = "cer" in joined.columns
 
     out_schema = (

@@ -14,15 +14,17 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from .schema import EXTRACTION_DDL
+from pyspark.sql.pandas.types import from_arrow_schema
+
+from .schema import EXTRACTION_DDL, EXTRACTION_MARKDOWN_ARROW
 from .stages import make_extract_map
 
 
 def weight_salt(n: int):
     """The page Exchange's key and partition count, ``(url, n)``: both
-    extraction plans build ``repartition(n, url)`` from it. The name is
-    historical; it stays because perfbench's traced Exchange probe
-    imports it to rebuild the same Exchange.
+    extraction plans build ``repartition(n, url)`` from it (page_exchange).
+    The name is historical; it stays because perfbench's traced Exchange
+    probe imports it to rebuild the same Exchange.
 
     url has as many distinct values as there are pages, so its hash
     spreads them over all n partitions, and the extract map runs each
@@ -34,6 +36,16 @@ def weight_salt(n: int):
 
     Returns (key_col, n)."""
     return F.col("url"), n
+
+
+def page_exchange(documents: DataFrame, num_partitions: int | None = None) -> DataFrame:
+    """The head of both extraction plans: the documents columns the page
+    chain reads, hash-partitioned by url (weight_salt) into
+    num_partitions, default 4 x defaultParallelism."""
+    n = num_partitions or documents.sparkSession.sparkContext.defaultParallelism * 4
+    cols = [c for c in ("url", "warc_ts", "html", "text", "lang") if c in documents.columns]
+    key, n = weight_salt(n)
+    return documents.select(*cols).repartition(n, key)
 
 
 def plan_extraction(
@@ -57,16 +69,12 @@ def plan_extraction(
     markdown=True adds a `markdown` column (structure-preserving render of
     web-HTML main content, empty for non-HTML payloads) computed inside
     the same fused Arrow stage — no second scan, no join."""
-    spark = documents.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism * 4
-    cols = [c for c in ("url", "warc_ts", "html", "text", "lang") if c in documents.columns]
-    key, n = weight_salt(n)
-    return documents.select(*cols).repartition(n, key).mapInArrow(
+    return page_exchange(documents, num_partitions).mapInArrow(
         make_extract_map(segmenter, text_direction, kraken_model_path, markdown,
                          no_segmentation=no_segmentation,
                          temperature=temperature,
                          nlbin_params=nlbin_params),
-        schema=EXTRACTION_DDL + (", markdown string" if markdown else ""),
+        schema=from_arrow_schema(EXTRACTION_MARKDOWN_ARROW) if markdown else EXTRACTION_DDL,
     )
 
 

@@ -15,19 +15,21 @@ the reference's own line boundary (rpred's per-line records,
 kraken/lib/vgsl/rpred.py:100-124 in the reference):
 
   scan -> repartition(n, url)
-       -> PREPARE  (mapInArrow: decode -> nlbin -> segment ->
-                    LoadedRecognizer.line_crop per line; one row per
-                    valid line crop + one page row)
+       -> PREPARE  (mapInArrow: stages._page_front, i.e. decode -> nlbin
+                    -> segment, then LoadedRecognizer.line_crop per line;
+                    one row per valid line crop + one page row)
        -> repartition(m, url, line_idx)
        -> RECOGNIZE (mapInArrow: LoadedRecognizer.run_lines over the
                      batch's crops — every step after the crop)
        -> groupBy(url).applyInArrow ASSEMBLE (stages._assemble_extraction)
 
-The prepare task does only the genuinely page-indivisible work (decode,
-nlbin, the segmentation heatmap+vectorization); everything per-line runs
-in the line-partitioned stage, so a 121-line page's prep tail parallelizes
-too. Both plans build their page rows with stages._page_header /
-_guard_trip.
+PREPARE runs the fused chain's own front half (stages._page_front: page
+header, payload route, pre-segmented finish or decode -> nlbin ->
+segment, and its guard path) and adds only the line crops and the page-meta
+row, so the two plans cannot route, head or fail a page differently. The
+prepare task does only the genuinely page-indivisible work (decode, nlbin,
+the segmentation heatmap+vectorization); everything per-line runs in the
+line-partitioned stage, so a 121-line page's prep tail parallelizes too.
 
 Parity: predictions/cuts are EXACT vs the fused plan and confidences agree
 to float tolerance (chunk composition differs across plans, which only
@@ -56,8 +58,10 @@ from typing import Iterator
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from .pipeline import weight_salt
+from . import stages
+from .pipeline import page_exchange
 from .schema import EXTRACTION_ARROW, EXTRACTION_DDL
 
 # Per-line transport: a (kind, crop, geom) line crop of
@@ -65,10 +69,6 @@ from .schema import EXTRACTION_ARROW, EXTRACTION_DDL
 # crop-local baseline geometry (JSON; NULL on the bbox path). Page rows
 # (line_idx -1) carry page_meta instead; complete=true marks a page row
 # that is already the final extraction row.
-_PREP_DDL = (
-    "url string, line_idx int, complete boolean, page_meta string, "
-    "kind int, crop binary, crop_h int, crop_w int, geom string"
-)
 _PREP_ARROW = pa.schema([
     pa.field("url", pa.string()),
     pa.field("line_idx", pa.int32()),
@@ -80,14 +80,10 @@ _PREP_ARROW = pa.schema([
     pa.field("crop_w", pa.int32()),
     pa.field("geom", pa.string()),
 ])
+_PREP_DDL = from_arrow_schema(_PREP_ARROW)
 
 # `failed` marks a line that RAISED (not a merely blank line): assembly
 # turns its page into the guard-tripped empty row.
-_REC_DDL = (
-    "url string, line_idx int, complete boolean, page_meta string, "
-    "prediction string, cuts string, confidences array<float>, "
-    "rec_ms double, failed boolean"
-)
 _REC_ARROW = pa.schema([
     pa.field("url", pa.string()),
     pa.field("line_idx", pa.int32()),
@@ -99,6 +95,7 @@ _REC_ARROW = pa.schema([
     pa.field("rec_ms", pa.float64()),
     pa.field("failed", pa.bool_()),
 ])
+_REC_DDL = from_arrow_schema(_REC_ARROW)
 
 PAD = 16  # stages' recognize_lines call uses the rpred default padding
 
@@ -121,79 +118,59 @@ def _page_row(url, complete, meta) -> dict:
 def _prepare_one(html, url, lang, gt_text, segmenter, text_direction,
                  kraken_model_path, no_segmentation, temperature,
                  nlbin_params) -> list[dict]:
-    """One document -> prep rows. Non-image payloads (XML/JSON/web-HTML)
-    and failed pages produce ONE complete row (the fused extract_document
-    row, which never involves recognition for those payloads); image
-    pages produce a page-meta row plus one row per valid line crop."""
-    from . import stages
-
+    """One document -> prep rows. A page the front half finishes (a
+    pre-segmented payload or a failed page) is ONE complete row, the
+    fused plan's row; an image page is a page-meta row plus one row per
+    valid line crop."""
+    out, t0, page = stages._page_front(html, url, lang, gt_text, segmenter,
+                                       text_direction, no_segmentation,
+                                       nlbin_params)
+    if page is None:
+        return [_page_row(url, True, out)]
+    img, _mask, seg, vertical = page
     try:
-        route = stages._payload_route(html)
-    except Exception:
-        # null/unsliceable html: defer to extract_document, whose guard
-        # path owns malformed payloads (emits the flagged empty row)
-        route = "defer"
-    if route is not None:
-        return [_page_row(url, True, stages.extract_document(
-            html, url, lang, gt_text, segmenter, text_direction,
-            kraken_model_path, no_segmentation=no_segmentation,
-            temperature=temperature, nlbin_params=nlbin_params))]
-
-    t0 = time.perf_counter()
-    out, text_direction, vertical = stages._page_header(url, lang, text_direction)
-    try:
-        img, mask, seg = stages._decode_and_segment(
-            html, url, out, segmenter, text_direction,
-            no_segmentation, nlbin_params, t0)
         rec = stages._get_kraken_recognizer(kraken_model_path,
                                             temperature=temperature)
-        rows = []
-        for i, ln in enumerate(seg["lines"]):
-            c = rec.line_crop(img, ln)
-            if c is None:
-                continue  # invalid line: assembly emits its empty record
-            kind, crop, geom = c
-            rows.append({
-                "url": url, "line_idx": i, "complete": False,
-                "kind": kind, "crop": np.ascontiguousarray(crop).tobytes(),
-                "crop_h": int(crop.shape[0]), "crop_w": int(crop.shape[1]),
-                "geom": None if geom is None else json.dumps(
-                    {"bl": geom[0].tolist(), "poly": geom[1].tolist()}),
-            })
-        rows.append(_page_row(url, False, {
-            "out": out,
-            "seg_lines": seg["lines"],
-            "seg_regions": seg["regions"],
-            "vertical": vertical,
-            "gt_text": gt_text,
-            "prep_ms": (time.perf_counter() - t0) * 1000.0,
-        }))
-        return rows
+        crops = [rec.line_crop(img, ln) for ln in seg["lines"]]
     except Exception:
+        # the fused plan crops inside recognize_lines, where a raising
+        # crop trips the page too
         stages._guard_trip(out, gt_text)
         out["wall_ms"] = (time.perf_counter() - t0) * 1000.0
         return [_page_row(url, True, out)]
+    rows = []
+    for i, c in enumerate(crops):
+        if c is None:
+            continue  # invalid line: assembly emits its empty record
+        kind, crop, geom = c
+        rows.append({
+            "url": url, "line_idx": i, "complete": False,
+            "kind": kind, "crop": np.ascontiguousarray(crop).tobytes(),
+            "crop_h": int(crop.shape[0]), "crop_w": int(crop.shape[1]),
+            "geom": None if geom is None else json.dumps(
+                {"bl": geom[0].tolist(), "poly": geom[1].tolist()}),
+        })
+    rows.append(_page_row(url, False, {
+        "out": out,
+        "seg_lines": seg["lines"],
+        "seg_regions": seg["regions"],
+        "vertical": vertical,
+        "gt_text": gt_text,
+        "prep_ms": (time.perf_counter() - t0) * 1000.0,
+    }))
+    return rows
 
 
 def make_prepare_map(segmenter, text_direction, kraken_model_path,
                      no_segmentation, temperature, nlbin_params):
     def prepare(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            names = batch.schema.names
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            langs = batch.column("lang").to_pylist()
-            gts = (batch.column("text").to_pylist()
-                   if "text" in names else [None] * len(urls))
-            # largest-first like the fused stage (straggler starts early)
-            order = sorted(range(len(urls)),
-                           key=lambda i: -(len(htmls[i] or b"")))
             rows: list[dict] = []
-            for i in order:
+            for _, url, html, lang, gt in stages._documents(batch):
                 rows.extend(_prepare_one(
-                    htmls[i], urls[i], langs[i], gts[i], segmenter,
-                    text_direction, kraken_model_path, no_segmentation,
-                    temperature, nlbin_params))
+                    html, url, lang, gt, segmenter, text_direction,
+                    kraken_model_path, no_segmentation, temperature,
+                    nlbin_params))
             yield pa.RecordBatch.from_pylist(rows, schema=_PREP_ARROW)
 
     return prepare
@@ -211,8 +188,6 @@ def _line_crop(r: dict):
 
 def make_recognize_map(kraken_model_path, temperature, batch_size: int = 32):
     def recognize(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from . import stages
-
         rec = stages._get_kraken_recognizer(kraken_model_path,
                                             temperature=temperature)
         for batch in batches:
@@ -244,15 +219,7 @@ def make_recognize_map(kraken_model_path, temperature, batch_size: int = 32):
 
 def make_assemble():
     def assemble(table: pa.Table) -> pa.Table:
-        from .stages import _assemble_extraction, _guard_trip
-
-        try:
-            from pyspark import TaskContext
-
-            ctx = TaskContext.get()
-            pid = ctx.partitionId() if ctx else -1
-        except Exception:  # pragma: no cover - outside Spark
-            pid = -1
+        pid = stages._partition_id()
         rows = table.to_pylist()
         out = []
         # a group can only ever hold one page (url is the key), but the
@@ -266,7 +233,7 @@ def make_assemble():
             else:
                 o = meta["out"]
                 if any(r["failed"] for r in lines.values()):
-                    row = _guard_trip(o, meta["gt_text"])
+                    row = stages._guard_trip(o, meta["gt_text"])
                 else:
                     records = []
                     for i in range(len(meta["seg_lines"])):
@@ -277,7 +244,7 @@ def make_assemble():
                             "confidences": list(lr["confidences"] or []) if lr else [],
                             "display_order": False,
                         })
-                    row = _assemble_extraction(
+                    row = stages._assemble_extraction(
                         o, meta["seg_lines"], records, meta["seg_regions"],
                         meta["vertical"], o["lang"], o["base_dir"],
                         meta["gt_text"])
@@ -320,12 +287,7 @@ def plan_extraction_line_parallel(
         raise ValueError(
             "plan_extraction_line_parallel is the loaded-model skew path; "
             "use pipeline.plan_extraction for the default recognizer")
-    spark = documents.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism * 4
-    cols = [c for c in ("url", "warc_ts", "html", "text", "lang")
-            if c in documents.columns]
-    key, n = weight_salt(n)
-    prep = documents.select(*cols).repartition(n, key).mapInArrow(
+    prep = page_exchange(documents, num_partitions).mapInArrow(
         make_prepare_map(segmenter, text_direction, kraken_model_path,
                          no_segmentation, temperature, nlbin_params),
         schema=_PREP_DDL,
@@ -336,7 +298,7 @@ def plan_extraction_line_parallel(
     # batching at small corpus sizes (measured: m=2*cores reads ~10% worse
     # on the 24-doc slice); at corpus scale lines/partition is huge either
     # way and the choice stops mattering
-    m = line_partitions or spark.sparkContext.defaultParallelism
+    m = line_partitions or documents.sparkSession.sparkContext.defaultParallelism
     prep = prep.repartition(m, "url", "line_idx")
     rec = prep.mapInArrow(
         make_recognize_map(kraken_model_path, temperature), schema=_REC_DDL)

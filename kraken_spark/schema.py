@@ -9,6 +9,11 @@ columnar layout: one row per url with ARRAY<STRUCT> lines/regions columns.
 from __future__ import annotations
 
 import pyarrow as pa
+from pyspark.sql.pandas.types import from_arrow_schema
+
+# Each wire schema is spelled once, in Arrow; its Spark twin (the *_DDL
+# names, a StructType that mapInArrow/readStream take like a DDL string)
+# is derived from it.
 
 DOCUMENTS_ARROW = pa.schema(
     [
@@ -20,7 +25,7 @@ DOCUMENTS_ARROW = pa.schema(
     ]
 )
 
-DOCUMENTS_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
+DOCUMENTS_DDL = from_arrow_schema(DOCUMENTS_ARROW)
 
 LINE_STRUCT = pa.struct(
     [
@@ -76,20 +81,10 @@ EXTRACTION_ARROW = pa.schema(
     ]
 )
 
-EXTRACTION_DDL = (
-    "url string, lang string, base_dir string, text string, "
-    "n_lines int, n_regions int, guard_tripped boolean, "
-    "lines array<struct<id:string, rank:int, bbox:array<int>, "
-    "baseline:array<array<int>>, boundary:array<array<int>>, "
-    "region_ids:array<string>, prediction:string, cuts:array<array<int>>, "
-    "confidences:array<float>, display_order:boolean, tags:string, "
-    "language:array<string>>>, "
-    "regions array<struct<id:string, region_type:string, "
-    "boundary:array<array<int>>, rank:int, tags:string, "
-    "language:array<string>>>, "
-    "cer double, wall_ms double, n_px bigint, width int, height int, "
-    "line_orders array<array<int>>, partition_id int"
-)
+EXTRACTION_DDL = from_arrow_schema(EXTRACTION_ARROW)
+
+# the fused plan's markdown=True output
+EXTRACTION_MARKDOWN_ARROW = EXTRACTION_ARROW.append(pa.field("markdown", pa.string()))
 
 # per-partition lineage/metrics rows (north rule: per-partition lineage +
 # metrics; SURVEY.md §7.4)

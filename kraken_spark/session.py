@@ -45,7 +45,10 @@ _PIN_ENV = {
     # BASELINE.md round-4 notes), re-faulting turns every heavy document
     # into a 30 s straggler. Keeping the arena at peak (~bounded by the
     # admission cap) pays the fault cost once per long-lived worker —
-    # paired with the one-time pre-touch in stages._pretouch_working_set.
+    # paired with the one-time pre-touch in stages._pretouch_working_set,
+    # which runs in the workers that build the built-in recognizer (the
+    # image pages it reads; web-HTML, pre-segmented and loaded-model
+    # pages never build it).
     "MALLOC_MMAP_THRESHOLD_": "134217728",
     "MALLOC_TRIM_THRESHOLD_": "2147483648",
     "MALLOC_ARENA_MAX": "2",

@@ -9,9 +9,16 @@ Spark-native analog of the reference's per-page stage chain
 (/root/reference/kraken/lib/vgsl/model.py:501-516) replaced by partition
 parallelism.
 
+Both extraction plans run one page chain. _page_front is its front half
+(page header -> payload route -> the pre-segmented finish, or decode ->
+nlbin -> segment); extract_document adds recognition and assembly, and the
+line-parallel plan (pipeline_lines.py) cuts the same chain after the line
+crop. A failure anywhere in the chain yields the same guard-tripped row.
+
 Model bootstrap happens once per Python worker (module-level singleton), the
 analog of the reference's prepare_for_inference
-(/root/reference/kraken/lib/vgsl/model.py:491-525).
+(/root/reference/kraken/lib/vgsl/model.py:491-525), and only in a worker
+that meets a page the model reads.
 
 Within a batch, pages are processed largest-first so a straggler page starts
 early (size-bucketed batching, north-rule skew requirement); across
@@ -28,7 +35,7 @@ from typing import Iterator
 import numpy as np
 import pyarrow as pa
 
-from .schema import EXTRACTION_ARROW
+from .schema import EXTRACTION_ARROW, EXTRACTION_MARKDOWN_ARROW
 
 _MODEL_CACHE: dict[str, object] = {}
 
@@ -36,6 +43,9 @@ _MODEL_CACHE: dict[str, object] = {}
 # (/root/reference/kraken/kraken.py:62); checked against the PNG header
 # BEFORE decompression so a hostile payload can't balloon memory
 MAX_PAGE_PX = 20000 * 20000
+
+# the malloc arena block _pretouch_working_set faults in per worker
+PRETOUCH_MB = 192
 
 
 def _get_model():
@@ -45,8 +55,6 @@ def _get_model():
     of being constructed — the reference's load-once-per-executor pattern
     (prepare_for_inference, /root/reference/kraken/lib/vgsl/model.py:491-525)."""
     if "model" not in _MODEL_CACHE:
-        import os
-
         from .kernels.codec import Codec
         from .kernels.recognizer import build_recognizer
         from .kernels.vgsl import VGSLModel
@@ -77,21 +85,17 @@ def _pretouch_working_set() -> None:
     trimming it back (MALLOC_TRIM_THRESHOLD_, session.py) — pays the cost
     once per long-lived worker, off the per-document path.
 
-    KRAKEN_SPARK_PRETOUCH_MB overrides the default 192 MB (0 disables)."""
-    import os
-
-    import numpy as np
-
-    mb = int(os.environ.get("KRAKEN_SPARK_PRETOUCH_MB", "192") or 0)
-    if mb <= 0:
-        return
+    It runs with the built-in recognizer's build, which a worker's first
+    image page read by that recognizer triggers (extract_document): a
+    worker that only sees web-HTML, pre-segmented or loaded-model pages
+    never pays these PRETOUCH_MB."""
     # chunks must stay BELOW MALLOC_MMAP_THRESHOLD_ (128 MB, session.py):
     # an over-threshold block would be mmap'd and munmap'd on free,
     # faulting for nothing. 64 MB chunks land in the brk arena and are
     # retained there by the trim threshold.
     chunk = 64 << 20
     blocks = []
-    for _ in range(max(1, (mb << 20) // chunk)):
+    for _ in range((PRETOUCH_MB << 20) // chunk):
         blk = np.empty(chunk, dtype=np.uint8)
         blk[::4096] = 1  # one write per page: fault + dirty
         blocks.append(blk)
@@ -135,71 +139,30 @@ def extract_document(
     Vertical pages segment via rotate-segment-unrotate and their strips
     are rotated back before recognition (the reference's bbox crop +
     90° rotate, lib/segmentation.py:1631-1643)."""
-    from .kernels import lineextract
-    from .kernels.recognizer import recognize_page
+    from .kernels import lineextract, recognizer
 
-    model, codec = _get_model()
-    t0 = time.perf_counter()
-    out, text_direction, vertical = _page_header(url, lang, text_direction)
+    if not kraken_model_path and html is not None and _payload_route(html) is None:
+        # only an image page the built-in recognizer reads builds it, and
+        # before the page clock starts (the build is per worker, not per page)
+        model, codec = _get_model()
+    out, t0, page = _page_front(html, url, lang, gt_text, segmenter,
+                                text_direction, no_segmentation, nlbin_params)
+    if page is None:
+        return out
+    img, mask, seg, vertical = page
     base_dir = out["base_dir"]
     try:
-        route = _payload_route(html)
-        if route == "markup":
-            from .kernels.htmlparse import looks_like_html, seg_from_html
-
-            if looks_like_html(html):
-                # web-HTML payload: main-content extraction (boilerplate
-                # strip via DOM heuristics + jusText-style block
-                # classification, kernels/htmlparse.py) — the brief's
-                # "HTML boilerplate strip / DOM heuristics" leg. hOCR is
-                # HTML too and keeps routing to the XML dialect parser
-                # (looks_like_html rejects ocr-system/ocr_page markers).
-                return _extract_from_seg(seg_from_html(html, lang), out, gt_text, t0)
-            # XML payload (ALTO/PageXML): pre-segmented input path — parse
-            # lines/regions/text directly, no OCR (the reference's -f xml
-            # input, /root/reference/kraken/kraken.py:200-207; SURVEY §3.4)
-            return _extract_from_xml(html, out, gt_text, t0)
-        if route == "json":
-            # JSON Segmentation payload (the reference's JSON round-trip,
-            # kraken.py:179-181,215-220): same pre-segmented path
-            return _extract_from_json(html, out, gt_text, t0)
-        img, mask, seg = _decode_and_segment(
-            html, url, out, segmenter, text_direction,
-            no_segmentation, nlbin_params, t0
-        )
-        if kraken_model_path:
-            # the loaded-model path recognizes from the grayscale page
-            # (polygon/bbox extraction happens inside rpred_parity with the
-            # reference's own crop semantics) — the default-path strips
-            # below would be computed and discarded, so skip them
-            strips = None
-        elif segmenter == "blla_curved":
-            # curved baselines: piecewise per-cell dewarp to straight strips
-            strips = [
-                lineextract.extract_line_dewarped(mask, l)[0] for l in seg["lines"]
-            ]
-        else:
-            strips = [lineextract.extract_line(mask, l)[0] for l in seg["lines"]]
-        if vertical and strips is not None:
-            # strips were cropped from the vertical page: rotate back to
-            # horizontal before recognition (lib/segmentation.py:1631-1643)
-            import numpy as np
-
-            strips = [
-                np.ascontiguousarray(np.rot90(s, k=1)) if s.size else s
-                for s in strips
-            ]
         if kraken_model_path:
             # recognition through a LOADED reference model (rpred parity):
             # runs on the grayscale page like the reference's rpred, with
             # bbox or baseline extraction chosen by the model's seg_type
+            # (the crop happens inside rpred_parity, so no strips here).
+            # Cross-line batched forward: same per-line tensors and decode,
+            # but the BiLSTM recurrence runs width-bucketed GEMMs instead
+            # of batch-1 GEMVs — the analog of the reference's queue
+            # batching (lib/vgsl/rpred.py:100-124)
             rec_net = _get_kraken_recognizer(kraken_model_path,
                                              temperature=temperature)
-            # cross-line batched forward (rpred_parity.recognize_lines):
-            # same per-line tensors and decode, but the BiLSTM recurrence
-            # runs width-bucketed GEMMs instead of batch-1 GEMVs — the
-            # analog of the reference's queue batching
-            # (lib/vgsl/rpred.py:100-124)
             records = [
                 {
                     "prediction": r["prediction"],
@@ -211,7 +174,19 @@ def extract_document(
                                                  scale_cuts=True)
             ]
         else:
-            records = recognize_page(model, codec, strips, base_dir=base_dir)
+            if segmenter == "blla_curved":
+                # curved baselines: piecewise per-cell dewarp to straight strips
+                strips = [lineextract.extract_line_dewarped(mask, l)[0]
+                          for l in seg["lines"]]
+            else:
+                strips = [lineextract.extract_line(mask, l)[0] for l in seg["lines"]]
+            if vertical:
+                # strips were cropped from the vertical page: rotate back to
+                # horizontal before recognition (lib/segmentation.py:1631-1643)
+                strips = [np.ascontiguousarray(np.rot90(s, k=1)) if s.size else s
+                          for s in strips]
+            records = recognizer.recognize_page(model, codec, strips,
+                                                base_dir=base_dir)
         _assemble_extraction(out, seg["lines"], records, seg["regions"],
                              vertical, lang, base_dir, gt_text)
     except Exception:
@@ -220,33 +195,67 @@ def extract_document(
     return out
 
 
-def _page_header(url: str, lang: str, text_direction: str | None):
-    """The page row every plan starts from: the text direction resolved
-    from lang (None -> horizontal-{lr,rl}, 'vertical' -> vertical-{lr,rl},
-    a full direction as-is) and the empty extraction row. Returns
-    (out, text_direction, vertical)."""
+def _page_front(
+    html: bytes, url: str, lang: str, gt_text: str | None,
+    segmenter: str, text_direction: str | None, no_segmentation: bool,
+    nlbin_params: dict | None,
+):
+    """The front half of the page chain, shared by both extraction plans:
+    page header -> payload route -> either the pre-segmented finish
+    (markup or JSON) or decode -> nlbin -> segment. Returns
+    (out, t0, page): `page` is None when `out` is already the finished
+    row (a pre-segmented page, or the guard-tripped row of a page that
+    raised anywhere here, NULL html included); otherwise it is the
+    image page's (img, mask, seg, vertical) and the caller owns the back
+    half, timed from the page clock t0."""
+    t0 = time.perf_counter()
     base_dir = "R" if lang == "ar" else "L"
     if text_direction == "vertical":
         text_direction = "vertical-rl" if base_dir == "R" else "vertical-lr"
     elif text_direction is None:
         text_direction = "horizontal-rl" if base_dir == "R" else "horizontal-lr"
+    vertical = text_direction.startswith("vertical")
     out = {
-        "url": url,
-        "lang": lang,
-        "base_dir": base_dir,
-        "text": "",
-        "n_lines": 0,
-        "n_regions": 0,
-        "guard_tripped": False,
-        "lines": [],
-        "regions": [],
-        "cer": None,
-        "n_px": 0,
-        "width": 0,
-        "height": 0,
-        "line_orders": [],
+        "url": url, "lang": lang, "base_dir": base_dir, "text": "",
+        "n_lines": 0, "n_regions": 0, "guard_tripped": False,
+        "lines": [], "regions": [], "cer": None, "n_px": 0,
+        "width": 0, "height": 0, "line_orders": [],
     }
-    return out, text_direction, text_direction.startswith("vertical")
+    try:
+        route = _payload_route(html)
+        if route == "markup":
+            from .kernels import htmlparse, xmlparse
+
+            if htmlparse.looks_like_html(html):
+                # web-HTML payload: main-content extraction (boilerplate
+                # strip via DOM heuristics + jusText-style block
+                # classification, kernels/htmlparse.py) — the brief's
+                # "HTML boilerplate strip / DOM heuristics" leg. hOCR is
+                # HTML too and keeps routing to the XML dialect parser
+                # (looks_like_html rejects ocr-system/ocr_page markers).
+                seg = htmlparse.seg_from_html(html, lang)
+            else:
+                # XML payload (ALTO/PageXML): pre-segmented input path —
+                # parse lines/regions/text directly, no OCR (the
+                # reference's -f xml input, kraken.py:200-207; SURVEY §3.4)
+                seg = xmlparse.parse_segmentation(html)
+            return _extract_from_seg(seg, out, gt_text, t0), t0, None
+        if route == "json":
+            # JSON Segmentation payload (the reference's JSON round-trip,
+            # kraken.py:179-181,215-220): same pre-segmented path
+            from .kernels import serialize
+
+            seg = serialize.from_json(html.decode("utf-8"))
+            return _extract_from_seg(seg, out, gt_text, t0), t0, None
+        img, mask, seg = _decode_and_segment(
+            html, url, out, segmenter, text_direction,
+            no_segmentation, nlbin_params, t0
+        )
+        return out, t0, (img, mask, seg, vertical)
+    except Exception:
+        _guard_trip(out, gt_text)
+        out["wall_ms"] = (time.perf_counter() - t0) * 1000.0
+        return out, t0, None
 
 
 def _guard_trip(out: dict, gt_text: str | None) -> dict:
@@ -258,11 +267,10 @@ def _guard_trip(out: dict, gt_text: str | None) -> dict:
 
 
 def _payload_route(html: bytes) -> str | None:
-    """The non-image payload sniff of extract_document: 'markup' for
-    XML/HTML dialects (incl. BOM), 'json' for JSON Segmentation, None
-    for image bytes. Shared with pipeline_lines._prepare_one so both
-    plans always route a payload the same way; raises on None html (the
-    callers' guard paths own that, like every other malformed payload)."""
+    """The payload sniff of the page chain: 'markup' for XML/HTML
+    dialects (incl. BOM), 'json' for JSON Segmentation, None for image
+    bytes. Raises on None html (_page_front's guard path owns that, like
+    every other malformed payload)."""
     if html[:1] in (b"<", b"\xef") or html[:5].lstrip()[:1] == b"<":
         return "markup"
     if html[:1] == b"{" or html[:5].lstrip()[:1] == b"{":
@@ -275,11 +283,9 @@ def _decode_and_segment(
     text_direction: str, no_segmentation: bool,
     nlbin_params: dict | None, t0: float,
 ):
-    """Shared front half of the per-page chain: admission check -> decode
-    -> nlbin -> segmentation dispatch, mutating `out`'s page fields.
-    Raises on failure (callers wrap, emitting the guard-tripped empty
-    row). Used by the fused extract_document AND the line-parallel plan's
-    prepare stage (pipeline_lines.py) so both stay byte-identical."""
+    """The image branch of _page_front: admission check -> decode ->
+    nlbin -> segmentation dispatch, mutating `out`'s page fields. Raises
+    on failure (_page_front emits the guard-tripped empty row)."""
     from .kernels import binarize, imgio, pageseg, png
 
     w0, h0 = imgio.read_dimensions(html)
@@ -312,8 +318,6 @@ def _decode_and_segment(
         # absorbs margins; our grid-aligned template recognizer needs
         # the strip anchored on the glyph cells (blank input keeps
         # the full frame and recognizes empty)
-        import numpy as np
-
         rows = np.nonzero(mask.any(axis=1))[0]
         cols = np.nonzero(mask.any(axis=0))[0]
         if len(rows):
@@ -435,23 +439,6 @@ def _assemble_extraction(
     return out
 
 
-def _extract_from_xml(html: bytes, out: dict, gt_text: str | None, t0: float) -> dict:
-    """Pre-segmented XML input: lines carry text already; geometry and
-    reading order come from the document."""
-    from .kernels.xmlparse import parse_segmentation
-
-    return _extract_from_seg(parse_segmentation(html), out, gt_text, t0)
-
-
-def _extract_from_json(html: bytes, out: dict, gt_text: str | None, t0: float) -> dict:
-    """Pre-segmented JSON input — the reference's JSON Segmentation
-    round-trip (/root/reference/kraken/kraken.py:179-181,215-220): the
-    segment stage's JSON output feeds recognition/serialization directly."""
-    from .kernels.serialize import from_json
-
-    return _extract_from_seg(from_json(html.decode("utf-8")), out, gt_text, t0)
-
-
 def _extract_from_seg(seg: dict, out: dict, gt_text: str | None, t0: float) -> dict:
     from .kernels.metrics import cer as cer_fn
     out["width"], out["height"] = int(seg["width"]), int(seg["height"])
@@ -520,51 +507,59 @@ def make_extract_map(
     empty for every other payload type — computed in the SAME Arrow pass
     so the plan stays one fused extraction stage (no second scan of the
     page bytes, no extra join)."""
-    out_schema = EXTRACTION_ARROW
-    if markdown:
-        out_schema = EXTRACTION_ARROW.append(pa.field("markdown", pa.string()))
+    out_schema = EXTRACTION_MARKDOWN_ARROW if markdown else EXTRACTION_ARROW
 
     def extract_map(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        try:
-            from pyspark import TaskContext
-
-            ctx = TaskContext.get()
-            pid = ctx.partitionId() if ctx else -1
-        except Exception:  # pragma: no cover - outside Spark
-            pid = -1
+        pid = _partition_id()
         for batch in batches:
-            names = batch.schema.names
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            langs = batch.column("lang").to_pylist()
-            gts = batch.column("text").to_pylist() if "text" in names else [None] * len(urls)
-            # largest-first within the batch (size-bucketed straggler mitigation)
-            order = sorted(range(len(urls)), key=lambda i: -(len(htmls[i] or b"")))
-            rows = [None] * len(urls)
-            for i in order:
-                rows[i] = extract_document(
-                    htmls[i], urls[i], langs[i], gts[i], segmenter,
+            rows = [None] * batch.num_rows
+            for i, url, html, lang, gt in _documents(batch):
+                rows[i] = r = extract_document(
+                    html, url, lang, gt, segmenter,
                     text_direction, kraken_model_path,
                     no_segmentation=no_segmentation, temperature=temperature,
                     nlbin_params=nlbin_params
                 )
-            for r in rows:
                 r["partition_id"] = pid
-            if markdown:
-                from .kernels.htmlparse import looks_like_html, main_content_markdown
-
-                for i, r in enumerate(rows):
-                    raw = htmls[i] or b""
-                    md = ""
-                    if looks_like_html(raw):
-                        try:
-                            md = main_content_markdown(bytes(raw), langs[i])
-                        except Exception:
-                            md = ""
-                    r["markdown"] = md
+                if markdown:
+                    r["markdown"] = _markdown(html, lang)
             yield pa.RecordBatch.from_pylist(rows, schema=out_schema)
 
     return extract_map
 
 
-extract_map_in_arrow = make_extract_map("pageseg")
+def _markdown(html: bytes | None, lang: str) -> str:
+    """The markdown column: web-HTML main content, empty otherwise."""
+    from .kernels.htmlparse import looks_like_html, main_content_markdown
+
+    raw = html or b""
+    if not looks_like_html(raw):
+        return ""
+    try:
+        return main_content_markdown(bytes(raw), lang)
+    except Exception:
+        return ""
+
+
+def _documents(batch: pa.RecordBatch):
+    """A documents batch as (i, url, html, lang, gt) tuples, largest
+    payload first (size-bucketed straggler mitigation: the heaviest page
+    of a task starts early); gt is None when the batch has no text."""
+    urls = batch.column("url").to_pylist()
+    htmls = batch.column("html").to_pylist()
+    langs = batch.column("lang").to_pylist()
+    gts = (batch.column("text").to_pylist() if "text" in batch.schema.names
+           else [None] * len(urls))
+    for i in sorted(range(len(urls)), key=lambda i: -len(htmls[i] or b"")):
+        yield i, urls[i], htmls[i], langs[i], gts[i]
+
+
+def _partition_id() -> int:
+    """The running Spark task's partition id, -1 outside Spark."""
+    try:
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        return ctx.partitionId() if ctx else -1
+    except Exception:  # pragma: no cover - outside Spark
+        return -1

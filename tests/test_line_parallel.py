@@ -88,7 +88,7 @@ def test_line_parallel_handles_preseg_and_garbage(spark):
     assert set(fused) == set(lp)
     assert fused["garbage://1"]["guard_tripped"]
     # NULL html must survive BOTH plans as a guard row, not a task abort
-    # (the payload sniff runs before _prepare_one's try)
+    # (the payload sniff runs inside stages._page_front's guard)
     assert fused["nullhtml://1"]["guard_tripped"]
     assert lp["nullhtml://1"]["guard_tripped"]
     for url in fused:
@@ -266,3 +266,83 @@ def test_batch_failure_recovers_identically_in_both_plans(monkeypatch):
                   "guard_tripped", "lines"):
             assert lp[u][k] == fused[u][k], k
 
+
+
+def _raise(*a, **k):
+    raise RuntimeError("injected failure")
+
+
+def _fail_decode(mp):
+    from kraken_spark.kernels import imgio
+    mp.setattr(imgio, "decode_image", _raise)
+
+
+def _fail_admission(mp):
+    from kraken_spark import stages
+    mp.setattr(stages, "MAX_PAGE_PX", 100)
+
+
+def _fail_budget(mp):
+    mp.setenv("KRAKEN_SPARK_DOC_BUDGET_MS", "0.001")
+
+
+def _fail_nlbin(mp):
+    from kraken_spark.kernels import binarize
+    mp.setattr(binarize, "nlbin", _raise)
+
+
+def _fail_segment(mp):
+    from kraken_spark.kernels import pageseg
+    mp.setattr(pageseg, "segment", _raise)
+
+
+def _fail_line_crop(mp):
+    from kraken_spark.kernels.rpred_parity import LoadedRecognizer
+    mp.setattr(LoadedRecognizer, "line_crop", _raise)
+
+
+def _fail_decode_probs(mp):
+    from kraken_spark.kernels.rpred_parity import LoadedRecognizer
+    mp.setattr(LoadedRecognizer, "_decode_probs", _raise)
+
+
+@pytest.mark.parametrize("inject", [
+    _fail_decode, _fail_admission, _fail_budget, _fail_nlbin, _fail_segment,
+    _fail_line_crop, _fail_decode_probs,
+], ids=lambda f: f.__name__[len("_fail_"):])
+def test_failure_parity_at_every_page_stage(monkeypatch, inject):
+    """A failure injected at any stage of the page chain (decode, the
+    admission cap, the per-document budget, nlbin, segmentation, the line
+    crop, CTC decode) trips the page to the same guard row in both plans."""
+    from kraken_spark.kernels import png, render
+    from kraken_spark.stages import extract_document
+
+    d = render.render_document(1234, 0)
+    html, text = png.encode_png(d["img"]), d["text"]
+    inject(monkeypatch)
+    fused = extract_document(html, "http://z/p0", "en", text,
+                             "pageseg", None, REC_ASSET)
+    assert fused["guard_tripped"] and fused["cer"] == 1.0
+    row = _run_lp_stages(html, text)
+    for k in ("url", "text", "n_lines", "n_regions", "cer",
+              "guard_tripped", "lines"):
+        assert row[k] == fused[k], k
+
+
+def test_page_loads_only_the_recognizer_it_uses():
+    """Only an image page read by the built-in recognizer builds it (and
+    its arena pre-touch); web-HTML and loaded-model pages never do."""
+    from kraken_spark import stages
+    from kraken_spark.kernels import htmlparse, png, render
+
+    d = render.render_document(1234, 0)
+    page = png.encode_png(d["img"])
+    web = htmlparse.write_boilerplate_page(d["text"], "en", "http://z/w0")
+    stages._MODEL_CACHE.clear()
+    stages.extract_document(web, "http://z/w0", "en")
+    assert "model" not in stages._MODEL_CACHE
+    stages.extract_document(page, "http://z/p0", "en", d["text"],
+                            "blla", None, REC_ASSET)
+    assert "model" not in stages._MODEL_CACHE
+    row = stages.extract_document(page, "http://z/p0", "en", d["text"])
+    assert "model" in stages._MODEL_CACHE and row["cer"] == 0.0

@@ -152,8 +152,8 @@ def test_extraction_exchanges_hash_their_key(spark):
     assert "element_at" not in plan
 
 
-def _executed_extract_maps(spark, run) -> int:
-    """extract_map MapInArrow nodes in the final (post-AQE) plans of every
+def _executed_nodes(spark, run) -> list[tuple[str, str]]:
+    """(name, desc) of every node in the final (post-AQE) plans of every
     SQL execution run() starts, read from the SQL status store."""
     store = spark._jsparkSession.sharedState().statusStore()
 
@@ -165,13 +165,12 @@ def _executed_extract_maps(spark, run) -> int:
     run()
     # the store is fed by the listener bus; let it catch up with run()
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    n = 0
+    out = []
     for eid in ids() - before:
         nodes = store.planGraph(eid).allNodes()
-        n += sum(nodes.apply(i).name() == "MapInArrow"
-                 and "extract_map" in nodes.apply(i).desc()
-                 for i in range(nodes.size()))
-    return n
+        out += [(nodes.apply(i).name(), nodes.apply(i).desc())
+                for i in range(nodes.size())]
+    return out
 
 
 def test_extract_geometry_extracts_once(spark):
@@ -180,9 +179,25 @@ def test_extract_geometry_extracts_once(spark):
     three over a ReusedExchange). The extraction is lineage-cut once."""
     from kraken_spark.operators.extraction import x_extract_geometry
 
-    n = _executed_extract_maps(
+    nodes = _executed_nodes(
         spark, lambda: x_extract_geometry(spark, SF).collect())
-    assert n == 1
+    assert sum(name == "MapInArrow" and "extract_map" in desc
+               for name, desc in nodes) == 1
+
+
+@pytest.mark.parametrize("query,broadcasts", [
+    ("x_extract_geometry", 2), ("x_ocr_report", 1), ("x_extract_html", 1)])
+def test_extraction_side_joins_broadcast_at_runtime(spark, query, broadcasts):
+    """The ground-truth and region side joins carry no broadcast hint:
+    AQE's runtime sizes pick the broadcast. Their final plans hold no
+    SortMergeJoin at fixture scale."""
+    import __spark_entry__ as E
+
+    fn = E.queries()[query]
+    names = [name for name, _ in _executed_nodes(
+        spark, lambda: fn(spark, SF).collect())]
+    assert "SortMergeJoin" not in names
+    assert names.count("BroadcastHashJoin") == broadcasts
 
 
 def test_extract_html_warc_shape(spark):
