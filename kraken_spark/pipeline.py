@@ -11,12 +11,20 @@ native Spark expressions so Catalyst keeps it in whole-stage codegen.
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 from .schema import EXTRACTION_DDL, EXTRACTION_MARKDOWN_ARROW
+from .sources.ice_datasource import (
+    _entries_for_files,
+    _head_sort_order,
+    _refuse_partition_spec,
+    _write_task_file,
+)
 from .stages import make_extract_map
 
 
@@ -74,8 +82,12 @@ def plan_extraction(
                          no_segmentation=no_segmentation,
                          temperature=temperature,
                          nlbin_params=nlbin_params),
-        schema=from_arrow_schema(EXTRACTION_MARKDOWN_ARROW) if markdown else EXTRACTION_DDL,
+        schema=_extraction_schema(markdown),
     )
+
+
+def _extraction_schema(markdown: bool):
+    return from_arrow_schema(EXTRACTION_MARKDOWN_ARROW) if markdown else EXTRACTION_DDL
 
 
 def extracted_text(extractions: DataFrame) -> DataFrame:
@@ -128,68 +140,184 @@ def run_extraction(
     (pipeline_lines.plan_extraction_line_parallel — loaded-model only;
     row-identical output, see that module's cost model for when it wins).
 
-    table_format='parquet' appends plain parquet; table_format='ice'
-    commits an atomic snapshot to a committed-snapshot table
-    (sources/icetable.py — the in-repo Iceberg-semantics layer: data files
-    are invisible until the manifest commit, so a crashed run never leaks
-    partial output into a resume's anti-join). The snapshot summary
-    carries the run_id; per-partition metrics ride both the metrics table
-    and, under 'ice', the snapshot lineage.
+    table_format='parquet' appends plain parquet through Spark's Hadoop
+    writer (its output committer is what makes a plain directory
+    atomic); the metrics rows roll up only the part files this run's
+    write added, so a resumed run never recounts earlier runs' rows.
 
-    Under 'ice' the metrics table is ITSELF an ice table (the north rule's
-    "per-partition lineage and CER/throughput metrics to an Iceberg
-    metrics table"): each run commits one metrics snapshot computed over
-    exactly this run's output delta (incremental scan from the pre-append
-    head), with the output snapshot id in the summary — so metrics rows
-    join back to the precise data snapshot they describe, and a crash
-    between the two commits leaves a data snapshot whose metrics can be
-    backfilled from that recorded watermark rather than double-counted."""
+    table_format='ice' commits an atomic snapshot to a committed-snapshot
+    table (sources/icetable.py — the in-repo Iceberg-semantics layer: data
+    files are invisible until the manifest commit, so a crashed run never
+    leaks partial output into a resume's anti-join), in ONE Spark job
+    (_extract_to_ice): each extraction task stages its output as one
+    parquet file through the one staged writer
+    (ice_datasource._write_task_file, row groups of up to
+    ROW_GROUP_BYTES) and folds its per-partition metrics from the same
+    batches. The driver commits the data snapshot (summary: run_id) and,
+    with metrics_path, this run's metrics rows as one snapshot of an ice
+    metrics table (the north rule's "per-partition lineage and
+    CER/throughput metrics to an Iceberg metrics table") that names the
+    data snapshot (source_table, source_snapshot_id) — so a crash between
+    the two commits leaves a data snapshot whose metrics can be
+    backfilled. Returns the committed output (icetable.read)."""
+    kw = dict(segmenter=segmenter, text_direction=text_direction,
+              kraken_model_path=kraken_model_path,
+              no_segmentation=no_segmentation, temperature=temperature,
+              nlbin_params=nlbin_params)
+    spark = documents.sparkSession
+    if out_path and table_format == "ice":
+        from .sources import icetable
+
+        _extract_to_ice(documents, out_path, num_partitions, line_parallel,
+                        summary={"run_id": run_id}, metrics_path=metrics_path,
+                        run_id=run_id, **kw)
+        return icetable.read(spark, out_path)
     if line_parallel:
         from .pipeline_lines import plan_extraction_line_parallel
 
-        ext = plan_extraction_line_parallel(
-            documents, num_partitions, segmenter=segmenter,
-            text_direction=text_direction,
-            kraken_model_path=kraken_model_path,
-            no_segmentation=no_segmentation,
-            temperature=temperature,
-            nlbin_params=nlbin_params)
+        ext = plan_extraction_line_parallel(documents, num_partitions, **kw)
     else:
-        ext = plan_extraction(documents, num_partitions, segmenter=segmenter,
-                              text_direction=text_direction,
-                              kraken_model_path=kraken_model_path,
-                              no_segmentation=no_segmentation,
-                              temperature=temperature,
-                              nlbin_params=nlbin_params)
+        ext = plan_extraction(documents, num_partitions, **kw)
     if out_path:
-        spark = documents.sparkSession
-        if table_format == "ice":
-            from .sources import icetable
-
-            prev = icetable.current_snapshot_id(out_path)
-            sid = icetable.append(ext, out_path, summary={"run_id": run_id})
-            ext = icetable.read(spark, out_path)
-            if metrics_path:
-                # skip rival takedowns landing inside (prev, sid]: the
-                # metrics snapshot describes THIS run's appended delta
-                delta = icetable.read_incremental(
-                    spark, out_path, prev, sid, skip_delete_snapshots=True
-                )
-                icetable.append(
-                    metrics_table(delta, run_id),
-                    metrics_path,
-                    summary={
-                        "run_id": run_id,
-                        "source_table": out_path,
-                        "source_snapshot_id": sid,
-                    },
-                )
-        else:
-            ext.write.mode("append").parquet(out_path)
-            ext = spark.read.parquet(out_path)
-            if metrics_path:
-                metrics_table(ext, run_id).write.mode("append").parquet(metrics_path)
+        before = _parquet_files(spark, out_path, ext.schema)
+        ext.write.mode("append").parquet(out_path)
+        ext = spark.read.parquet(out_path)
+        if metrics_path:
+            added = sorted(set(ext.inputFiles()) - before)
+            metrics_table(spark.read.schema(ext.schema).parquet(*added), run_id) \
+                .write.mode("append").parquet(metrics_path)
     return ext
+
+
+def _parquet_files(spark, path: str, schema) -> set[str]:
+    """The data files of a parquet output directory; none before its
+    first write."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return set(spark.read.schema(schema).parquet(path).inputFiles())
+    except AnalysisException as exc:
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return set()
+
+
+# One row per (task, partition_id) of an ice extraction: the file the task
+# staged and metrics_table's per-partition sums over the task's rows.
+_STAGED_ARROW = pa.schema([
+    pa.field("file", pa.string()),
+    pa.field("partition_id", pa.int32()),
+    pa.field("n_docs", pa.int64()),
+    pa.field("n_lines", pa.int64()),
+    pa.field("n_px", pa.int64()),
+    pa.field("cer_sum", pa.float64()),
+    pa.field("cer_n", pa.int64()),
+    pa.field("wall_ms", pa.float64()),
+])
+_STAGED_DDL = from_arrow_schema(_STAGED_ARROW)
+
+
+def _sum(acc, v):
+    """One step of Spark's null-skipping sum: coalesce(acc, 0) + v."""
+    return acc if v is None else (acc or 0) + v
+
+
+def _ice_sink(table: str, extract):
+    """The mapInArrow body of an ice extraction: run ``extract`` over the
+    task's batches, stage its output batches as one file under
+    ``table``'s data/ (ice_datasource._write_task_file) and, in the same
+    pass, fold metrics_table's per-partition_id sums in row order — the
+    order a re-read of the file would add them in, so the folded rows
+    equal metrics_table over the committed rows bit for bit. Yields one
+    summary row per partition_id (each task has one, in both plans)."""
+
+    def extract_to_ice(batches):
+        folds: dict = {}
+
+        def fold(out):
+            for b in out:
+                cols = [b.column(c).to_pylist()
+                        for c in ("partition_id", "n_lines", "n_px", "cer", "wall_ms")]
+                for pid, n_lines, n_px, cer, wall_ms in zip(*cols):
+                    f = folds.setdefault(pid, [0, None, None, 0.0, 0, None])
+                    f[0] += 1
+                    f[1] = _sum(f[1], n_lines)
+                    f[2] = _sum(f[2], n_px)
+                    if cer is not None:
+                        f[3] += cer
+                        f[4] += 1
+                    f[5] = _sum(f[5], wall_ms)
+                yield b
+
+        msg = _write_task_file(table, fold(extract(batches)))
+        yield pa.RecordBatch.from_pylist(
+            [dict(zip(_STAGED_ARROW.names, (rel, pid, *f)))
+             for rel in msg.files for pid, f in folds.items()],
+            schema=_STAGED_ARROW)
+
+    return extract_to_ice
+
+
+def _extract_to_ice(
+    documents: DataFrame,
+    out_path: str,
+    num_partitions: int | None,
+    line_parallel: bool,
+    summary: dict,
+    lineage: list | None = None,
+    metrics_path: str | None = None,
+    run_id: str | None = None,
+    **extract_kw,
+) -> int:
+    """Every ice extraction write: one Spark job whose tasks stage their
+    output and fold their metrics (_ice_sink), then the driver's commits.
+    The data snapshot lists exactly the files the task summaries name —
+    never a listing of data/, where a failed or speculative attempt's file
+    is an invisible orphan — under the extraction plan's schema. With
+    metrics_path the metrics rows follow as one file and one snapshot
+    naming the data snapshot. Both tables follow the DataSource writers'
+    rules: a head with a partition spec is refused (these files are not
+    clustered by it), the head's sort order is carried forward. Returns
+    the data snapshot id."""
+    for path in filter(None, (out_path, metrics_path)):
+        _refuse_partition_spec(path)
+    # tasks may run in another working directory than the driver
+    table = os.path.abspath(out_path)
+    if line_parallel:
+        from .pipeline_lines import plan_extraction_line_parallel
+
+        ext = plan_extraction_line_parallel(documents, num_partitions, **extract_kw)
+        schema = ext.schema
+        staged = ext.mapInArrow(_ice_sink(table, lambda batches: batches),
+                                _STAGED_DDL)
+    else:
+        schema = _extraction_schema(extract_kw.get("markdown", False))
+        staged = page_exchange(documents, num_partitions).mapInArrow(
+            _ice_sink(table, make_extract_map(**extract_kw)),
+            _STAGED_DDL)
+    rows = sorted(staged.collect(), key=lambda r: r.partition_id)
+    sid = _commit_files(out_path, sorted({r.file for r in rows}), schema, summary, lineage)
+    if metrics_path:
+        spark = documents.sparkSession
+        mschema = metrics_table(spark.createDataFrame([], EXTRACTION_DDL), run_id).schema
+        metrics = pa.RecordBatch.from_pylist(
+            [{"run_id": run_id, "stage": "extract", "partition_id": r.partition_id,
+              "n_docs": r.n_docs, "n_lines": r.n_lines, "n_px": r.n_px,
+              "mean_cer": r.cer_sum / r.cer_n if r.cer_n else None,
+              "wall_ms": r.wall_ms} for r in rows],
+            schema=to_arrow_schema(mschema))
+        _commit_files(metrics_path, _write_task_file(metrics_path, iter([metrics])).files,
+                      mschema, {"run_id": run_id, "source_table": out_path,
+                                "source_snapshot_id": sid})
+    return sid
+
+
+def _commit_files(path: str, files: list[str], schema, summary: dict, lineage=None) -> int:
+    from .sources import icetable
+
+    return icetable._commit_new_files(
+        path, _entries_for_files(path, files), schema, summary=summary,
+        lineage=lineage, sort_by=_head_sort_order(path) or None)
 
 
 def read_output(spark, out_path: str, table_format: str = "parquet") -> DataFrame:
@@ -246,7 +374,11 @@ def tail_extraction(
     (``source_snapshot_id`` in the snapshot summary); a tick reads only the
     pages delta since the last recorded watermark (read_incremental —
     manifest set-difference, no corpus re-scan), extracts it, and commits
-    results AND the advanced watermark in the SAME atomic snapshot. That
+    results AND the advanced watermark in the SAME atomic snapshot. The
+    write is run_extraction's ice path (_extract_to_ice: one Spark job
+    whose extraction tasks stage their own files through the one staged
+    writer, row groups of up to ROW_GROUP_BYTES; the driver commits the
+    named files with this tick's lineage); a tick writes no metrics. That
     gives exactly-once-per-page across crashes with no external state: a
     tick that dies after processing but before commit leaves the watermark
     untouched (its staged data files stay invisible orphans), so the next
@@ -276,18 +408,17 @@ def tail_extraction(
         spark, pages_table, last, head,
         skip_delete_snapshots=skip_delete_snapshots,
     )
-    ext = plan_extraction(delta, num_partitions, **extract_kw)
     # row count comes from the committed manifest (parquet footers), not a
     # .count() action — counting first would execute the extraction twice.
-    sid = icetable.append(
-        ext,
-        out_table,
+    sid = _extract_to_ice(
+        delta, out_table, num_partitions, False,
         summary={
             "run_id": run_id,
             "source_table": pages_table,
             "source_snapshot_id": head,
         },
         lineage=[{"stage": "tail-extract", "from_snapshot": last, "to_snapshot": head}],
+        **extract_kw,
     )
     n = int(icetable.snapshot(out_table, sid)["summary"]["n_new_rows"])
     return {"processed": n, "source_snapshot_id": head, "out_snapshot_id": sid}

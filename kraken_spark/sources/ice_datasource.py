@@ -29,7 +29,11 @@ Scale shape (what each leg does at 10^12 rows):
   and runs the same optimistic hard-link-CAS commit as ``append``
   (per-retry data-sequence re-stamping, union-by-name schema evolution,
   O(delta) manifest-list segments). A failed job leaves only invisible
-  orphans for ``vacuum``.
+  orphans for ``vacuum``. ``_write_task_file`` is the one staged writer:
+  it buffers a task's batches into row groups of up to
+  ``ROW_GROUP_BYTES`` (Spark's 128 MB ``parquet.block.size``), and
+  ``pipeline.run_extraction``/``tail_extraction`` stage their ice output
+  through it from inside the extraction task itself.
 - **Stream read** is Iceberg's incremental append scan as a Structured
   Streaming source: offsets are snapshot ids, each micro-batch is
   exactly the files added by the append snapshots in ``(start, end]``,
@@ -435,24 +439,52 @@ class IceStreamReader(DataSourceStreamReader):
         pass
 
 
+# A staged file's row-group budget, in Arrow bytes: Spark's own parquet
+# writer closes a row group at parquet.block.size, 128 MB. A row group per
+# Arrow batch instead would cut a 200-row task into four row groups at
+# spark.sql.execution.arrow.maxRecordsPerBatch=64.
+ROW_GROUP_BYTES = 128 << 20
+
+
 def _write_task_file(
     path: str, iterator: Iterator["pa.RecordBatch"]
 ) -> IceCommitMessage:
-    """Executor side of both writers: stage one parquet file of this
-    task's batches under data/ (invisible until the driver commits)."""
+    """The one staged-file writer: stage one parquet file of this task's
+    batches under data/ (invisible until the driver commits), one row
+    group per ``ROW_GROUP_BYTES`` of buffered batches and one for the
+    rest. Used by both DataSource writers, the ice extraction sink
+    (``pipeline._ice_sink``) and its driver-side metrics commit. The
+    name is a fresh uuid, so a retried attempt never overwrites a file
+    another attempt names."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     writer = None
     rel = os.path.join("data", f"ds-{uuid.uuid4().hex}.parquet")
     full = os.path.join(path, rel)
+    buffered: list = []
+    size = 0
+
+    def flush() -> None:
+        nonlocal writer, size
+        table = pa.Table.from_batches(buffered)
+        if writer is None:
+            os.makedirs(os.path.dirname(full), exist_ok=True)
+            writer = pq.ParquetWriter(full, table.schema)
+        writer.write_table(table, row_group_size=table.num_rows)
+        buffered.clear()
+        size = 0
+
     try:
         for batch in iterator:
             if batch.num_rows == 0:
                 continue
-            if writer is None:
-                os.makedirs(os.path.dirname(full), exist_ok=True)
-                writer = pq.ParquetWriter(full, batch.schema)
-            writer.write_batch(batch)
+            buffered.append(batch)
+            size += batch.nbytes
+            if size >= ROW_GROUP_BYTES:
+                flush()
+        if buffered:
+            flush()
     finally:
         if writer is not None:
             writer.close()
@@ -496,9 +528,10 @@ def _refuse_partition_spec(path: str) -> None:
     head = it.current_snapshot_id(path)
     if head and it.snapshot(path, head).get("partition_spec"):
         raise ValueError(
-            "ice: this table has a hidden-partitioning spec — the "
-            "DataSource writer stages unclustered files and would break "
-            "the layout; write with icetable.append(partition_by=...) "
+            "ice: this table has a hidden-partitioning spec — staged-file "
+            "writers (the DataSource writers, ice extraction) write "
+            "unclustered files and would break the layout; write with "
+            "icetable.append(partition_by=...) "
         )
 
 

@@ -34,3 +34,33 @@ def run_pinned_blas(code: str) -> None:
     env["PYTHONPATH"] = os.pathsep.join(
         p for p in (root, env.get("PYTHONPATH")) if p)
     subprocess.run([sys.executable, "-c", code], check=True, env=env)
+
+
+def assert_ice_extraction_committed(spark, out: str, metrics: str, run_id: str,
+                                    ref: str) -> None:
+    """Pins of an ice run_extraction with metrics: the data snapshot
+    records the extraction plan's schema exactly as ``icetable.append``
+    does (``ref`` is a table that append wrote), the metrics snapshot
+    holds metrics_table over the committed rows on every column (wall_ms
+    bit-equal) under metrics_table's own schema, and both keep their
+    summary keys."""
+    from kraken_spark.pipeline import metrics_table
+    from kraken_spark.sources import icetable as it
+
+    snap, msnap = it.snapshot(out), it.snapshot(metrics)
+    assert snap["schema_json"] == it.snapshot(ref)["schema_json"]
+    want = metrics_table(it.read(spark, out), run_id)
+    assert msnap["schema_json"] == want.schema.json()
+
+    def by_pid(df):
+        return sorted(df.collect(), key=lambda r: r.partition_id)
+
+    rows = by_pid(want)
+    assert by_pid(it.read(spark, metrics)) == rows
+    assert set(snap["summary"]) == {"run_id", "n_new_files", "n_new_rows"}
+    assert snap["summary"]["run_id"] == run_id
+    assert snap["summary"]["n_new_rows"] == it.read(spark, out).count()
+    assert msnap["summary"] == {
+        "run_id": run_id, "source_table": out,
+        "source_snapshot_id": snap["snapshot_id"],
+        "n_new_files": 1, "n_new_rows": len(rows)}

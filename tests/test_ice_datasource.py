@@ -151,6 +151,32 @@ def test_batch_write_commit_protocol(spark, tmp_path):
     assert it.history(t)[-1]["operation"] == "overwrite"
 
 
+def test_writers_stage_one_row_group_per_task(spark, tmp_path, monkeypatch):
+    """A 200-row task arrives as four 64-row Arrow batches
+    (maxRecordsPerBatch); both DataSource writers stage it as one file of
+    one row group, not one row group per batch. A row group closes at the
+    ROW_GROUP_BYTES budget."""
+    import pyarrow.parquet as pq
+
+    from kraken_spark.sources import ice_datasource
+
+    t = str(tmp_path / "batch")
+    _pages(spark, 0, 200).coalesce(1).write.format("ice").mode("append").save(t)
+    w = IceStreamWriter({"path": str(tmp_path / "stream"),
+                         "checkpointlocation": "q"}, _pages(spark, 0, 1).schema, False)
+    msg = w.write(iter(_pages(spark, 0, 200).toArrow().to_batches(max_chunksize=64)))
+    files = [os.path.join(t, e["path"]) for e in it.snapshot(t)["manifest"]]
+    files += [os.path.join(str(tmp_path / "stream"), f) for f in msg.files]
+    assert len(files) == 2
+    for f in files:
+        meta = pq.read_metadata(f)
+        assert (meta.num_rows, meta.num_row_groups) == (200, 1)
+    monkeypatch.setattr(ice_datasource, "ROW_GROUP_BYTES", 1)
+    msg = w.write(iter(_pages(spark, 0, 200).toArrow().to_batches(max_chunksize=64)))
+    meta = pq.read_metadata(os.path.join(str(tmp_path / "stream"), msg.files[0]))
+    assert meta.num_rows == 200 and meta.num_row_groups > 1
+
+
 def test_writer_refuses_partitioned_table(spark, tmp_path):
     t = str(tmp_path / "t")
     it.append(_pages(spark, 0, 10), t, partition_by=["days(warc_ts)"])

@@ -407,6 +407,40 @@ def test_tail_extraction_crashed_tick_reprocesses(spark, tmp_path):
     assert it.orphan_data_files(out)  # the dead writer's files are orphans
 
 
+def test_ice_extraction_data_commit_failure_leaves_orphans(spark, tmp_path, monkeypatch):
+    """An ice extraction whose data commit fails commits nothing: the head
+    stays where it was and the files its tasks staged are orphans. The
+    commit names only its own tasks' files, so a rerun commits each url
+    exactly once and the crashed attempt's files stay orphans."""
+    from kraken_spark.corpus import generate_corpus_df
+    from kraken_spark.pipeline import remaining_documents, run_extraction
+
+    out = str(tmp_path / "extractions")
+    docs = generate_corpus_df(spark, 6).localCheckpoint(eager=True)
+    run_extraction(docs.limit(3), out_path=out, num_partitions=2, table_format="ice")
+    committed = set(it._referenced_files(out))
+    real = it._commit_new_files
+
+    def crash_once(*a, **kw):
+        monkeypatch.setattr(it, "_commit_new_files", real)
+        raise OSError("simulated crash before the data commit")
+
+    monkeypatch.setattr(it, "_commit_new_files", crash_once)
+    rest = remaining_documents(docs, out, "ice").localCheckpoint(eager=True)
+    with pytest.raises(OSError, match="simulated crash"):
+        run_extraction(rest, out_path=out, num_partitions=2, table_format="ice")
+    assert it.current_snapshot_id(out) == 1
+    orphans = it.orphan_data_files(out)
+    assert orphans and all("/data/ds-" in f for f in orphans)
+
+    run_extraction(rest, out_path=out, num_partitions=2, table_format="ice")
+    assert it.current_snapshot_id(out) == 2
+    urls = [r.url for r in it.read(spark, out).select("url").collect()]
+    assert sorted(urls) == sorted(r.url for r in docs.select("url").collect())
+    assert it.orphan_data_files(out) == orphans
+    assert committed < set(it._referenced_files(out))
+
+
 def test_append_precondition(spark, tmp_path):
     """A failing precondition aborts the commit (nothing becomes visible,
     the staged files are orphans); a passing one commits; the predicate

@@ -142,6 +142,31 @@ def test_run_extraction_line_parallel_commits_same_rows(spark, tmp_path):
     assert a == b and len(a) == 4
 
 
+def test_run_extraction_line_parallel_ice_commits_rows_and_metrics(spark, tmp_path):
+    """run_extraction(line_parallel=True, table_format='ice'): the same
+    staged-file sink runs as one mapInArrow over the assembled rows. It
+    commits the fused plan's rows, and metrics rows equal to
+    metrics_table over them."""
+    from conftest import assert_ice_extraction_committed
+
+    from kraken_spark.corpus import generate_corpus_df
+    from kraken_spark.pipeline import plan_extraction, run_extraction
+    from kraken_spark.sources import icetable
+
+    docs = generate_corpus_df(spark, 4).localCheckpoint(eager=True)
+    out, metrics, ref = (str(tmp_path / n) for n in ("out", "metrics", "ref"))
+    run_extraction(docs, out_path=out, metrics_path=metrics, run_id="lp",
+                   kraken_model_path=REC_ASSET, table_format="ice",
+                   line_parallel=True)
+    fused = plan_extraction(docs, num_partitions=4, kraken_model_path=REC_ASSET)
+    got, want = _rows_by_url(icetable.read(spark, out)), _rows_by_url(fused)
+    assert set(got) == set(want) and len(got) == 4
+    for url in want:
+        _assert_row_parity(want[url], got[url])
+    icetable.append(fused.limit(0), ref)
+    assert_ice_extraction_committed(spark, out, metrics, "lp", ref)
+
+
 def _run_lp_stages(html, text, monkeypatch=None):
     """Drive the line-parallel stage functions in-process (no Spark):
     _prepare_one -> make_recognize_map -> make_assemble; returns the one

@@ -29,7 +29,7 @@ from kraken_spark.pipeline import (  # noqa: E402
 from kraken_spark.refassets import resource  # noqa: E402
 from kraken_spark.session import get_spark  # noqa: E402
 
-from conftest import requires_reference  # noqa: E402
+from conftest import assert_ice_extraction_committed, requires_reference  # noqa: E402
 
 _HAVE_OVERFIT = all(os.path.exists(resource(f))
                     for f in ("overfit.mlmodel", "000236.png"))
@@ -164,6 +164,71 @@ def test_ice_metrics_table_per_run_delta(spark):
         assert all(r.mean_cer == 0.0 for r in m)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_parquet_metrics_table_per_run_delta(spark):
+    """The parquet twin of test_ice_metrics_table_per_run_delta: a resumed
+    run's metrics roll up only the part files its own write added, never
+    the rows earlier runs left in the same directory."""
+    tmp = tempfile.mkdtemp(prefix="ks_pqmetrics_")
+    try:
+        docs = generate_corpus_df(spark, 8)
+        run_extraction(docs.limit(5), out_path=f"{tmp}/out",
+                       metrics_path=f"{tmp}/metrics", run_id="runA")
+        run_extraction(remaining_documents(docs, f"{tmp}/out"),
+                       out_path=f"{tmp}/out", metrics_path=f"{tmp}/metrics",
+                       run_id="runB")
+        by_run = {}
+        for r in spark.read.parquet(f"{tmp}/metrics").collect():
+            by_run[r.run_id] = by_run.get(r.run_id, 0) + r.n_docs
+        assert by_run == {"runA": 5, "runB": 3}
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_ice_extraction_commits_plan_rows_and_their_metrics(spark, tmp_path):
+    """The fused plan's ice path (one job: tasks stage files and fold
+    metrics, the driver commits both snapshots) commits plan_extraction's
+    rows, and metrics rows equal to metrics_table over them."""
+    from kraken_spark.sources import icetable
+
+    docs = generate_corpus_df(spark, 6).localCheckpoint(eager=True)
+    out, metrics, ref = (str(tmp_path / n) for n in ("out", "metrics", "ref"))
+    run_extraction(docs, out_path=out, metrics_path=metrics, run_id="r1",
+                   num_partitions=4, table_format="ice")
+
+    def rows(df):
+        return {r.url: {k: v for k, v in r.asDict(recursive=True).items()
+                        if k != "wall_ms"} for r in df.collect()}
+
+    want = plan_extraction(docs, num_partitions=4)
+    assert rows(icetable.read(spark, out)) == rows(want)
+    icetable.append(want.limit(0), ref)
+    assert_ice_extraction_committed(spark, out, metrics, "r1", ref)
+
+
+def test_ice_sink_writes_one_row_group_per_task(tmp_path):
+    """A 200-row extraction task reaches the sink as four 64-row Arrow
+    batches (maxRecordsPerBatch); its staged file is one row group, and
+    its summary row folds all 200 rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kraken_spark.pipeline import _ice_sink
+    from kraken_spark.schema import EXTRACTION_ARROW
+
+    batch = pa.RecordBatch.from_pylist(
+        [{"url": f"u{i}", "partition_id": 3, "n_lines": 2, "n_px": 10,
+          "cer": None, "wall_ms": 0.5} for i in range(200)],
+        schema=EXTRACTION_ARROW)
+    sink = _ice_sink(str(tmp_path), lambda batches: batches)
+    (summary,) = sink(iter(batch.slice(k, 64) for k in range(0, 200, 64)))
+    (row,) = summary.to_pylist()
+    assert row == {"file": row["file"], "partition_id": 3, "n_docs": 200,
+                   "n_lines": 400, "n_px": 2000, "cer_sum": 0.0, "cer_n": 0,
+                   "wall_ms": 100.0}
+    meta = pq.read_metadata(os.path.join(str(tmp_path), row["file"]))
+    assert meta.num_rows == 200 and meta.num_row_groups == 1
 
 
 def test_serialization_roundtrip_spark(spark):

@@ -185,6 +185,27 @@ def test_extract_geometry_extracts_once(spark):
                for name, desc in nodes) == 1
 
 
+def test_ice_extraction_runs_as_one_job(spark, tmp_path):
+    """run_extraction(table_format='ice') with metrics is one extraction
+    job: the extraction task stages its own file and folds its metrics, so
+    no Hadoop write (WriteFiles / InsertIntoHadoopFsRelationCommand) runs
+    and nothing scans the output back."""
+    from kraken_spark.corpus import generate_corpus_df
+    from kraken_spark.pipeline import run_extraction
+
+    docs = generate_corpus_df(spark, 3).localCheckpoint(eager=True)
+    out = str(tmp_path / "out")
+    nodes = _executed_nodes(spark, lambda: run_extraction(
+        docs, out_path=out, metrics_path=str(tmp_path / "metrics"),
+        run_id="one", num_partitions=2, table_format="ice"))
+    names = [name for name, _ in nodes]
+    maps = [desc for name, desc in nodes if name == "MapInArrow"]
+    assert len(maps) == 1 and "extract" in maps[0]
+    assert not [n for n in names
+                if "WriteFiles" in n or "InsertIntoHadoopFsRelation" in n]
+    assert not [d for n, d in nodes if n.startswith("Scan") and out in d]
+
+
 @pytest.mark.parametrize("query,broadcasts", [
     ("x_extract_geometry", 2), ("x_ocr_report", 1), ("x_extract_html", 1)])
 def test_extraction_side_joins_broadcast_at_runtime(spark, query, broadcasts):
