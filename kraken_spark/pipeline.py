@@ -20,7 +20,6 @@ from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 from .schema import EXTRACTION_DDL, EXTRACTION_MARKDOWN_ARROW
 from .sources.ice_datasource import (
-    _entries_for_files,
     _head_sort_order,
     _refuse_partition_spec,
     _write_task_file,
@@ -316,7 +315,7 @@ def _commit_files(path: str, files: list[str], schema, summary: dict, lineage=No
     from .sources import icetable
 
     return icetable._commit_new_files(
-        path, _entries_for_files(path, files), schema, summary=summary,
+        path, icetable._entries_for_files(path, files), schema, summary=summary,
         lineage=lineage, sort_by=_head_sort_order(path) or None)
 
 

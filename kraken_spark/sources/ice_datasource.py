@@ -26,7 +26,8 @@ Scale shape (what each leg does at 10^12 rows):
 - **Batch write** is the Iceberg task/driver split: each executor task
   writes one staged (invisible) parquet file and ships its path back as
   a commit message; the driver turns footer stats into manifest entries
-  and runs the same optimistic hard-link-CAS commit as ``append``
+  with icetable's one entry builder (``_entries_for_files``) and runs the
+  same optimistic hard-link-CAS commit as ``append``
   (per-retry data-sequence re-stamping, union-by-name schema evolution,
   O(delta) manifest-list segments). A failed job leaves only invisible
   orphans for ``vacuum``. ``_write_task_file`` is the one staged writer:
@@ -41,9 +42,9 @@ Scale shape (what each leg does at 10^12 rows):
   breaks a tailing stream, and membership-changing operations in the
   range fail loudly rather than return a wrong delta.
 - **Stream write** commits each micro-batch as ONE atomic snapshot whose
-  summary carries the batch id; a retried batch finds its id already in
-  history and commits nothing (exactly-once without any sink-side state
-  beyond the table's own metadata).
+  summary carries the batch id and the query; a retried batch finds its
+  (batch id, query) already in history and commits nothing (exactly-once
+  without any sink-side state beyond the table's own metadata).
 
 The batch-read fast path remains ``icetable.read`` (Spark's JVM parquet
 scan — vectorized, codegen); this face trades that for API composition
@@ -331,6 +332,8 @@ class IceBatchReader(DataSourceReader):
         return parts
 
     def read(self, partition: InputPartition) -> Iterator["pa.RecordBatch"]:
+        if partition is None:  # no data files: Spark reads one None partition
+            return
         assert isinstance(partition, IceScanPartition)
         for fp in partition.files:
             yield from _read_data_file(fp, self._schema)
@@ -491,35 +494,27 @@ def _write_task_file(
     return IceCommitMessage(files=[rel] if writer is not None else [])
 
 
-def _entries_for_files(path: str, rels: list[str]) -> list[dict[str, Any]]:
-    """Driver side: manifest entries (rows/bytes/footer stats) for staged
-    files — footer-only reads, the ``_list_new_files`` contract."""
-    import pyarrow.parquet as pq
-
-    from kraken_spark.sources import icetable as it
-
-    entries = []
-    for rel in sorted(rels):
-        full = os.path.join(path, rel)
-        meta = pq.read_metadata(full)
-        entries.append(
-            {
-                "path": rel,
-                "rows": meta.num_rows,
-                "bytes": os.path.getsize(full),
-                "stats": it._file_column_stats(meta),
-                "partition": "",
-            }
-        )
-    return entries
-
-
 def _collect_rels(messages: list) -> list[str]:
     rels: list[str] = []
     for m in messages:
         if m is not None:
             rels.extend(m.files)
-    return rels
+    return sorted(rels)
+
+
+def _batch_committed(path: str, query: str, batch_id: int) -> bool:
+    """Whether micro-batch ``batch_id`` of the stream ``query`` already
+    committed to the table at ``path``: the exactly-once key of both ice
+    stream sinks (this module's ``IceStreamWriter`` and
+    ``streaming.stream_extraction``). A batch id alone is not a key — two
+    queries writing one table both have a batch 0."""
+    from kraken_spark.sources import icetable as it
+
+    for h in reversed(it.history(path)):
+        s = h.get("summary", {})
+        if s.get("stream_batch_id") == batch_id and s.get("stream_query", "") == query:
+            return True
+    return False
 
 
 def _refuse_partition_spec(path: str) -> None:
@@ -564,7 +559,7 @@ class IceBatchWriter(DataSourceArrowWriter):
 
         it._commit_new_files(
             self._path,
-            _entries_for_files(self._path, _collect_rels(messages)),
+            it._entries_for_files(self._path, _collect_rels(messages)),
             self._schema,
             operation="overwrite" if self._overwrite else "append",
             summary={"writer": "datasource"},
@@ -609,27 +604,15 @@ class IceStreamWriter(DataSourceStreamArrowWriter):
     def write(self, iterator: Iterator["pa.RecordBatch"]) -> IceCommitMessage:
         return _write_task_file(self._path, iterator)
 
-    def _already_committed(self, batch_id: int) -> bool:
-        from kraken_spark.sources import icetable as it
-
-        for h in reversed(it.history(self._path)):
-            s = h.get("summary", {})
-            if (
-                s.get("stream_batch_id") == batch_id
-                and s.get("stream_query", "") == self._query
-            ):
-                return True
-        return False
-
     def commit(self, messages: list, batchId: int) -> None:  # noqa: N803
         from kraken_spark.sources import icetable as it
 
         rels = _collect_rels(messages)
-        if not rels or self._already_committed(batchId):
+        if not rels or _batch_committed(self._path, self._query, batchId):
             return
         it._commit_new_files(
             self._path,
-            _entries_for_files(self._path, rels),
+            it._entries_for_files(self._path, rels),
             self._schema,
             summary={
                 "writer": "datasource-stream",
@@ -639,7 +622,9 @@ class IceStreamWriter(DataSourceStreamArrowWriter):
             sort_by=_head_sort_order(self._path) or None,
             # re-validated on every CAS retry: exactly-once even if a
             # zombie attempt of the same batch races this commit
-            precondition=lambda p, parent: not self._already_committed(batchId),
+            precondition=lambda p, _parent: not _batch_committed(
+                p, self._query, batchId
+            ),
         )
 
     def abort(self, messages: list, batchId: int) -> None:  # noqa: N803

@@ -9,14 +9,21 @@ sandbox has no Iceberg runtime jars, and the pipeline only relies on four
 properties, all delivered here and proven in tests/test_icetable.py:
 
 1. **Atomic commits.** Data files are written first (distributed, by
-   executors, via a normal ``df.write.parquet`` into a unique subdirectory)
-   and are INVISIBLE until a snapshot manifest listing them is committed.
-   A reader concurrent with a crashed or in-flight writer sees exactly the
-   previous snapshot.
+   executors) and are INVISIBLE until a snapshot manifest listing them is
+   committed. Spark-written files go through one staging path: a fresh
+   ``data/<uuid>`` directory (``_staging_dir``), one ``df.write.parquet``
+   (``_write_staged``, shaped by ``_stage_table_write`` for the table's
+   partition spec and sort order or ``_stage_group_rewrite`` for a
+   maintenance rewrite), and one manifest-entry builder
+   (``_entries_for_files``, also used for the DataSource writers' and the
+   extraction sink's task files), which deletes 0-row part files instead
+   of committing them. A reader concurrent with a crashed or in-flight
+   writer sees exactly the previous snapshot.
 2. **Optimistic concurrency.** A commit creates ``metadata/snap-N.json``
    with a hard-link CAS — two writers racing for the same N: one wins,
    the other gets ``CommitConflict`` and retries against the new head
    (data files are already safe, only the cheap metadata step re-runs).
+   Every main-namespace commit runs this loop in ``_commit_snapshot``.
    This is the Iceberg commit protocol in miniature.
 3. **Time travel.** Every snapshot is immutable and keeps its full file
    list; ``read(..., snapshot_id=k)`` reconstructs any historical state,
@@ -222,31 +229,35 @@ def history(path: str) -> list[dict[str, Any]]:
     return out
 
 
-def _commit(path: str, snap: dict[str, Any]) -> int:
-    """Atomically create snap-N.json (CAS on N via O_EXCL), then move the
-    version hint forward. The hint write is a same-filesystem rename, so
-    readers never observe a torn pointer."""
+def _cas_write(path: str, target: str, snap: dict[str, Any], what: str) -> None:
+    """Create the metadata file ``target`` holding ``snap`` iff it does
+    not exist yet (CommitConflict otherwise): a hard-link CAS, so the
+    target appears fully written in one atomic step (no empty-file window
+    a concurrent reader could observe)."""
     os.makedirs(_meta_dir(path), exist_ok=True)
-    sid = snap["snapshot_id"]
     if "manifest_list" in snap:  # two-level: never persist the flat view
         snap = {
             k: v for k, v in snap.items() if k not in ("manifest", "_segments")
         }
-    target = _snap_path(path, sid)
     tmp = f"{target}.tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
         json.dump(snap, f)
         f.flush()
         os.fsync(f.fileno())
     try:
-        # hard-link CAS: fails iff snap-N.json exists, and the target
-        # appears fully written in one atomic step (no empty-file window a
-        # concurrent reader could observe)
         os.link(tmp, target)
     except FileExistsError:
+        raise CommitConflict(f"{path}: {what} already committed") from None
+    finally:
         os.unlink(tmp)
-        raise CommitConflict(f"{path}: snapshot {sid} already committed")
-    os.unlink(tmp)
+
+
+def _commit(path: str, snap: dict[str, Any]) -> int:
+    """Atomically create snap-N.json (CAS on N), then move the version
+    hint forward. The hint write is a same-filesystem rename, so readers
+    never observe a torn pointer."""
+    sid = snap["snapshot_id"]
+    _cas_write(path, _snap_path(path, sid), snap, f"snapshot {sid}")
     hint_tmp = os.path.join(_meta_dir(path), f".{_HINT}.{uuid.uuid4().hex}")
     with open(hint_tmp, "w") as f:
         f.write(str(sid))
@@ -307,36 +318,137 @@ def _file_column_stats(meta) -> dict[str, list[Any]]:
     return stats
 
 
-def _list_new_files(table_path: str, data_dir: str) -> list[dict[str, Any]]:
-    """Manifest entries for a freshly written parquet directory (walked
-    recursively — partitioned writes nest Hive-style subdirs): one row
-    per part file with row count + byte size + per-column min/max stats
-    (footer-only reads — the driver never touches row data; the stats are
-    what manifest-level file skipping prunes on, Iceberg's lower_bounds/
-    upper_bounds) + the partition subpath the file sits in (what keeps
-    maintenance rewrites from destroying the clustering). Paths are
-    table-relative so a table directory is relocatable as a unit."""
+def _entries_for_files(
+    table_path: str, rels: list[str], partition: str = ""
+) -> list[dict[str, Any]]:
+    """The one manifest-entry builder, for freshly staged (uncommitted)
+    parquet files given by table-relative path: one entry per file with
+    row count + byte size + per-column min/max stats (footer-only reads —
+    the driver never touches row data; the stats are what manifest-level
+    file skipping prunes on, Iceberg's lower_bounds/upper_bounds) + the
+    partition subpath (what keeps maintenance rewrites from destroying the
+    clustering). Paths are table-relative so a table directory is
+    relocatable as a unit. A 0-row file (Spark's writer opens one for an
+    empty write partition) is deleted and gets no entry: it would add
+    nothing but a file every later read opens."""
     import pyarrow.parquet as pq
 
     entries = []
-    for root, dirs, names in os.walk(data_dir):
-        dirs.sort()
-        for name in sorted(names):
-            if not name.endswith(".parquet"):
-                continue
-            full = os.path.join(root, name)
-            meta = pq.read_metadata(full)
-            part = os.path.relpath(root, start=data_dir)
-            entries.append(
-                {
-                    "path": os.path.relpath(full, start=table_path),
-                    "rows": meta.num_rows,
-                    "bytes": os.path.getsize(full),
-                    "stats": _file_column_stats(meta),
-                    "partition": "" if part == "." else part,
-                }
-            )
+    for rel in rels:
+        full = os.path.join(table_path, rel)
+        meta = pq.read_metadata(full)
+        if meta.num_rows == 0:
+            os.remove(full)
+            continue
+        entries.append(
+            {
+                "path": rel,
+                "rows": meta.num_rows,
+                "bytes": os.path.getsize(full),
+                "stats": _file_column_stats(meta),
+                "partition": partition,
+            }
+        )
     return entries
+
+
+def _staging_dir(path: str) -> str:
+    """A fresh directory under data/ for one operation's staged files:
+    invisible until a snapshot naming them commits."""
+    return os.path.join(path, _DATA, uuid.uuid4().hex)
+
+
+def _write_staged(
+    path: str,
+    df: DataFrame,
+    out_dir: str,
+    pcols: list[str] | tuple = (),
+    partition: str = "",
+) -> list[dict[str, Any]]:
+    """The one Spark write of staged data files: write ``df`` as parquet
+    under ``out_dir`` (Hive-style subdirs per ``pcols``) and return the
+    manifest entries of what it wrote. The directory is walked
+    recursively; each file's partition is ``partition`` joined with its
+    subdirectory under ``out_dir``."""
+    df.write.partitionBy(*pcols).parquet(out_dir, mode="errorifexists")
+    entries = []
+    for root, dirs, names in os.walk(out_dir):
+        dirs.sort()
+        sub = os.path.normpath(
+            os.path.join(partition, os.path.relpath(root, start=out_dir))
+        )
+        entries += _entries_for_files(
+            path,
+            [
+                os.path.relpath(os.path.join(root, n), start=path)
+                for n in sorted(names)
+                if n.endswith(".parquet")
+            ],
+            "" if sub == "." else sub,
+        )
+    return entries
+
+
+def _stage_table_write(
+    path: str,
+    df: DataFrame,
+    out_dir: str,
+    partition_by: list[str] | None,
+    sort_by: list[str] | None,
+) -> list[dict[str, Any]]:
+    """Stage ``df`` under the table's partition spec and sort order (the
+    write of ``append``, ``branch_append`` and ``merge_by_key``'s
+    inserts)."""
+    pcols: list[str] = []
+    if partition_by:
+        df, pcols = _partition_columns(df, partition_by)
+    if sort_by:
+        df = _apply_sort_order(df, sort_by, pcols)
+    return _write_staged(path, df, out_dir, pcols)
+
+
+def _stage_group_rewrite(
+    spark: SparkSession,
+    path: str,
+    snap: dict[str, Any],
+    group: list[dict[str, Any]],
+    root: str,
+    part: str,
+    keep=None,
+    target_bytes: int = 512 << 20,
+    zorder_by: list[str] | None = None,
+) -> list[dict[str, Any]]:
+    """Stage the rewrite of one partition group of ``snap``'s files into
+    ``root``/``part``: their rows (``keep(df)`` = the survivors) as
+    ~``target_bytes`` files that keep the table sort order, or a z-order
+    over ``zorder_by``. The rewrite of ``compact``, ``delete_where``,
+    ``rewrite_deletes`` and ``merge_by_key``'s survivors. Rows are read
+    under the snapshot schema: files may predate an add-column evolution,
+    and the rewritten ones must carry the full column set."""
+    df = _read_files(
+        spark, snap, [os.path.join(path, e["path"]) for e in group]
+    )
+    if keep is not None:
+        df = keep(df)
+    sort_order = snap.get("sort_order") or []
+    n = max(1, -(-sum(e["bytes"] for e in group) // target_bytes))
+    if zorder_by:
+        # Z-order rewrite (Iceberg's rewrite_data_files sort strategy
+        # with a z-order): multi-column clustering so manifest-stat
+        # pruning is selective on EVERY z-ordered column at once —
+        # a linear sort gives a point lookup one selective dimension,
+        # a z-order gives a d-dimensional box query ~O(files^(1-1/d))
+        df = df.withColumn("_z", _zvalue_col(df, zorder_by)).repartitionByRange(
+            n, "_z"
+        ).sortWithinPartitions("_z").drop("_z")
+    elif sort_order:  # a rewrite must not undo the table sort order
+        df = df.repartitionByRange(n, *sort_order).sortWithinPartitions(
+            *sort_order
+        )
+    else:
+        df = df.repartition(n)
+    out_dir = os.path.join(root, part) if part else root
+    return _write_staged(path, df, out_dir, partition=part)
 
 
 def _prune_entries(
@@ -458,6 +570,105 @@ def _apply_sort_order(df: DataFrame, sort_by: list[str], pcols: list[str]):
     return df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
 
 
+def _schema(snap: dict[str, Any]):
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(json.loads(snap["schema_json"]))
+
+
+def _evolved_schema_json(snap: dict[str, Any] | None, writer_schema) -> str:
+    """The schema a commit of ``writer_schema``'s rows on top of ``snap``
+    records: the snapshot's schema evolved by the writer's, or the
+    writer's own over an empty or schemaless snapshot."""
+    if snap and snap.get("schema_json"):
+        return _evolve_schema(_schema(snap), writer_schema).json()
+    return writer_schema.json()
+
+
+def _table_state(snap: dict[str, Any]) -> dict[str, Any]:
+    """The table-describing header fields a snapshot carries forward."""
+    return {
+        "schema_json": snap.get("schema_json", ""),
+        "partition_spec": snap.get("partition_spec", []),
+        "sort_order": snap.get("sort_order", []),
+    }
+
+
+def _commit_snapshot(
+    path: str,
+    operation: str,
+    own: dict[str, Any],
+    added: list[dict[str, Any]] = (),
+    removed: set[str] = frozenset(),
+    check=None,
+    header=None,
+    base: dict[str, Any] | None = None,
+    inherit: bool = True,
+    keep_seq: bool = False,
+    lineage: list[dict[str, Any]] | None = None,
+    retries: int = 3,
+) -> dict[str, Any]:
+    """The one commit loop of the main namespace (Iceberg's optimistic
+    commit). Each attempt reads the head, validates it, stamps the new
+    entries' sequence number, builds the snapshot and CASes it in with
+    ``_commit``. Only ``_commit``'s own CommitConflict (the head moved)
+    is retried, against the new head; the data files were staged before
+    the loop, so a retry re-runs only the metadata step. A validation
+    failure raised inside an attempt propagates at once.
+
+    - ``removed``: paths the snapshot drops from ``base``. Each must still
+      be in the head, else CommitConflict: a rival removed a file this
+      operation rewrote, and committing would resurrect replaced rows.
+    - ``check(parent, head)``: the operation's own validation; raises.
+    - ``added``: new entries, stamped ``seq`` = the new snapshot id — the
+      data sequence number (Iceberg's data_sequence_number) that lets an
+      equality delete mask only files that pre-date it. ``keep_seq``
+      leaves a pre-stamped seq alone (compaction).
+    - ``header(head)``: the schema_json/partition_spec/sort_order fields
+      that differ from the head's.
+    - ``base``: the snapshot whose manifest is edited (default the head;
+      ``{}`` starts from an empty one).
+    - ``own``: the summary; with ``inherit`` the head's state keys are
+      carried forward (``_inherited_summary``).
+
+    Returns the committed snapshot."""
+    last: Exception | None = None
+    for _ in range(max(retries, 1)):
+        parent = current_snapshot_id(path)
+        head = snapshot(path, parent) if parent else None
+        if removed and not removed <= {e["path"] for e in head["manifest"]}:
+            raise CommitConflict(
+                f"{path}: {operation} candidates no longer in head {parent}"
+            )
+        if check is not None:
+            check(parent, head)
+        if not keep_seq:
+            for e in added:
+                e["seq"] = parent + 1
+        snap = {
+            "snapshot_id": parent + 1,
+            "parent_id": parent,
+            "timestamp_ms": int(time.time() * 1000),
+            "operation": operation,
+            **_table_state(head or {}),
+            **(header(head) if header is not None else {}),
+            # O(delta) metadata: untouched segments are shared by ref,
+            # the new entries become ONE segment (re-written per attempt)
+            "manifest_list": _segments_minus_plus(
+                path, head if base is None else base, removed, added
+            ),
+            "summary": _inherited_summary(head or {}, own) if inherit else own,
+        }
+        if lineage is not None:
+            snap["lineage"] = lineage
+        try:
+            _commit(path, snap)
+            return snap
+        except CommitConflict as e:  # head moved: rebuild metadata, retry
+            last = e
+    raise last  # type: ignore[misc]
+
+
 def append(
     df: DataFrame,
     path: str,
@@ -505,17 +716,9 @@ def append(
                 partition_by = head_snap.get("partition_spec")
             if sort_by is None:  # table-level sort-order inheritance
                 sort_by = head_snap.get("sort_order")
-    commit_uuid = uuid.uuid4().hex
-    data_dir = os.path.join(path, _DATA, commit_uuid)
-    if partition_by:
-        write_df, pcols = _partition_columns(df, partition_by)
-        if sort_by:
-            write_df = _apply_sort_order(write_df, sort_by, pcols)
-        write_df.write.partitionBy(*pcols).parquet(data_dir, mode="errorifexists")
-    else:
-        write_df = _apply_sort_order(df, sort_by, []) if sort_by else df
-        write_df.write.parquet(data_dir, mode="errorifexists")
-    new_files = _list_new_files(path, data_dir)
+    new_files = _stage_table_write(
+        path, df, _staging_dir(path), partition_by, sort_by
+    )
     return _commit_new_files(
         path,
         new_files,
@@ -543,57 +746,38 @@ def _commit_new_files(
     sort_by: list[str] | None = None,
 ) -> int:
     """The metadata half of ``append``: commit already-written (staged,
-    invisible) data files as a new snapshot. Shared by ``append`` and the
-    Python DataSource writers (``ice_datasource``), whose executors write
-    the files and ship their paths back as commit messages — the same
-    split Iceberg's Spark writer uses (tasks write, the driver commits)."""
-    last: Exception | None = None
-    for _ in range(max(retries, 1)):
-        parent = current_snapshot_id(path)
-        if precondition is not None and not precondition(path, parent):
-            raise PreconditionFailed(f"{path}: append precondition failed at head {parent}")
-        # data sequence number (Iceberg's data_sequence_number): stamped
-        # with the commit's snapshot id so equality deletes apply only to
-        # files that PRE-date them (a recrawl re-adding a taken-down url
-        # after the takedown is visible). Re-stamped per CAS retry — the
-        # id isn't known until the commit lands, so the new files' segment
-        # is written per attempt (one tiny json; conflicts are rare).
-        for e in new_files:
-            e["seq"] = parent + 1
-        # O(delta) metadata: the new files become ONE immutable segment;
-        # each (re)try re-derives only the parent's segment REFS
-        new_seg = _write_segment(path, new_files) if new_files else None
-        schema = writer_schema
-        base_refs: list[dict[str, Any]] = []
-        if parent and operation == "append":
-            parent_snap = snapshot(path, parent)
-            base_refs = _segments_minus_plus(path, parent_snap, set(), [])
-            if parent_snap.get("schema_json"):
-                from pyspark.sql.types import StructType
+    invisible) data files as a new snapshot through ``_commit_snapshot``.
+    Shared by ``append``, the ice extraction sink and the Python
+    DataSource writers (``ice_datasource``), whose executors write the
+    files and ship their paths back as commit messages — the same split
+    Iceberg's Spark writer uses (tasks write, the driver commits); build
+    ``new_files`` with ``_entries_for_files``. 'append' adds to the head's
+    files and evolves its schema; any other operation makes ``new_files``
+    the whole table under ``writer_schema``. The summary is ``summary``
+    plus ``n_new_files``/``n_new_rows``, nothing inherited."""
 
-                schema = _evolve_schema(
-                    StructType.fromJson(json.loads(parent_snap["schema_json"])),
-                    writer_schema,
-                )
-        snap = {
-            "snapshot_id": parent + 1,
-            "parent_id": parent,
-            "timestamp_ms": int(time.time() * 1000),
-            "operation": operation,
-            "schema_json": schema.json(),
+    def check(parent: int, _head) -> None:
+        if precondition is not None and not precondition(path, parent):
+            raise PreconditionFailed(
+                f"{path}: append precondition failed at head {parent}"
+            )
+
+    def header(head) -> dict[str, Any]:
+        return {
+            "schema_json": _evolved_schema_json(head, writer_schema)
+            if operation == "append"
+            else writer_schema.json(),
             "partition_spec": partition_by or [],
             "sort_order": sort_by or [],
-            "manifest_list": base_refs + ([new_seg] if new_seg else []),
-            "summary": dict(summary or {}, n_new_files=len(new_files),
-                            n_new_rows=sum(e["rows"] for e in new_files)),
         }
-        if lineage is not None:
-            snap["lineage"] = lineage
-        try:
-            return _commit(path, snap)
-        except CommitConflict as e:  # head moved: rebuild metadata, retry
-            last = e
-    raise last  # type: ignore[misc]
+
+    own = dict(summary or {}, n_new_files=len(new_files),
+               n_new_rows=sum(e["rows"] for e in new_files))
+    return _commit_snapshot(
+        path, operation, own, added=new_files, check=check, header=header,
+        base=None if operation == "append" else {}, inherit=False,
+        lineage=lineage, retries=retries,
+    )["snapshot_id"]
 
 
 def overwrite(df: DataFrame, path: str, **kw: Any) -> int:
@@ -604,25 +788,11 @@ def rollback(path: str, to_snapshot_id: int) -> int:
     """Commit a NEW snapshot whose file list equals an old snapshot's —
     the table's current state moves back without rewriting history."""
     old = snapshot(path, to_snapshot_id)
-    for _ in range(3):
-        parent = current_snapshot_id(path)
-        snap = {
-            "snapshot_id": parent + 1,
-            "parent_id": parent,
-            "timestamp_ms": int(time.time() * 1000),
-            "operation": "rollback",
-            "schema_json": old.get("schema_json", ""),
-            "partition_spec": old.get("partition_spec", []),
-            "sort_order": old.get("sort_order", []),
-            # time travel shares segments: a rollback is a ref copy
-            "manifest_list": _segments_minus_plus(path, old, set(), []),
-            "summary": {"rolled_back_to": to_snapshot_id},
-        }
-        try:
-            return _commit(path, snap)
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"{path}: rollback lost 3 races")
+    # time travel shares segments: a rollback is a ref copy
+    return _commit_snapshot(
+        path, "rollback", {"rolled_back_to": to_snapshot_id}, base=old,
+        header=lambda _head: _table_state(old), inherit=False,
+    )["snapshot_id"]
 
 
 def read(
@@ -665,11 +835,14 @@ def _read_files(spark: SparkSession, snap: dict[str, Any], files: list[str]):
     infers the schema from one arbitrary file and silently drops the
     others' columns."""
     if snap.get("schema_json"):
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(json.loads(snap["schema_json"]))
-        return spark.read.schema(schema).parquet(*files)
+        return spark.read.schema(_schema(snap)).parquet(*files)
     return spark.read.parquet(*files)
+
+
+def _empty_read(spark: SparkSession, snap: dict[str, Any]) -> DataFrame:
+    """A read of no rows under the snapshot's schema."""
+    schema = _schema(snap) if snap.get("schema_json") else "url string"
+    return spark.createDataFrame([], schema)
 
 
 def read_incremental(
@@ -751,14 +924,7 @@ def read_incremental(
         )
     to_snap = snapshot(path, to_sid)
     if not files:
-        from pyspark.sql.types import StructType
-
-        schema = (
-            StructType.fromJson(json.loads(to_snap["schema_json"]))
-            if to_snap.get("schema_json")
-            else "url string"
-        )
-        return spark.createDataFrame([], schema)
+        return _empty_read(spark, to_snap)
     return _read_files(spark, to_snap, files)
 
 
@@ -909,7 +1075,7 @@ def read_changelog(
 
         to_snap = snapshot(path, to_sid) if to_sid else None
         fields = (
-            StructType.fromJson(json.loads(to_snap["schema_json"])).fields
+            _schema(to_snap).fields
             if to_snap and to_snap.get("schema_json")
             else []
         )
@@ -1229,38 +1395,13 @@ def compact(
     cand = [e for es in groups.values() for e in es]
     cand_paths = {e["path"] for e in cand}
     n_rows_in = sum(e["rows"] for e in cand)
-    commit_uuid = uuid.uuid4().hex
-    data_dir = os.path.join(path, _DATA, commit_uuid)
+    data_dir = _staging_dir(path)
     new_files: list[dict[str, Any]] = []
     for gi, ((part, _app), es) in enumerate(sorted(groups.items())):
-        n_out = max(1, -(-sum(e["bytes"] for e in es) // target_bytes))
-        gdir = os.path.join(data_dir, f"g{gi:04d}")
-        # rewrite under the table schema: candidates may predate an
-        # add-column evolution, and the compacted files must carry the
-        # full column set
-        df = _read_files(
-            spark, base_snap, [os.path.join(path, e["path"]) for e in es]
+        listed = _stage_group_rewrite(
+            spark, path, base_snap, es, os.path.join(data_dir, f"g{gi:04d}"),
+            part, target_bytes=target_bytes, zorder_by=zorder_by,
         )
-        sort_order = base_snap.get("sort_order") or []
-        out_dir = os.path.join(gdir, part) if part else gdir
-        if zorder_by:
-            # Z-order rewrite (Iceberg's rewrite_data_files sort strategy
-            # with a z-order): multi-column clustering so manifest-stat
-            # pruning is selective on EVERY z-ordered column at once —
-            # a linear sort gives a point lookup one selective dimension,
-            # a z-order gives a d-dimensional box query ~O(files^(1-1/d))
-            df.withColumn("_z", _zvalue_col(df, zorder_by)).repartitionByRange(
-                n_out, "_z"
-            ).sortWithinPartitions("_z").drop("_z").write.parquet(
-                out_dir, mode="errorifexists"
-            )
-        elif sort_order:  # re-cluster: compaction must not undo the sort order
-            df.repartitionByRange(n_out, *sort_order).sortWithinPartitions(
-                *sort_order
-            ).write.parquet(out_dir, mode="errorifexists")
-        else:
-            df.repartition(n_out).write.parquet(out_dir, mode="errorifexists")
-        listed = _list_new_files(path, gdir)
         # the merged file inherits the group's OLDEST sequence: safe
         # because members share an applicable-delete-set (no existing
         # delete distinguishes them) and future deletes post-date all
@@ -1273,43 +1414,20 @@ def compact(
         raise RuntimeError(
             f"{path}: compaction rewrote {n_rows_in} rows into {n_rows_out}"
         )
-    last: Exception | None = None
-    for _ in range(max(retries, 1)):
-        parent = current_snapshot_id(path)
-        head = snapshot(path, parent)
-        head_paths = {e["path"] for e in head["manifest"]}
-        if not cand_paths <= head_paths:
-            raise CommitConflict(
-                f"{path}: compaction candidates no longer in head {parent}"
-            )
-        own = {
-            "compacted_files": len(cand),
-            "compacted_bytes": sum(e["bytes"] for e in cand),
-            "n_new_files": len(new_files),
-            "n_new_rows": 0,  # row-preserving: no logical rows added
-            "rewritten_rows": n_rows_out,
-        }
-        if zorder_by:
-            own["zorder_by"] = list(zorder_by)
-        snap = {
-            "snapshot_id": parent + 1,
-            "parent_id": parent,
-            "timestamp_ms": int(time.time() * 1000),
-            "operation": "replace",
-            "schema_json": head.get("schema_json", ""),
-            "partition_spec": head.get("partition_spec", []),
-            "sort_order": head.get("sort_order", []),
-            "manifest_list": _segments_minus_plus(
-                path, head, cand_paths, new_files
-            ),
-            "summary": _inherited_summary(head, own),
-        }
-        try:
-            _commit(path, snap)
-            return snap["summary"] | {"snapshot_id": snap["snapshot_id"]}
-        except CommitConflict as e:
-            last = e
-    raise last  # type: ignore[misc]
+    own = {
+        "compacted_files": len(cand),
+        "compacted_bytes": sum(e["bytes"] for e in cand),
+        "n_new_files": len(new_files),
+        "n_new_rows": 0,  # row-preserving: no logical rows added
+        "rewritten_rows": n_rows_out,
+    }
+    if zorder_by:
+        own["zorder_by"] = list(zorder_by)
+    snap = _commit_snapshot(
+        path, "replace", own, added=new_files, removed=cand_paths,
+        keep_seq=True, retries=retries,
+    )
+    return snap["summary"] | {"snapshot_id": snap["snapshot_id"]}
 
 
 # summary keys that DESCRIBE AN OPERATION rather than table state: they
@@ -1379,31 +1497,21 @@ def delete_where(
     rows_in = sum(e["rows"] for e in cand)
     from pyspark.sql import functions as F
 
-    commit_uuid = uuid.uuid4().hex
-    data_dir = os.path.join(path, _DATA, commit_uuid)
+    data_dir = _staging_dir(path)
     groups: dict[str, list[dict[str, Any]]] = {}
     for e in cand:  # rewrite within partitions: clustering survives
         groups.setdefault(e.get("partition", ""), []).append(e)
-    for part, es in sorted(groups.items()):  # "" (root) sorts first
-        df = _read_files(
-            spark, base_snap, [os.path.join(path, e["path"]) for e in es]
+    # DELETE WHERE semantics: a NULL condition keeps the row (only TRUE
+    # deletes), hence the coalesce before negation
+    deleted = F.coalesce(F.expr(condition).cast("boolean"), F.lit(False))
+    new_files: list[dict[str, Any]] = []
+    # "" (root) sorts first: its walk of data_dir lists only its own files
+    # because no partition subdirectory has been written yet
+    for part, es in sorted(groups.items()):
+        new_files += _stage_group_rewrite(
+            spark, path, base_snap, es, data_dir, part,
+            keep=lambda df: df.where(~deleted),
         )
-        # DELETE WHERE semantics: a NULL condition keeps the row (only
-        # TRUE deletes), hence the coalesce before negation
-        keep_df = df.where(
-            ~F.coalesce(F.expr(condition).cast("boolean"), F.lit(False))
-        )
-        n_files = max(1, -(-sum(e["bytes"] for e in es) // (512 << 20)))
-        gdir = os.path.join(data_dir, part) if part else data_dir
-        sort_order = base_snap.get("sort_order") or []
-        if sort_order:  # deletes must not undo the table sort order
-            keep_df = keep_df.repartitionByRange(
-                n_files, *sort_order
-            ).sortWithinPartitions(*sort_order)
-        else:
-            keep_df = keep_df.repartition(n_files)
-        keep_df.write.parquet(gdir, mode="errorifexists")
-    new_files = _list_new_files(path, data_dir)
     rows_out = sum(e["rows"] for e in new_files)
     if rows_out == rows_in:  # nothing matched: drop the staged copy
         for e in new_files:
@@ -1413,44 +1521,18 @@ def delete_where(
         raise RuntimeError(
             f"{path}: delete rewrote {rows_in} rows into {rows_out}"
         )
-    last: Exception | None = None
-    for _ in range(max(retries, 1)):
-        parent = current_snapshot_id(path)
-        head = snapshot(path, parent)
-        head_paths = {e["path"] for e in head["manifest"]}
-        if not cand_paths <= head_paths:
-            raise CommitConflict(
-                f"{path}: delete candidates no longer in head {parent}"
-            )
-        for e in new_files:
-            e["seq"] = parent + 1
-        own = {
-            "deleted_rows": rows_in - rows_out,
-            "rewritten_files": len(cand),
-            "n_new_files": len(new_files),
-            "n_new_rows": 0,
-            "condition": condition,
-        }
-        snap = {
-            "snapshot_id": parent + 1,
-            "parent_id": parent,
-            "timestamp_ms": int(time.time() * 1000),
-            "operation": "delete",
-            "schema_json": head.get("schema_json", ""),
-            "partition_spec": head.get("partition_spec", []),
-            "sort_order": head.get("sort_order", []),
-            "manifest_list": _segments_minus_plus(
-                path, head, cand_paths,
-                [e for e in new_files if e["rows"] > 0],
-            ),
-            "summary": _inherited_summary(head, own),
-        }
-        try:
-            _commit(path, snap)
-            return snap["summary"] | {"snapshot_id": snap["snapshot_id"]}
-        except CommitConflict as e:
-            last = e
-    raise last  # type: ignore[misc]
+    own = {
+        "deleted_rows": rows_in - rows_out,
+        "rewritten_files": len(cand),
+        "n_new_files": len(new_files),
+        "n_new_rows": 0,
+        "condition": condition,
+    }
+    snap = _commit_snapshot(
+        path, "delete", own, added=new_files, removed=cand_paths,
+        retries=retries,
+    )
+    return snap["summary"] | {"snapshot_id": snap["snapshot_id"]}
 
 
 # ------------------------ merge-on-read deletes ----------------------------
@@ -1573,20 +1655,9 @@ def _scan_entries(
     repartitions them to one file); grouping adds no shuffle."""
     data, dels = _split_entries(snap["manifest"])
     data = _prune_entries(data, where)
-
-    def _empty():
-        from pyspark.sql.types import StructType
-
-        schema = (
-            StructType.fromJson(json.loads(snap["schema_json"]))
-            if snap.get("schema_json")
-            else "url string"
-        )
-        return spark.createDataFrame([], schema)
-
     if not dels:
         files = [os.path.join(path, e["path"]) for e in data]
-        return _read_files(spark, snap, files) if files else _empty()
+        return _read_files(spark, snap, files) if files else _empty_read(spark, snap)
     from pyspark.sql import functions as F
 
     eq_dels, pos_dels = _eq_pos(dels)
@@ -1605,7 +1676,7 @@ def _scan_entries(
         )
         groups.setdefault(gkey, []).append(os.path.join(path, e["path"]))
     if not groups:
-        return _empty()
+        return _empty_read(spark, snap)
     parts = []
     for (dpaths, ppaths), files in sorted(groups.items()):
         df = _read_files(spark, snap, files)
@@ -1662,20 +1733,23 @@ def delete_keys(
     """
     if current_snapshot_id(path) == 0:
         return None
-    base = snapshot(path)
-    _, dels = _split_entries(base["manifest"])
-    eq_pend, pos_pend = _eq_pos(dels)
-    if pos_pend:
-        raise ValueError(
-            f"{path}: positional deletes are pending — one delete kind at "
-            "a time (run rewrite_deletes() first)"
-        )
-    for d in eq_pend:
-        if d["key"] != key:
+
+    def check(_parent: int, head: dict[str, Any]) -> None:
+        eq_pend, pos_pend = _eq_pos(_split_entries(head["manifest"])[1])
+        if pos_pend:
             raise ValueError(
-                f"{path}: pending deletes use key {d['key']!r}; a table "
-                f"holds one equality-delete key at a time (got {key!r})"
+                f"{path}: positional deletes are pending — one delete kind "
+                "at a time (run rewrite_deletes() first)"
             )
+        for d in eq_pend:
+            if d["key"] != key:
+                raise ValueError(
+                    f"{path}: pending deletes use key {d['key']!r}; a table "
+                    f"holds one equality-delete key at a time (got {key!r})"
+                )
+
+    base = snapshot(path)
+    check(0, base)
     if isinstance(keys, DataFrame):
         if key not in keys.columns:
             raise ValueError(f"delete_keys DataFrame lacks column {key!r}")
@@ -1687,67 +1761,31 @@ def delete_keys(
         from pyspark.sql.types import StructField, StructType
 
         if base.get("schema_json"):
-            tbl = StructType.fromJson(json.loads(base["schema_json"]))
-            field = tbl[key]
+            field = _schema(base)[key]
             schema = StructType([StructField(key, field.dataType, True)])
         else:
             schema = f"{key} string"
         keys_df = spark.createDataFrame([(k,) for k in keys], schema).distinct()
-    commit_uuid = uuid.uuid4().hex
-    data_dir = os.path.join(path, _DATA, commit_uuid)
     # one file: the reader broadcast-joins it, never shuffles on it
-    keys_df.coalesce(1).write.parquet(data_dir, mode="errorifexists")
-    listed = _list_new_files(path, data_dir)
-    n_keys = sum(e["rows"] for e in listed)
-    if n_keys == 0:
-        for e in listed:
-            os.remove(os.path.join(path, e["path"]))
+    listed = _write_staged(path, keys_df.coalesce(1), _staging_dir(path))
+    if not listed:
         return None
+    n_keys = sum(e["rows"] for e in listed)
     for e in listed:
         e["content"] = _EQ_DELETES
         e["key"] = key
         e["n_keys"] = e["rows"]
         e["rows"] = 0  # logical table rows: a delete file adds none
-    last: Exception | None = None
-    for _ in range(max(retries, 1)):
-        parent = current_snapshot_id(path)
-        head = snapshot(path, parent)
-        head_eq, head_pos = _eq_pos(_split_entries(head["manifest"])[1])
-        if head_pos:
-            raise ValueError(
-                f"{path}: positional deletes are pending — one delete "
-                "kind at a time (run rewrite_deletes() first)"
-            )
-        for d in head_eq:
-            if d["key"] != key:
-                raise ValueError(
-                    f"{path}: pending deletes use key {d['key']!r}"
-                )
-        for e in listed:
-            e["seq"] = parent + 1
-        own = dict(summary or {}) | {
-            "delete_key": key,
-            "n_delete_keys": n_keys,
-            "n_new_files": 0,
-            "n_new_rows": 0,
-        }
-        snap = {
-            "snapshot_id": parent + 1,
-            "parent_id": parent,
-            "timestamp_ms": int(time.time() * 1000),
-            "operation": "delete",
-            "schema_json": head.get("schema_json", ""),
-            "partition_spec": head.get("partition_spec", []),
-            "sort_order": head.get("sort_order", []),
-            "manifest_list": _segments_minus_plus(path, head, set(), listed),
-            "summary": _inherited_summary(head, own),
-        }
-        try:
-            _commit(path, snap)
-            return snap["summary"] | {"snapshot_id": snap["snapshot_id"]}
-        except CommitConflict as e:
-            last = e
-    raise last  # type: ignore[misc]
+    own = dict(summary or {}) | {
+        "delete_key": key,
+        "n_delete_keys": n_keys,
+        "n_new_files": 0,
+        "n_new_rows": 0,
+    }
+    snap = _commit_snapshot(
+        path, "delete", own, added=listed, check=check, retries=retries
+    )
+    return snap["summary"] | {"snapshot_id": snap["snapshot_id"]}
 
 
 def scrub_where(
@@ -1784,14 +1822,17 @@ def scrub_where(
         return None
     from pyspark.sql import functions as F
 
+    def no_eq_pending(snap: dict[str, Any]) -> None:
+        if _eq_pos(_split_entries(snap["manifest"])[1])[0]:
+            raise ValueError(
+                f"{path}: equality deletes are pending — one delete kind "
+                "at a time (run rewrite_deletes() first)"
+            )
+
     base = snapshot(path)
+    no_eq_pending(base)
     data, dels = _split_entries(base["manifest"])
-    eq_pend, pos_pend = _eq_pos(dels)
-    if eq_pend:
-        raise ValueError(
-            f"{path}: equality deletes are pending — one delete kind at a "
-            "time (run rewrite_deletes() first)"
-        )
+    pos_pend = _eq_pos(dels)[1]
     cand = _prune_entries(data, prune)
     if not cand:
         return None
@@ -1810,16 +1851,11 @@ def scrub_where(
             *[os.path.join(path, d["path"]) for d in pos_pend]
         ).select("file_path", "pos")
         matched = matched.join(prev, ["file_path", "pos"], "left_anti")
-    commit_uuid = uuid.uuid4().hex
-    data_dir = os.path.join(path, _DATA, commit_uuid)
     # one file: readers broadcast it, never shuffle on it
-    matched.coalesce(1).write.parquet(data_dir, mode="errorifexists")
-    listed = _list_new_files(path, data_dir)
-    n_pos = sum(e["rows"] for e in listed)
-    if n_pos == 0:
-        for e in listed:
-            os.remove(os.path.join(path, e["path"]))
+    listed = _write_staged(path, matched.coalesce(1), _staging_dir(path))
+    if not listed:
         return None
+    n_pos = sum(e["rows"] for e in listed)
     # exact named-file set, recorded in the entry for O(metadata) read
     # planning (which data files pay the mask) and compaction exclusion
     named = sorted(
@@ -1833,62 +1869,36 @@ def scrub_where(
         e["n_pos"] = e["rows"]
         e["rows"] = 0  # logical table rows: a delete file adds none
         e["files"] = named
-    last: Exception | None = None
-    for _ in range(max(retries, 1)):
-        parent = current_snapshot_id(path)
-        head = snapshot(path, parent)
-        head_eq, _ = _eq_pos(_split_entries(head["manifest"])[1])
-        if head_eq:
-            raise ValueError(
-                f"{path}: equality deletes are pending — one delete kind "
-                "at a time (run rewrite_deletes() first)"
-            )
-        head_data_paths = {
-            e["path"] for e in _split_entries(head["manifest"])[0]
-        }
+    base_pos = {d["path"] for d in pos_pend}
+
+    def check(parent: int, head: dict[str, Any]) -> None:
+        no_eq_pending(head)
+        data, dels = _split_entries(head["manifest"])
         # a rival rewrite (compact/overwrite/fold) of a named file would
         # invalidate the recorded addresses — abort instead of masking
         # the wrong rows
-        if not set(named) <= head_data_paths:
+        if not set(named) <= {e["path"] for e in data}:
             raise CommitConflict(
                 f"{path}: scrub-addressed files no longer in head {parent}"
             )
         # a rival scrub landing since our scan makes the stacked-mask
         # anti-join stale (positions could double-mask and the changelog
         # would re-report them) — lose the race cleanly
-        head_pos, _base_pos = (
-            {d["path"] for d in _eq_pos(_split_entries(head["manifest"])[1])[1]},
-            {d["path"] for d in pos_pend},
-        )
-        if head_pos != _base_pos:
+        if {d["path"] for d in _eq_pos(dels)[1]} != base_pos:
             raise CommitConflict(
                 f"{path}: a rival positional delete landed at head {parent}"
             )
-        for e in listed:
-            e["seq"] = parent + 1
-        own = {
-            "n_pos_deletes": n_pos,
-            "pos_files": len(named),
-            "n_new_files": 0,
-            "n_new_rows": 0,
-        }
-        snap = {
-            "snapshot_id": parent + 1,
-            "parent_id": parent,
-            "timestamp_ms": int(time.time() * 1000),
-            "operation": "delete",
-            "schema_json": head.get("schema_json", ""),
-            "partition_spec": head.get("partition_spec", []),
-            "sort_order": head.get("sort_order", []),
-            "manifest_list": _segments_minus_plus(path, head, set(), listed),
-            "summary": _inherited_summary(head, own),
-        }
-        try:
-            _commit(path, snap)
-            return snap["summary"] | {"snapshot_id": snap["snapshot_id"]}
-        except CommitConflict as e:
-            last = e
-    raise last  # type: ignore[misc]
+
+    own = {
+        "n_pos_deletes": n_pos,
+        "pos_files": len(named),
+        "n_new_files": 0,
+        "n_new_rows": 0,
+    }
+    snap = _commit_snapshot(
+        path, "delete", own, added=listed, check=check, retries=retries
+    )
+    return snap["summary"] | {"snapshot_id": snap["snapshot_id"]}
 
 
 def rewrite_deletes(
@@ -1941,82 +1951,47 @@ def rewrite_deletes(
             affected.append((e, app, pos_app))
     removed_paths = {e["path"] for e, _, _ in affected} | set(by_path)
     rows_in = sum(e["rows"] for e, _, _ in affected)
-    commit_uuid = uuid.uuid4().hex
-    data_dir = os.path.join(path, _DATA, commit_uuid)
+    data_dir = _staging_dir(path)
     groups: dict[
         tuple[str, tuple[str, ...], tuple[str, ...]], list[dict[str, Any]]
     ] = {}
     for e, app, pos_app in affected:
         groups.setdefault((e.get("partition", ""), app, pos_app), []).append(e)
     new_files: list[dict[str, Any]] = []
-    sort_order = base_snap.get("sort_order") or []
     for gi, ((part, app, pos_app), es) in enumerate(sorted(groups.items())):
-        df = _read_files(
-            spark, base_snap, [os.path.join(path, e["path"]) for e in es]
+
+        def keep(df: DataFrame, app=app, pos_app=pos_app) -> DataFrame:
+            if pos_app:  # position masks first: raw-file ordinals
+                df = _apply_pos_mask(spark, path, df, pos_app)
+            if app:
+                keys_df = spark.read.parquet(
+                    *[os.path.join(path, p) for p in app]
+                ).select(key).distinct()
+                df = df.join(F.broadcast(keys_df), key, "left_anti")
+            return df
+
+        new_files += _stage_group_rewrite(
+            spark, path, base_snap, es, os.path.join(data_dir, f"g{gi:04d}"),
+            part, keep=keep,
         )
-        keep_df = df
-        if pos_app:  # position masks first: raw-file ordinals
-            keep_df = _apply_pos_mask(spark, path, keep_df, pos_app)
-        if app:
-            keys_df = spark.read.parquet(
-                *[os.path.join(path, p) for p in app]
-            ).select(key).distinct()
-            keep_df = keep_df.join(F.broadcast(keys_df), key, "left_anti")
-        n_files = max(1, -(-sum(e["bytes"] for e in es) // (512 << 20)))
-        gdir = os.path.join(data_dir, f"g{gi:04d}")
-        if sort_order:
-            keep_df = keep_df.repartitionByRange(
-                n_files, *sort_order
-            ).sortWithinPartitions(*sort_order)
-        else:
-            keep_df = keep_df.repartition(n_files)
-        keep_df.write.parquet(
-            os.path.join(gdir, part) if part else gdir, mode="errorifexists"
-        )
-        new_files.extend(_list_new_files(path, gdir))
     rows_out = sum(e["rows"] for e in new_files)
     if rows_out > rows_in:
         raise RuntimeError(
             f"{path}: rewrite_deletes grew {rows_in} rows into {rows_out}"
         )
-    last: Exception | None = None
-    for _ in range(max(retries, 1)):
-        parent = current_snapshot_id(path)
-        head = snapshot(path, parent)
-        head_paths = {e["path"] for e in head["manifest"]}
-        if not removed_paths <= head_paths:
-            raise CommitConflict(
-                f"{path}: rewrite candidates no longer in head {parent}"
-            )
-        for e in new_files:
-            e["seq"] = parent + 1  # post-fold: no pending deletes remain
-        own = {
-            "deleted_rows": rows_in - rows_out,
-            "folded_delete_files": len(dels),
-            "rewritten_files": len(affected),
-            "n_new_files": len(new_files),
-            "n_new_rows": 0,
-        }
-        snap = {
-            "snapshot_id": parent + 1,
-            "parent_id": parent,
-            "timestamp_ms": int(time.time() * 1000),
-            "operation": "delete",
-            "schema_json": head.get("schema_json", ""),
-            "partition_spec": head.get("partition_spec", []),
-            "sort_order": head.get("sort_order", []),
-            "manifest_list": _segments_minus_plus(
-                path, head, removed_paths,
-                [e for e in new_files if e["rows"] > 0],
-            ),
-            "summary": _inherited_summary(head, own),
-        }
-        try:
-            _commit(path, snap)
-            return snap["summary"] | {"snapshot_id": snap["snapshot_id"]}
-        except CommitConflict as e:
-            last = e
-    raise last  # type: ignore[misc]
+    own = {
+        "deleted_rows": rows_in - rows_out,
+        "folded_delete_files": len(dels),
+        "rewritten_files": len(affected),
+        "n_new_files": len(new_files),
+        "n_new_rows": 0,
+    }
+    # post-fold: no pending deletes remain, so the new files' seq is moot
+    snap = _commit_snapshot(
+        path, "delete", own, added=new_files, removed=removed_paths,
+        retries=retries,
+    )
+    return snap["summary"] | {"snapshot_id": snap["snapshot_id"]}
 
 
 # ------------------------------ branches -----------------------------------
@@ -2070,26 +2045,10 @@ def branch_snapshot(path: str, name: str, seq: int | None = None) -> dict[str, A
 def _branch_commit(path: str, name: str, snap: dict[str, Any]) -> int:
     """Hard-link CAS on the branch's own sequence namespace — two writers
     racing for the same branch seq: one wins, the other retries."""
-    os.makedirs(_meta_dir(path), exist_ok=True)
-    if "manifest_list" in snap:  # two-level: never persist the flat view
-        snap = {
-            k: v for k, v in snap.items() if k not in ("manifest", "_segments")
-        }
-    target = _branch_path(path, name, snap["branch_seq"])
-    tmp = f"{target}.tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(snap, f)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, target)
-    except FileExistsError:
-        os.unlink(tmp)
-        raise CommitConflict(
-            f"{path}: branch {name!r} seq {snap['branch_seq']} already committed"
-        )
-    os.unlink(tmp)
-    return snap["branch_seq"]
+    seq = snap["branch_seq"]
+    _cas_write(path, _branch_path(path, name, seq), snap,
+               f"branch {name!r} seq {seq}")
+    return seq
 
 
 def create_branch(
@@ -2135,39 +2094,22 @@ def branch_append(
     if not branch_head_seq(path, name):
         raise NoSuchSnapshot(f"{path}: branch {name!r} does not exist")
     head = branch_snapshot(path, name)
-    partition_by = head.get("partition_spec") or None
-    sort_by = head.get("sort_order") or None
-    commit_uuid = uuid.uuid4().hex
-    data_dir = os.path.join(path, _DATA, commit_uuid)
-    if partition_by:
-        write_df, pcols = _partition_columns(df, partition_by)
-        if sort_by:
-            write_df = _apply_sort_order(write_df, sort_by, pcols)
-        write_df.write.partitionBy(*pcols).parquet(data_dir, mode="errorifexists")
-    else:
-        write_df = _apply_sort_order(df, sort_by, []) if sort_by else df
-        write_df.write.parquet(data_dir, mode="errorifexists")
-    new_files = _list_new_files(path, data_dir)
+    new_files = _stage_table_write(
+        path, df, _staging_dir(path),
+        head.get("partition_spec"), head.get("sort_order"),
+    )
     for e in new_files:
         e["seq"] = -1  # staged: newer than any committed delete; publish re-stamps
     last: Exception | None = None
     for _ in range(max(retries, 1)):
         parent = branch_snapshot(path, name)
-        schema = df.schema
-        if parent.get("schema_json"):
-            from pyspark.sql.types import StructType
-
-            schema = _evolve_schema(
-                StructType.fromJson(json.loads(parent["schema_json"])),
-                df.schema,
-            )
         snap = {
             "branch": name,
             "branch_seq": parent["branch_seq"] + 1,
             "base_snapshot_id": parent["base_snapshot_id"],
             "timestamp_ms": int(time.time() * 1000),
             "operation": "append",
-            "schema_json": schema.json(),
+            "schema_json": _evolved_schema_json(parent, df.schema),
             "partition_spec": parent.get("partition_spec", []),
             "sort_order": parent.get("sort_order", []),
             "manifest_list": _segments_minus_plus(
@@ -2249,11 +2191,8 @@ def publish_branch(
     # entries get the publish commit's sequence (they become ordinary
     # main data — committed NOW, so only deletes after the publish apply)
     added = [dict(e) for e in b["manifest"] if e["path"] not in base_paths]
-    last: Exception | None = None
-    for _ in range(max(retries, 1)):
-        parent = current_snapshot_id(path)
-        for e in added:
-            e["seq"] = parent + 1
+
+    def check(parent: int, _head) -> None:
         if parent != base_sid and not rebase:
             raise PreconditionFailed(
                 f"{path}: main moved {base_sid} -> {parent} since branch "
@@ -2263,45 +2202,27 @@ def publish_branch(
             raise PreconditionFailed(
                 f"{path}: publish precondition failed at head {parent}"
             )
-        head = snapshot(path, parent) if parent else None
+
+    def header(head) -> dict[str, Any]:
         schema_json = b.get("schema_json", "")
         if rebase and head is not None and head.get("schema_json"):
-            from pyspark.sql.types import StructType
-
-            main_schema = StructType.fromJson(json.loads(head["schema_json"]))
-            branch_schema = (
-                StructType.fromJson(json.loads(b["schema_json"]))
-                if b.get("schema_json")
-                else main_schema
+            schema_json = _evolved_schema_json(
+                head, _schema(b if schema_json else head)
             )
-            schema_json = _evolve_schema(main_schema, branch_schema).json()
-        own = {
-            "published_branch": name,
-            "published_seq": b["branch_seq"],
-            "n_new_files": len(added),
-            "n_new_rows": sum(e["rows"] for e in added),
-        }
-        # main-head state keys < branch-head state keys < publish's own
-        summary = _inherited_summary(
-            head or {}, _inherited_summary(b, dict(own))
-        )
-        snap = {
-            "snapshot_id": parent + 1,
-            "parent_id": parent,
-            "timestamp_ms": int(time.time() * 1000),
-            "operation": "append",
-            "schema_json": schema_json,
-            "partition_spec": (head or b).get("partition_spec", []),
-            "sort_order": (head or b).get("sort_order", []),
-            "manifest_list": _segments_minus_plus(path, head, set(), added),
-            "summary": summary,
-        }
-        try:
-            sid = _commit(path, snap)
-            return own | {"snapshot_id": sid}
-        except CommitConflict as e:
-            last = e
-    raise last  # type: ignore[misc]
+        return dict(_table_state(head or b), schema_json=schema_json)
+
+    own = {
+        "published_branch": name,
+        "published_seq": b["branch_seq"],
+        "n_new_files": len(added),
+        "n_new_rows": sum(e["rows"] for e in added),
+    }
+    # main-head state keys < branch-head state keys < publish's own
+    snap = _commit_snapshot(
+        path, "append", _inherited_summary(b, dict(own)), added=added,
+        check=check, header=header, retries=retries,
+    )
+    return own | {"snapshot_id": snap["snapshot_id"]}
 
 
 def drop_branch(path: str, name: str) -> int:
@@ -2816,49 +2737,22 @@ def merge_by_key(
             )
         else:
             resolved = delta1
-        commit_uuid = uuid.uuid4().hex
-        data_dir = os.path.join(path, _DATA, commit_uuid)
-        surv_dir = os.path.join(data_dir, "_survivors")
-        ins_dir = os.path.join(data_dir, "_inserts")
+        data_dir = _staging_dir(path)
         keys_df = resolved.select(key)
         groups: dict[str, list[dict[str, Any]]] = {}
         for e in cand:  # rewrite within partitions: clustering survives
             groups.setdefault(e.get("partition", ""), []).append(e)
-        for part, es in sorted(groups.items()):
-            df = _read_files(
-                spark, base_snap, [os.path.join(path, e["path"]) for e in es]
+        surv_files: list[dict[str, Any]] = []
+        for part, es in sorted(groups.items()):  # "" first, as in delete_where
+            surv_files += _stage_group_rewrite(
+                spark, path, base_snap, es,
+                os.path.join(data_dir, "_survivors"), part,
+                keep=lambda df: df.join(F.broadcast(keys_df), key, "left_anti"),
             )
-            keep_df = df.join(F.broadcast(keys_df), key, "left_anti")
-            n_files = max(1, -(-sum(e["bytes"] for e in es) // (512 << 20)))
-            gdir = os.path.join(surv_dir, part) if part else surv_dir
-            if base_snap.get("sort_order"):
-                so = base_snap["sort_order"]
-                keep_df = keep_df.repartitionByRange(
-                    n_files, *so
-                ).sortWithinPartitions(*so)
-            else:
-                keep_df = keep_df.repartition(n_files)
-            keep_df.write.parquet(gdir, mode="errorifexists")
-        spec = base_snap.get("partition_spec") or []
-        sort_order = base_snap.get("sort_order") or []
-        if spec:
-            ins_df, pcols = _partition_columns(resolved, spec)
-            if sort_order:
-                ins_df = _apply_sort_order(ins_df, sort_order, pcols)
-            ins_df.write.partitionBy(*pcols).parquet(
-                ins_dir, mode="errorifexists"
-            )
-        else:
-            ins_df = (
-                _apply_sort_order(resolved, sort_order, [])
-                if sort_order
-                else resolved
-            )
-            ins_df.write.parquet(ins_dir, mode="errorifexists")
-        surv_files = (
-            _list_new_files(path, surv_dir) if os.path.isdir(surv_dir) else []
+        ins_files = _stage_table_write(
+            path, resolved, os.path.join(data_dir, "_inserts"),
+            base_snap.get("partition_spec"), base_snap.get("sort_order"),
         )
-        ins_files = _list_new_files(path, ins_dir)
         rows_out = sum(e["rows"] for e in surv_files)
         inserted = sum(e["rows"] for e in ins_files)
         n_delta = delta1.count()
@@ -2879,14 +2773,6 @@ def merge_by_key(
         for e in surv_files:
             os.remove(os.path.join(path, e["path"]))
         surv_files, cand_paths = [], set()
-    schema = None
-    if base_snap.get("schema_json"):
-        from pyspark.sql.types import StructType
-
-        schema = _evolve_schema(
-            StructType.fromJson(json.loads(base_snap["schema_json"])),
-            delta_df.schema,
-        )
     own = {
         "merge_key": key,
         "replaced_rows": replaced,
@@ -2897,54 +2783,37 @@ def merge_by_key(
         "n_new_rows": inserted,
     }
     operation = "merge" if replaced else "append"
-    last: Exception | None = None
-    for _ in range(max(retries, 1)):
-        parent = current_snapshot_id(path)
-        head = snapshot(path, parent)
-        head_paths = {e["path"] for e in head["manifest"]}
-        if not cand_paths <= head_paths:
+    base_paths = {e["path"] for e in base_snap["manifest"]}
+
+    def check(parent: int, head: dict[str, Any]) -> None:
+        if operation != "merge":
+            return
+        # Iceberg's validate-no-conflicting-appends: a rival commit
+        # may have added files whose key range intersects the delta —
+        # rows this merge should have replaced but never saw. Abort
+        # rather than commit duplicate keys (stat-less new files are
+        # conservatively conflicting).
+        rival = [
+            e
+            for e in head["manifest"]
+            if e["path"] not in base_paths and e["rows"] > 0
+        ]
+        if _prune_entries(rival, {key: (bounds["lo"], bounds["hi"])}):
             raise CommitConflict(
-                f"{path}: merge candidates no longer in head {parent}"
+                f"{path}: concurrent commit added files intersecting "
+                f"the merge key range at head {parent}"
             )
-        if operation == "merge":
-            # Iceberg's validate-no-conflicting-appends: a rival commit
-            # may have added files whose key range intersects the delta —
-            # rows this merge should have replaced but never saw. Abort
-            # rather than commit duplicate keys (stat-less new files are
-            # conservatively conflicting).
-            base_paths = {e["path"] for e in base_snap["manifest"]}
-            rival = [
-                e
-                for e in head["manifest"]
-                if e["path"] not in base_paths and e["rows"] > 0
-            ]
-            if _prune_entries(rival, {key: (bounds["lo"], bounds["hi"])}):
-                raise CommitConflict(
-                    f"{path}: concurrent commit added files intersecting "
-                    f"the merge key range at head {parent}"
-                )
-        for e in surv_files + ins_files:
-            e["seq"] = parent + 1
-        snap = {
-            "snapshot_id": parent + 1,
-            "parent_id": parent,
-            "timestamp_ms": int(time.time() * 1000),
-            "operation": operation,
-            "schema_json": schema.json() if schema else head.get("schema_json", ""),
-            "partition_spec": head.get("partition_spec", []),
-            "sort_order": head.get("sort_order", []),
-            "manifest_list": _segments_minus_plus(
-                path, head, cand_paths,
-                [e for e in surv_files if e["rows"] > 0] + ins_files,
-            ),
-            "summary": _inherited_summary(head, own),
-        }
-        try:
-            _commit(path, snap)
-            return snap["summary"] | {"snapshot_id": snap["snapshot_id"]}
-        except CommitConflict as e:
-            last = e
-    raise last  # type: ignore[misc]
+
+    def header(_head) -> dict[str, Any]:  # evolved from the merge's base
+        return {"schema_json": _evolved_schema_json(base_snap, delta_df.schema)}
+
+    snap = _commit_snapshot(
+        path, operation, own, added=surv_files + ins_files,
+        removed=cand_paths, check=check,
+        header=header if base_snap.get("schema_json") else None,
+        retries=retries,
+    )
+    return snap["summary"] | {"snapshot_id": snap["snapshot_id"]}
 
 
 def expire_snapshots(

@@ -47,11 +47,14 @@ def stream_extraction(
     ``table_format="ice"``: each micro-batch commits as ONE atomic snapshot
     of a committed-snapshot table (the Iceberg streaming-ingest pattern —
     micro-batch boundary == snapshot commit boundary), carrying
-    ``stream_batch_id`` in the commit summary. Exactly-once falls out of
-    at-least-once foreachBatch + an idempotent commit: a replayed batch
-    (foreachBatch retry, or a re-run after a LOST checkpoint over the same
-    input) finds its batch id already committed and is a commit-free no-op
-    — readers never see duplicates OR a half-written batch.
+    ``stream_batch_id`` and ``stream_query`` (the checkpoint path) in the
+    commit summary. Exactly-once falls out of at-least-once foreachBatch +
+    an idempotent commit: a replayed batch (foreachBatch retry, or a
+    re-run after a LOST checkpoint over the same input and checkpoint
+    path) finds its (batch id, query) already committed and is a
+    commit-free no-op — readers never see duplicates OR a half-written
+    batch, and a second stream into the same table keeps its own batch
+    ids.
     """
 
     docs = (
@@ -72,12 +75,10 @@ def stream_extraction(
         try:
             if table_format == "ice":
                 from .sources import icetable
+                from .sources.ice_datasource import _batch_committed
 
                 def fresh(path: str, _parent: int, b=batch_id) -> bool:
-                    return not any(
-                        h["summary"].get("stream_batch_id") == b
-                        for h in icetable.history(path)
-                    )
+                    return not _batch_committed(path, checkpoint_path, b)
 
                 if not fresh(output_path, 0):
                     return  # replayed batch: already committed, no-op
@@ -85,7 +86,9 @@ def stream_extraction(
                     icetable.append(
                         ext,
                         output_path,
-                        summary={"stream_batch_id": batch_id, "run_id": run_id},
+                        summary={"stream_batch_id": batch_id,
+                                 "stream_query": checkpoint_path,
+                                 "run_id": run_id},
                         # re-validated on CAS retries: two replays racing
                         # commit exactly one copy of the batch
                         precondition=fresh,

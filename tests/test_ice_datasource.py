@@ -42,6 +42,19 @@ def _pages(spark, a, b):
     )
 
 
+def test_batch_read_of_a_table_without_data_files(spark, tmp_path):
+    """A snapshot with no data files (every row deleted, or only empty
+    appends) plans no scan partitions; the read is empty under the
+    snapshot schema instead of failing on Spark's placeholder partition."""
+    t = str(tmp_path / "t")
+    it.append(_pages(spark, 0, 5), t)
+    it.delete_where(spark, t, "n >= 0")
+    it.append(_pages(spark, 0, 0), t)
+    assert it.snapshot(t)["manifest"] == []
+    got = spark.read.format("ice").load(t)
+    assert got.columns == ["url", "warc_ts", "n"] and got.count() == 0
+
+
 def test_batch_read_parity_and_time_travel(spark, tmp_path):
     t = str(tmp_path / "t")
     it.append(_pages(spark, 0, 50), t)

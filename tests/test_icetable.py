@@ -101,6 +101,205 @@ def test_commit_conflict_cas_and_retry(spark, tmp_path):
         it._commit = real_commit
 
 
+# The nine main-namespace commits, each as (setup, operation, rival): the
+# rival is a real commit that makes the operation's own validation fail
+# against the new head, with the exception that failure raises.
+def _setup_rows(spark, t):
+    it.append(_df(spark, [("a", 1), ("b", 2)]).coalesce(1), t)
+    it.append(_df(spark, [("c", 3)]).coalesce(1), t)
+
+
+def _setup_eq_delete(spark, t):
+    _setup_rows(spark, t)
+    it.delete_keys(spark, t, ["a"])
+
+
+def _setup_branch(spark, t):
+    _setup_rows(spark, t)
+    it.create_branch(t, "wap")
+    it.branch_append(_df(spark, [("w", 7)]), t, "wap")
+
+
+def _overwrite(spark, t):
+    it.overwrite(_df(spark, [("z", 9)]), t)
+
+
+def _append(spark, t):
+    it.append(_df(spark, [("r", 8)]), t)
+
+
+_COMMIT_OPS = {
+    "append": (
+        _setup_rows,
+        lambda spark, t: it.append(
+            _df(spark, [("d", 4)]), t, precondition=lambda p, parent: parent == 2
+        ),
+        (_append, it.PreconditionFailed),
+    ),
+    "rollback": (_setup_rows, lambda spark, t: it.rollback(t, 1), None),
+    "compact": (
+        _setup_rows,
+        lambda spark, t: it.compact(spark, t, target_bytes=1 << 30),
+        (_overwrite, it.CommitConflict),
+    ),
+    "delete_where": (
+        _setup_rows,
+        lambda spark, t: it.delete_where(spark, t, "n = 1"),
+        (_overwrite, it.CommitConflict),
+    ),
+    "delete_keys": (
+        _setup_rows,
+        lambda spark, t: it.delete_keys(spark, t, ["b"]),
+        (lambda spark, t: it.scrub_where(spark, t, "n = 3"), ValueError),
+    ),
+    "scrub_where": (
+        _setup_rows,
+        lambda spark, t: it.scrub_where(spark, t, "n = 1"),
+        (lambda spark, t: it.delete_keys(spark, t, ["c"]), ValueError),
+    ),
+    "rewrite_deletes": (
+        _setup_eq_delete,
+        lambda spark, t: it.rewrite_deletes(spark, t),
+        (_overwrite, it.CommitConflict),
+    ),
+    "publish_branch": (
+        _setup_branch,
+        lambda spark, t: it.publish_branch(t, "wap"),
+        (_append, it.PreconditionFailed),
+    ),
+    "merge_by_key": (
+        _setup_rows,
+        lambda spark, t: it.merge_by_key(spark, t, _df(spark, [("a", 5), ("e", 6)])),
+        (_overwrite, it.CommitConflict),
+    ),
+}
+
+
+def _data_files(t):
+    return {
+        os.path.normpath(os.path.join(root, n))
+        for root, _dirs, names in os.walk(os.path.join(t, "data"))
+        for n in names
+        if n.endswith(".parquet")
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_COMMIT_OPS))
+def test_commit_retries_one_injected_conflict(spark, tmp_path, monkeypatch, name):
+    """One CommitConflict from the first ``_commit``: the operation lands on
+    the retry with the snapshot, seq stamps and summary keys of a run
+    without the injection. New entries carry the committed snapshot's id
+    as seq — except compaction's, which keep their group's oldest seq."""
+    setup, op, _rival = _COMMIT_OPS[name]
+    plain, flaky = str(tmp_path / "plain"), str(tmp_path / "flaky")
+    for t in (plain, flaky):
+        setup(spark, t)
+    op(spark, plain)
+    real, calls = it._commit, []
+
+    def conflict_once(path, snap):
+        calls.append(snap["snapshot_id"])
+        if len(calls) == 1:
+            raise it.CommitConflict("injected")
+        return real(path, snap)
+
+    monkeypatch.setattr(it, "_commit", conflict_once)
+    op(spark, flaky)
+    monkeypatch.setattr(it, "_commit", real)
+    head = it.snapshot(flaky)
+    assert calls == [head["snapshot_id"]] * 2
+    want = it.snapshot(plain)
+    assert head["snapshot_id"] == want["snapshot_id"]
+    assert head["operation"] == want["operation"]
+    assert sorted(head["summary"]) == sorted(want["summary"])
+    parent_paths = {e["path"] for e in it.snapshot(flaky, head["parent_id"])["manifest"]}
+    new = [e for e in head["manifest"] if e["path"] not in parent_paths]
+    seq = 1 if name == "compact" else head["snapshot_id"]
+    assert all(e["seq"] == seq for e in new)
+    assert bool(new) == (name != "rollback")
+    assert sorted(r.url for r in it.read(spark, flaky).collect()) == sorted(
+        r.url for r in it.read(spark, plain).collect()
+    )
+
+
+@pytest.mark.parametrize("name", sorted(_COMMIT_OPS))
+def test_commit_conflict_exhausts_retries(spark, tmp_path, monkeypatch, name):
+    """``_commit`` always conflicting: CommitConflict surfaces after the
+    retries, the head is unchanged, and every data file the operation
+    staged is an orphan."""
+    setup, op, _rival = _COMMIT_OPS[name]
+    t = str(tmp_path / "tbl")
+    setup(spark, t)
+    head, before, calls = it.current_snapshot_id(t), _data_files(t), []
+
+    def always_conflict(path, snap):
+        calls.append(snap["snapshot_id"])
+        raise it.CommitConflict("injected")
+
+    monkeypatch.setattr(it, "_commit", always_conflict)
+    with pytest.raises(it.CommitConflict):
+        op(spark, t)
+    assert calls == [head + 1] * 3
+    assert it.current_snapshot_id(t) == head
+    staged = _data_files(t) - before
+    assert bool(staged) == (name not in ("rollback", "publish_branch"))
+    assert staged <= set(it.orphan_data_files(t))
+
+
+@pytest.mark.parametrize(
+    "name", sorted(n for n, (_s, _o, rival) in _COMMIT_OPS.items() if rival)
+)
+def test_commit_validation_failure_is_not_retried(spark, tmp_path, monkeypatch, name):
+    """A rival commit lands just before the operation's first CAS: the
+    retry re-validates against the rival's head and the validation
+    failure propagates at once — no further ``_commit``."""
+    setup, op, (rival, exc) = _COMMIT_OPS[name]
+    t = str(tmp_path / "tbl")
+    setup(spark, t)
+    real, calls = it._commit, []
+
+    def rival_first(path, snap):
+        calls.append(snap["snapshot_id"])
+        if len(calls) == 1:
+            monkeypatch.setattr(it, "_commit", real)
+            rival(spark, t)
+            monkeypatch.setattr(it, "_commit", rival_first)
+        return real(path, snap)
+
+    monkeypatch.setattr(it, "_commit", rival_first)
+    with pytest.raises(exc):
+        op(spark, t)
+    assert len(calls) == 1
+    assert it.current_snapshot_id(t) == calls[0]  # the rival's snapshot only
+
+
+def test_appends_commit_no_zero_row_files(spark, tmp_path):
+    """Spark's writer opens a file for an empty first write partition. The
+    0-row part files of a 3-row frame over 4 slices, an empty frame and an
+    all-filtered frame are deleted from the staging directory and never
+    reach a manifest; every read is unchanged."""
+    t = str(tmp_path / "tbl")
+    three = spark.createDataFrame(
+        spark.sparkContext.parallelize([("a", 1), ("b", 2), ("c", 3)], 4),
+        "url string, n int",
+    )
+    it.append(_df(spark, []), t)
+    it.append(three, t)
+    it.append(_df(spark, [("d", 4), ("e", 5)]).repartition(4).where("n < 0"), t)
+    for sid in (1, 2, 3):
+        assert all(e["rows"] > 0 for e in it.snapshot(t, sid)["manifest"])
+    assert [h["summary"]["n_new_files"] for h in it.history(t)] == [0, 3, 0]
+    assert [h["summary"]["n_new_rows"] for h in it.history(t)] == [0, 3, 0]
+    assert it.read(spark, t, snapshot_id=1).columns == ["url", "n"]
+    assert it.read(spark, t, snapshot_id=1).count() == 0
+    assert sorted(r.url for r in it.read(spark, t).collect()) == ["a", "b", "c"]
+    assert sorted(r.url for r in it.read_incremental(spark, t, 0).collect()) == [
+        "a", "b", "c",
+    ]
+    assert it.read_incremental(spark, t, 2).count() == 0
+    assert it.orphan_data_files(t) == []
+
+
 def test_time_travel_overwrite_rollback(spark, tmp_path):
     t = str(tmp_path / "tbl")
     it.append(_df(spark, [("a", 1)]), t)

@@ -994,6 +994,32 @@ def test_streaming_extraction_ice_table_sink(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_streaming_extraction_ice_two_queries_one_table(spark):
+    """Two streams with their own checkpoints write one ice table. Both
+    have a batch 0; the exactly-once key is (batch id, query), so the
+    second stream's batch commits instead of passing for a replay."""
+    from kraken_spark.sources import icetable as it
+    from kraken_spark.streaming import stream_extraction
+
+    tmp = tempfile.mkdtemp(prefix="ks_stream_ice2_")
+    try:
+        docs = generate_corpus_df(spark, 6).localCheckpoint(eager=True)
+        urls = sorted(r.url for r in docs.select("url").collect())
+        docs.where(F.col("url").isin(urls[:3])).write.parquet(f"{tmp}/in1")
+        docs.where(F.col("url").isin(urls[3:])).write.parquet(f"{tmp}/in2")
+        for i in (1, 2):
+            stream_extraction(
+                spark, f"{tmp}/in{i}", f"{tmp}/out", f"{tmp}/ckpt{i}",
+                num_partitions=2, table_format="ice",
+            ).awaitTermination(300)
+        assert it.current_snapshot_id(f"{tmp}/out") == 2
+        assert [h["summary"]["stream_batch_id"] for h in it.history(f"{tmp}/out")] == [0, 0]
+        got = sorted(r.url for r in it.read(spark, f"{tmp}/out").collect())
+        assert got == urls
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def test_report_per_file_counts_match_align_counts(spark):
     """report_over(per_file=True) rows equal a driver-side recomputation
     through kernels.metrics.align_counts/levenshtein/wer per url — the
