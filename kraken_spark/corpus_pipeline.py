@@ -59,13 +59,8 @@ def _sig_view(kept):
 def _processed_through(kept_table: str) -> int:
     """Highest source snapshot id any committed tick processed through —
     the watermark, read from the kept table's own commit summaries
-    ([] for a not-yet-created table -> 0)."""
-    last = 0
-    for h in icetable.history(kept_table):
-        s = h.get("summary", {}).get("source_snapshot_id")
-        if s is not None:
-            last = max(last, int(s))
-    return last
+    (0 for a not-yet-created table)."""
+    return icetable._summary_watermark(kept_table, "source_snapshot_id")
 
 
 def _latest_per_url(delta):

@@ -35,8 +35,8 @@ import numpy as np
 
 from .filters import binary_dilation_sep, binary_erosion_sep
 from .morph import find_objects, label
-from .order import is_in_region, polygonal_reading_order, reading_order
-from .pageseg import det_id
+from .order import is_in_region
+from .pageseg import det_id, finish_segmentation, segment_rotated
 from .vgsl import VGSLModel
 
 SEG_SPEC = "[1,0,0,1 Cs7,7,2]"
@@ -675,38 +675,13 @@ def segment_blla(
     )
     if model is None and learned is None:
         model = build_segmenter_ref() if vectorizer == "reference" else build_segmenter()
-    rl = text_direction.endswith("rl")
     if text_direction.startswith("vertical"):
-        # vertical text: rotate 90° CCW so lines run horizontally, segment,
-        # un-rotate every coordinate — same scheme as pageseg.segment (the
-        # reference's rotated segmentation + rotate_lines,
-        # /root/reference/kraken/pageseg.py:307-454,292-304)
-        from .pageseg import rotate_points
-
-        h, w = mask.shape
-        seg = segment_blla(
-            np.ascontiguousarray(np.rot90(mask, k=1)),
-            url=url,
-            text_direction="horizontal-" + ("rl" if rl else "lr"),
-            model=model,
-            reading_order_fn=reading_order_fn,
-            boundary_mode=boundary_mode,
+        return segment_rotated(
+            segment_blla, mask, text_direction, url=url, model=model,
+            reading_order_fn=reading_order_fn, boundary_mode=boundary_mode,
             vectorizer=vectorizer,
         )
-        for l in seg["lines"]:
-            pts = rotate_points(
-                [[l["bbox"][0], l["bbox"][1]], [l["bbox"][2] - 1, l["bbox"][3] - 1]],
-                1, h, w,
-            )
-            xs = [p[0] for p in pts]
-            ys = [p[1] for p in pts]
-            l["bbox"] = [min(xs), min(ys), max(xs) + 1, max(ys) + 1]
-            l["baseline"] = rotate_points(l["baseline"], 1, h, w)
-            l["boundary"] = rotate_points(l["boundary"], 1, h, w)
-        for r in seg["regions"]:
-            r["boundary"] = rotate_points(r["boundary"], 1, h, w)
-        seg["text_direction"] = text_direction
-        return seg
+    rl = text_direction.endswith("rl")
     if vectorizer == "reference":
         from . import blla_vec
 
@@ -800,39 +775,12 @@ def segment_blla(
             )
         line_region_idx.append(idx)
 
-    line_bboxes = [tuple(l["bbox"]) for l in lines]
-    region_bboxes = [
-        (
-            min(p[0] for p in r["boundary"]),
-            min(p[1] for p in r["boundary"]),
-            max(p[0] for p in r["boundary"]),
-            max(p[1] for p in r["boundary"]),
-        )
-        for r in regions
-    ]
-    if reading_order_fn is not None:
-        perm = reading_order_fn(line_bboxes, line_region_idx, region_bboxes, rl)
-    elif len(regions) > 1:
-        perm = polygonal_reading_order(line_bboxes, line_region_idx, region_bboxes, rl=rl)
-    else:
-        perm = reading_order(line_bboxes, rl=rl)
-    ordered = []
-    for rank, li in enumerate(perm):
-        l = dict(lines[li])
-        l["id"] = det_id(url, "blla_line", rank)
-        l["rank"] = rank
-        l["region_ids"] = [regions[line_region_idx[li]]["id"]] if regions else []
-        ordered.append(l)
+    seg = finish_segmentation(
+        lines, line_region_idx, regions, url, "blla_line", text_direction, reading_order_fn
+    )
     if boundary_mode == "seam":
         from .seamcarve import polygonal_environment
 
-        for l, poly in zip(ordered, polygonal_environment(mask, ordered)):
+        for l, poly in zip(seg["lines"], polygonal_environment(mask, seg["lines"])):
             l["boundary"] = poly
-    return {
-        "type": "baselines",
-        "text_direction": text_direction,
-        "script_detection": False,
-        "lines": ordered,
-        "regions": regions,
-        "guard_tripped": False,
-    }
+    return seg

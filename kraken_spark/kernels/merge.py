@@ -11,7 +11,8 @@ heuristic reading order over the union.
 
 from __future__ import annotations
 
-from .order import is_in_region, polygonal_reading_order, reading_order
+from .order import is_in_region, order_lines
+from .pageseg import segmentation
 
 
 def merge_segmentations(segs: list[dict], rl: bool = False) -> dict:
@@ -21,14 +22,7 @@ def merge_segmentations(segs: list[dict], rl: bool = False) -> dict:
     mixes, tasks/segmentation.py:152-157)."""
     segs = [s for s in segs if s]
     if not segs:
-        return {
-            "type": "baselines",
-            "text_direction": "horizontal-lr",
-            "script_detection": False,
-            "lines": [],
-            "regions": [],
-            "guard_tripped": False,
-        }
+        return segmentation("horizontal-lr")
     types = {s.get("type", "baselines") for s in segs}
     if len(types) > 1:
         raise ValueError(f"cannot merge mixed segmentation types: {sorted(types)}")
@@ -62,30 +56,13 @@ def merge_segmentations(segs: list[dict], rl: bool = False) -> dict:
         ]
 
     # recompute reading order over the union (suppressing per-source orders,
-    # like the reference's multi-source neural-RO suppression)
-    line_bboxes = [tuple(l["bbox"]) for l in lines]
-    if len(regions) > 1:
-        region_bboxes = [
-            (
-                min(p[0] for p in r["boundary"]),
-                min(p[1] for p in r["boundary"]),
-                max(p[0] for p in r["boundary"]),
-                max(p[1] for p in r["boundary"]),
-            )
-            for r in regions
-        ]
-        rid_to_idx = {r["id"]: i for i, r in enumerate(regions)}
-        line_region_idx = [
-            rid_to_idx.get(l["region_ids"][0]) if l["region_ids"] else None
-            for l in lines
-        ]
-        # lines without a region: put in nearest region for splice purposes
-        line_region_idx = [
-            idx if idx is not None else 0 for idx in line_region_idx
-        ]
-        perm = polygonal_reading_order(line_bboxes, line_region_idx, region_bboxes, rl=rl)
-    else:
-        perm = reading_order(line_bboxes, rl=rl)
+    # like the reference's multi-source neural-RO suppression); a line
+    # inside no region splices with region 0
+    rid_to_idx = {r["id"]: i for i, r in enumerate(regions)}
+    line_region_idx = [
+        rid_to_idx[l["region_ids"][0]] if l["region_ids"] else 0 for l in lines
+    ]
+    perm = order_lines(lines, line_region_idx, regions, rl=rl)
     ordered = []
     for rank, li in enumerate(perm):
         l = dict(lines[li])

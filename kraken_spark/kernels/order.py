@@ -136,6 +136,37 @@ def polygonal_reading_order(
     return out
 
 
+def order_lines(
+    lines: list[dict],
+    line_regions: list[int],
+    regions: list[dict],
+    rl: bool = False,
+    fn=None,
+) -> list[int]:
+    """The one reading-order dispatch of every segmenter and of merge:
+    the pluggable hook ``fn(line_bboxes, line_regions, region_bboxes, rl)
+    -> permutation`` when given (the reference's reading_order_fn,
+    /root/reference/kraken/blla.py:254), else the region-grouped
+    polygonal order over more than one region, else the plain line order.
+    Line boxes are each line's bbox, region boxes each region boundary's
+    min/max."""
+    line_boxes = [tuple(l["bbox"]) for l in lines]
+    region_boxes = [
+        (
+            min(p[0] for p in r["boundary"]),
+            min(p[1] for p in r["boundary"]),
+            max(p[0] for p in r["boundary"]),
+            max(p[1] for p in r["boundary"]),
+        )
+        for r in regions
+    ]
+    if fn is not None:
+        return fn(line_boxes, line_regions, region_boxes, rl)
+    if len(regions) > 1:
+        return polygonal_reading_order(line_boxes, line_regions, region_boxes, rl=rl)
+    return reading_order(line_boxes, rl=rl)
+
+
 def is_in_region(point: tuple[float, float], boundary: list[list[int]]) -> bool:
     """Point-in-polygon (even-odd rule) — the midpoint test the reference
     uses to attach lines to regions (/root/reference/kraken/lib/

@@ -21,7 +21,7 @@ import hashlib
 
 import numpy as np
 
-from .order import polygonal_reading_order, reading_order
+from .order import order_lines
 
 MAX_CC_DENSITY = 1.0 / 900.0  # CC-count admission guard (pageseg.py:382-391)
 
@@ -87,6 +87,72 @@ def rotate_points(pts: list[list[int]], k: int, h: int, w: int) -> list[list[int
         else:  # k == 3 (CW)
             out.append([y, h - 1 - x])
     return out
+
+
+def segment_rotated(segmenter, page: np.ndarray, text_direction: str, **kwargs) -> dict:
+    """Vertical text for any segmenter: rotate the page 90° CCW so lines
+    run horizontally, call ``segmenter(rotated, text_direction=
+    'horizontal-lr|rl', **kwargs)`` (every keyword passed through, the
+    reading-order hook included — it sees the rotated page's boxes), then
+    un-rotate every coordinate — the
+    reference's rotated segmentation + rotate_lines
+    (/root/reference/kraken/pageseg.py:307-454, 292-304)."""
+    h, w = page.shape
+    seg = segmenter(
+        np.ascontiguousarray(np.rot90(page, k=1)),
+        text_direction="horizontal-" + ("rl" if text_direction.endswith("rl") else "lr"),
+        **kwargs,
+    )
+    for l in seg["lines"]:
+        pts = rotate_points(
+            [[l["bbox"][0], l["bbox"][1]], [l["bbox"][2] - 1, l["bbox"][3] - 1]],
+            1, h, w,
+        )
+        xs = [p[0] for p in pts]
+        ys = [p[1] for p in pts]
+        l["bbox"] = [min(xs), min(ys), max(xs) + 1, max(ys) + 1]
+        l["baseline"] = rotate_points(l["baseline"], 1, h, w)
+        l["boundary"] = rotate_points(l["boundary"], 1, h, w)
+    for r in seg["regions"]:
+        r["boundary"] = rotate_points(r["boundary"], 1, h, w)
+    seg["text_direction"] = text_direction
+    return seg
+
+
+def segmentation(
+    text_direction: str, lines: list[dict] | None = None,
+    regions: list[dict] | None = None, guard_tripped: bool = False,
+) -> dict:
+    """The Segmentation-like dict every segmenter returns."""
+    return {
+        "type": "baselines",
+        "text_direction": text_direction,
+        "script_detection": False,
+        "lines": lines or [],
+        "regions": regions or [],
+        "guard_tripped": guard_tripped,
+    }
+
+
+def finish_segmentation(
+    lines: list[dict], line_regions: list[int], regions: list[dict],
+    url: str, stage: str, text_direction: str, reading_order_fn=None,
+) -> dict:
+    """The shared tail of every segmenter: order the lines
+    (order.order_lines), stamp each its deterministic id
+    ``det_id(url, stage, rank)``, rank and region id, and build the
+    Segmentation dict. ``line_regions[i]`` indexes ``regions``."""
+    perm = order_lines(
+        lines, line_regions, regions, text_direction.endswith("rl"), reading_order_fn
+    )
+    ordered = []
+    for rank, li in enumerate(perm):
+        l = dict(lines[li])
+        l["id"] = det_id(url, stage, rank)
+        l["rank"] = rank
+        l["region_ids"] = [regions[line_regions[li]]["id"]] if regions else []
+        ordered.append(l)
+    return segmentation(text_direction, ordered, regions)
 
 
 def _split_merged_runs(runs: list[tuple[int, int]],
@@ -159,44 +225,16 @@ def segment(
     — the reference's pluggable reading-order hook
     (/root/reference/kraken/pageseg.py:315,339-341).
     """
+    if text_direction.startswith("vertical"):
+        return segment_rotated(
+            segment, ink, text_direction, url=url, min_gutter=min_gutter,
+            min_line_height=min_line_height, min_line_width=min_line_width,
+            reading_order_fn=reading_order_fn,
+        )
     h, w = ink.shape
     rl = text_direction.endswith("rl")
-    if text_direction.startswith("vertical"):
-        # vertical text: rotate the page 90° CCW so lines run horizontally,
-        # segment, then un-rotate every coordinate (the reference's rotated
-        # segmentation + rotate_lines, pageseg.py:307-454, 292-304)
-        seg = segment(
-            np.ascontiguousarray(np.rot90(ink, k=1)),
-            url=url,
-            text_direction="horizontal-" + ("rl" if rl else "lr"),
-            min_gutter=min_gutter,
-            min_line_height=min_line_height,
-            min_line_width=min_line_width,
-        )
-        for l in seg["lines"]:
-            pts = rotate_points(
-                [[l["bbox"][0], l["bbox"][1]], [l["bbox"][2] - 1, l["bbox"][3] - 1]],
-                1, h, w,
-            )
-            xs = [p[0] for p in pts]
-            ys = [p[1] for p in pts]
-            l["bbox"] = [min(xs), min(ys), max(xs) + 1, max(ys) + 1]
-            l["baseline"] = rotate_points(l["baseline"], 1, h, w)
-            l["boundary"] = rotate_points(l["boundary"], 1, h, w)
-        for r in seg["regions"]:
-            r["boundary"] = rotate_points(r["boundary"], 1, h, w)
-        seg["text_direction"] = text_direction
-        return seg
-    empty = {
-        "type": "baselines",
-        "text_direction": text_direction,
-        "script_detection": False,
-        "lines": [],
-        "regions": [],
-        "guard_tripped": False,
-    }
     if not ink.any():
-        return empty
+        return segmentation(text_direction)
 
     # admission guard, cf. pageseg.py:381-391: the reference counts
     # BACKGROUND components (noise shatters the white background into
@@ -244,9 +282,7 @@ def segment(
         from .morph import fast_component_count
 
         if fast_component_count(ink == 0) > cap:
-            out = dict(empty)
-            out["guard_tripped"] = True
-            return out
+            return segmentation(text_direction, guard_tripped=True)
 
     col_ranges = find_columns(ink, min_gutter=min_gutter)
     # enumerate columns in reading direction so downstream topsort ties
@@ -306,34 +342,8 @@ def segment(
             line_region_idx.append(region_idx)
 
     if not lines:
-        return empty
+        return segmentation(text_direction)
 
-    # reading order: region-grouped splice (polygonal_reading_order semantics)
-    region_bboxes = [
-        (r["boundary"][0][0], r["boundary"][0][1], r["boundary"][2][0], r["boundary"][2][1])
-        for r in regions
-    ]
-    line_bboxes = [tuple(l["bbox"]) for l in lines]
-    if reading_order_fn is not None:
-        perm = reading_order_fn(line_bboxes, line_region_idx, region_bboxes, rl)
-    elif len(regions) > 1:
-        perm = polygonal_reading_order(line_bboxes, line_region_idx, region_bboxes, rl=rl)
-    else:
-        perm = reading_order(line_bboxes, rl=rl)
-
-    ordered = []
-    for rank, li in enumerate(perm):
-        l = dict(lines[li])
-        l["id"] = det_id(url, "line", rank)
-        l["rank"] = rank
-        l["region_ids"] = [regions[line_region_idx[li]]["id"]]
-        ordered.append(l)
-
-    return {
-        "type": "baselines",
-        "text_direction": text_direction,
-        "script_detection": False,
-        "lines": ordered,
-        "regions": regions,
-        "guard_tripped": False,
-    }
+    return finish_segmentation(
+        lines, line_region_idx, regions, url, "line", text_direction, reading_order_fn
+    )

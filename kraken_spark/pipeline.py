@@ -396,11 +396,7 @@ def tail_extraction(
     from .sources import icetable
 
     head = icetable.current_snapshot_id(pages_table)
-    last = 0
-    for h in icetable.history(out_table):  # [] for a not-yet-created table
-        s = h.get("summary", {}).get("source_snapshot_id")
-        if s is not None:
-            last = max(last, int(s))
+    last = icetable._summary_watermark(out_table, "source_snapshot_id")
     if head <= last:
         return {"processed": 0, "source_snapshot_id": last, "out_snapshot_id": None}
     delta = icetable.read_incremental(

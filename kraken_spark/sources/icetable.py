@@ -229,6 +229,19 @@ def history(path: str) -> list[dict[str, Any]]:
     return out
 
 
+def _summary_watermark(path: str, key: str) -> int:
+    """The largest integer ``key`` in any retained snapshot summary — the
+    watermark an incremental job records in its own output table's
+    commits (0 when no snapshot carries it, or the table does not exist
+    yet)."""
+    last = 0
+    for h in history(path):
+        s = h["summary"].get(key)
+        if s is not None:
+            last = max(last, int(s))
+    return last
+
+
 def _cas_write(path: str, target: str, snap: dict[str, Any], what: str) -> None:
     """Create the metadata file ``target`` holding ``snap`` iff it does
     not exist yet (CommitConflict otherwise): a hard-link CAS, so the
@@ -1124,11 +1137,7 @@ def propagate_takedowns(
     from pyspark.sql import functions as F
 
     head = current_snapshot_id(src_table)
-    last = 0
-    for h in history(dst_table):  # [] for a not-yet-created destination
-        s = h.get("summary", {}).get("takedown_source_snapshot_id")
-        if s is not None:
-            last = max(last, int(s))
+    last = _summary_watermark(dst_table, "takedown_source_snapshot_id")
     noop = {
         "propagated_keys": 0,
         "source_snapshot_id": last,
@@ -1172,7 +1181,9 @@ def propagate_takedowns(
             "takedown_source_snapshot_id": head,
         },
     )
-    if s is None:  # ghost takedowns or empty destination: nothing to mask
+    # None only for a destination without snapshots or an empty staged key
+    # file; keys that match no destination row still commit a delete snapshot
+    if s is None:
         return noop
     return {
         "propagated_keys": s["n_delete_keys"],

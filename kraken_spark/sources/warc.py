@@ -62,12 +62,6 @@ def _gunzip_member_spans(data: bytes) -> Iterator[tuple[int, int, bytes]]:
         pos += consumed
 
 
-def _gunzip_members(data: bytes) -> Iterator[bytes]:
-    """Yield each gzip member of a multi-member stream decompressed."""
-    for _, _, out in _gunzip_member_spans(data):
-        yield out
-
-
 def _parse_headers(block: bytes) -> dict[str, str]:
     """Header block -> {lowercased-name: value} with continuation folding."""
     out: dict[str, str] = {}
@@ -87,13 +81,20 @@ def _parse_headers(block: bytes) -> dict[str, str]:
     return out
 
 
-def iter_warc_records(data: bytes) -> Iterator[tuple[dict, bytes]]:
-    """WARC bytes (.warc or .warc.gz) -> (headers, payload) per record."""
-    if data[:2] == b"\x1f\x8b":
-        chunks: Iterator[bytes] = _gunzip_members(data)
+def iter_warc_record_spans(
+    data: bytes,
+) -> Iterator[tuple[dict, bytes, int, int]]:
+    """WARC bytes -> (headers, payload, offset, length) per record, where
+    data[offset:offset+length] is an independently parseable slice holding
+    the record: the compressed gzip member for member-per-record .warc.gz
+    (the Common-Crawl layout — all records of a multi-record member share
+    the member's span), or the raw record bytes for plain .warc."""
+    gz = data[:2] == b"\x1f\x8b"
+    if gz:
+        spans: Iterator[tuple[int, int, bytes]] = _gunzip_member_spans(data)
     else:
-        chunks = iter([data])
-    for chunk in chunks:
+        spans = iter([(0, len(data), data)])
+    for m_off, m_len, chunk in spans:
         pos = 0
         n = len(chunk)
         while pos < n:
@@ -112,8 +113,18 @@ def iter_warc_records(data: bytes) -> Iterator[tuple[dict, bytes]]:
             payload = chunk[body_at : body_at + length]
             if len(payload) < length:
                 break  # truncated record: stop, keep what we parsed
-            yield headers, payload
+            if gz:
+                yield headers, payload, m_off, m_len
+            else:
+                # plain warc: span = header..payload + the 2 trailing CRLFs
+                yield headers, payload, start, min(body_at + length + 4, n) - start
             pos = body_at + length
+
+
+def iter_warc_records(data: bytes) -> Iterator[tuple[dict, bytes]]:
+    """WARC bytes (.warc or .warc.gz) -> (headers, payload) per record."""
+    for headers, payload, _off, _len in iter_warc_record_spans(data):
+        yield headers, payload
 
 
 def _split_http(payload: bytes) -> tuple[dict[str, str], bytes]:
@@ -122,27 +133,7 @@ def _split_http(payload: bytes) -> tuple[dict[str, str], bytes]:
     is not an HTTP message comes back with empty headers, body as-is."""
     if not payload.startswith(b"HTTP/"):
         return {}, payload
-    sep = payload.find(CRLF + CRLF)
-    if sep < 0:
-        return {}, payload
-    headers = _parse_headers(payload[:sep])
-    body = payload[sep + 4 :]
-    if "chunked" in headers.get("transfer-encoding", "").lower():
-        out = bytearray()
-        pos = 0
-        while pos < len(body):
-            line_end = body.find(CRLF, pos)
-            if line_end < 0:
-                break
-            try:
-                size = int(body[pos:line_end].split(b";")[0], 16)
-            except ValueError:
-                break
-            if size == 0:
-                break
-            out += body[line_end + 2 : line_end + 2 + size]
-            pos = line_end + 2 + size + 2
-        body = bytes(out)
+    headers, body = _split_http_raw(payload)
     enc = headers.get("content-encoding", "").lower()
     if enc in ("gzip", "x-gzip"):
         try:
@@ -198,46 +189,6 @@ def warc_to_documents(data: bytes) -> list[dict]:
 # single page can be fetched with ONE ranged read of `length` bytes at
 # `offset` in `filename` and gunzipped standalone, no file scan. At 100 TB
 # that index is what makes point lookups and re-crawl joins feasible.
-
-
-def iter_warc_record_spans(
-    data: bytes,
-) -> Iterator[tuple[dict, bytes, int, int]]:
-    """WARC bytes -> (headers, payload, offset, length) per record, where
-    data[offset:offset+length] is an independently parseable slice holding
-    the record: the compressed gzip member for member-per-record .warc.gz
-    (the Common-Crawl layout — all records of a multi-record member share
-    the member's span), or the raw record bytes for plain .warc."""
-    if data[:2] == b"\x1f\x8b":
-        spans: Iterator[tuple[int, int, bytes]] = _gunzip_member_spans(data)
-    else:
-        spans = iter([(0, len(data), data)])
-    gz = data[:2] == b"\x1f\x8b"
-    for m_off, m_len, chunk in spans:
-        pos = 0
-        n = len(chunk)
-        while pos < n:
-            start = chunk.find(b"WARC/", pos)
-            if start < 0:
-                break
-            hdr_end = chunk.find(CRLF + CRLF, start)
-            if hdr_end < 0:
-                break
-            headers = _parse_headers(chunk[start:hdr_end])
-            try:
-                length = int(headers.get("content-length", ""))
-            except ValueError:
-                break
-            body_at = hdr_end + 4
-            payload = chunk[body_at : body_at + length]
-            if len(payload) < length:
-                break
-            if gz:
-                yield headers, payload, m_off, m_len
-            else:
-                # plain warc: span = header..payload + the 2 trailing CRLFs
-                yield headers, payload, start, min(body_at + length + 4, n) - start
-            pos = body_at + length
 
 
 def surt(url: str) -> str:

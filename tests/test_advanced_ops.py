@@ -257,6 +257,15 @@ def test_pluggable_hooks():
         mask, url="u", text_direction="horizontal-lr", reading_order_fn=reversed_ro
     )
     assert len(calls) == 2 and len(seg_rev_b["lines"]) > 0
+    # vertical pages run the same hook inside the rotated segmentation
+    vmask = np.ascontiguousarray(np.rot90(mask, k=3))
+    vseg_fwd = pageseg.segment(vmask, url="u", text_direction="vertical-lr")
+    vseg_rev = pageseg.segment(
+        vmask, url="u", text_direction="vertical-lr", reading_order_fn=reversed_ro
+    )
+    assert len(calls) == 3 and calls[-1] == len(vseg_fwd["lines"]) > 1
+    assert [l["bbox"] for l in vseg_rev["lines"]] == [l["bbox"] for l in vseg_fwd["lines"]][::-1]
+    assert [l["rank"] for l in vseg_rev["lines"]] == list(range(len(vseg_fwd["lines"])))
 
     # 2. pluggable CTC decoder: a conf-clamping wrapper changes confidences
     # but not predictions

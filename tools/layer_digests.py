@@ -19,7 +19,13 @@ bit-identical on
 - the optimizer: short seeded runs of ``seg_train.train`` and
   ``ro_train.train_ro`` (float64 weights, Adam under each trainer's own
   cosine schedule) and an ``rec_train.Adam`` step sequence on float32
-  weights (weights and both moments).
+  weights (weights and both moments),
+- the segmentation finish: ``pageseg.segment``, ``blla.segment_blla``
+  (analog vectorizer with rect and seam boundaries, and the reference
+  vectorizer) and ``merge.merge_segmentations`` JSON output on rendered
+  corpus pages (one- and two-column, left-to-right and right-to-left),
+  each upright and rotated to ``vertical-*``, with and without a
+  reversing reading-order hook (its call count included).
 
 GEMM reduction order depends on the BLAS thread count, so it is pinned to
 one thread before numpy loads (an explicit OPENBLAS_NUM_THREADS wins).
@@ -41,10 +47,20 @@ import numpy as np  # noqa: E402
 
 from kraken_spark.kernels import rec_pretrain as rp  # noqa: E402
 from kraken_spark.kernels import rec_train as rt  # noqa: E402
+from kraken_spark.kernels import binarize, blla, merge, pageseg, png  # noqa: E402
 from kraken_spark.kernels import render, ro_train, seg_train  # noqa: E402
 from kraken_spark.kernels.recognizer import build_recognizer, input_transform  # noqa: E402
 from kraken_spark.kernels.torchvgsl import TorchVGSL  # noqa: E402
 from kraken_spark.kernels.vgsl import VGSLModel  # noqa: E402
+
+# (seed, doc) rendered pages: en one-column, fr two-column, ar two-column
+SEG_PAGES = ((42, 0), (42, 1), (1234, 5))
+SEGMENTERS = {
+    "pageseg": pageseg.segment,
+    "blla_rect": blla.segment_blla,
+    "blla_seam": lambda m, **kw: blla.segment_blla(m, boundary_mode="seam", **kw),
+    "blla_ref": lambda m, **kw: blla.segment_blla(m, vectorizer="reference", **kw),
+}
 
 RANDOM_NETS = (
     "[1,16,0,1 Cr3,3,8 Mp2,2 Lbx10 O1c5]",
@@ -72,6 +88,41 @@ def _grads_digest(loss, grads, n=0) -> str:
     for k, g in grads.items():
         items += [k, g]
     return _digest(items)
+
+
+def _segmentation_digests(out: dict[str, str]) -> None:
+    calls: list[int] = []
+
+    def reversed_order(line_bboxes, _line_regions, _region_bboxes, _rl):
+        calls.append(len(line_bboxes))
+        return list(range(len(line_bboxes)))[::-1]
+
+    pages = []
+    for seed, idx in SEG_PAGES:
+        d = render.render_document(seed, idx)
+        mask = binarize.nlbin(png.to_grayscale(d["img"]))
+        side = "rl" if d["base_dir"] == "R" else "lr"
+        pages.append((f"horizontal-{side}", mask, f"{seed}/{idx}"))
+        pages.append((f"vertical-{side}", np.ascontiguousarray(np.rot90(mask, k=3)), f"{seed}/{idx}"))
+    for orient in ("horizontal", "vertical"):
+        plain: dict[str, list[dict]] = {}
+        for name, fn in SEGMENTERS.items():
+            for hook in (None, reversed_order):
+                calls.clear()
+                segs = [
+                    fn(m, url=u, text_direction=td, reading_order_fn=hook)
+                    for td, m, u in pages
+                    if td.startswith(orient)
+                ]
+                if hook is None:
+                    plain[name] = segs
+                key = f"seg_{name} {orient}" + (" hook" if hook else "")
+                out[key] = _digest([json.dumps(segs, sort_keys=True), repr(calls)])
+        merged = [
+            merge.merge_segmentations([p, b], rl=p["text_direction"].endswith("rl"))
+            for p, b in zip(plain["pageseg"], plain["blla_rect"])
+        ]
+        out[f"seg_merge {orient}"] = _digest([json.dumps(merged, sort_keys=True)])
 
 
 def main() -> None:
@@ -138,6 +189,7 @@ def main() -> None:
         g = {k: rng.standard_normal(v.shape).astype(np.float32) for k, v in Wa.items()}
         opt.step(Wa, g, lr=1e-2 * (0.1 + 0.9 * 0.5 * (1.0 + np.cos(np.pi * t / 7))))
     out["adam_float32"] = _digest(x for k in sorted(Wa) for x in (k, Wa[k], opt.m[k], opt.v[k]))
+    _segmentation_digests(out)
     print(json.dumps(out, sort_keys=True))
 
 
